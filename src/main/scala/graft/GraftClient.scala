@@ -106,11 +106,11 @@ class GraftClient(val config: GraftConfig,
     catalog.tableExists(id(namespace, name))
 
   /** Expose a catalog table to `spark.sql` / `spark.table` under
-    * `viewName` (defaults to the table name) — filter-aware pruning via
-    * [[graft.plans.GraftSQL]]. */
+    * `viewName` (defaults to the table name) — a temp view over the
+    * DSv2 connector, see [[graft.sources.GraftSQL]]. */
   def registerSql(spark: org.apache.spark.sql.SparkSession,
       namespace: String, name: String, viewName: String = ""): Unit =
-    graft.plans.GraftSQL.registerTable(spark, table(namespace, name),
+    graft.sources.GraftSQL.registerTable(spark, table(namespace, name),
       if (viewName.isEmpty) name else viewName)
 
   def listTables(namespace: String): Seq[String] =

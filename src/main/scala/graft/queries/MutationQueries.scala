@@ -58,7 +58,7 @@ object MutationQueries {
       |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
   // ------------------------------------------------- m2: MoR delete
-  /** The m2 table, shared with the SQL-façade MoR gate (sql4). */
+  /** The m2 table, shared with the registered-view MoR gate (sql4). */
   private[queries] def m2Table(s: SparkSession, dir: String): Table =
     build("m2", dir, "lineitem", s) { (t, _) =>
       t.newDelete(s).where(Col("l_returnflag").eqTo("R"))

@@ -181,14 +181,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
   private def pinOf(t: Table,
       options: CaseInsensitiveStringMap): Option[Long] = {
     def long(k: String): Option[Long] =
-      Option(options.get(k)).map { v =>
-        try v.trim.toLong
-        catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"graft source: option '$k' must be a long, got '$v'")
-        }
-      }
+      Option(options.get(k)).map(graft.util.Settings.parsed(k, _)(_.toLong))
     val sid = long("snapshot-id")
     val asOf = long("as-of-timestamp")
     val tag = Option(options.get("tag")).filter(_.nonEmpty)
@@ -1272,8 +1265,8 @@ private[sources] class GraftV2Scan(
   override def hashCode(): Int = eqKey.hashCode
 
   /** Manifest-derived stats over the PRUNED file set — drives Spark's
-    * broadcast-join planning for catalog tables without any data I/O
-    * (the DSv2 face of the SQL façade's GraftRelation stats). */
+    * broadcast-join planning for catalog tables and registered views
+    * without any data I/O. */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     val tasks = batchTasks
@@ -1330,16 +1323,67 @@ private[sources] class GraftV2Scan(
 
   private[sources] def newScan(t: Table): Scan = {
     val base = pinnedSnapshot.foldLeft(Scan(t, spark))(_ useSnapshot _)
-    pushed.foldLeft(base)(_ filter _)
+    pushed.flatMap(rebound(t)).foldLeft(base)(_ filter _)
   }
 
-  /** For pinned (VERSION/TIMESTAMP AS OF) scans, `full`/`required`
-    * carry the PINNED snapshot's column names — resolution inside
-    * [[BatchPlanning]] must go through that schema, not the current
-    * one, or a post-pin rename/drop silently null-fills. */
-  private def querySchemaOf(t: Table): Option[graft.spec.Schema] =
-    pinnedSnapshot.flatMap(sid => t.snapshotById(sid).flatMap(_.schemaId)
-      .flatMap(t.metadata.schemaById))
+  /** A pruning predicate over load-time names, renamed by field id to
+    * the names of `t`, the refreshed table an unpinned scan plans
+    * against. None when a column no longer resolves: its name may since
+    * belong to another field, so only no pruning is sound. */
+  private def rebound(t: Table)(e: Expr): Option[Expr] =
+    if (pinnedSnapshot.isDefined ||
+        gtable.schema.schemaId == t.schema.schemaId) Some(e)
+    else {
+      import graft.spec.{IcebergType, StructType => IStruct}
+      def walk(path: List[String], from: IcebergType,
+          to: IcebergType): Option[List[String]] = (path, from, to) match {
+        case (Nil, _, _) => Some(Nil)
+        case (p :: rest, l: IStruct, c: IStruct) => for {
+          lf <- l.fieldByName(p); cf <- c.field(lf.id)
+          tail <- walk(rest, lf.fieldType, cf.fieldType)
+        } yield cf.name :: tail
+        case _ => None
+      }
+      var lost = false
+      val mapped = e.mapColumns(n =>
+        walk(n.split('.').toList, gtable.schema.asStruct, t.schema.asStruct)
+          .map(_.mkString(".")).getOrElse { lost = true; n })
+      if (lost) None else Some(mapped)
+    }
+
+  /** The schema `full`/`required` NAMES come from, which [[BatchPlanning]]
+    * must resolve reads through: the PINNED snapshot's for time travel,
+    * else the load-time one — a held DataFrame or registered view keeps
+    * its names while scans plan against the refreshed table, and an old
+    * name resolved against the current schema silently null-fills. A
+    * column the read projects or keys equality deletes on must exist in
+    * both schemas, else the read fails loud. */
+  private def querySchemaOf(t: Table,
+      tasks: Seq[FileScanTask]): Option[graft.spec.Schema] =
+    if (pinnedSnapshot.isDefined)
+      pinnedSnapshot.flatMap(sid => t.snapshotById(sid)
+        .flatMap(_.schemaId).flatMap(t.metadata.schemaById))
+    else if (gtable.schema.schemaId == t.schema.schemaId) None
+    else {
+      val loaded = gtable.schema
+      val eqKeys = tasks.iterator.flatMap(_.deleteFiles)
+        .filter(_.file.content == FileContent.EqualityDeletes)
+        .flatMap(_.file.equalityIds)
+      (required.fieldNames.iterator.flatMap(loaded.fieldByName).map(_.id) ++
+          eqKeys)
+        .find(id => loaded.field(id).isEmpty != t.schema.field(id).isEmpty)
+        .foreach { id =>
+          val what = loaded.field(id) match {
+            case Some(f) => s"'${f.name}' (field id $id) was dropped from"
+            case None => s"'${t.schema.field(id).get.name}' (field id $id) " +
+              "keys equality deletes but was added to"
+          }
+          throw new IllegalStateException(s"graft source: column $what " +
+            s"table ${gtable.id} after this relation was loaded; reload " +
+            "the table")
+        }
+      Some(loaded)
+    }
 
   /** Batch reads plan ONCE (table pin + task list shared between
     * planInputPartitions and createReaderFactory so the reader knows
@@ -1380,7 +1424,8 @@ private[sources] class GraftV2Scan(
     case Some(re) => runtimeTasks match {
       case Some((e, ts)) if e == re => ts
       case _ =>
-        val ts = newScan(batchTable).filter(re).planFiles()
+        val ts = rebound(batchTable)(re)
+          .foldLeft(newScan(batchTable))(_ filter _).planFiles()
         runtimeTasks = Some((re, ts))
         ts
     }
@@ -1451,8 +1496,8 @@ private[sources] class GraftV2Scan(
 
   private[sources] def batchPartitions(): Array[InputPartition] = {
     val tasks = effectiveTasks
-    val parts =
-      BatchPlanning.partitions(batchTable, tasks, querySchemaOf(batchTable))
+    val parts = BatchPlanning.partitions(batchTable, tasks,
+      querySchemaOf(batchTable, tasks))
     spjKeyer match {
       case Some(keyer) if !emitFile &&
           tasks.forall(_.specId == batchTable.spec.specId) =>
@@ -1469,21 +1514,15 @@ private[sources] class GraftV2Scan(
       required, emitFile, allFilters,
       eqSetMaxBytes = Option(options.get("eq-delete-set-max-bytes"))
         .map { v =>
-          val parsed =
-            try v.trim.toLong
-            catch {
-              case _: NumberFormatException =>
-                throw new IllegalArgumentException(
-                  "graft source: option 'eq-delete-set-max-bytes' must be " +
-                    s"a byte count (long), got '$v'")
-            }
+          val parsed = graft.util.Settings.parsed(
+            "eq-delete-set-max-bytes", v)(_.toLong)
           if (parsed <= 0) throw new IllegalArgumentException(
             "graft source: option 'eq-delete-set-max-bytes' must be " +
               s"a positive byte count, got '$v'")
           parsed
         }
         .getOrElse(GraftReaderFactory.DefaultEqSetMaxBytes),
-      querySchema = querySchemaOf(batchTable))
+      querySchema = querySchemaOf(batchTable, effectiveTasks))
 
   /** Last-planned micro-batch (table + tasks), shared between
     * `planInputPartitions` and `createReaderFactory` exactly like the
@@ -1506,13 +1545,13 @@ private[sources] class GraftV2Scan(
     else
       BatchPlanning.readerFactory(spark, planned._1, planned._2, full,
         required, emitFile = false,
-        querySchema = querySchemaOf(planned._1))
+        querySchema = querySchemaOf(planned._1, planned._2))
   }
 
   private[sources] def toStreamPartitions(
       t: Table, tasks: Seq[FileScanTask]): Array[InputPartition] = {
     streamPlanned = (t, tasks)
-    BatchPlanning.partitions(t, tasks, querySchemaOf(t))
+    BatchPlanning.partitions(t, tasks, querySchemaOf(t, tasks))
   }
 }
 
@@ -2054,7 +2093,8 @@ private[sources] class GraftMicroBatchStream(
   private val startLatest =
     "latest".equalsIgnoreCase(options.get("starting-offset"))
   private val maxFilesPerTrigger =
-    Option(options.get("max-files-per-trigger")).map(_.toInt)
+    Option(options.get("max-files-per-trigger"))
+      .map(graft.util.Settings.parsed("max-files-per-trigger", _)(_.toInt))
 
   /** Memoized per-(snapshot, initial) plans; tiny (only snapshots the
     * stream is actively crossing), cleared when it grows. */

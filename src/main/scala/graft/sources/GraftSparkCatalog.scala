@@ -4,6 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{
   NamespaceAlreadyExistsException, NoSuchNamespaceException,
   NoSuchTableException, TableAlreadyExistsException}
@@ -12,6 +13,8 @@ import org.apache.spark.sql.connector.catalog.{
   TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{
   Expressions, Transform => SparkTransform}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -413,4 +416,19 @@ object GraftSparkCatalog {
         }
       }
     }.toArray
+}
+
+/** SQL over a table handle from any catalog, REST included. */
+object GraftSQL {
+  /** Expose `table` to `spark.sql` / `spark.table` as `viewName`: a temp
+    * view over the DSv2 connector, the relation
+    * [[GraftSparkCatalog.loadTable]] serves, so every query re-plans
+    * against the table's latest commit. */
+  def registerTable(spark: SparkSession, table: Table,
+      viewName: String): Unit = {
+    val connector = new GraftConnectorTable(table,
+      SchemaConverters.toSparkSchema(table.schema))
+    Bridge.ofRows(spark, DataSourceV2Relation.create(connector, None, None))
+      .createOrReplaceTempView(viewName)
+  }
 }

@@ -91,6 +91,9 @@ class Scan private (
   def option(key: String, value: String): Scan =
     copy2(options = options + (key -> value))
 
+  private def intOption(key: String, default: Int): Int =
+    options.get(key).fold(default)(graft.util.Settings.parsed(key, _)(_.toInt))
+
   /** Snapshot resolution (`table/scan.go:80-98`), extended with named
     * refs: a branch/tag resolves through `metadata.refs` to its pinned
     * snapshot id. */
@@ -277,8 +280,8 @@ class Scan private (
     // stays driver-side: the delete index is already in hand and
     // memoized per (specId, partition, seq).
     val surviving = dataManifests.filter(manifestSurvives)
-    val planThreshold = options.get("distributed-plan-threshold")
-      .map(_.toInt).getOrElse(Scan.DistributedPlanThreshold)
+    val planThreshold =
+      intOption("distributed-plan-threshold", Scan.DistributedPlanThreshold)
 
     val pruned: Seq[(DataFile, Long, Int, Int)] =
       if (surviving.size < planThreshold)
@@ -326,19 +329,6 @@ class Scan private (
     } else toDF.count()
   }
 
-  /** Execute with manifest/file pruning but WITHOUT re-applying the
-    * row-level filter/projection — for the SQL façade, whose filters
-    * carry Catalyst-internal literal representations (micros, UTF8String)
-    * meant for pruning only; Catalyst re-applies them row-level above
-    * the substituted plan. */
-  private[graft] def toDFPruneOnly: DataFrame = {
-    val snap = resolveSnapshot().getOrElse(
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.spec.SchemaConverters.toSparkSchema(table.schema)))
-    readTasks(schemaForSnapshot(snap), planFiles())
-  }
-
   /** Execute: assemble the DataFrame (`table/scan.go:202-231`, the part
     * the reference returns empty). */
   def toDF: DataFrame = {
@@ -376,8 +366,7 @@ class Scan private (
     // path→seq lookup), every delete row its file's, and one anti-join
     // per distinct key-set applies `deleteSeq > dataSeq` exactly —
     // same semantics, O(#key-sets) scan nodes instead of O(#partitions).
-    val maxEqGroups = options.get("max-eq-delete-groups").map(_.toInt)
-      .getOrElse(Scan.MaxEqDeleteGroups)
+    val maxEqGroups = intOption("max-eq-delete-groups", Scan.MaxEqDeleteGroups)
 
     def eqSetOf(t: FileScanTask) = t.deleteFiles
       .filter(_.file.content == FileContent.EqualityDeletes)

@@ -407,8 +407,8 @@ object SnapshotWriter {
     val dataManifests = allManifests.filter(_.content == ManifestContent.Data)
     val deleteManifests = allManifests.filter(_.content == ManifestContent.Deletes)
     // total-files-size carries forward incrementally (parent total +
-    // added - removed) so stats consumers (e.g. SQL broadcast planning)
-    // never have to open data manifests. Only emitted when the parent
+    // added - removed) so stats consumers never have to open data
+    // manifests. Only emitted when the parent
     // chain has the counter (or we're at the root) — a stale parent
     // total would silently misestimate forever.
     val parentTotalSize: Option[Long] = parent match {

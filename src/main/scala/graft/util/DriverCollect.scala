@@ -31,5 +31,6 @@ object DriverCollect {
     * the scale-trade thresholds (local defaults keep the bench
     * comparable; a cluster deployment sets the conf). */
   def confInt(df: DataFrame, key: String, default: Int): Int =
-    df.sparkSession.conf.get(key, default.toString).toInt
+    Settings.parsed(key, df.sparkSession.conf.get(key, default.toString))(
+      _.toInt)
 }

@@ -377,6 +377,64 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(vals == (1 to 5).map(_ * 1.0).toSet)
   }
 
+  test("a held DataFrame reads renamed columns by field id, filters " +
+      "included — even when another column takes the freed name") {
+    val (t0, dir, name) = mkTable("held1")
+    var t = TableOps.append(t0, batch(1 to 10).coalesce(1))
+    t = TableOps.append(t, batch(11 to 20).coalesce(1))
+    val held = reader(dir, name).load()
+    // event_id -> eid, then user_id takes the freed name "event_id": the
+    // held frame's "event_id" is still field id 1, and pruning by the
+    // new event_id's bounds (0..2) would drop both files
+    t = t.updateSchema().renameColumn("event_id", "eid").commit()
+    t = t.updateSchema().renameColumn("user_id", "event_id").commit()
+    val rows = held.where("event_id > 15").select("event_id", "user_id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(rows == (16 to 20).map(i => i.toLong -> i.toLong % 3).toMap,
+      s"filter and read must both resolve by field id, got $rows")
+  }
+
+  test("a held DataFrame fails loud, naming the column, once a column " +
+      "it reads is dropped") {
+    val (t0, dir, name) = mkTable("held2")
+    var t = TableOps.append(t0, batch(1 to 5))
+    val held = reader(dir, name).load()
+    t = t.updateSchema().dropColumn("value").commit()
+    val e = intercept[Exception] {
+      held.select("event_id", "value").collect()
+    }
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(m => Option(m.getMessage).getOrElse(""))
+      .mkString(" | ")
+    assert(msgs.contains("'value'") && msgs.contains("dropped"),
+      s"the error must name the dropped column, got: $msgs")
+    // columns that still exist keep reading
+    assert(held.select("event_id").collect().map(_.getLong(0)).toSet ==
+      (1L to 5L).toSet)
+  }
+
+  test("a held DataFrame fails loud on equality deletes keyed on a " +
+      "column added after it was loaded") {
+    val (t0, dir, name) = mkTable("held3")
+    var t = TableOps.append(t0, batch(1 to 5))
+    val held = reader(dir, name).load()
+    t = t.updateSchema().addColumn("tag", StringType).commit()
+    import spark.implicits._
+    t = TableOps.append(t, Seq((6L, 0L, 6.0, "x"), (6L, 0L, 7.0, "y"))
+      .toDF("event_id", "user_id", "value", "tag"))
+    t = Mutations.deleteByKeys(t, spark,
+      Seq((6L, "x")).toDF("event_id", "tag"))
+    // the held frame cannot decode `tag`, so it cannot apply the delete
+    val e = intercept[Exception] {
+      held.select("event_id", "value").collect()
+    }
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(m => Option(m.getMessage).getOrElse(""))
+      .mkString(" | ")
+    assert(msgs.contains("'tag'") && msgs.contains("reload"),
+      s"the error must name the key column and the remedy, got: $msgs")
+  }
+
   test("equality deletes on schema-remapped files stay columnar") {
     val (t0, dir, name) = mkTable("coleq1")
     import spark.implicits._
@@ -830,6 +888,22 @@ class GraftSourceSpec extends AnyFunSuite {
       assert(got == expected,
         s"first micro-batch must apply MoR deletes + sequence rule, got $got")
     } finally q.stop()
+  }
+
+  test("malformed max-files-per-trigger names the option") {
+    val (t0, dir, name) = mkTable("s8bad")
+    TableOps.append(t0, batch(1 to 5))
+    val e = intercept[Exception] {
+      val q = streamReader(dir, name)
+        .option("max-files-per-trigger", "few").load()
+        .writeStream.format("memory").queryName("graft_s8bad").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(m => Option(m.getMessage).getOrElse(""))
+      .mkString(" | ")
+    assert(msgs.contains("max-files-per-trigger") && msgs.contains("'few'"),
+      s"parse failure must name the option and value, got: $msgs")
   }
 
   test("max-files-per-trigger paces the backfill, exactly-once") {

@@ -1,9 +1,10 @@
-package graft.plans
+package graft.sources
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 import graft.SparkTestSession
 import graft.catalog._
@@ -28,10 +29,10 @@ class CountingFileIO extends HadoopFileIO {
   }.sum
 }
 
-/** spark.sql / spark.table over engine tables: the GraftRelation leaf +
-  * optimizer-rule substitution must deliver filter-aware manifest/file
-  * pruning and MoR semantics, executing on the native parquet reader. */
-class SqlFacadeSpec extends AnyFunSuite {
+/** spark.sql / spark.table over engine tables registered by handle: the
+  * temp view over the DSv2 connector must deliver filter-aware
+  * manifest/file pruning, MoR semantics and per-query freshness. */
+class SqlFacadeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
   private def freshTable(name: String): Table = {
@@ -50,11 +51,13 @@ class SqlFacadeSpec extends AnyFunSuite {
       .toDF("id", "name", "email", "created_at")
   }
 
-  private def scannedFiles(df: DataFrame): Seq[String] =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.executedPlan.collect {
-        case s: FileSourceScanExec => s.relation.location.inputFiles.toSeq
-      }.flatten
+  /** Input partitions (one per planned data file) of every connector
+    * scan in the executed plan. */
+  private def scannedFiles(df: DataFrame): Int =
+    collect(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.executedPlan) {
+        case b: BatchScanExec => b.inputPartitions.size
+      }.sum
 
   test("spark.sql filter prunes files via the engine's stats") {
     var t = freshTable("sqlprune")
@@ -66,13 +69,13 @@ class SqlFacadeSpec extends AnyFunSuite {
     val rows = q.collect().map(_.getLong(0)).toSet
     assert(rows == Set(1L, 2L, 3L))
     val files = scannedFiles(q)
-    assert(files.size == 1,
+    assert(files == 1,
       s"bounds pruning must reach the SQL path (1 of 2 files): $files")
 
     // unfiltered query reads both files
     val all = spark.table("users_sql")
     assert(all.count() == 20)
-    assert(scannedFiles(all).size == 2)
+    assert(scannedFiles(all) == 2)
   }
 
   test("SQL aggregation + IN-list + null semantics match the engine") {
@@ -118,30 +121,8 @@ class SqlFacadeSpec extends AnyFunSuite {
         |  AND created_at < TIMESTAMP '2024-03-20 00:00:00'""".stripMargin)
     assert(q.count() == 10)
     val files = scannedFiles(q)
-    assert(files.size == 1,
+    assert(files == 1,
       s"partition-tuple pruning must reach the SQL path: $files")
-  }
-
-  test("computeStats is counter-based: zero metadata reads, even repeated") {
-    val dir = Files.createTempDirectory("graft-sqlstats-").toString
-    val cat = new LocalCatalog(dir)
-    cat.createNamespace(Seq("db"))
-    val io = new CountingFileIO
-    var t = Table.create(cat, TableIdentifier(Seq("db"), "sqlstats"),
-      Fixtures4.usersSchema, io = io)
-    t = TableOps.append(t, usersDf(1 to 10))
-    val rel = GraftSQL.tableDF(spark, t)
-      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.logical.collectFirst { case r: GraftRelation => r }.get
-    io.reset()
-    // Catalyst may call computeStats several times while planning one
-    // query; none of them may open manifests (summary-counter path)
-    val sizes = (1 to 5).map(_ => rel.computeStats().sizeInBytes).distinct
-    assert(io.totalReads == 0,
-      s"stats must come from summary counters, saw ${io.totalReads} reads")
-    assert(sizes.size == 1 && sizes.head > 0 &&
-      sizes.head < BigInt(Long.MaxValue / 8),
-      s"real (not conservative-unknown) size expected: $sizes")
   }
 
   test("planning a SQL query reads the manifest list at most once") {
@@ -173,6 +154,26 @@ class SqlFacadeSpec extends AnyFunSuite {
     assert(spark.sql("SELECT COUNT(*) AS n FROM users_fresh")
       .collect().head.getLong(0) == 10,
       "registration must not pin the snapshot forever")
+  }
+
+  test("a registered view reads renamed columns' real values") {
+    var t = freshTable("sqlrename")
+    t = TableOps.append(t, usersDf(1 to 4))
+    GraftSQL.registerTable(spark, t, "users_ren")
+    // an optional and a required column renamed after registration,
+    // then a file written under the new names
+    t = t.updateSchema().renameColumn("email", "mail").commit()
+    t = t.updateSchema().renameColumn("name", "full_name").commit()
+    t = TableOps.append(t, usersDf(5 to 6)
+      .withColumnRenamed("email", "mail")
+      .withColumnRenamed("name", "full_name"))
+    val got = spark.sql(
+      "SELECT id, name, email FROM users_ren ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getString(1), Option(r.getString(2))))
+      .toSeq
+    assert(got == (1 to 6).map(i => (i.toLong, s"user_$i",
+      if (i % 2 == 1) None else Some(s"u$i@x.com"))),
+      s"renamed columns must resolve by field id, not null-fill: $got")
   }
 
   test("SQL join against a registered table works (self + other)") {

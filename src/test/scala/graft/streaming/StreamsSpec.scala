@@ -76,17 +76,14 @@ class StreamsSpec extends AnyFunSuite {
     // first has paid any one-time setup
     sink.addBatch(Seq((1L, 10L, 1.5), (2L, 10L, 2.5))
       .toDF("event_id", "user_id", "value"), 0L)
+    // the listener bus is async: drain the first batch's events before
+    // attaching, and the second batch's before reading the count
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       sink.addBatch(Seq((3L, 11L, 3.0))
         .toDF("event_id", "user_id", "value"), 1L)
-      // listener bus is async — poll until the counter is stable
-      // rather than trusting one fixed sleep
-      var last = -1
-      var spins = 0
-      while (jobs.get() != last && spins < 25) {
-        last = jobs.get(); Thread.sleep(200); spins += 1
-      }
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
       val n = jobs.get()
       info(s"per-batch Spark jobs (exactly-once stamped sink): $n")
       // r22 measured baseline: 5 jobs per stamped batch (write + commit

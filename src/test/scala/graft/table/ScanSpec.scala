@@ -234,6 +234,24 @@ class ScanSpec extends AnyFunSuite {
       Scan(t, spark).useRef("nope").resolveSnapshot()
     }
   }
+
+  test("malformed distributed-plan-threshold names the option") {
+    val t = TableOps.append(freshTable("badthreshold"), usersDf(1 to 5))
+    val e = intercept[IllegalArgumentException] {
+      Scan(t, spark).option("distributed-plan-threshold", "many").planFiles()
+    }
+    assert(e.getMessage.contains("distributed-plan-threshold") &&
+      e.getMessage.contains("'many'"), e.getMessage)
+  }
+
+  test("malformed max-eq-delete-groups names the option") {
+    val t = TableOps.append(freshTable("badgroups"), usersDf(1 to 5))
+    val e = intercept[IllegalArgumentException] {
+      Scan(t, spark).option("max-eq-delete-groups", "1.5").toDF
+    }
+    assert(e.getMessage.contains("max-eq-delete-groups") &&
+      e.getMessage.contains("'1.5'"), e.getMessage)
+  }
 }
 
 /** Nested-column stats: struct leaves get footer-harvested bounds keyed
