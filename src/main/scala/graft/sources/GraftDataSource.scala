@@ -506,15 +506,28 @@ private[sources] class GraftScanBuilder(
     *   - string bounds ≥ 16 chars may be truncated by the writer →
     *     refused (shorter bounds are verbatim);
     *   - every contributing file must carry the needed stat (all-null
-    *     files contribute nothing to MIN/MAX and may omit bounds). */
-  private lazy val aggTasks: Option[Seq[graft.spec.DataFile]] = try {
+    *     files contribute nothing to MIN/MAX and may omit bounds).
+    *
+    * A bare COUNT(*) needs no per-file stats: it reads the manifest
+    * list only ([[Scan.manifestListCount]], the same answer as the Scan
+    * API's `count()`), and plans files only when that declines. */
+  private lazy val aggScan: Option[Scan] = try {
     val t = mutationPin().getOrElse(
       try gtable.refresh() catch { case _: Exception => gtable })
-    val scan = pinnedSnapshot.foldLeft(
-      Scan(t, SparkSession.active))(_ useSnapshot _)
-    val tasks = scan.planFiles()
-    if (tasks.forall(_.deleteFiles.isEmpty)) Some(tasks.map(_.file))
-    else None
+    Some(pinnedSnapshot.foldLeft(
+      Scan(t, SparkSession.active))(_ useSnapshot _))
+  } catch { case _: Exception => None }
+
+  private lazy val listCount: Option[Long] =
+    try aggScan.flatMap(_.manifestListCount())
+    catch { case _: Exception => None }
+
+  private lazy val aggTasks: Option[Seq[graft.spec.DataFile]] = try {
+    aggScan.flatMap { scan =>
+      val tasks = scan.planFiles()
+      if (tasks.forall(_.deleteFiles.isEmpty)) Some(tasks.map(_.file))
+      else None
+    }
   } catch { case _: Exception => None }
 
   private def topField(name: Array[String]): Option[graft.spec.NestedField] =
@@ -587,11 +600,15 @@ private[sources] class GraftScanBuilder(
     import org.apache.spark.sql.types.{LongType => SLongType, StructField}
     if (agg.groupByExpressions.nonEmpty || allPushed.nonEmpty ||
         pushedExpr.isDefined) return None
-    aggTasks.flatMap { files =>
-      val per = agg.aggregateExpressions.toSeq.map {
+    val aggs = agg.aggregateExpressions.toSeq
+    // a bare COUNT(*) never needs the per-file stats
+    val fromList =
+      if (aggs.forall(_.isInstanceOf[CountStar])) listCount else None
+    (if (fromList.isDefined) Some(Nil) else aggTasks).flatMap { files =>
+      val per = aggs.map {
         case _: CountStar =>
           Some(("count_star", SLongType,
-            files.map(_.recordCount).sum: Any))
+            fromList.getOrElse(files.map(_.recordCount).sum): Any))
         case c: Count if !c.isDistinct => colOf(c.column).flatMap { f =>
           val ok = files.forall(df => df.valueCounts.contains(f.id) &&
             df.nullValueCounts.contains(f.id))

@@ -58,6 +58,25 @@ object Mutations {
       candidates: Seq[FileScanTask]): DataFrame =
     Scan(table, spark).readTasks(table.schema, candidates)
 
+  /** The snapshot that swaps `candidates` for `added`, scoped to the
+    * candidates' partitions so the commit decodes only the manifests
+    * that can hold them. */
+  private def replacing(op: Operation, added: Seq[DataFile],
+      candidates: Seq[FileScanTask]): PendingSnapshot =
+    PendingSnapshot(op, addedDataFiles = added,
+      deletedFilePaths = candidates.map(_.file.filePath).toSet,
+      partitionScope = PendingSnapshot.scopeOf(candidates))
+
+  /** Float/double fields a filter-only rewrite of `candidates` provably
+    * writes without NaN: its rows are a subset of theirs with unchanged
+    * values, so a field qualifies when every candidate records 0 NaNs
+    * for it. A field missing from a candidate's counts (added after the
+    * file was written, or never counted) is not proven. */
+  private def nanFreeFields(table: Table,
+      candidates: Seq[FileScanTask]): Set[Int] =
+    DataWriter.floatFields(table.schema).map(_.id).filter(fid =>
+      candidates.forall(_.file.nanValueCounts.get(fid).contains(0L))).toSet
+
   /** Copy-on-write delete (T4, `table/delete.go:82-183`): rewrite only
     * the pruned candidate files without their matching rows, swap both
     * sets in one snapshot. */
@@ -69,10 +88,9 @@ object Mutations {
       else {
         val survivors = readCandidates(t, spark, candidates)
           .where(survivorFilter(pred))
-        val newFiles = PartitionedWriter.writeDataFiles(t.metadata, survivors)
-        t.commitSnapshot(PendingSnapshot(Operation.Delete,
-          addedDataFiles = newFiles,
-          deletedFilePaths = candidates.map(_.file.filePath).toSet))
+        val newFiles = PartitionedWriter.writeDataFiles(t.metadata, survivors,
+          nanFreeFieldIds = nanFreeFields(t, candidates))
+        t.commitSnapshot(replacing(Operation.Delete, newFiles, candidates))
       }
     }
 
@@ -116,7 +134,8 @@ object Mutations {
           addedDeleteFiles = delFiles,
           // position deletes target these paths; a concurrent rewrite
           // of one must fail the rebase, not silently no-op the delete
-          referencedDataPaths = candidates.map(_.file.filePath).toSet))
+          referencedDataPaths = candidates.map(_.file.filePath).toSet,
+          partitionScope = PendingSnapshot.scopeOf(candidates)))
       }
     }
 
@@ -175,9 +194,7 @@ object Mutations {
             when(hit, lit(value).cast(target)).otherwise(col(name)))
         }
         val newFiles = PartitionedWriter.writeDataFiles(t.metadata, df)
-        t.commitSnapshot(PendingSnapshot(Operation.Overwrite,
-          addedDataFiles = newFiles,
-          deletedFilePaths = candidates.map(_.file.filePath).toSet))
+        t.commitSnapshot(replacing(Operation.Overwrite, newFiles, candidates))
       }
     }
 
@@ -251,9 +268,7 @@ object Mutations {
       case None => incomingAligned
     }
     val newFiles = PartitionedWriter.writeDataFiles(table.metadata, merged)
-    table.commitSnapshot(PendingSnapshot(Operation.Overwrite,
-      addedDataFiles = newFiles,
-      deletedFilePaths = candidates.map(_.file.filePath).toSet))
+    table.commitSnapshot(replacing(Operation.Overwrite, newFiles, candidates))
   }
 
   /** Full overwrite (T2, `table/insert.go:173-182`): all live files
@@ -277,11 +292,11 @@ object Mutations {
         if (candidates.isEmpty) Nil
         else PartitionedWriter.writeDataFiles(t.metadata,
           readCandidates(t, spark, candidates)
-            .where(survivorFilter(pred)))
+            .where(survivorFilter(pred)),
+          nanFreeFieldIds = nanFreeFields(t, candidates))
       val appended = PartitionedWriter.writeDataFiles(t.metadata, df)
-      t.commitSnapshot(PendingSnapshot(Operation.Overwrite,
-        addedDataFiles = rewritten ++ appended,
-        deletedFilePaths = candidates.map(_.file.filePath).toSet))
+      t.commitSnapshot(replacing(Operation.Overwrite, rewritten ++ appended,
+        candidates))
     }
 }
 

@@ -231,6 +231,28 @@ object Pruning {
     }
   }
 
+  /** Could a file with partition `tuple` live in `mf`? Compares in the
+    * partition (result-type) domain against the manifest's per-field
+    * summaries: a null value (or a key the tuple omits — manifests
+    * drop null partition values) needs `containsNull`; a non-null value
+    * must lie in [lower, upper]. Any deserialize or compare failure, or
+    * a manifest without summaries, answers "might contain". The caller
+    * matches `mf.partitionSpecId` to the tuple's spec. */
+  def manifestMightContainTuple(mf: ManifestFile, partitionType: StructType,
+      tuple: Map[String, Any]): Boolean =
+    partitionType.fields.zip(mf.partitions).forall { case (f, s) =>
+      val t = f.fieldType
+      try tuple.get(f.name).orNull match {
+        case null => s.containsNull
+        case v0 =>
+          val v = coerce(v0, t)
+          s.lowerBound.forall(l =>
+            Bounds.compare(v, Bounds.deserialize(l, t), t) >= 0) &&
+            s.upperBound.forall(u =>
+              Bounds.compare(v, Bounds.deserialize(u, t), t) <= 0)
+      } catch { case _: Exception => true }
+    }
+
   private def summaryMightMatch(leaf: Leaf, pf: PartitionField,
       summary: PartitionFieldSummary, schema: Schema): Boolean = {
     val srcType = schema.field(pf.sourceId).get.fieldType

@@ -319,15 +319,40 @@ class Scan private (
     }
   }
 
-  /** Metadata-only count (`table/scan.go:234-250`): exact when no row
-    * filter and no applicable delete files; falls back to executing. */
-  def count(): Long = {
-    val tasks = planFiles()
-    if (filterExpr.isEmpty && tasks.forall(_.deleteFiles.isEmpty)) {
-      val total = tasks.map(_.file.recordCount).sum
-      limitN.map(l => math.min(total, l.toLong)).getOrElse(total)
-    } else toDF.count()
-  }
+  /** Metadata-only count (`table/scan.go:234-250`), clamped to the
+    * limit. With no row filter, no incremental range and no live delete
+    * file in the snapshot, it is answered by [[manifestListCount]]: one
+    * manifest-list read, no manifest decode, no Spark job. Otherwise it
+    * plans files and sums their row counts when no delete file
+    * attaches and there is no row filter, and executes the scan when
+    * one does. */
+  def count(): Long =
+    manifestListCount().orElse {
+      val tasks = planFiles()
+      if (filterExpr.isEmpty && tasks.forall(_.deleteFiles.isEmpty))
+        Some(tasks.map(_.file.recordCount).sum)
+      else None
+    } match {
+      case Some(total) => limitN.fold(total)(l => math.min(total, l.toLong))
+      case None => toDF.count()
+    }
+
+  /** The snapshot's live row count read off its manifest list — the sum
+    * of each data manifest's added + existing rows, which every
+    * manifest writer fills (the same sum as `total-records`). `None`
+    * when that is not the scan's answer: a row filter, an incremental
+    * range, or a delete manifest with live files. Ignores `limit`. */
+  def manifestListCount(): Option[Long] =
+    if (filterExpr.isDefined || options.contains("incremental-from")) None
+    else resolveSnapshot() match {
+      case None => Some(0L)
+      case Some(snap) =>
+        val (deletes, data) = table.manifestList(snap)
+          .partition(_.content == ManifestContent.Deletes)
+        if (deletes.exists(m => m.addedFilesCount + m.existingFilesCount > 0))
+          None
+        else Some(data.map(_.liveRowsCount).sum)
+    }
 
   /** Execute: assemble the DataFrame (`table/scan.go:202-231`, the part
     * the reference returns empty). */

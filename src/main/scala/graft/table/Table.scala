@@ -190,8 +190,14 @@ class Table(
     // files (delete-absorbing compaction), which live only in Deletes
     // manifests — excluding them would misclassify every CAS loss during
     // such a compaction as a conflict, even vs a harmless append.
+    // With a partition scope, only manifests whose summaries can hold a
+    // depended-on file are decoded: a file keeps its (spec, tuple) for
+    // life, so a live one always sits in an admitted manifest.
+    val mightHold = SnapshotWriter.scopeFilter(refreshed,
+      pending.partitionScope)
     val live = refreshed.currentSnapshot.toSeq.flatMap { s =>
       ManifestAvro.readManifestList(io.readAllBytes(s.manifestList))
+        .filter(mightHold)
         .flatMap(mf => ManifestAvro.readManifest(
           io.readAllBytes(mf.manifestPath)).liveEntries
           .map(_.dataFile.filePath))
@@ -236,7 +242,9 @@ object Table {
 }
 
 /** The file-level outcome of one write operation, fed to
-  * [[SnapshotWriter]] (shape of `table/table.go:256-296`). */
+  * [[SnapshotWriter]] (shape of `table/table.go:256-296`). With a
+  * `partitionScope` the writer and the rebase check open only the
+  * manifests that can hold the files it names. */
 final case class PendingSnapshot(
     operation: Operation,
     addedDataFiles: Seq[DataFile] = Nil,
@@ -248,7 +256,21 @@ final case class PendingSnapshot(
     /** Data-file paths this snapshot's content was computed FROM but
       * does not delete (MoR delete targets): rebase validation fails
       * the commit if any has been concurrently rewritten. */
-    referencedDataPaths: Set[String] = Set.empty)
+    referencedDataPaths: Set[String] = Set.empty,
+    /** `(partition spec id, partition tuple)` of every file this commit
+      * deletes or references, when the caller knows them (its
+      * candidates were planned as [[FileScanTask]]s). The commit then
+      * decodes only the parent manifests whose spec and partition
+      * summaries admit one of these tuples, and carries the rest
+      * forward unread; rebase validation narrows the same way. `None`
+      * inspects every manifest. */
+    partitionScope: Option[Set[(Int, Map[String, Any])]] = None)
+
+object PendingSnapshot {
+  /** The partition scope of planned tasks (see `partitionScope`). */
+  def scopeOf(tasks: Seq[FileScanTask]): Option[Set[(Int, Map[String, Any])]] =
+    Some(tasks.map(t => (t.specId, t.file.partition)).toSet)
+}
 
 /** Builds a snapshot: writes the new manifests, REWRITES parent
   * manifests affected by deletes, carries the rest forward, and writes
@@ -332,18 +354,23 @@ object SnapshotWriter {
     }
 
     // 3. parent manifests: rewrite the ones containing deleted files,
-    //    carry the rest forward untouched (O(#manifests-changed) I/O).
-    //    BOTH manifest kinds are inspected: compaction retires absorbed
-    //    DELETE files too (deletedFilePaths may name them), and leaving
-    //    them live would make every scan read retired delete parquet
-    //    forever — metadata garbage that grows with each compaction.
+    //    carry the rest forward untouched. BOTH manifest kinds are
+    //    inspected: compaction retires absorbed DELETE files too
+    //    (deletedFilePaths may name them), and leaving them live would
+    //    make every scan read retired delete parquet forever — metadata
+    //    garbage that grows with each compaction. With a partition
+    //    scope, a manifest whose summaries cannot hold any deleted
+    //    file's tuple is carried forward unread, so manifest reads are
+    //    O(#manifests that may change); without one every parent
+    //    manifest is decoded.
     val carried = Seq.newBuilder[ManifestFile]
+    val mightHold = scopeFilter(meta, pending.partitionScope)
     parent.foreach { p =>
       val parentList =
         if (p.manifestList.isEmpty) Nil
         else ManifestAvro.readManifestList(io.readAllBytes(p.manifestList))
       parentList.foreach { mf =>
-        val mustInspect = pending.deletedFilePaths.nonEmpty
+        val mustInspect = pending.deletedFilePaths.nonEmpty && mightHold(mf)
         if (!mustInspect) carried += mf
         else {
           val manifest = ManifestAvro.readManifest(io.readAllBytes(mf.manifestPath))
@@ -450,6 +477,28 @@ object SnapshotWriter {
       summary = Some(summary),
       schemaId = Some(schemaId))
   }
+
+  /** Which manifests of `meta` can hold a file in `scope` (see
+    * [[PendingSnapshot.partitionScope]]): those written under a scope
+    * entry's spec whose partition summaries admit its tuple. A spec
+    * whose partition type no longer resolves admits everything; no
+    * scope admits every manifest. */
+  private[table] def scopeFilter(meta: TableMetadata,
+      scope: Option[Set[(Int, Map[String, Any])]]): ManifestFile => Boolean =
+    scope match {
+      case None => _ => true
+      case Some(entries) =>
+        val tuplesBySpec = entries.groupBy(_._1).map { case (sid, es) =>
+          val partType = meta.specById(sid).flatMap(sp =>
+            scala.util.Try(sp.partitionType(meta.currentSchema)).toOption)
+          sid -> (partType, es.map(_._2))
+        }
+        mf => tuplesBySpec.get(mf.partitionSpecId).exists {
+          case (None, _) => true
+          case (Some(pt), tuples) =>
+            tuples.exists(Pruning.manifestMightContainTuple(mf, pt, _))
+        }
+    }
 
   /** Per-partition-field min/max/null summaries for manifest-level
     * pruning (`spec/manifest.go:199-205`) — the reference declares the

@@ -46,9 +46,12 @@ object DataWriter {
   }
 
   /** Write `df` as Snappy parquet into a fresh directory under the
-    * table's data/ prefix; returns harvested [[DataFile]]s. */
+    * table's data/ prefix; returns harvested [[DataFile]]s.
+    * `nanFreeFieldIds`: float/double field ids the caller proves carry
+    * no NaN in `df` (see [[nanCountsFor]]). */
   def writeDataFiles(meta: TableMetadata, df: DataFrame,
-      maxRecordsPerFile: Long = 0L): Seq[DataFile] = {
+      maxRecordsPerFile: Long = 0L,
+      nanFreeFieldIds: Set[Int] = Set.empty): Seq[DataFile] = {
     val spark = df.sparkSession
     // µs timestamps (Iceberg physical semantics, SURVEY §1.2); INT96 has
     // no usable min/max for pruning. Scoped save/restore: leaking this
@@ -63,12 +66,9 @@ object DataWriter {
       if (maxRecordsPerFile > 0)
         w = w.option("maxRecordsPerFile", maxRecordsPerFile)
       w.parquet(dir)
-      harvestDataFiles(spark.sessionState.newHadoopConf(), dir,
-        meta.currentSchema,
-        nanCounts =
-          if (nanStatsEnabled(meta))
-            nanCountsByFile(spark, dir, meta.currentSchema)
-          else Map.empty)
+      nanCountsFor(spark, meta, dir, nanFreeFieldIds)(nan =>
+        harvestDataFiles(spark.sessionState.newHadoopConf(), dir,
+          meta.currentSchema, nanCounts = nan))
     } finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)
@@ -77,16 +77,6 @@ object DataWriter {
     }
   }
 
-  /** Per-file NaN counts for float/double columns — Parquet footers
-    * can't provide them (NaN is excluded from, or poisons, min/max
-    * stats), so one aggregation job re-reads ONLY the float/double
-    * columns of the just-written files (column-pruned, page-cache-warm)
-    * and counts `isnan` per file. Skipped entirely when the schema has
-    * no float/double fields. Real Iceberg counts NaNs inline in its own
-    * parquet writer; with Spark's writer this second pass is the
-    * equivalent, and without it float/double bounds pruning is unsound
-    * (a Gt prune would drop files whose NaN rows match, since NaN sorts
-    * greatest in both Spark and DuckDB). */
   /** NaN harvesting is on by default; tables whose float/double columns
     * provably never carry NaN can opt out with table property
     * `graft.write.nan-stats=false` — writes then skip the second pass
@@ -95,6 +85,40 @@ object DataWriter {
   private[graft] def nanStatsEnabled(meta: TableMetadata): Boolean =
     meta.properties.getOrElse("graft.write.nan-stats", "true") != "false"
 
+  /** Harvest the files just written under `dir` with their NaN counts.
+    * When `nanFreeFieldIds` covers every top-level float/double field of
+    * the current schema, no second pass runs and every file records 0
+    * for those fields; otherwise [[nanCountsByFile]] counts them (unless
+    * the table opts out of NaN stats). */
+  private[table] def nanCountsFor(spark: SparkSession, meta: TableMetadata,
+      dir: String, nanFreeFieldIds: Set[Int])(
+      harvest: Map[String, Map[Int, Long]] => Seq[DataFile]): Seq[DataFile] = {
+    val fp = floatFields(meta.currentSchema).map(_.id)
+    if (!nanStatsEnabled(meta)) harvest(Map.empty)
+    else if (fp.nonEmpty && fp.forall(nanFreeFieldIds)) {
+      val zeros = fp.map(_ -> 0L).toMap
+      harvest(Map.empty).map(_.copy(nanValueCounts = zeros))
+    } else harvest(nanCountsByFile(spark, dir, meta.currentSchema))
+  }
+
+  /** The top-level float/double fields: the columns whose NaN counts
+    * writes record. */
+  private[table] def floatFields(schema: Schema): Seq[NestedField] =
+    schema.fields.filter(f =>
+      f.fieldType == FloatType || f.fieldType == DoubleType)
+
+  /** Per-file NaN counts for float/double columns — Parquet footers
+    * can't provide them (NaN is excluded from, or poisons, min/max
+    * stats), so one aggregation job re-reads ONLY the float/double
+    * columns of the just-written files (column-pruned, page-cache-warm)
+    * and counts `isnan` per file. Skipped entirely when the schema has
+    * no float/double fields, and by [[nanCountsFor]] when the writer's
+    * caller proves every such field NaN-free (a filter-only rewrite of
+    * files that all record 0 NaNs). Real Iceberg counts NaNs inline in
+    * its own parquet writer; with Spark's writer this second pass is
+    * the equivalent, and without it float/double bounds pruning is
+    * unsound (a Gt prune would drop files whose NaN rows match, since
+    * NaN sorts greatest in both Spark and DuckDB). */
   private[table] def nanCountsByFile(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       schema: Schema): Map[String, Map[Int, Long]] =
@@ -104,8 +128,7 @@ object DataWriter {
       spark: org.apache.spark.sql.SparkSession, paths: Seq[String],
       schema: Schema): Map[String, Map[Int, Long]] = {
     import org.apache.spark.sql.functions.{col, isnan, sum, when}
-    val fp = schema.fields.filter(f =>
-      f.fieldType == FloatType || f.fieldType == DoubleType)
+    val fp = floatFields(schema)
     if (fp.isEmpty || paths.isEmpty) return Map.empty
     val aggs = fp.map(f =>
       sum(when(isnan(col(f.name)), 1L).otherwise(0L)).as("n" + f.id))
@@ -325,7 +348,11 @@ object PartitionedWriter {
         * many rows (file-size control); 0 = one file per partition
         * tuple per task. Sequential split of already-sorted data, so
         * each chunk keeps a contiguous (tight) sort/z-key range. */
-      maxRecordsPerFile: Long = 0L)
+      maxRecordsPerFile: Long = 0L,
+      /** float/double field ids the caller proves NaN-free in `df`:
+        * covering all of them skips the NaN pass
+        * ([[DataWriter.nanCountsFor]]). */
+      nanFreeFieldIds: Set[Int] = Set.empty)
       : Seq[DataFile] = {
     // Fail loud on frames that don't fit the table: an unknown column
     // (typo) would land in the parquet bytes and silently null-fill
@@ -351,7 +378,8 @@ object PartitionedWriter {
     }
     val spec = meta.defaultPartitionSpec
     if (spec.isUnpartitioned)
-      return DataWriter.writeDataFiles(meta, df, maxRecordsPerFile)
+      return DataWriter.writeDataFiles(meta, df, maxRecordsPerFile,
+        nanFreeFieldIds)
     val spark = df.sparkSession
     val schema = meta.currentSchema
 
@@ -396,10 +424,9 @@ object PartitionedWriter {
       case None => spark.conf.unset(key)
     }
 
-    harvestPartitionDirs(spark.sessionState.newHadoopConf(), dir, meta, spec,
-      if (DataWriter.nanStatsEnabled(meta))
-        DataWriter.nanCountsByFile(spark, dir, meta.currentSchema)
-      else Map.empty)
+    DataWriter.nanCountsFor(spark, meta, dir, nanFreeFieldIds)(nan =>
+      harvestPartitionDirs(spark.sessionState.newHadoopConf(), dir, meta,
+        spec, nan))
   }
 
   private def sortColumn(sf: SortField,

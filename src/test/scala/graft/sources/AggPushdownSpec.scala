@@ -105,6 +105,36 @@ class AggPushdownSpec extends AnyFunSuite {
     }
   }
 
+  test("bare COUNT(*) is answered from the manifest list; MoR deletes " +
+      "fall back") {
+    withCatalog("list") { c =>
+      spark.sql(s"CREATE NAMESPACE $c.db")
+      spark.sql(s"CREATE TABLE $c.db.t (id BIGINT, v DOUBLE)")
+      spark.sql(s"INSERT INTO $c.db.t SELECT id, 1.0 FROM range(40)")
+      spark.sql(s"INSERT INTO $c.db.t SELECT id, 2.0 FROM range(40, 60)")
+      spark.sql(s"DELETE FROM $c.db.t WHERE id < 5")
+      def explained(q: String): String =
+        spark.sql(s"EXPLAIN $q").collect()(0).getString(0)
+      val q = s"SELECT count(*) FROM $c.db.t"
+      assert(explained(q).contains("graft-agg"), explained(q))
+      assert(spark.sql(q).collect()(0).getLong(0) == 55L)
+      // mixed with a bounds aggregate: still pushed, through file stats
+      val mixed = spark.sql(s"SELECT count(*), max(id) FROM $c.db.t")
+      assert(pushed(mixed), mixed.queryExecution.executedPlan.toString)
+      val r = mixed.collect()(0)
+      assert(r.getLong(0) == 55L && r.getLong(1) == 59L)
+
+      import graft.catalog.{LocalCatalog, TableIdentifier}
+      val warehouse = spark.conf.get(s"spark.sql.catalog.$c.warehouse")
+      val t = graft.table.Table.load(new LocalCatalog(warehouse),
+        TableIdentifier(Seq("db"), "t"), new graft.io.HadoopFileIO())
+      graft.table.Mutations.deleteMoR(t, spark,
+        graft.table.Col("id") gte 50L)
+      assert(!explained(q).contains("graft-agg"), explained(q))
+      assert(spark.sql(q).collect()(0).getLong(0) == 45L)
+    }
+  }
+
   test("all-null and empty tables") {
     withCatalog("nul") { c =>
       spark.sql(s"CREATE NAMESPACE $c.db")
