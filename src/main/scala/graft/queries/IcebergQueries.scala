@@ -1562,8 +1562,9 @@ object IcebergQueries {
       .load())
   }
 
-  /** The same content through the Scan API's remapExpr (the
-    * transform()-based element remap) — the other read path. */
+  /** The same content through the Scan API (`Scan.toDF`): the planner
+    * in front of the same connector reader, so the gate pins that the
+    * table-layer entry reads list-element evolution identically. */
   def i22ListEvolutionScan(s: SparkSession, dir: String): DataFrame =
     flattenTags(Scan(listEvolvedTable(s, dir), s).toDF)
 

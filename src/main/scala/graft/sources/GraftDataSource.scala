@@ -909,7 +909,11 @@ private[sources] object BatchPlanning {
     *   non-matching rows early is sound. Position-delete-carrying tasks
     *   always read unfiltered (delete application counts file row
     *   positions); copy-on-write scans must pass `Nil` (a rewrite keeps
-    *   non-matching rows). */
+    *   non-matching rows).
+    * @param emitPos append each row's file position as a trailing
+    *   `_pos` column (after `_file`). Such a read stays on the row path
+    *   and never skips row groups, so the position counts every row of
+    *   the file. */
   def readerFactory(spark: SparkSession, t: Table,
       tasks: Seq[FileScanTask], full: StructType, required: StructType,
       emitFile: Boolean,
@@ -921,7 +925,8 @@ private[sources] object BatchPlanning {
         * renamed or dropped after the pin must still resolve to its
         * field id under the pinned names, not null-fill against the
         * current schema). None = current table schema. */
-      querySchema: Option[graft.spec.Schema] = None)
+      querySchema: Option[graft.spec.Schema] = None,
+      emitPos: Boolean = false)
       : PartitionReaderFactory = {
     val current = querySchema.getOrElse(t.schema)
     // A task whose write-schema id is unknown to the table metadata
@@ -999,14 +1004,13 @@ private[sources] object BatchPlanning {
 
     // Field-ID remapped read per write schema: files written before a
     // rename/widen are read with their OWN column names and types, rows
-    // then promote positionally to the current schema — the DSv2
-    // equivalent of the Scan API's per-write-schema remap, so SQL reads
+    // then promote positionally to the current schema, so reads
     // survive schema evolution instead of tripping a rename guard.
     val defaultFunc = ParquetShim.buildReaderFunc(spark, full, extended)
     // row-group-skipping variant for tasks where early row drop is
     // sound (no position deletes — those count file row positions)
     val filteredFunc =
-      if (filters.isEmpty) defaultFunc
+      if (filters.isEmpty || emitPos) defaultFunc
       else ParquetShim.buildReaderFunc(spark, full, extended, filters)
     // columnar batches — the zero-copy handoff whole-stage codegen
     // consumes — require EVERY task to qualify (Spark forbids mixing
@@ -1022,8 +1026,8 @@ private[sources] object BatchPlanning {
     //    selection-vector machinery (reading the extended schema and
     //    projecting back down), so upsert-maintained tables stay
     //    columnar too.
-    // `_file` emission and type-promoting evolution stay on the row
-    // path; rename-only evolution (with or without equality deletes)
+    // `_file`/`_pos` emission and type-promoting evolution stay on the
+    // row path; rename-only evolution (with or without equality deletes)
     // stays columnar via per-write-schema remapped batch readers.
     val remappableSids = tasks.map(_.schemaId).distinct
       .filter(sid => sid != current.schemaId && sid >= 0 &&
@@ -1086,7 +1090,7 @@ private[sources] object BatchPlanning {
         batchRemapExtSchemas.contains(task.schemaId)) &&
       (!remapNeeded || batchRemapSchemas.contains(task.schemaId))
     }
-    val batchEnabled = !emitFile && tasks.forall(taskColumnar) &&
+    val batchEnabled = !emitFile && !emitPos && tasks.forall(taskColumnar) &&
       ParquetShim.supportsBatch(spark, required) &&
       (!anyEq || ParquetShim.supportsBatch(spark, extended))
     val batchFunc =
@@ -1214,7 +1218,7 @@ private[sources] object BatchPlanning {
       posFunc, eqFuncs, emitFile, filteredFunc, batchFunc, eqSetMaxBytes,
       batchFuncUnfiltered, batchRemapFuncs, eqRemapKeyFuncs,
       batchExtFunc, batchExtFuncUnfiltered, batchRemapExtFuncs,
-      current.schemaId)
+      current.schemaId, emitPos)
   }
 }
 
@@ -1660,7 +1664,7 @@ private[sources] final class EqFilter(
         if (row.isNullAt(ords(j))) null
         else normVal(row.get(ords(j), types(j)))
       }
-      // null keys never match (engine anti-join parity)
+      // null keys never match (SQL equality semantics)
       if (!key.contains(null) &&
           set.contains(ArraySeq.unsafeWrapArray(key))) return false
       i += 1
@@ -1738,14 +1742,18 @@ private[sources] class GraftReaderFactory(
     /** The query-resolution schema's id: selects the `eqReadFuncs`
       * entry used for the data-file key pre-pass on non-remapped
       * tasks. */
-    currentSchemaId: Int = -1)
+    currentSchemaId: Int = -1,
+    /** Append the row's position in its data file as a trailing `_pos`
+      * long column, after `_file` (position deletes and the row-level
+      * reads that produce them). Requires an unfiltered row read. */
+    appendPos: Boolean = false)
     extends PartitionReaderFactory {
 
   private def normPath(p: String): String =
     p.replaceFirst("^file:/+", "/")
 
   private def columnarEligible(gp: GraftInputPartition): Boolean =
-    !appendFilePath &&
+    !appendFilePath && !appendPos &&
       (gp.eqDeletes.isEmpty ||
         batchRemapExtFuncs.contains(gp.schemaId) ||
         (batchExtReadFunc.isDefined &&
@@ -1876,8 +1884,8 @@ private[sources] class GraftReaderFactory(
             s"graft source: no delete reader for key set $names under " +
               s"write schema $dsid"))
         // Key of a row read under write-schema convs (`null` =
-        // current types). Null keys never match (parity with the
-        // engine's anti-join).
+        // current types). Null keys never match (SQL equality
+        // semantics).
         def keyOf(r: InternalRow, kcs: Array[ReaderConv]): Seq[Any] = {
           val key = Array.tabulate(names.length) { i =>
             if (r.isNullAt(i)) null
@@ -1914,8 +1922,7 @@ private[sources] class GraftReaderFactory(
           // key columns first (column-pruned parquet read), then STREAM
           // each delete file and retain only keys that occur in this
           // task — the kept set bounds by the task's file size, not the
-          // delete files, the same smaller-side bound the engine Scan
-          // path's anti-join enjoys.
+          // delete files.
           val (df, kcs) = dataKeyReader.get
           val present = new java.util.HashSet[Seq[Any]]()
           df(ParquetShim.partitionedFile(gp.path, gp.length)).foreach { r =>
@@ -1961,7 +1968,7 @@ private[sources] class GraftReaderFactory(
         else (readFunc, null)
     }
     val it = func(ParquetShim.partitionedFile(gp.path, gp.length))
-    val identityProjection = !appendFilePath && convs == null &&
+    val identityProjection = !appendFilePath && !appendPos && convs == null &&
       outputOrdinals.sameElements(extendedSchema.fields.indices)
     val extTypes = extendedSchema.fields.map(_.dataType)
     val filePathValue =
@@ -2016,8 +2023,8 @@ private[sources] class GraftReaderFactory(
               if (identityProjection) row
               else {
                 val n = outputOrdinals.length
-                val vals =
-                  new Array[Any](if (appendFilePath) n + 1 else n)
+                val vals = new Array[Any](n +
+                  (if (appendFilePath) 1 else 0) + (if (appendPos) 1 else 0))
                 var i = 0
                 while (i < n) {
                   val o = outputOrdinals(i)
@@ -2025,7 +2032,8 @@ private[sources] class GraftReaderFactory(
                     else row.get(o, extTypes(o))
                   i += 1
                 }
-                if (appendFilePath) vals(n) = filePathValue
+                if (appendFilePath) { vals(i) = filePathValue; i += 1 }
+                if (appendPos) vals(i) = rowIdx
                 new org.apache.spark.sql.catalyst.expressions
                   .GenericInternalRow(vals)
               }
@@ -2047,8 +2055,8 @@ private[sources] object GraftReaderFactory {
     org.apache.spark.sql.types.StructField("pos",
       org.apache.spark.sql.types.LongType)))
 
-  /** Eager per-task equality-delete key sets cap out here (matches the
-    * Scan path's broadcast-side intuition); above it the reader switches
+  /** Eager per-task equality-delete key sets cap out here (a
+    * broadcast-sized side); above it the reader switches
     * to the data-side-bounded application. Overridable per read via
     * option `eq-delete-set-max-bytes`. */
   val DefaultEqSetMaxBytes: Long = 64L * 1024 * 1024

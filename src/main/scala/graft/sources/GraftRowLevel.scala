@@ -23,7 +23,7 @@ import org.apache.spark.sql.connector.write.{
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.graftshim.ParquetShim
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
@@ -34,19 +34,31 @@ import graft.table.{
   DataWriter, Expr, FileScanTask, PartitionDirs, PendingSnapshot, Scan,
   Table, Transforms}
 
-/** Metadata columns the graft source synthesizes per row. */
+/** Metadata columns the graft source synthesizes per row: `_file` on
+  * every read, `_pos` (the row's position in its data file) on
+  * table-layer task reads. */
 private[sources] object GraftMetaColumns {
   val FileName = "_file"
+  val PosName = "_pos"
   val FileField: org.apache.spark.sql.types.StructField =
     org.apache.spark.sql.types.StructField(FileName, StringType,
       nullable = false)
-  val Columns: Array[MetadataColumn] = Array(new MetadataColumn {
-    override def name(): String = FileName
+  val PosField: org.apache.spark.sql.types.StructField =
+    org.apache.spark.sql.types.StructField(PosName, LongType,
+      nullable = false)
+
+  private def column(f: org.apache.spark.sql.types.StructField,
+      doc: String): MetadataColumn = new MetadataColumn {
+    override def name(): String = f.name
     override def dataType(): org.apache.spark.sql.types.DataType =
-      StringType
+      f.dataType
     override def isNullable: Boolean = false
-    override def comment(): String = "data file path of the row"
-  })
+    override def comment(): String = doc
+  }
+  val Columns: Array[MetadataColumn] =
+    Array(column(FileField, "data file path of the row"))
+  val WithPos: Array[MetadataColumn] =
+    Columns :+ column(PosField, "position of the row in its data file")
 }
 
 /** Group-based copy-on-write row-level operations: `UPDATE`, `MERGE
@@ -305,10 +317,11 @@ private[sources] class GraftCowBatchWrite(
       case other => throw new IllegalStateException(
         s"graft cow write: unexpected commit message $other")
     }.toSeq
-    val replaced =
+    val replacedTasks =
       Option(op.cowScan).getOrElse(throw new IllegalStateException(
         "graft cow write: committed without a planned scan"))
-        .currentTasks.map(_.file.filePath).toSet
+        .currentTasks
+    val replaced = replacedTasks.map(_.file.filePath).toSet
     if (paths.isEmpty && replaced.isEmpty) return // matched nothing
     val hconf = spark.sessionState.newHadoopConf()
     val nan =
@@ -323,9 +336,12 @@ private[sources] class GraftCowBatchWrite(
         DataWriter.harvestFiles(hconf, ps, meta.currentSchema,
           PartitionDirs.decodeSegments(relDir, partType), nan)
       }
+    // scoped to the replaced files' partitions: the commit and its
+    // rebase check decode only the manifests that can hold them
     table.commitSnapshot(PendingSnapshot(Operation.Overwrite,
       addedDataFiles = files,
-      deletedFilePaths = replaced))
+      deletedFilePaths = replaced,
+      partitionScope = PendingSnapshot.scopeOf(replacedTasks)))
     ()
   }
 

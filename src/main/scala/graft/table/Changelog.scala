@@ -5,6 +5,7 @@ import scala.collection.immutable.ArraySeq
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.TaskRead
 import graft.spec._
 
 /** CDC / changelog reads: every row-level change committed by the
@@ -54,15 +55,12 @@ object Changelog {
       throw new IllegalArgumentException(s"unknown snapshot $toInclusive"))
     val schema = to.schemaId.flatMap(table.metadata.schemaById)
       .getOrElse(table.schema)
-    val reader = Scan(table, spark)
-
     val chain = ancestorChain(table, to, fromExclusive)
     val parts = chain.zipWithIndex.flatMap { case (s, ordinal) =>
-      snapshotChanges(table, spark, reader, schema, s, ordinal)
+      snapshotChanges(table, spark, schema, s, ordinal)
     }
     parts.reduceOption(_ unionAll _).getOrElse {
-      val base = reader.readTasks(schema, Nil)
-      tag(base, Insert, -1, -1L).limit(0)
+      tag(TaskRead(spark, table, schema, Nil), Insert, -1, -1L).limit(0)
     }
   }
 
@@ -272,8 +270,7 @@ object Changelog {
 
   /** The INSERT / DELETE parts contributed by one snapshot. */
   private def snapshotChanges(table: Table, spark: SparkSession,
-      reader: Scan, schema: Schema, s: Snapshot,
-      ordinal: Int): Seq[DataFrame] = {
+      schema: Schema, s: Snapshot, ordinal: Int): Seq[DataFrame] = {
     val op = s.summary.map(_.operation).getOrElse(Operation.Append)
     if (op == Operation.Replace) return Nil // rewrite, no logical change
 
@@ -302,13 +299,13 @@ object Changelog {
 
     val inserts =
       if (addedPaths.isEmpty) Nil
-      else Seq(tag(reader.readTasks(schema,
+      else Seq(tag(TaskRead(spark, table, schema,
         sTasks.filter(t => addedPaths(t.file.filePath))),
         Insert, ordinal, s.snapshotId))
 
     val cowDeletes =
       if (removedPaths.isEmpty) Nil
-      else Seq(tag(reader.readTasks(schema,
+      else Seq(tag(TaskRead(spark, table, schema,
         parentTasks.filter(t => removedPaths(t.file.filePath))),
         Delete, ordinal, s.snapshotId))
 
@@ -322,9 +319,9 @@ object Changelog {
           .map(_.file.filePath).toSet
         if (affected.isEmpty) Nil
         else {
-          val before = reader.readTasks(schema,
+          val before = TaskRead(spark, table, schema,
             parentTasks.filter(t => affected(t.file.filePath)))
-          val after = reader.readTasks(schema,
+          val after = TaskRead(spark, table, schema,
             sTasks.filter(t => affected(t.file.filePath)))
           Seq(tag(exceptAllCanonical(before, after), Delete, ordinal,
             s.snapshotId))

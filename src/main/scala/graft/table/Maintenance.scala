@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.avro.ManifestAvro
+import graft.sources.TaskRead
 import graft.spec._
 
 /** Table maintenance: small-file compaction and snapshot expiry with
@@ -67,9 +68,9 @@ object Maintenance extends org.apache.spark.internal.Logging {
     val nFiles = math.max(1L, (totalBytes + targetFileSizeBytes - 1)
       / targetFileSizeBytes)
     val recordsPerFile = math.max(1L, totalRecords / nFiles)
-    // read through the scan path (applies MoR deletes of the selected
+    // read through the reader (applies MoR deletes of the selected
     // candidates) — only the candidate tasks, not the whole table
-    val df = Scan(table, spark).readTasks(table.schema, candidates)
+    val df = TaskRead(spark, table, table.schema, candidates)
     val newFiles = {
       val spec = table.spec
       if (spec.isUnpartitioned) {
@@ -298,7 +299,7 @@ object Maintenance extends org.apache.spark.internal.Logging {
     val tasks = Scan(table, spark).planFiles()
     if (tasks.isEmpty) return table
     val schema = table.schema
-    val df = Scan(table, spark).readTasks(schema, tasks)
+    val df = TaskRead(spark, table, schema, tasks)
     val bounds = ZOrder.columnBounds(tasks, schema, columns, df)
     val z = ZOrder.zvalue(df, schema, columns, bounds)
     val totalBytes = tasks.map(_.file.fileSizeInBytes).sum

@@ -3,6 +3,7 @@ package graft.table
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.TaskRead
 import graft.spec._
 
 /** Full CRUD over Iceberg tables (SURVEY §2.7), Spark-first:
@@ -43,20 +44,16 @@ object Mutations {
   private def matchFilter(pred: Expr): Column =
     coalesce(pred.toColumn, lit(false))
 
-  private def readFiles(table: Table, spark: SparkSession,
-      paths: Seq[String]): DataFrame =
-    spark.read
-      .schema(graft.spec.SchemaConverters.toSparkSchema(table.schema))
-      .parquet(paths: _*)
-
-  /** Read candidate tasks THROUGH the MoR-applying reader: a CoW
-    * rewrite that read raw parquet would resurrect rows already removed
-    * by delete files. Applied deletes also get retired: the rewritten
-    * files carry a fresh (higher) sequence number, so old position/
-    * equality deletes no longer apply to them. */
+  /** Read candidate tasks THROUGH the MoR-applying reader
+    * ([[TaskRead]]), by field id under the current schema:
+    * a rewrite that read raw parquet would resurrect rows already
+    * removed by delete files, and would read renamed columns as null.
+    * Applied deletes also get retired: the rewritten files carry a
+    * fresh (higher) sequence number, so old position/equality deletes
+    * no longer apply to them. */
   private def readCandidates(table: Table, spark: SparkSession,
       candidates: Seq[FileScanTask]): DataFrame =
-    Scan(table, spark).readTasks(table.schema, candidates)
+    TaskRead(spark, table, table.schema, candidates)
 
   /** The snapshot that swaps `candidates` for `added`, scoped to the
     * candidates' partitions so the commit decodes only the manifests
@@ -95,19 +92,20 @@ object Mutations {
     }
 
   /** Merge-on-read position delete (T5, `table/delete.go:400-464`):
-    * record matching (file, pos) pairs; the scan applies them (J2). */
+    * record matching (file, pos) pairs; the scan applies them (J2). The
+    * candidates are read through the reader with its `_file`/`_pos`
+    * columns, so the predicate sees renamed columns by field id and
+    * rows already deleted are not recorded again. */
   def deleteMoR(table: Table, spark: SparkSession, pred0: Expr): Table =
     withConflictRetry(table) { t =>
       val pred = pred0.simplify
       val candidates = Scan(t, spark).filter(pred).planFiles()
       if (candidates.isEmpty) t
       else {
-        val deletes = readFiles(t, spark, candidates.map(_.file.filePath))
-          .withColumn("file_path",
-            Scan.decodedMetaPath(col("_metadata.file_path")))
-          .withColumn("pos", col("_metadata.row_index"))
-          .where(matchFilter(pred))
-          .select("file_path", "pos")
+        val rows = readCandidates(t, spark, candidates)
+        val deletes = rows.where(matchFilter(pred))
+          .select(rows.metadataColumn("_file").as("file_path"),
+            rows.metadataColumn("_pos").as("pos"))
         // partition-scoped delete files: the plan knows each candidate's
         // partition tuple, so deletes route into per-partition files and
         // later scans of other partitions never touch them. Candidates
@@ -141,7 +139,7 @@ object Mutations {
 
   /** Merge-on-read equality delete (T6 — the reference returns "not yet
     * fully implemented", `table/delete.go:494-501`): write the key
-    * values; the scan anti-joins rows from OLDER sequence numbers.
+    * values; reads drop matching rows from OLDER sequence numbers.
     *
     * Partition scoping: when every partition source column is among the
     * key columns AND every live data manifest was written under the

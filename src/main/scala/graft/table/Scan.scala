@@ -1,11 +1,9 @@
 package graft.table
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{
-  broadcast, col, concat, lit, raise_error, regexp_replace, when}
+import org.apache.spark.sql.functions.col
 
+import graft.sources.TaskRead
 import graft.spec._
 
 /** A delete file attached to a scan task, with the metadata MoR
@@ -39,9 +37,10 @@ final case class FileScanTask(
   * Planning = snapshot-resolve → manifest-list read → manifest prune
   * (partition summaries) → entry prune (column bounds) → tasks with MoR
   * delete files attached (the step `table/scan.go:146-149` skips).
-  * Execution = vectorized parquet read + Catalyst, with position deletes
-  * applied as an anti-join on (_metadata.file_path, _metadata.row_index)
-  * and equality deletes as anti-joins on their key columns.
+  * Execution is not here: the planned tasks are read by
+  * [[graft.sources.TaskRead]], the connector reader every SQL read also
+  * uses, which applies each task's position and equality deletes and
+  * remaps files written under older schemas by field id.
   */
 class Scan private (
     table: Table,
@@ -354,348 +353,54 @@ class Scan private (
         else Some(data.map(_.liveRowsCount).sum)
     }
 
-  /** Execute: assemble the DataFrame (`table/scan.go:202-231`, the part
-    * the reference returns empty). */
+  /** Execute (`table/scan.go:202-231`, the part the reference returns
+    * empty): plan the files, read them through [[TaskRead]] — deletes
+    * applied and schemas remapped per task inside the reader — then
+    * apply the filter, projection and limit. The filter also reaches
+    * parquet row-group skipping where that is sound. */
   def toDF: DataFrame = {
-    val snap = resolveSnapshot().getOrElse(
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.spec.SchemaConverters.toSparkSchema(table.schema)))
-    applyProjection(readTasks(schemaForSnapshot(snap), planFiles()))
-  }
-
-  /** Raw read of a task subset with MoR deletes applied and schemas
-    * remapped — no filter/select/limit. Mutation rewrites use this so
-    * rows already removed by delete files are NOT resurrected into
-    * rewritten files. */
-  private[table] def readTasks(schema: Schema,
-      tasks: Seq[FileScanTask]): DataFrame = {
-    val sparkSchema = graft.spec.SchemaConverters.toSparkSchema(schema)
-    if (tasks.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sparkSchema)
-
-    // Equality deletes are sequence-scoped: a delete applies only to
-    // files with OLDER data sequence numbers, so tasks are grouped by
-    // their applicable equality-delete set (and by the schema they were
-    // written under — field-ID remap is per write schema) and each group
-    // is read, remapped, and anti-joined independently, then unioned.
-    // Position deletes carry file_path and therefore self-scope.
-    //
-    // FAN-OUT CAP (round-3 verdict "what's wrong #2"): with partition-
-    // scoped equality deletes a full scan of N delete-carrying
-    // partitions would otherwise union N sub-plans — 10k partitions =
-    // 10k scan nodes. Above `maxEqGroups` distinct delete sets, the
-    // delete-carrying tasks collapse into ONE sequence-tagged pass:
-    // every data row gets its file's sequence number (tiny broadcast
-    // path→seq lookup), every delete row its file's, and one anti-join
-    // per distinct key-set applies `deleteSeq > dataSeq` exactly —
-    // same semantics, O(#key-sets) scan nodes instead of O(#partitions).
-    val maxEqGroups = intOption("max-eq-delete-groups", Scan.MaxEqDeleteGroups)
-
-    def eqSetOf(t: FileScanTask) = t.deleteFiles
-      .filter(_.file.content == FileContent.EqualityDeletes)
-      .map(d => (d.file.filePath, d.file.equalityIds, d.schemaId)).toSet
-
-    val parts = tasks.groupBy(_.schemaId).toSeq
-      .flatMap { case (fileSchemaId, schemaTasks) =>
-        val eqGroups = schemaTasks.groupBy(eqSetOf)
-        if (eqGroups.size <= maxEqGroups)
-          eqGroups.toSeq.map { case (eqSet, groupTasks) =>
-            readGroup(schema, fileSchemaId, groupTasks,
-              tagSequence = false, exactEqApply(schema, eqSet))
-          }
-        else {
-          // delete-free tasks keep a plain sub-plan (the common case at
-          // scale: most files untouched); delete-carrying ones share
-          // the tagged pass
-          val (clean, dirty) = schemaTasks.partition(eqSetOf(_).isEmpty)
-          val cleanPart =
-            if (clean.isEmpty) Nil
-            else Seq(readGroup(schema, fileSchemaId, clean,
-              tagSequence = false, (d: DataFrame) => d))
-          cleanPart :+ readGroup(schema, fileSchemaId, dirty,
-            tagSequence = true, taggedEqApply(schema, dirty))
-        }
-      }
-    parts.reduce(_ unionAll _)
-  }
-
-  private def normPath(p: String): String = Scan.normPath(p)
-  private def normPathCol(c: org.apache.spark.sql.Column) =
-    regexp_replace(c, "^file:/+", "/")
-
-  /** Read one (write-schema, delete-scope) group: parquet scan +
-    * position-delete anti-join + field-ID remap, then the given
-    * equality-delete application. With `tagSequence` every row carries
-    * `__dseq` = its file's data sequence number. */
-  private def readGroup(schema: Schema, fileSchemaId: Int,
-      groupTasks: Seq[FileScanTask], tagSequence: Boolean,
-      eqApply: DataFrame => DataFrame): DataFrame = {
-    val paths = groupTasks.map(_.file.filePath)
-    val fileSchema = table.metadata.schemaById(fileSchemaId)
-      .getOrElse(schema)
-    val fileSparkSchema =
-      graft.spec.SchemaConverters.toSparkSchema(fileSchema)
-    val posDeletes = groupTasks.flatMap(_.deleteFiles)
-      .filter(_.file.content == FileContent.PositionDeletes)
-      .map(_.file.filePath).distinct
-    val needMeta = posDeletes.nonEmpty || tagSequence
-
-    var df = spark.read.schema(fileSparkSchema).parquet(paths: _*)
-    // MoR position metadata captured before any projection (J2 — the
-    // read-side application the reference never wired,
-    // table/scan.go:146-149)
-    if (needMeta)
-      df = df.withColumn("__file_path",
-          Scan.decodedMetaPath(col("_metadata.file_path")))
-        .withColumn("__pos", col("_metadata.row_index"))
-
-    // field-ID remap (SURVEY M6 "reads remap by field ID"): each query
-    // column resolves the file column carrying the same ID —
-    // rename-safe; added columns null-fill; dropped columns vanish.
-    // Struct columns remap RECURSIVELY by inner field id (nested
-    // rename/add/drop — a positional cast cannot express add/drop,
-    // whose arities differ).
-    if (fileSchemaId != schema.schemaId) {
-      val projected = schema.fields.map { qf =>
-        fileSchema.field(qf.id) match {
-          case Some(ff) =>
-            Scan.remapExpr(col(ff.name), qf.fieldType, ff.fieldType)
-              .as(qf.name)
-          case None =>
-            lit(null)
-              .cast(graft.spec.SchemaConverters.toSparkType(qf.fieldType))
-              .as(qf.name)
-        }
-      }
-      val extras =
-        if (needMeta) Seq(col("__file_path"), col("__pos"))
-        else Nil
-      df = df.select(projected ++ extras: _*)
-    }
-
-    if (posDeletes.nonEmpty) {
-      val deletes = spark.read.parquet(posDeletes: _*)
-        .select(col("file_path").as("__file_path"),
-          col("pos").as("__pos"))
-      df = df.join(deletes, Seq("__file_path", "__pos"), "left_anti")
-    }
-
-    if (tagSequence) {
-      // broadcast (path → data sequence number); one row per file. A
-      // lookup miss means path normalization drifted — fail loud, a
-      // silent miss would resurrect deleted rows.
-      val lookup = spark.createDataFrame(
-        groupTasks.map(t =>
-          org.apache.spark.sql.Row(normPath(t.file.filePath),
-            t.sequenceNumber)).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__lp",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__dseq",
-            org.apache.spark.sql.types.LongType))))
-      df = df.withColumn("__np", normPathCol(col("__file_path")))
-        .join(broadcast(lookup), col("__np") === col("__lp"), "left")
-        .withColumn("__dseq",
-          when(col("__dseq").isNull, raise_error(concat(
-            lit("graft: data file path not in sequence lookup: "),
-            col("__np")))).otherwise(col("__dseq")))
-        .drop("__np", "__lp")
-    }
-    if (needMeta) df = df.drop("__file_path", "__pos")
-    eqApply(df).drop("__dseq")
-  }
-
-  /** Key columns of an equality-delete group, resolved BY FIELD ID
-    * through the delete files' write schema: (query field, file field)
-    * pairs. A key renamed or type-promoted after the deletes were
-    * written still applies — reading by current name would miss the
-    * stored column. */
-  private def eqKeyPairs(schema: Schema, fieldIds: Seq[Int],
-      deleteSchemaId: Int): Seq[(NestedField, NestedField)] = {
-    val delSchema =
-      if (deleteSchemaId >= 0)
-        table.metadata.schemaById(deleteSchemaId).getOrElse(schema)
-      else schema
-    fieldIds.flatMap(id => schema.field(id)).map { qf =>
-      val ff = delSchema.field(qf.id).getOrElse(
-        throw new IllegalStateException(
-          s"graft: equality-delete key (field id ${qf.id}) is missing " +
-            s"from the delete file's write schema (id $deleteSchemaId)"))
-      (qf, ff)
-    }
-  }
-
-  /** Read an equality-delete group's key columns, surfaced under
-    * CURRENT names and types. */
-  private def eqKeyDf(schema: Schema, pairs: Seq[(NestedField, NestedField)],
-      paths: Seq[String], withMeta: Boolean): DataFrame = {
-    import graft.spec.SchemaConverters.toSparkType
-    val fileKeySchema = org.apache.spark.sql.types.StructType(pairs.map {
-      case (_, ff) => org.apache.spark.sql.types.StructField(
-        ff.name, toSparkType(ff.fieldType), nullable = true)
-    })
-    val raw = spark.read.schema(fileKeySchema).parquet(paths: _*)
-    val keyCols = pairs.map { case (qf, ff) =>
-      col(ff.name).cast(toSparkType(qf.fieldType)).as(qf.name)
-    }
-    if (withMeta)
-      raw.select(keyCols :+
-        Scan.decodedMetaPath(col("_metadata.file_path"))
-          .as("__meta_file_path"): _*)
-    else raw.select(keyCols: _*)
-  }
-
-  /** Exact per-group equality application: the group's tasks all share
-    * `eqSet`, so a plain anti-join per key-set is exact. */
-  private def exactEqApply(schema: Schema,
-      eqSet: Set[(String, Seq[Int], Int)])(df0: DataFrame): DataFrame = {
-    var df = df0
-    eqSet.groupBy(e => (e._2, e._3)).foreach {
-      case ((fieldIds, deleteSchemaId), files) =>
-        val pairs = eqKeyPairs(schema, fieldIds, deleteSchemaId)
-        if (pairs.nonEmpty) {
-          val delDf = eqKeyDf(schema, pairs, files.map(_._1).toSeq,
-            withMeta = false).distinct()
-          df = df.join(delDf, pairs.map(_._1.name), "left_anti")
-        }
-    }
-    df
-  }
-
-  /** Coarse sequence-tagged application over a mixed group: one
-    * anti-join per distinct key-set with the Iceberg rule
-    * `deleteSeq > dataSeq` in the join condition. Partition scoping is
-    * implied: a scoped delete only ever reached `deleteFiles` of tasks
-    * in its (specId, partition), and `dirtyTasks` is exactly the union
-    * of those tasks, so applying it across the group only adds key
-    * matches in other partitions — which identity-partitioned tables
-    * cannot have for identity-source keys, and which the `> dataSeq`
-    * guard bounds in time exactly as Iceberg's global deletes do. */
-  private def taggedEqApply(schema: Schema,
-      dirtyTasks: Seq[FileScanTask])(df0: DataFrame): DataFrame = {
-    val refs = dirtyTasks.flatMap(_.deleteFiles)
-      .filter(_.file.content == FileContent.EqualityDeletes)
-      .map(d => (d.file.filePath, d.file.equalityIds, d.sequenceNumber,
-        d.schemaId))
-      .distinct
-    var df = df0
-    refs.groupBy(r => (r._2, r._4)).foreach {
-      case ((fieldIds, deleteSchemaId), fileRefs) =>
-        val pairs = eqKeyPairs(schema, fieldIds, deleteSchemaId)
-        if (pairs.nonEmpty) {
-          val keyCols = pairs.map(_._1.name)
-          val delPaths = fileRefs.map(_._1).distinct
-          val delLookup = spark.createDataFrame(
-            fileRefs.map(r =>
-              org.apache.spark.sql.Row(normPath(r._1), r._3)).asJava,
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("__dlp",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("__delseq",
-                org.apache.spark.sql.types.LongType))))
-          val delDf = eqKeyDf(schema, pairs, delPaths, withMeta = true)
-            .withColumn("__dnp", normPathCol(col("__meta_file_path")))
-            .join(broadcast(delLookup), col("__dnp") === col("__dlp"))
-            .select(keyCols.map(col) :+ col("__delseq"): _*)
-          val cond = keyCols.map(k => df(k) === delDf(k))
-            .reduce(_ && _) && delDf("__delseq") > df("__dseq")
-          df = df.join(delDf, cond, "left_anti")
-        }
-    }
-    df
-  }
-
-  /** Positions of live data rows matched by the scan's EQUALITY
-    * deletes, as a `(file_path, pos)` frame — the data-side half of
-    * [[Maintenance.rewriteEqualityDeletes]]' eq→position conversion.
-    * Sequence gating is inherited from [[planFiles]] (a delete only
-    * ever attaches to strictly-older data files), so grouping tasks by
-    * their exact attached key-set applies each delete to exactly the
-    * files it gates — the same discipline as `exactEqApply`, with the
-    * anti-join flipped to a semi-join. Cost: reads ONLY the key
-    * columns of data files that carry equality deletes (column-pruned
-    * parquet scan), never full rows, and files without an equality
-    * delete attached are skipped entirely. */
-  private[table] def equalityMatchedPositions(): DataFrame = {
-    import org.apache.spark.sql.types.{LongType => SparkLong,
-      StringType => SparkString, StructField => SField,
-      StructType => SStruct}
-    import graft.spec.SchemaConverters.toSparkType
-    val schema = resolveSnapshot().map(schemaForSnapshot)
-      .getOrElse(table.schema)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      SStruct(Seq(SField("file_path", SparkString),
-        SField("pos", SparkLong))))
-    def eqSetOf(t: FileScanTask) = t.deleteFiles
-      .filter(_.file.content == FileContent.EqualityDeletes)
-      .map(d => (d.file.filePath, d.file.equalityIds, d.schemaId)).toSet
-    val parts = planFiles().groupBy(t => (t.schemaId, eqSetOf(t))).toSeq
-      .filter(_._1._2.nonEmpty)
-      .flatMap { case ((fileSchemaId, eqSet), groupTasks) =>
-        val fileSchema = table.metadata.schemaById(fileSchemaId)
-          .getOrElse(schema)
-        eqSet.groupBy(e => (e._2, e._3)).toSeq.flatMap {
-          case ((fieldIds, deleteSchemaId), files) =>
-            val pairs = eqKeyPairs(schema, fieldIds, deleteSchemaId)
-            if (pairs.isEmpty) None
-            else {
-              // data-side key columns resolve BY FIELD ID through the
-              // data files' write schema — a key renamed since the
-              // files were written still reads the stored column
-              val filePairs = pairs.map { case (qf, _) =>
-                val ff = fileSchema.field(qf.id).getOrElse(
-                  throw new IllegalStateException(
-                    s"graft: equality-delete key (field id ${qf.id}) " +
-                      s"missing from data write schema $fileSchemaId"))
-                (qf, ff)
-              }
-              val readSchema = SStruct(filePairs.map { case (_, ff) =>
-                SField(ff.name, toSparkType(ff.fieldType),
-                  nullable = true) })
-              val data = spark.read.schema(readSchema)
-                .parquet(groupTasks.map(_.file.filePath): _*)
-                .select(filePairs.map { case (qf, ff) =>
-                  col(ff.name).cast(toSparkType(qf.fieldType))
-                    .as(qf.name) } ++ Seq(
-                  Scan.decodedMetaPath(col("_metadata.file_path"))
-                    .as("file_path"),
-                  col("_metadata.row_index").as("pos")): _*)
-              val delDf = eqKeyDf(schema, pairs, files.map(_._1).toSeq,
-                withMeta = false).distinct()
-              Some(data.join(delDf, pairs.map(_._1.name), "left_semi")
-                .select(col("file_path"), col("pos")))
-            }
-        }
-      }
-    parts.foldLeft(empty)(_ unionAll _)
-  }
-
-  private def applyProjection(df0: DataFrame): DataFrame = {
-    val schema = resolveSnapshot().map(schemaForSnapshot)
-      .getOrElse(table.schema)
-    var df = df0
+    val schema = querySchema
+    var df = TaskRead(spark, table, schema, planFiles())
     resolvedFilter(schema).foreach(e => df = df.where(e.toColumn))
     if (selected.nonEmpty)
       df = df.select(selected.map(s => col(resolve(schema, s))): _*)
     limitN.foreach(n => df = df.limit(n))
     df
   }
+
+  /** The schema reads resolve names through: the snapshot's for time
+    * travel, else the current one. */
+  private def querySchema: Schema =
+    resolveSnapshot().map(schemaForSnapshot).getOrElse(table.schema)
+
+  /** Positions of live data rows matched by the scan's EQUALITY
+    * deletes, as a `(file_path, pos)` frame — the data-side half of
+    * [[Maintenance.rewriteEqualityDeletes]]' eq→position conversion:
+    * the rows of the files that carry equality deletes, minus the rows
+    * that survive those deletes when [[TaskRead]] applies them (keys by
+    * field id, sequence gating inherited from [[planFiles]]). Files
+    * without an equality delete attached are not read. */
+  private[table] def equalityMatchedPositions(): DataFrame = {
+    def isEq(d: DeleteFileRef) = d.file.content == FileContent.EqualityDeletes
+    val tasks = planFiles().filter(_.deleteFiles.exists(isEq))
+    def positions(ts: Seq[FileScanTask]): DataFrame = {
+      val df = TaskRead(spark, table, querySchema, ts)
+      df.select(df.metadataColumn("_file").as("file_path"),
+        df.metadataColumn("_pos").as("pos"))
+    }
+    val raw = tasks.map(_.copy(deleteFiles = Nil))
+    val eqApplied =
+      tasks.map(t => t.copy(deleteFiles = t.deleteFiles.filter(isEq)))
+    positions(raw).join(positions(eqApplied), Seq("file_path", "pos"),
+      "left_anti")
+  }
 }
 
 object Scan {
-  /** Max distinct equality-delete sets per write-schema before the
-    * scan collapses them into one sequence-tagged pass (plan size must
-    * not grow with partition count; see readTasks). Overridable per
-    * scan via `option("max-eq-delete-groups", n)`. */
-  val MaxEqDeleteGroups = 8
-
   /** `file:`-scheme-insensitive path equality: `_metadata.file_path`
     * reports `file:///x` while manifests may carry `/x` or `file:/x`.
-    * THE one normalizer for path-set membership — the scan's delete
-    * joins and maintenance's orphan GC both use it; the codebase's
+    * The normalizer for path-set membership (maintenance's orphan GC
+    * uses it, the connector reader has its own copy); the codebase's
     * other normalizer, `DataWriter.normalizePath`, serves the opposite
     * purpose (producing the `file:`-prefixed form `_metadata` reports)
     * and must stay distinct. */
@@ -714,54 +419,6 @@ object Scan {
   private[table] def decodedMetaPath(
       c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     graft.functions.MetaPathDecodeExpr.column(c)
-
-  /** Remap a column read under the file's schema (`ft`) to the query
-    * schema's type (`qt`) BY FIELD ID. Struct pairs rebuild
-    * recursively — inner renames take the query name, inner drops
-    * vanish, inner adds null-fill — with the parent's null-ness
-    * preserved (a struct() of nulls is not a null struct). List
-    * elements and map values recurse through `transform` /
-    * `map_from_arrays` (all codegen'd built-ins), so evolution INSIDE
-    * `list<struct>` / `map<k, struct>` — add/drop/rename/promote on an
-    * element leaf — remaps too; map keys only ever cast (they are
-    * frozen by [[SchemaUpdate]]). Non-struct pairs cast (covers type
-    * promotion). */
-  private[table] def remapExpr(parent: org.apache.spark.sql.Column,
-      qt: IcebergType, ft: IcebergType): org.apache.spark.sql.Column = {
-    val sparkQt = graft.spec.SchemaConverters.toSparkType(qt)
-    (qt, ft) match {
-      case _ if qt == ft => parent
-      case (StructType(qfs), StructType(ffs)) =>
-        val inner = qfs.map { qf2 =>
-          ffs.find(_.id == qf2.id) match {
-            case Some(ff2) =>
-              remapExpr(parent.getField(ff2.name),
-                qf2.fieldType, ff2.fieldType).as(qf2.name)
-            case None =>
-              lit(null)
-                .cast(graft.spec.SchemaConverters.toSparkType(qf2.fieldType))
-                .as(qf2.name)
-          }
-        }
-        when(parent.isNull, lit(null).cast(sparkQt))
-          .otherwise(org.apache.spark.sql.functions.struct(inner: _*))
-      case (ListType(_, qe, _), ListType(_, fe, _)) =>
-        // transform() yields null on null input, preserving list
-        // null-ness without an explicit guard
-        org.apache.spark.sql.functions.transform(parent,
-          x => remapExpr(x, qe, fe))
-      case (MapType(_, qk, _, qv, _), MapType(_, fk, _, fv, _)) =>
-        when(parent.isNull, lit(null).cast(sparkQt))
-          .otherwise(org.apache.spark.sql.functions.map_from_arrays(
-            org.apache.spark.sql.functions.transform(
-              org.apache.spark.sql.functions.map_keys(parent),
-              k => remapExpr(k, qk, fk)),
-            org.apache.spark.sql.functions.transform(
-              org.apache.spark.sql.functions.map_values(parent),
-              v => remapExpr(v, qv, fv))))
-      case _ => parent.cast(sparkQt)
-    }
-  }
 
   /** Surviving data manifests at/above which planFiles reads them on
     * executors instead of serially on the driver (Iceberg's

@@ -83,13 +83,12 @@ final class SchemaUpdate(table: Table) {
   //
   // Adding a field inside a struct (old files null-fill it), dropping
   // NOT NULL on a nested field (metadata-only), and nested RENAME/DROP:
-  // field ids are preserved, and both read paths remap nested columns
-  // recursively BY ID (the Scan path builds a by-id projection, the
-  // DSv2 path requests the file's own inner names in the current
-  // schema's order), so pre-evolution files read correctly. Nested
-  // type PROMOTION (updateColumnTypeAt) rides the same by-id remap:
-  // the scan casts the file's narrower physical type up to the current
-  // leaf type. Paths descend structs by child NAME and step into list
+  // field ids are preserved, and the reader remaps nested columns
+  // recursively BY ID (it requests the file's own inner names in the
+  // current schema's order), so pre-evolution files read correctly.
+  // Nested type PROMOTION (updateColumnTypeAt) rides the same by-id
+  // remap: the request asks for the current leaf type and the parquet
+  // reader widens the file's narrower physical type. Paths descend structs by child NAME and step into list
   // elements / map values via the spec's canonical `element` / `value`
   // segments (`tags.element.name` evolves a `list<struct>` leaf); map
   // KEYS are equality identities and stay frozen.

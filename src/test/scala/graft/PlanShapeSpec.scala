@@ -1,8 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   ShuffleExchangeExec}
 
@@ -12,7 +17,7 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   * AQE is disabled around planning so the static plan is inspected
   * (AQE only ever REMOVES exchanges at runtime, so a static bound is
   * a safe upper bound). */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -444,5 +449,106 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(schemas.exists(sc => sc.contains("hs") && !sc.contains("sig")),
         s"verify must read hs without sig:\n${schemas.mkString("\n")}")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  // ------------------------------------------ table-layer read executor
+
+  /** Scan leaves of every physical plan `f` executes, writes included
+    * (AQE stages are looked through). */
+  private def scanLeaves(f: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = { plans.add(qe.executedPlan); () }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    spark.listenerManager.register(listener)
+    try { f; org.apache.spark.TestListenerBus.drain(sc) }
+    finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq.flatMap(p => collectLeaves(p).collect {
+      case s @ (_: BatchScanExec | _: FileSourceScanExec) => s
+    })
+  }
+
+  /** Every scan `f` runs is the connector's task read: no parquet file
+    * scan beside it (a second executor), at least one task read. */
+  private def assertTaskReadsOnly(what: String)(f: => Unit): Unit = {
+    val leaves = scanLeaves(f)
+    assert(leaves.nonEmpty, s"$what ran no scan")
+    leaves.foreach {
+      case b: BatchScanExec
+          if b.scan.description().startsWith("graft-tasks:") =>
+      case other =>
+        fail(s"$what must read only through the task reader, got:\n$other")
+    }
+  }
+
+  test("table-layer reads plan only connector task scans: toDF (plain, " +
+      "time travel, incremental), CoW and MoR deletes, changelog, " +
+      "compaction") {
+    import graft.sources.TaskRead
+    import graft.spec._
+    import graft.table._
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft-oneexec-")
+      .toString
+    val cat = new graft.catalog.LocalCatalog(wh)
+    cat.createNamespace(Seq("db"))
+    var t = Table.create(cat,
+      graft.catalog.TableIdentifier(Seq("db"), "oneexec"),
+      Schema(0, Seq(NestedField(1, "id", LongType, required = true),
+        NestedField(2, "name", StringType, required = false))),
+      io = new graft.io.HadoopFileIO())
+    def rows(ids: Range) =
+      ids.map(i => (i.toLong, s"n$i")).toDF("id", "name").coalesce(1)
+    t = TableOps.append(t, rows(1 to 10))
+    val first = t.currentSnapshot.get.snapshotId
+    t = TableOps.append(t, rows(11 to 20))
+    val second = t.currentSnapshot.get.snapshotId
+
+    assertTaskReadsOnly("toDF")(
+      Scan(t, spark).filter(Col("id").gt(5L)).toDF.collect())
+    assertTaskReadsOnly("time-travel toDF")(
+      Scan(t, spark).useSnapshot(first).toDF.collect())
+    assertTaskReadsOnly("incremental toDF")(
+      Scan(t, spark).appendsBetween(first, second).toDF.collect())
+    assertTaskReadsOnly("CoW delete") {
+      t = Mutations.deleteCoW(t, spark, Col("id").between(3L, 4L))
+    }
+    val beforeMoR = t.currentSnapshot.get.snapshotId
+    assertTaskReadsOnly("MoR delete") {
+      t = Mutations.deleteMoR(t, spark, Col("id").eqTo(15L))
+    }
+    val mor = t.currentSnapshot.get.snapshotId
+    // before and after read the same data file under different delete
+    // sets: reusing one scan's output for the other would empty the diff
+    var deleted: Set[Long] = Set.empty
+    assertTaskReadsOnly("changelog over a MoR commit") {
+      deleted = Changelog.between(t, spark, beforeMoR, mor)
+        .where(org.apache.spark.sql.functions.col(Changelog.ChangeType) ===
+          Changelog.Delete)
+        .select("id").collect().map(_.getLong(0)).toSet
+    }
+    assert(deleted == Set(15L), s"MoR changelog diff lost its rows: $deleted")
+    // the same trap through a shuffled join, where Spark reuses equal
+    // scans' exchanges: the two sides must not compare equal
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val before = TaskRead(spark, t, t.schema,
+        Scan(t, spark).useSnapshot(beforeMoR).planFiles())
+      val after = TaskRead(spark, t, t.schema, Scan(t, spark).planFiles())
+      assert(before.join(after, Seq("id"), "left_anti").select("id")
+        .collect().map(_.getLong(0)).toSet == Set(15L))
+    } finally spark.conf.set(key, prev)
+    assertTaskReadsOnly("compaction") {
+      t = Maintenance.compactDataFiles(t, spark)
+    }
+    assert(Scan(t, spark).toDF.select("id").collect().map(_.getLong(0)).toSet
+      == ((1 to 20).toSet -- Set(3, 4, 15)).map(_.toLong))
   }
 }

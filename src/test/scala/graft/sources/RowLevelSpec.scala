@@ -3,10 +3,15 @@ package graft.sources
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.connector.catalog.{
+  Identifier, Table => ConnectorTable}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.SparkTestSession
-import graft.catalog.{LocalCatalog, TableIdentifier}
+import graft.{CountingFileIO, SparkTestSession}
+import graft.catalog.{CommitConflictException, LocalCatalog, TableIdentifier,
+  TableRequirement, TableUpdate}
 import graft.io.HadoopFileIO
+import graft.spec.{SchemaConverters, TableMetadata}
 import graft.table.{Col, Mutations, Scan, Table}
 
 /** SQL `UPDATE` / `MERGE INTO` / row-level `DELETE` over the catalog —
@@ -176,4 +181,86 @@ class RowLevelSpec extends AnyFunSuite {
         s"got: ${e.getMessage}")
     }
   }
+
+  /** N identity partitions of 10 rows each, one insert (one manifest)
+    * per partition, in a [[ScopedCommitCatalog]]. */
+  private def withPartitioned(tag: String, n: Int)(
+      f: (String, String) => Unit): Unit = {
+    val dir = Files.createTempDirectory(s"graft-rl-$tag-").toString
+    val c = s"grl$tag"
+    spark.conf.set(s"spark.sql.catalog.$c",
+      classOf[ScopedCommitCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$c.warehouse", dir)
+    spark.sql(s"CREATE NAMESPACE $c.db")
+    spark.sql(s"CREATE TABLE $c.db.t (id BIGINT, part INT) " +
+      "PARTITIONED BY (part)")
+    for (p <- 0 until n)
+      spark.sql(s"INSERT INTO $c.db.t VALUES " +
+        (1 to 10).map(i => s"(${p * 10 + i}, $p)").mkString(", "))
+    f(c, dir)
+  }
+
+  private def ids(dir: String): Set[Long] =
+    Scan(loadT(dir, "t"), spark).toDF.select("id").collect()
+      .map(_.getLong(0)).toSet
+
+  test("SQL row-level DELETE on one of N partitions decodes only the " +
+      "manifests that can hold its files") {
+    val n = 6
+    withPartitioned("scope", n) { (c, dir) =>
+      // `id % 2` has no exact filter form: the row-level CoW path
+      val (_, _, manifests) = ScopedCommitCatalog.io.counting(
+        spark.sql(s"DELETE FROM $c.db.t WHERE part = 3 AND id % 2 = 0"))
+      // planning reads the one part-3 manifest (scan and group-filter
+      // subquery); an unscoped commit alone would decode all n
+      assert(manifests < n, s"$manifests manifest reads")
+      assert(ids(dir) == (1L to 60L).toSet -- Set(32L, 34L, 36L, 38L, 40L))
+    }
+  }
+
+  test("SQL row-level DELETE: a concurrent rewrite of a candidate still " +
+      "conflicts under the scoped rebase check") {
+    withPartitioned("conflict", 4) { (c, dir) =>
+      ScopedCommitCatalog.beforeCommit.set(() =>
+        Mutations.deleteCoW(loadT(dir, "t"), spark, Col("id").eqTo(31L)))
+      val e = intercept[Exception](
+        spark.sql(s"DELETE FROM $c.db.t WHERE part = 3 AND id % 2 = 0"))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[CommitConflictException]), e.toString)
+      assert(ids(dir) == (1L to 40L).toSet - 31L,
+        "the concurrent delete lands, the stale rewrite does not")
+    }
+  }
+}
+
+/** A [[GraftSparkCatalog]] whose tables read metadata through the
+  * counting [[ScopedCommitCatalog.io]] and commit through a catalog that
+  * first runs [[ScopedCommitCatalog.beforeCommit]], once, when set. */
+class ScopedCommitCatalog extends GraftSparkCatalog {
+  override def initialize(name: String,
+      options: CaseInsensitiveStringMap): Unit = {
+    super.initialize(name, options)
+    catalog = new LocalCatalog(options.get("warehouse")) {
+      override def commitTable(id: TableIdentifier,
+          requirements: Seq[TableRequirement],
+          updates: Seq[TableUpdate]): TableMetadata = {
+        Option(ScopedCommitCatalog.beforeCommit.getAndSet(null))
+          .foreach(_())
+        super.commitTable(id, requirements, updates)
+      }
+    }
+  }
+
+  override def loadTable(ident: Identifier): ConnectorTable = {
+    val t = Table.load(catalog,
+      TableIdentifier(ident.namespace.toSeq, ident.name),
+      ScopedCommitCatalog.io)
+    new GraftConnectorTable(t, SchemaConverters.toSparkSchema(t.schema))
+  }
+}
+
+object ScopedCommitCatalog {
+  val io = new CountingFileIO()
+  val beforeCommit =
+    new java.util.concurrent.atomic.AtomicReference[() => Unit]()
 }

@@ -67,6 +67,19 @@ class MutationSpec extends AnyFunSuite {
     assert(Scan(t, spark).count() == 7)
   }
 
+  test("MoR delete on a renamed column matches by field id") {
+    var t = freshTable("morrename")
+    t = TableOps.append(t, usersDf(1 to 5).coalesce(1))
+    t = t.updateSchema().renameColumn("name", "username").commit()
+    val before = t.currentSnapshot.get.snapshotId
+    t = Mutations.deleteMoR(t, spark, Col("username").eqTo("user_3"))
+    assert(t.currentSnapshot.get.snapshotId != before,
+      "the delete must commit a snapshot")
+    assert(ids(t) == Set(1L, 2L, 4L, 5L))
+    assert(!Scan(t, spark).toDF.select("username").collect()
+      .map(_.getString(0)).contains("user_3"))
+  }
+
   test("update rewrites matching rows only") {
     var t = freshTable("upd")
     t = TableOps.append(t, usersDf(1 to 10))

@@ -243,15 +243,6 @@ class ScanSpec extends AnyFunSuite {
     assert(e.getMessage.contains("distributed-plan-threshold") &&
       e.getMessage.contains("'many'"), e.getMessage)
   }
-
-  test("malformed max-eq-delete-groups names the option") {
-    val t = TableOps.append(freshTable("badgroups"), usersDf(1 to 5))
-    val e = intercept[IllegalArgumentException] {
-      Scan(t, spark).option("max-eq-delete-groups", "1.5").toDF
-    }
-    assert(e.getMessage.contains("max-eq-delete-groups") &&
-      e.getMessage.contains("'1.5'"), e.getMessage)
-  }
 }
 
 /** Nested-column stats: struct leaves get footer-harvested bounds keyed
@@ -419,13 +410,16 @@ class NaNStatsSpec extends AnyFunSuite {
     val distinctSets = tasks.map(_.deleteFiles
       .filter(_.file.content == FileContent.EqualityDeletes)
       .map(_.file.filePath).toSet).filter(_.nonEmpty).distinct.size
-    assert(distinctSets > Scan.MaxEqDeleteGroups,
-      s"precondition: $distinctSets scoped delete sets exceed the cap")
+    assert(distinctSets == nDays,
+      s"precondition: one scoped delete set per day, got $distinctSets")
 
     val df = Scan(t, spark).toDF
-    val leaves = df.queryExecution.executedPlan.collectLeaves().size
+    // the planned physical plan: the executed one is wrapped in AQE's
+    // single leaf node
+    val leaves = df.queryExecution.sparkPlan.collectLeaves().size
     assert(leaves <= 10,
-      s"coarse path must keep the plan bounded, got $leaves leaves")
+      s"the reader applies deletes per task: plan must stay bounded, " +
+        s"got $leaves leaves")
 
     val got = df.select("id").collect().map(_.getLong(0)).toSet
     val expected = (for {
@@ -433,11 +427,6 @@ class NaNStatsSpec extends AnyFunSuite {
       .toSet -- (0L until nDays).map(_ * 100).toSet ++ Set(0L, 500L)
     assert(got == expected,
       "deletes applied, re-inserted keys survive the sequence rule")
-
-    // exact path still in force under the cap
-    val small = Scan(t, spark).option("max-eq-delete-groups", "64").toDF
-    assert(small.select("id").collect().map(_.getLong(0)).toSet == expected,
-      "per-group exact path agrees with the coarse path")
   }
 }
 
