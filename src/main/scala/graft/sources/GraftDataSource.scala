@@ -112,9 +112,8 @@ class GraftDataSource extends TableProvider with DataSourceRegister
 
   /** `writeStream.format("graft")` — the connector table deliberately
     * omits STREAMING_WRITE so Spark routes here (v1 sink), keeping the
-    * whole micro-batch on the engine's driver-orchestrated distributed
-    * write path (PartitionedWriter + snapshot commit) instead of a
-    * second executor-side writer. See [[GraftStreamSinkV1]] for the
+    * whole micro-batch on the engine's table write path ([[TaskWrite]]
+    * + snapshot commit). See [[GraftStreamSinkV1]] for the
     * epoch-idempotence contract. */
   override def createSink(
       sqlContext: org.apache.spark.sql.SQLContext,
@@ -335,11 +334,11 @@ private[sources] class GraftConnectorTable(
   }
 
   /** SQL write path: `INSERT INTO` appends a snapshot through the
-    * engine's partitioned writer; `INSERT OVERWRITE` (truncate) swaps
-    * the table content atomically. The V1Write bridge hands the whole
-    * micro-plan to the driver-side writer — the same code path as the
-    * programmatic API, so SQL writes get stats harvesting, sort-order,
-    * and partition fan-out for free. */
+    * engine's data writer; `INSERT OVERWRITE` (truncate) swaps the
+    * table content atomically. The V1Write bridge hands the whole
+    * micro-plan to the table layer — the same code path as the
+    * programmatic API ([[TaskWrite]]), so SQL writes get stats, NaN
+    * counts, sort order and partition fan-out for free. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -446,9 +445,17 @@ private[sources] class GraftWriteBuilder(
             // column order/types
             val target = graft.spec.SchemaConverters
               .toSparkSchema(t.schema)
-            val aligned = data.select(target.fields.map(f =>
+            val cast = data.select(target.fields.map(f =>
               org.apache.spark.sql.functions.col(f.name)
                 .cast(f.dataType).as(f.name)).toSeq: _*)
+            // `VALUES` rows sit on the driver already: one task writes
+            // them, so an unpartitioned insert commits one file, not one
+            // per value row
+            val aligned = cast.queryExecution.optimizedPlan match {
+              case _: org.apache.spark.sql.catalyst.plans.logical
+                  .LocalRelation => cast.coalesce(1)
+              case _ => cast
+            }
             overwriteExpr match {
               case Some(graft.table.AlwaysTrue) =>
                 graft.table.Mutations.overwrite(t, data.sparkSession,
@@ -794,7 +801,7 @@ private[sources] object BatchPlanning {
     * field id) — the request would surface the old column's values.
     * Collision checks are case-insensitive, matching Spark's default
     * name resolution. */
-  private def absentName(base: String,
+  private[sources] def absentName(base: String,
       fileFields: Seq[graft.spec.NestedField]): String = {
     val taken = fileFields.map(_.name)
     if (!taken.exists(_.equalsIgnoreCase(base))) base
@@ -915,7 +922,7 @@ private[sources] object BatchPlanning {
     *   and never skips row groups, so the position counts every row of
     *   the file. */
   def readerFactory(spark: SparkSession, t: Table,
-      tasks: Seq[FileScanTask], full: StructType, required: StructType,
+      tasks: Seq[FileScanTask], queryFull: StructType, required: StructType,
       emitFile: Boolean,
       filters: Seq[sources.Filter] = Nil,
       eqSetMaxBytes: Long =
@@ -944,6 +951,13 @@ private[sources] object BatchPlanning {
       .filter(_.file.content == FileContent.EqualityDeletes)
       .map(d => keyNamesOf(current, d.file.equalityIds))
       .filter(_.nonEmpty).distinct
+    // a key column the query schema carries beyond the relation's
+    // columns (keyed on after a held relation was loaded) decodes too
+    val full = StructType(queryFull.fields ++ eqKeySets.flatten.distinct
+      .filterNot(queryFull.fieldNames.contains)
+      .flatMap(n => current.fieldByName(n)).map(f =>
+        org.apache.spark.sql.types.StructField(f.name,
+          SchemaConverters.toSparkType(f.fieldType))))
     // the data reader must decode equality-key columns even when the
     // query projection pruned them; surviving rows are projected back
     // down to readSchema before they leave the reader
@@ -1377,8 +1391,10 @@ private[sources] class GraftV2Scan(
     * else the load-time one — a held DataFrame or registered view keeps
     * its names while scans plan against the refreshed table, and an old
     * name resolved against the current schema silently null-fills. A
-    * column the read projects or keys equality deletes on must exist in
-    * both schemas, else the read fails loud. */
+    * column the read projects must still exist, else the read fails
+    * loud. Equality deletes keyed on a column added after load decode
+    * that key by field id from the current schema: it joins the query
+    * schema under a name the load-time schema leaves free. */
   private def querySchemaOf(t: Table,
       tasks: Seq[FileScanTask]): Option[graft.spec.Schema] =
     if (pinnedSnapshot.isDefined)
@@ -1387,23 +1403,19 @@ private[sources] class GraftV2Scan(
     else if (gtable.schema.schemaId == t.schema.schemaId) None
     else {
       val loaded = gtable.schema
-      val eqKeys = tasks.iterator.flatMap(_.deleteFiles)
-        .filter(_.file.content == FileContent.EqualityDeletes)
-        .flatMap(_.file.equalityIds)
-      (required.fieldNames.iterator.flatMap(loaded.fieldByName).map(_.id) ++
-          eqKeys)
-        .find(id => loaded.field(id).isEmpty != t.schema.field(id).isEmpty)
-        .foreach { id =>
-          val what = loaded.field(id) match {
-            case Some(f) => s"'${f.name}' (field id $id) was dropped from"
-            case None => s"'${t.schema.field(id).get.name}' (field id $id) " +
-              "keys equality deletes but was added to"
-          }
-          throw new IllegalStateException(s"graft source: column $what " +
-            s"table ${gtable.id} after this relation was loaded; reload " +
-            "the table")
+      required.fieldNames.iterator.flatMap(loaded.fieldByName)
+        .find(f => t.schema.field(f.id).isEmpty)
+        .foreach { f =>
+          throw new IllegalStateException(s"graft source: column " +
+            s"'${f.name}' (field id ${f.id}) was dropped from table " +
+            s"${gtable.id} after this relation was loaded; reload the table")
         }
-      Some(loaded)
+      val addedKeys = tasks.flatMap(_.deleteFiles)
+        .filter(_.file.content == FileContent.EqualityDeletes)
+        .flatMap(_.file.equalityIds).distinct
+        .filter(id => loaded.field(id).isEmpty).flatMap(t.schema.field)
+      Some(loaded.copy(fields = loaded.fields ++ addedKeys.map(f =>
+        f.copy(name = BatchPlanning.absentName(f.name, loaded.fields)))))
     }
 
   /** Batch reads plan ONCE (table pin + task list shared between

@@ -1,9 +1,6 @@
 package graft.sources
 
-import java.util.UUID
-
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.distributions.{
   Distribution, Distributions}
@@ -16,23 +13,15 @@ import org.apache.spark.sql.connector.read.{
   ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns,
   SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.write.{
-  BatchWrite, DataWriter => V2DataWriter, DataWriterFactory,
-  LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering,
-  RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo,
-  Write, WriteBuilder, WriterCommitMessage}
+  BatchWrite, LogicalWriteInfo, RequiresDistributionAndOrdering,
+  RowLevelOperation, Write, WriteBuilder}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.graftshim.ParquetShim
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.spec.{
-  IcebergType, NullOrder, Operation, SchemaConverters, SortDirection,
-  Transform => GTransform}
-import graft.table.{
-  DataWriter, Expr, FileScanTask, PartitionDirs, PendingSnapshot, Scan,
-  Table, Transforms}
+  DataFile, NullOrder, Operation, SchemaConverters, SortDirection}
+import graft.table.{Expr, FileScanTask, PendingSnapshot, Scan, Table}
 
 /** Metadata columns the graft source synthesizes per row: `_file` on
   * every read, `_pos` (the row's position in its data file) on
@@ -77,9 +66,10 @@ private[sources] object GraftMetaColumns {
   *    set to [[GraftCowScan.filter]] — only files that actually contain
   *    matches are rewritten (`SupportsRuntimeV2Filtering`). An UPDATE
   *    touching 3 files of a million-file table rewrites 3 files;
-  *  - rewritten rows flow through executor-side parquet writers that
-  *    fan out by partition tuple (Spark clusters input on the partition
-  *    source columns first — see `requiredDistribution`), and the
+  *  - rewritten rows flow through the engine's one data-file writer
+  *    ([[GraftFileWriter]]), which fans out by partition tuple (Spark
+  *    clusters input on the partition source columns first — see
+  *    `requiredDistribution`) and counts NaNs as it writes, and the
   *    commit replaces exactly the scanned files in one atomic
   *    `overwrite` snapshot with full conflict validation.
   *
@@ -224,16 +214,6 @@ private[sources] class GraftCowScan(
       required, emitFile, filters = Nil)
 }
 
-/** Serializable per-partition-field routing spec for executor writers. */
-private[sources] final case class PartFieldRoute(
-    name: String,
-    transform: GTransform,
-    sourceName: String,
-    sourceType: IcebergType)
-
-private[sources] final case class GraftCowCommitMessage(
-    paths: Seq[String]) extends WriterCommitMessage
-
 private[sources] class GraftCowWrite(
     op: GraftRowLevelOperation, info: LogicalWriteInfo)
     extends Write with RequiresDistributionAndOrdering {
@@ -277,208 +257,27 @@ private[sources] class GraftCowWrite(
     spec.fields.flatMap(pf => gschema.field(pf.sourceId)).map(_.name)
       .distinct
 
-  override def toBatch: BatchWrite = {
-    val spark = SparkSession.active
-    val stagingRoot = meta.location.stripSuffix("/") + "/data/" +
-      UUID.randomUUID().toString
-    val target = SchemaConverters.toSparkSchema(gschema)
-    val (factory, conf) = ParquetShim.buildWriterFactory(spark, target)
-    val routes = spec.fields.map { pf =>
-      val src = gschema.field(pf.sourceId).getOrElse(
-        throw new IllegalStateException(
-          s"partition source field ${pf.sourceId} missing from schema"))
-      PartFieldRoute(pf.name, pf.transform, src.name, src.fieldType)
-    }
-    new GraftCowBatchWrite(op, spark, stagingRoot, factory, conf,
-      info.schema(), target, routes)
+  override def description(): String =
+    s"graft-write:${(table.id.namespace :+ table.id.name).mkString(".")}"
+
+  /** The rewritten rows go through the engine's one data-file writer
+    * ([[GraftFileBatchWrite]]), fanning out: rows are sorted by partition
+    * SOURCE values, and a bucket tuple's rows need not be contiguous in
+    * that order. Its commit replaces exactly the scanned files with the
+    * written ones, scoped to the replaced files' partitions so the
+    * commit and its rebase check decode only the manifests that can
+    * hold them. */
+  override def toBatch: BatchWrite =
+    new GraftFileBatchWrite(meta, info.schema(), 0L, clustered = false)(
+      commitRewrite)
+
+  private def commitRewrite(files: Seq[DataFile]): Unit = {
+    val replaced = Option(op.cowScan).getOrElse(throw new IllegalStateException(
+      "graft cow write: committed without a planned scan")).currentTasks
+    if (files.nonEmpty || replaced.nonEmpty)
+      table.commitSnapshot(PendingSnapshot(Operation.Overwrite,
+        addedDataFiles = files,
+        deletedFilePaths = replaced.map(_.file.filePath).toSet,
+        partitionScope = PendingSnapshot.scopeOf(replaced)))
   }
-}
-
-private[sources] class GraftCowBatchWrite(
-    op: GraftRowLevelOperation,
-    spark: SparkSession,
-    stagingRoot: String,
-    factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: SerializableConfiguration,
-    inputSchema: StructType,
-    targetSchema: StructType,
-    routes: Seq[PartFieldRoute]) extends BatchWrite {
-
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftCowWriterFactory(stagingRoot, factory, conf, inputSchema,
-      targetSchema, routes)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val table = op.pinned
-    val meta = table.metadata
-    val paths = messages.flatMap {
-      case m: GraftCowCommitMessage => m.paths
-      case other => throw new IllegalStateException(
-        s"graft cow write: unexpected commit message $other")
-    }.toSeq
-    val replacedTasks =
-      Option(op.cowScan).getOrElse(throw new IllegalStateException(
-        "graft cow write: committed without a planned scan"))
-        .currentTasks
-    val replaced = replacedTasks.map(_.file.filePath).toSet
-    if (paths.isEmpty && replaced.isEmpty) return // matched nothing
-    val hconf = spark.sessionState.newHadoopConf()
-    val nan =
-      if (DataWriter.nanStatsEnabled(meta))
-        DataWriter.nanCountsByPaths(spark, paths, meta.currentSchema)
-      else Map.empty[String, Map[Int, Long]]
-    val partType = meta.defaultPartitionSpec.partitionType(
-      meta.currentSchema)
-    val files = paths.groupBy(p =>
-        p.stripPrefix(stagingRoot).split('/').dropRight(1).mkString("/"))
-      .toSeq.flatMap { case (relDir, ps) =>
-        DataWriter.harvestFiles(hconf, ps, meta.currentSchema,
-          PartitionDirs.decodeSegments(relDir, partType), nan)
-      }
-    // scoped to the replaced files' partitions: the commit and its
-    // rebase check decode only the manifests that can hold them
-    table.commitSnapshot(PendingSnapshot(Operation.Overwrite,
-      addedDataFiles = files,
-      deletedFilePaths = replaced,
-      partitionScope = PendingSnapshot.scopeOf(replacedTasks)))
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val hconf = spark.sessionState.newHadoopConf()
-    messages.foreach {
-      case m: GraftCowCommitMessage => m.paths.foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        try hp.getFileSystem(hconf).delete(hp, false)
-        catch { case _: Exception => () }
-      }
-      case _ => ()
-    }
-  }
-}
-
-private[sources] class GraftCowWriterFactory(
-    stagingRoot: String,
-    factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: SerializableConfiguration,
-    inputSchema: StructType,
-    targetSchema: StructType,
-    routes: Seq[PartFieldRoute]) extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int,
-      taskId: Long): V2DataWriter[InternalRow] =
-    new GraftCowDataWriter(partitionId, taskId, stagingRoot, factory,
-      conf, inputSchema, targetSchema, routes)
-}
-
-/** Executor writer: projects each row to the table schema by name
-  * (dropping `_file` and any other metadata columns), evaluates the
-  * partition transforms row-side ([[Transforms.applyToValue]] — the
-  * same kernel the partitioned batch writer uses column-side), and fans
-  * out one parquet writer per partition tuple. Input arrives clustered
-  * on the partition source columns, so the per-task writer map stays
-  * small. */
-private[sources] class GraftCowDataWriter(
-    partitionId: Int,
-    taskId: Long,
-    stagingRoot: String,
-    factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: SerializableConfiguration,
-    inputSchema: StructType,
-    targetSchema: StructType,
-    routes: Seq[PartFieldRoute]) extends V2DataWriter[InternalRow] {
-
-  private val targetOrdinals = targetSchema.fields.map { f =>
-    val i = inputSchema.fieldNames.indexOf(f.name)
-    if (i < 0) throw new IllegalStateException(
-      s"graft cow write: column '${f.name}' missing from write input " +
-        s"schema ${inputSchema.fieldNames.mkString(",")}")
-    i
-  }
-  private val inputTypes = inputSchema.fields.map(_.dataType)
-  private val routeOrdinals = routes.map { r =>
-    val i = inputSchema.fieldNames.indexOf(r.sourceName)
-    if (i < 0) throw new IllegalStateException(
-      s"graft cow write: partition source '${r.sourceName}' missing " +
-        "from write input")
-    i
-  }
-
-  private val writers = scala.collection.mutable.HashMap.empty[
-    String, org.apache.spark.sql.execution.datasources.OutputWriter]
-  private val paths = Seq.newBuilder[String]
-  private var fileSeq = 0
-
-  /** Internal value → the JVM shape [[Transforms.applyToValue]] expects. */
-  private def jvmValue(v: Any): Any = v match {
-    case s: UTF8String => s.toString
-    case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
-    case other => other
-  }
-
-  private def encodeSeg(name: String, v: Any): String = {
-    val raw =
-      if (v == null) "__HIVE_DEFAULT_PARTITION__"
-      else java.net.URLEncoder.encode(v.toString, "UTF-8")
-    s"__p_$name=$raw"
-  }
-
-  private def relDirFor(row: InternalRow): String =
-    routes.indices.map { i =>
-      val r = routes(i)
-      val o = routeOrdinals(i)
-      val v =
-        if (row.isNullAt(o)) null
-        else jvmValue(row.get(o, inputTypes(o)))
-      val transformed =
-        if (v == null) null
-        else Transforms.applyToValue(r.transform, v, r.sourceType).orNull
-      encodeSeg(r.name, transformed)
-    }.mkString("/")
-
-  override def write(row: InternalRow): Unit = {
-    val rel = relDirFor(row)
-    val w = writers.getOrElseUpdate(rel, {
-      val dir = if (rel.isEmpty) stagingRoot else s"$stagingRoot/$rel"
-      val path = s"$dir/part-$partitionId-$taskId-$fileSeq.parquet"
-      fileSeq += 1
-      paths += path
-      ParquetShim.newOutputWriter(factory, conf.value, path, targetSchema,
-        partitionId, taskId.toInt & 0x7fffffff)
-    })
-    val vals = new Array[Any](targetOrdinals.length)
-    var i = 0
-    while (i < vals.length) {
-      val o = targetOrdinals(i)
-      vals(i) = if (row.isNullAt(o)) null else row.get(o, inputTypes(o))
-      i += 1
-    }
-    w.write(new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(vals))
-  }
-
-  override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_.close())
-    writers.clear()
-    GraftCowCommitMessage(paths.result())
-  }
-
-  override def abort(): Unit = {
-    writers.values.foreach(w => try w.close() catch {
-      case _: Exception => ()
-    })
-    writers.clear()
-    val hconf = conf.value
-    paths.result().foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      try hp.getFileSystem(hconf).delete(hp, false)
-      catch { case _: Exception => () }
-    }
-  }
-
-  override def close(): Unit =
-    writers.values.foreach(w => try w.close() catch {
-      case _: Exception => ()
-    })
 }

@@ -36,8 +36,8 @@ import graft.table.Table
   *
   * — and every table is addressable as `graft.ns.tbl`: `SELECT` (DSv2
   * read path, with pruning-only filter pushdown), `INSERT INTO` /
-  * `INSERT OVERWRITE` (V1Write bridge onto the engine's partitioned
-  * writer + snapshot commit, so SQL writes make real Iceberg
+  * `INSERT OVERWRITE` (V1Write bridge onto the engine's data writer,
+  * [[TaskWrite]], + snapshot commit, so SQL writes make real Iceberg
   * snapshots), `CREATE/DROP/ALTER TABLE`, `SHOW TABLES`,
   * `SHOW NAMESPACES`, `CREATE NAMESPACE`, namespace properties via
   * `ALTER NAMESPACE ... SET PROPERTIES`.

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.Bridge
 
 import graft.spec.{Operation, SchemaConverters}
-import graft.table.{PartitionedWriter, PendingSnapshot, Scan, Table}
+import graft.table.{PendingSnapshot, Scan, Table}
 
 /** v1 streaming sink: `writeStream.format("graft")` lands one snapshot
   * per micro-batch — the transactional form of the reference's
@@ -29,8 +29,8 @@ import graft.table.{PartitionedWriter, PendingSnapshot, Scan, Table}
   * rejected — use `foreachBatch` with [[graft.table.Mutations.upsert]],
   * which needs the key columns this API has no way to express.
   *
-  * Scale: the data plane is [[PartitionedWriter]] — a distributed Spark
-  * write honoring the table's partition spec and sort order; only the
+  * Scale: the data plane is [[TaskWrite]] — a distributed Spark write
+  * honoring the table's partition spec and sort order; only the
   * metadata commit runs on the driver. Snapshot expiry can erase the
   * epoch watermark only if EVERY snapshot of this stream is expired;
   * the watermark that matters on replay is the newest one, which
@@ -89,12 +89,12 @@ private[sources] class GraftStreamSinkV1(
           // agg results): old files out + new files in, atomically.
           val old = Scan(t, batch.sparkSession).planFiles()
             .map(_.file.filePath).toSet
-          val files = PartitionedWriter.writeDataFiles(t.metadata, aligned)
+          val files = TaskWrite(batch.sparkSession, t, aligned)
           t.commitSnapshot(PendingSnapshot(Operation.Overwrite,
             addedDataFiles = files, deletedFilePaths = old,
             summaryExtra = extra))
         } else {
-          val files = PartitionedWriter.writeDataFiles(t.metadata, aligned)
+          val files = TaskWrite(batch.sparkSession, t, aligned)
           t.commitSnapshot(PendingSnapshot(Operation.Append,
             addedDataFiles = files, summaryExtra = extra))
         }

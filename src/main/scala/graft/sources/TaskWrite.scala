@@ -1,0 +1,395 @@
+package graft.sources
+
+import java.util.{Set => JSet, UUID}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{
+  BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.AppendData
+import org.apache.spark.sql.connector.catalog.{
+  SupportsWrite, Table => ConnectorTable, TableCapability}
+import org.apache.spark.sql.connector.write.{
+  BatchWrite, DataWriter => V2DataWriter, DataWriterFactory,
+  LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder,
+  WriterCommitMessage}
+import org.apache.spark.sql.execution.datasources.{
+  OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.{Bridge, ParquetShim}
+import org.apache.spark.sql.types.{
+  DataType, DoubleType => SDouble, FloatType => SFloat, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.spec.{
+  DataFile, IcebergType, NullOrder, SortDirection,
+  SortField, TableMetadata, Transform => GTransform}
+import graft.table.{DataWriter, PartitionDirs, Table, Transforms}
+
+/** The table layer's write executor, the mirror of [[TaskRead]]: `df`
+  * goes through [[GraftFileWriter]], the executor-side writer SQL
+  * row-level rewrites use too, and comes back as the stats-complete
+  * [[DataFile]]s it wrote. The caller commits them.
+  *
+  * Partitioned tables: rows are clustered by their partition tuple (one
+  * task per tuple, so no small-file explosion) and sorted within tasks
+  * by tuple, then `extraSortCols` (transient keys such as z-order's,
+  * never written), then the table's declared sort order. Unpartitioned
+  * tables write `df` as it comes — callers that cluster (compaction,
+  * z-order) do so themselves. `maxRecordsPerFile > 0` rolls each
+  * task's output to a new file every that many rows. */
+private[graft] object TaskWrite {
+  private[sources] val PartPrefix = "__p_"
+
+  def apply(spark: SparkSession, table: Table, df: DataFrame,
+      extraSortCols: Seq[(String, Column)] = Nil,
+      maxRecordsPerFile: Long = 0L): Seq[DataFile] = {
+    val meta = table.metadata
+    val schema = meta.currentSchema
+    // Fail loud on frames that don't fit the table: an unknown column
+    // (typo) would land in the parquet bytes and silently null-fill
+    // the real column at read; a missing REQUIRED column would
+    // null-fill a NOT NULL field. Missing OPTIONAL columns are fine
+    // (Iceberg semantics: readers null-fill by field id).
+    val have = df.columns.map(c => c.toLowerCase -> c).toMap
+    val known = schema.fields.map(_.name.toLowerCase).toSet
+    val unknown = df.columns.filterNot(c => known.contains(c.toLowerCase))
+    val missingReq = schema.fields
+      .filter(f => f.required && !have.contains(f.name.toLowerCase))
+    if (unknown.nonEmpty || missingReq.nonEmpty)
+      throw new IllegalArgumentException(
+        s"graft: DataFrame does not fit table schema — " +
+          (if (unknown.nonEmpty)
+            s"unknown columns: ${unknown.mkString(", ")}; " else "") +
+          (if (missingReq.nonEmpty)
+            s"missing required columns: ${missingReq.map(_.name)
+              .mkString(", ")}; " else "") +
+          s"table columns: ${schema.fields.map(_.name).mkString(", ")}")
+
+    // the table's columns under the table's names, as typed in `df`
+    val data = schema.fields.flatMap(f => have.get(f.name.toLowerCase)
+      .map(c => df.col(quoted(c)).as(f.name)))
+    val spec = meta.defaultPartitionSpec
+    val rows =
+      if (spec.isUnpartitioned) df.select(data: _*)
+      else {
+        val parts = spec.fields.map { pf =>
+          val src = schema.field(pf.sourceId).getOrElse(
+            throw new IllegalArgumentException(
+              s"partition source ${pf.sourceId} missing"))
+          Transforms.applyToColumn(pf.transform, col(quoted(src.name)),
+            src.fieldType, df.schema.find(_.name == src.name)
+              .map(_.dataType)).as(PartPrefix + pf.name)
+        }
+        val extras = extraSortCols.map { case (n, c) => c.as(n) }
+        val sortCols = meta.defaultSortOrder.fields.flatMap(sf =>
+          schema.field(sf.sourceId).map(f => sortColumn(sf, f.name)))
+        val keys = spec.fields.map(pf => col(PartPrefix + pf.name))
+        df.select(data ++ parts ++ extras: _*)
+          .repartition(keys: _*)
+          .sortWithinPartitions(keys ++
+            extraSortCols.map(p => col(p._1)) ++ sortCols: _*)
+      }
+
+    var written: Seq[DataFile] = Nil
+    val target = new GraftTaskWriteTable(table, rows.schema,
+      maxRecordsPerFile, !spec.isUnpartitioned, files => written = files)
+    Bridge.execute(spark, AppendData.byName(
+      DataSourceV2Relation.create(target, None, None),
+      rows.queryExecution.analyzed))
+    written
+  }
+
+  private def quoted(name: String): String =
+    "`" + name.replace("`", "``") + "`"
+
+  private def sortColumn(sf: SortField, name: String): Column = {
+    val c = col(quoted(name))
+    (sf.direction, sf.nullOrder) match {
+      case (SortDirection.Asc, NullOrder.NullsFirst) => c.asc_nulls_first
+      case (SortDirection.Asc, NullOrder.NullsLast) => c.asc_nulls_last
+      case (SortDirection.Desc, NullOrder.NullsFirst) => c.desc_nulls_first
+      case (SortDirection.Desc, NullOrder.NullsLast) => c.desc_nulls_last
+    }
+  }
+}
+
+/** A write-only connector table over one [[TaskWrite]]: it accepts the
+  * prepared frame as it is (the writer picks the table's columns out by
+  * name) and hands the written files to `written` at commit. */
+private[sources] class GraftTaskWriteTable(t: Table, input: StructType,
+    maxRecordsPerFile: Long, clustered: Boolean,
+    written: Seq[DataFile] => Unit)
+    extends ConnectorTable with SupportsWrite {
+  override def name(): String = (t.id.namespace :+ t.id.name).mkString(".")
+  override def schema(): StructType = input
+  override def capabilities(): JSet[TableCapability] =
+    Set(TableCapability.BATCH_WRITE, TableCapability.ACCEPT_ANY_SCHEMA)
+      .asJava
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new WriteBuilder {
+      override def build(): Write = new Write {
+        override def description(): String = s"graft-write:${name()}"
+        override def toBatch: BatchWrite = new GraftFileBatchWrite(
+          t.metadata, info.schema(), maxRecordsPerFile, clustered)(written)
+      }
+    }
+}
+
+/** Per-partition-field routing spec for executor writers; `ordinal` is
+  * the source column's position in the write input. */
+private[sources] final case class PartFieldRoute(
+    name: String,
+    transform: GTransform,
+    ordinal: Int,
+    sourceType: IcebergType)
+
+/** One file a writer task produced, with its NaN counts by field id. */
+private[sources] final case class WrittenFile(path: String,
+    nanCounts: Map[Int, Long])
+
+private[sources] final case class GraftFilesMessage(
+    files: Seq[WrittenFile]) extends WriterCommitMessage
+
+/** How a task turns input rows into data files: which input columns
+  * are the file's (`dataOrdinals`, written as `dataSchema`), which of
+  * those count NaNs (`nanColumns`: ordinal, field id, float-typed),
+  * where each row's partition tuple comes from, and whether rows arrive
+  * `clustered` by that tuple (each tuple's rows contiguous in a task). */
+private[sources] final case class FileLayout(
+    inputTypes: Array[DataType],
+    dataOrdinals: Array[Int],
+    dataSchema: StructType,
+    nanColumns: Array[(Int, Int, Boolean)],
+    routes: Array[PartFieldRoute],
+    maxRecordsPerFile: Long,
+    clustered: Boolean)
+
+/** Driver side of one executor-side data-file write. Data columns are
+  * the table's columns present in `inputSchema` by name (anything else —
+  * `_file`, partition keys, transient sort keys — rides along unwritten);
+  * a file's NaN count for a float/double field it does not carry is 0.
+  * At commit the footers of exactly the files the commit messages name
+  * are harvested ([[DataWriter.harvestFiles]]) and passed to
+  * `onCommit`; abort deletes them. `clustered`: see [[FileLayout]]. */
+private[sources] class GraftFileBatchWrite(meta: TableMetadata,
+    inputSchema: StructType, maxRecordsPerFile: Long, clustered: Boolean)(
+    onCommit: Seq[DataFile] => Unit) extends BatchWrite {
+
+  private val spark = SparkSession.active
+  private val schema = meta.currentSchema
+  private val stagingRoot = meta.location.stripSuffix("/") + "/data/" +
+    UUID.randomUUID().toString
+
+  private val layout: FileLayout = {
+    val names = inputSchema.fieldNames
+    val data = schema.fields.filter(f => names.contains(f.name))
+    val ordinals = data.map(f => names.indexOf(f.name)).toArray
+    val nan = data.zip(ordinals).flatMap { case (f, o) =>
+      inputSchema(o).dataType match {
+        case SFloat => Some((o, f.id, true))
+        case SDouble => Some((o, f.id, false))
+        case _ => None
+      }
+    }.toArray
+    val routes = meta.defaultPartitionSpec.fields.map { pf =>
+      val src = schema.field(pf.sourceId).getOrElse(
+        throw new IllegalStateException(
+          s"partition source field ${pf.sourceId} missing from schema"))
+      val o = names.indexOf(src.name)
+      if (o < 0) throw new IllegalStateException(
+        s"graft write: partition source '${src.name}' missing from " +
+          s"write input ${names.mkString(",")}")
+      PartFieldRoute(pf.name, pf.transform, o, src.fieldType)
+    }.toArray
+    FileLayout(inputSchema.fields.map(_.dataType), ordinals,
+      StructType(ordinals.map(inputSchema(_))), nan, routes,
+      maxRecordsPerFile, clustered)
+  }
+
+  override def createBatchWriterFactory(
+      info: PhysicalWriteInfo): DataWriterFactory = {
+    val (factory, conf) =
+      ParquetShim.buildWriterFactory(spark, layout.dataSchema)
+    new GraftFileWriterFactory(stagingRoot, factory, conf, layout)
+  }
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val floatIds = DataWriter.floatFields(schema).map(_.id)
+    val partType = meta.defaultPartitionSpec.partitionType(schema)
+    val hconf = spark.sessionState.newHadoopConf()
+    val files = written(messages)
+      .groupBy(w => w.path.stripPrefix(stagingRoot).split('/').dropRight(1)
+        .mkString("/"))
+      .toSeq.sortBy(_._1).flatMap { case (relDir, ws) =>
+        DataWriter.harvestFiles(hconf,
+          ws.map(w => w.path ->
+            floatIds.map(id => id -> w.nanCounts.getOrElse(id, 0L)).toMap),
+          schema, PartitionDirs.decodeSegments(relDir, partType))
+      }
+    onCommit(files)
+  }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    val hconf = spark.sessionState.newHadoopConf()
+    written(messages.filter(_ != null)).foreach(w =>
+      GraftFileWriter.deleteQuietly(hconf, w.path))
+  }
+
+  private def written(messages: Array[WriterCommitMessage]): Seq[WrittenFile] =
+    messages.toSeq.flatMap {
+      case m: GraftFilesMessage => m.files
+      case other => throw new IllegalStateException(
+        s"graft write: unexpected commit message $other")
+    }
+}
+
+private[sources] class GraftFileWriterFactory(stagingRoot: String,
+    factory: OutputWriterFactory, conf: SerializableConfiguration,
+    layout: FileLayout) extends DataWriterFactory {
+  override def createWriter(partitionId: Int,
+      taskId: Long): V2DataWriter[InternalRow] =
+    new GraftFileWriter(partitionId, taskId, stagingRoot, factory, conf,
+      layout)
+}
+
+/** The engine's one data-file writer, run inside each write task. It
+  * evaluates the partition transforms row-side
+  * ([[Transforms.applyToValue]], the kernel the pruner projects literals
+  * with) and writes one parquet file per partition tuple under
+  * `__p_<field>=<value>` directories that [[PartitionDirs.decodeSegments]]
+  * parses back at commit: one file open at a time when rows arrive
+  * clustered by tuple, else one open per tuple seen (fan-out). Each file
+  * counts its NaNs as rows pass — the one column metric a parquet footer
+  * cannot hold — and rolls over after `maxRecordsPerFile` rows. The
+  * commit message names every file this attempt wrote, so stray files
+  * of failed attempts are never committed. */
+private[sources] class GraftFileWriter(
+    partitionId: Int,
+    taskId: Long,
+    stagingRoot: String,
+    factory: OutputWriterFactory,
+    conf: SerializableConfiguration,
+    layout: FileLayout) extends V2DataWriter[InternalRow] {
+
+  private final class OpenFile(val path: String, val out: OutputWriter) {
+    val nans = new Array[Long](layout.nanColumns.length)
+    var rows = 0L
+    def finish(): WrittenFile = {
+      out.close()
+      WrittenFile(path, layout.nanColumns.indices
+        .map(k => layout.nanColumns(k)._2 -> nans(k)).toMap)
+    }
+  }
+
+  private val project = UnsafeProjection.create(
+    layout.dataOrdinals.toSeq.map(o =>
+      BoundReference(o, layout.inputTypes(o), nullable = true)))
+  private val open = scala.collection.mutable.HashMap.empty[String, OpenFile]
+  private val done = Seq.newBuilder[WrittenFile]
+  private val started = Seq.newBuilder[String]
+  private var fileSeq = 0
+
+  /** Internal value → the JVM shape [[Transforms.applyToValue]] expects. */
+  private def jvmValue(v: Any): Any = v match {
+    case s: UTF8String => s.toString
+    case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
+    case other => other
+  }
+
+  private val tuple = new Array[Any](layout.routes.size)
+  private var tupleDir: String = null
+
+  /** The row's partition directory, rebuilt only when its tuple differs
+    * from the previous row's (input arrives clustered by tuple). */
+  private def relDirFor(row: InternalRow): String = {
+    if (layout.routes.isEmpty) return ""
+    var same = tupleDir != null
+    var i = 0
+    while (i < tuple.length) {
+      val r = layout.routes(i)
+      val v =
+        if (row.isNullAt(r.ordinal)) null
+        else Transforms.applyToValue(r.transform,
+          jvmValue(row.get(r.ordinal, layout.inputTypes(r.ordinal))),
+          r.sourceType).orNull
+      if (v != tuple(i)) { same = false; tuple(i) = v }
+      i += 1
+    }
+    if (!same) tupleDir = layout.routes.indices.map { i =>
+      val raw =
+        if (tuple(i) == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+        else ExternalCatalogUtils.escapePathName(tuple(i).toString)
+      s"${TaskWrite.PartPrefix}${layout.routes(i).name}=$raw"
+    }.mkString("/")
+    tupleDir
+  }
+
+  override def write(row: InternalRow): Unit = {
+    val rel = relDirFor(row)
+    val f = open.getOrElse(rel, {
+      // clustered input never returns to an earlier tuple
+      if (layout.clustered) finishOpen()
+      val dir = if (rel.isEmpty) stagingRoot else s"$stagingRoot/$rel"
+      val path = s"$dir/part-$partitionId-$taskId-$fileSeq.parquet"
+      fileSeq += 1
+      started += path
+      val nf = new OpenFile(path, ParquetShim.newOutputWriter(factory,
+        conf.value, path, layout.dataSchema, partitionId,
+        taskId.toInt & 0x7fffffff))
+      open(rel) = nf
+      nf
+    })
+    var k = 0
+    while (k < layout.nanColumns.length) {
+      val (o, _, isFloat) = layout.nanColumns(k)
+      if (!row.isNullAt(o) &&
+          (if (isFloat) row.getFloat(o).isNaN else row.getDouble(o).isNaN))
+        f.nans(k) += 1
+      k += 1
+    }
+    f.out.write(project(row))
+    f.rows += 1
+    if (layout.maxRecordsPerFile > 0 && f.rows >= layout.maxRecordsPerFile) {
+      done += f.finish()
+      open.remove(rel)
+    }
+  }
+
+  private def finishOpen(): Unit = {
+    open.values.foreach(f => done += f.finish())
+    open.clear()
+  }
+
+  override def commit(): WriterCommitMessage = {
+    finishOpen()
+    GraftFilesMessage(done.result())
+  }
+
+  override def abort(): Unit = {
+    close()
+    started.result().foreach(p =>
+      GraftFileWriter.deleteQuietly(conf.value, p))
+  }
+
+  override def close(): Unit = {
+    open.values.foreach(f => try f.out.close() catch {
+      case _: Exception => ()
+    })
+    open.clear()
+  }
+}
+
+private[sources] object GraftFileWriter {
+  def deleteQuietly(conf: org.apache.hadoop.conf.Configuration,
+      path: String): Unit = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    try hp.getFileSystem(conf).delete(hp, false)
+    catch { case _: Exception => () }
+  }
+}

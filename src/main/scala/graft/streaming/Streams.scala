@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.table.{PendingSnapshot, PartitionedWriter, Table, TableOps}
+import graft.sources.TaskWrite
+import graft.table.{PendingSnapshot, Table, TableOps}
 import graft.spec.{Operation, TableMetadata}
 
 /** Structured Streaming surface (engine capability beyond the
@@ -323,8 +324,7 @@ object Streams {
       try {
         val pinned = batch.localCheckpoint(true)
         if (!pinned.isEmpty) {
-          val files = PartitionedWriter.writeDataFiles(tableRef.metadata,
-            pinned)
+          val files = TaskWrite(pinned.sparkSession, tableRef, pinned)
           tableRef = tableRef.commitSnapshot(
             PendingSnapshot(Operation.Append, addedDataFiles = files),
             extraProps = Map(batchIdProp("graft.sink", streamId) ->

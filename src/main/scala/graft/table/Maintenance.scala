@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.avro.ManifestAvro
-import graft.sources.TaskRead
+import graft.sources.{TaskRead, TaskWrite}
 import graft.spec._
 
 /** Table maintenance: small-file compaction and snapshot expiry with
@@ -94,9 +94,9 @@ object Maintenance extends org.apache.spark.internal.Logging {
           if (clusterCols.isEmpty) df.repartition(nFiles.toInt)
           else df.repartitionByRange(nFiles.toInt, clusterCols: _*)
             .sortWithinPartitions(clusterCols: _*)
-        DataWriter.writeDataFiles(table.metadata, clustered,
+        TaskWrite(spark, table, clustered,
           maxRecordsPerFile = recordsPerFile)
-      } else PartitionedWriter.writeDataFiles(table.metadata, df)
+      } else TaskWrite(spark, table, df)
     }
     // a delete file is retired only when EVERY data file it attaches to
     // was rewritten — removing one still referenced by an untouched
@@ -313,15 +313,14 @@ object Maintenance extends org.apache.spark.internal.Logging {
           .repartitionByRange(nFiles.toInt, col("__z"))
           .sortWithinPartitions("__z")
           .drop("__z")
-        DataWriter.writeDataFiles(table.metadata, clustered,
+        TaskWrite(spark, table, clustered,
           maxRecordsPerFile = recordsPerFile)
       } else
         // maxRecordsPerFile keeps targetFileSizeBytes meaningful on
         // partitioned tables: without it each partition tuple collapses
         // to ONE (possibly huge) file and the intra-partition z-sort
         // yields no file-level pruning — the feature's whole point.
-        PartitionedWriter.writeDataFiles(table.metadata, df,
-          extraSortCols = Seq("__z" -> z),
+        TaskWrite(spark, table, df, extraSortCols = Seq("__z" -> z),
           maxRecordsPerFile = recordsPerFile)
     val deletePaths = tasks.map(_.file.filePath).toSet ++
       tasks.flatMap(_.deleteFiles.map(_.file.filePath))

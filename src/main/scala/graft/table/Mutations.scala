@@ -3,7 +3,7 @@ package graft.table
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.TaskRead
+import graft.sources.{TaskRead, TaskWrite}
 import graft.spec._
 
 /** Full CRUD over Iceberg tables (SURVEY §2.7), Spark-first:
@@ -64,16 +64,6 @@ object Mutations {
       deletedFilePaths = candidates.map(_.file.filePath).toSet,
       partitionScope = PendingSnapshot.scopeOf(candidates))
 
-  /** Float/double fields a filter-only rewrite of `candidates` provably
-    * writes without NaN: its rows are a subset of theirs with unchanged
-    * values, so a field qualifies when every candidate records 0 NaNs
-    * for it. A field missing from a candidate's counts (added after the
-    * file was written, or never counted) is not proven. */
-  private def nanFreeFields(table: Table,
-      candidates: Seq[FileScanTask]): Set[Int] =
-    DataWriter.floatFields(table.schema).map(_.id).filter(fid =>
-      candidates.forall(_.file.nanValueCounts.get(fid).contains(0L))).toSet
-
   /** Copy-on-write delete (T4, `table/delete.go:82-183`): rewrite only
     * the pruned candidate files without their matching rows, swap both
     * sets in one snapshot. */
@@ -85,8 +75,7 @@ object Mutations {
       else {
         val survivors = readCandidates(t, spark, candidates)
           .where(survivorFilter(pred))
-        val newFiles = PartitionedWriter.writeDataFiles(t.metadata, survivors,
-          nanFreeFieldIds = nanFreeFields(t, candidates))
+        val newFiles = TaskWrite(spark, t, survivors)
         t.commitSnapshot(replacing(Operation.Delete, newFiles, candidates))
       }
     }
@@ -191,7 +180,7 @@ object Mutations {
           df = df.withColumn(name,
             when(hit, lit(value).cast(target)).otherwise(col(name)))
         }
-        val newFiles = PartitionedWriter.writeDataFiles(t.metadata, df)
+        val newFiles = TaskWrite(spark, t, df)
         t.commitSnapshot(replacing(Operation.Overwrite, newFiles, candidates))
       }
     }
@@ -265,7 +254,7 @@ object Mutations {
       case Some(s) => s.unionByName(incomingAligned)
       case None => incomingAligned
     }
-    val newFiles = PartitionedWriter.writeDataFiles(table.metadata, merged)
+    val newFiles = TaskWrite(spark, table, merged)
     table.commitSnapshot(replacing(Operation.Overwrite, newFiles, candidates))
   }
 
@@ -273,7 +262,7 @@ object Mutations {
     * deleted, new content appended, one `overwrite` snapshot. */
   def overwrite(table: Table, spark: SparkSession, df: DataFrame): Table = {
     val allFiles = Scan(table, spark).planFiles().map(_.file.filePath)
-    val newFiles = PartitionedWriter.writeDataFiles(table.metadata, df)
+    val newFiles = TaskWrite(spark, table, df)
     table.commitSnapshot(PendingSnapshot(Operation.Overwrite,
       addedDataFiles = newFiles,
       deletedFilePaths = allFiles.toSet))
@@ -288,11 +277,9 @@ object Mutations {
       val candidates = Scan(t, spark).filter(pred).planFiles()
       val rewritten =
         if (candidates.isEmpty) Nil
-        else PartitionedWriter.writeDataFiles(t.metadata,
-          readCandidates(t, spark, candidates)
-            .where(survivorFilter(pred)),
-          nanFreeFieldIds = nanFreeFields(t, candidates))
-      val appended = PartitionedWriter.writeDataFiles(t.metadata, df)
+        else TaskWrite(spark, t, readCandidates(t, spark, candidates)
+          .where(survivorFilter(pred)))
+      val appended = TaskWrite(spark, t, df)
       t.commitSnapshot(replacing(Operation.Overwrite, rewritten ++ appended,
         candidates))
     }
@@ -354,7 +341,7 @@ final class BulkWriter(initial: Table, spark: SparkSession,
   private val pending = collection.mutable.Buffer[DataFile]()
 
   def write(df: DataFrame): BulkWriter = {
-    pending ++= PartitionedWriter.writeDataFiles(table.metadata, df)
+    pending ++= TaskWrite(spark, table, df)
     if (pending.size >= maxPendingFiles) flush()
     this
   }

@@ -407,19 +407,6 @@ object Scan {
   private[table] def normPath(p: String): String =
     p.replaceFirst("^file:/+", "/")
 
-  /** `_metadata.file_path` is the URI-ENCODED form ("__p_c=a%20b")
-    * while manifests carry the raw filesystem path ("__p_c=a b") —
-    * they differ exactly when a partition value contains a space, %,
-    * or other URI-reserved char. Every _metadata-derived path decodes
-    * through here AT CAPTURE, so all persisted delete-file paths and
-    * every path comparison use the ONE raw form. Backed by the
-    * codegen'd [[graft.functions.MetaPathDecodeExpr]] (see its
-    * scaladoc for why neither `url_decode` nor `URLDecoder` fits).
-    * No-op for ordinary paths. */
-  private[table] def decodedMetaPath(
-      c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.MetaPathDecodeExpr.column(c)
-
   /** Surviving data manifests at/above which planFiles reads them on
     * executors instead of serially on the driver (Iceberg's
     * distributed planning). Overridable per scan via

@@ -1,6 +1,5 @@
 package graft.table
 
-import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -10,13 +9,16 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.column.statistics.{Statistics => PStats}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.TaskWrite
 import graft.spec._
 
-/** Executor-parallel data writing with REAL per-file stats harvested
-  * from parquet footers — fixing the reference's approximations
-  * (`table/writer.go:144-167`: sizes guessed as fileSize/numCols, bounds
-  * left empty). Stats feed the pruner, so they must round-trip through
-  * [[graft.spec.Bounds]] exactly.
+/** REAL per-file stats for written data files — fixing the reference's
+  * approximations (`table/writer.go:144-167`: sizes guessed as
+  * fileSize/numCols, bounds left empty). Rows are written on the
+  * executors by [[graft.sources.TaskWrite]]'s writer, which counts NaNs
+  * inline; the driver then harvests everything else from the parquet
+  * footers of exactly the files written. Stats feed the pruner, so they
+  * must round-trip through [[graft.spec.Bounds]] exactly.
   */
 object DataWriter {
 
@@ -45,240 +47,131 @@ object DataWriter {
     }
   }
 
-  /** Write `df` as Snappy parquet into a fresh directory under the
-    * table's data/ prefix; returns harvested [[DataFile]]s.
-    * `nanFreeFieldIds`: float/double field ids the caller proves carry
-    * no NaN in `df` (see [[nanCountsFor]]). */
-  def writeDataFiles(meta: TableMetadata, df: DataFrame,
-      maxRecordsPerFile: Long = 0L,
-      nanFreeFieldIds: Set[Int] = Set.empty): Seq[DataFile] = {
-    val spark = df.sparkSession
-    // µs timestamps (Iceberg physical semantics, SURVEY §1.2); INT96 has
-    // no usable min/max for pruning. Scoped save/restore: leaking this
-    // conf would silently flip OTHER writers' outputs to tz-aware µs.
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try {
-      val dir = meta.location.stripSuffix("/") + "/data/" +
-        UUID.randomUUID().toString
-      var w = df.write.option("compression", "snappy")
-      if (maxRecordsPerFile > 0)
-        w = w.option("maxRecordsPerFile", maxRecordsPerFile)
-      w.parquet(dir)
-      nanCountsFor(spark, meta, dir, nanFreeFieldIds)(nan =>
-        harvestDataFiles(spark.sessionState.newHadoopConf(), dir,
-          meta.currentSchema, nanCounts = nan))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  /** NaN harvesting is on by default; tables whose float/double columns
-    * provably never carry NaN can opt out with table property
-    * `graft.write.nan-stats=false` — writes then skip the second pass
-    * (cost: the pruner stops using Gt/Gte bounds on those columns,
-    * which is the sound trade in the other direction). */
-  private[graft] def nanStatsEnabled(meta: TableMetadata): Boolean =
-    meta.properties.getOrElse("graft.write.nan-stats", "true") != "false"
-
-  /** Harvest the files just written under `dir` with their NaN counts.
-    * When `nanFreeFieldIds` covers every top-level float/double field of
-    * the current schema, no second pass runs and every file records 0
-    * for those fields; otherwise [[nanCountsByFile]] counts them (unless
-    * the table opts out of NaN stats). */
-  private[table] def nanCountsFor(spark: SparkSession, meta: TableMetadata,
-      dir: String, nanFreeFieldIds: Set[Int])(
-      harvest: Map[String, Map[Int, Long]] => Seq[DataFile]): Seq[DataFile] = {
-    val fp = floatFields(meta.currentSchema).map(_.id)
-    if (!nanStatsEnabled(meta)) harvest(Map.empty)
-    else if (fp.nonEmpty && fp.forall(nanFreeFieldIds)) {
-      val zeros = fp.map(_ -> 0L).toMap
-      harvest(Map.empty).map(_.copy(nanValueCounts = zeros))
-    } else harvest(nanCountsByFile(spark, dir, meta.currentSchema))
-  }
-
   /** The top-level float/double fields: the columns whose NaN counts
     * writes record. */
-  private[table] def floatFields(schema: Schema): Seq[NestedField] =
+  private[graft] def floatFields(schema: Schema): Seq[NestedField] =
     schema.fields.filter(f =>
       f.fieldType == FloatType || f.fieldType == DoubleType)
 
-  /** Per-file NaN counts for float/double columns — Parquet footers
-    * can't provide them (NaN is excluded from, or poisons, min/max
-    * stats), so one aggregation job re-reads ONLY the float/double
-    * columns of the just-written files (column-pruned, page-cache-warm)
-    * and counts `isnan` per file. Skipped entirely when the schema has
-    * no float/double fields, and by [[nanCountsFor]] when the writer's
-    * caller proves every such field NaN-free (a filter-only rewrite of
-    * files that all record 0 NaNs). Real Iceberg counts NaNs inline in
-    * its own parquet writer; with Spark's writer this second pass is
-    * the equivalent, and without it float/double bounds pruning is
-    * unsound (a Gt prune would drop files whose NaN rows match, since
-    * NaN sorts greatest in both Spark and DuckDB). */
-  private[table] def nanCountsByFile(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      schema: Schema): Map[String, Map[Int, Long]] =
-    nanCountsByPaths(spark, Seq(dir), schema)
+  /** Read back the parquet footers of an EXPLICIT file list and build
+    * stats-complete DataFile entries (SURVEY S7's "harvest real per-file
+    * row counts & min/max from Parquet footers"), each with the NaN
+    * counts given beside its path — a footer cannot hold them. Writes
+    * harvest exactly the files named in their commit messages, so stray
+    * files of failed or speculative task attempts are never committed. */
+  def harvestFiles(conf: Configuration, files: Seq[(String, Map[Int, Long])],
+      schema: Schema,
+      partition: Map[String, Any] = Map.empty): Seq[DataFile] =
+    files.sortBy(_._1).map { case (p, nanCounts) =>
+      val hp = new Path(p)
+      harvest(conf, hp.getFileSystem(conf).getFileStatus(hp), schema,
+        partition, nanCounts)
+    }
 
-  private[graft] def nanCountsByPaths(
-      spark: org.apache.spark.sql.SparkSession, paths: Seq[String],
-      schema: Schema): Map[String, Map[Int, Long]] = {
-    import org.apache.spark.sql.functions.{col, isnan, sum, when}
-    val fp = floatFields(schema)
-    if (fp.isEmpty || paths.isEmpty) return Map.empty
-    val aggs = fp.map(f =>
-      sum(when(isnan(col(f.name)), 1L).otherwise(0L)).as("n" + f.id))
-    // explicit schema: an all-rows-rewritten-away overwrite leaves an
-    // EMPTY output dir, where schema inference would throw
-    spark.read.schema(SchemaConverters.toSparkSchema(schema))
-      .parquet(paths: _*)
-      .groupBy(Scan.decodedMetaPath(col("_metadata.file_path"))
-        .as("__fp"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        normalizePath(r.getString(0)) ->
-          fp.indices.map(i => fp(i).id -> r.getLong(i + 1)).toMap
-      }.toMap
-  }
-
-  /** Read back parquet footers under `dir` and build stats-complete
-    * DataFile entries (SURVEY S7's "harvest real per-file row counts &
-    * min/max from Parquet footers"). */
-  def harvestDataFiles(conf: Configuration, dir: String, schema: Schema,
-      partition: Map[String, Any] = Map.empty,
-      nanCounts: Map[String, Map[Int, Long]] = Map.empty): Seq[DataFile] = {
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    val statuses = fs.listStatus(dirPath)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    harvestStatuses(conf, statuses.toSeq, schema, partition, nanCounts)
-  }
-
-  /** Harvest an EXPLICIT file list (executor-written row-level rewrites
-    * commit only the files named in their commit messages — stray files
-    * from failed/speculative task attempts must not be harvested). */
-  def harvestFiles(conf: Configuration, paths: Seq[String], schema: Schema,
-      partition: Map[String, Any] = Map.empty,
-      nanCounts: Map[String, Map[Int, Long]] = Map.empty): Seq[DataFile] =
-    harvestStatuses(conf,
-      paths.sorted.map { p =>
-        val hp = new Path(p)
-        hp.getFileSystem(conf).getFileStatus(hp)
-      }, schema, partition, nanCounts)
-
-  private def harvestStatuses(conf: Configuration,
-      statuses: Seq[org.apache.hadoop.fs.FileStatus], schema: Schema,
+  private def harvest(conf: Configuration,
+      st: org.apache.hadoop.fs.FileStatus, schema: Schema,
       partition: Map[String, Any],
-      nanCounts: Map[String, Map[Int, Long]]): Seq[DataFile] = {
-    statuses.map { st =>
-      val footer = {
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        try r.getFooter finally r.close()
-      }
-      val blocks = footer.getBlocks.asScala.toSeq
-      val rowCount = blocks.map(_.getRowCount).sum
-      val splitOffsets = blocks.map(_.getStartingPos).sorted
+      nanCounts: Map[Int, Long]): DataFile = {
+    val footer = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try r.getFooter finally r.close()
+    }
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rowCount = blocks.map(_.getRowCount).sum
+    val splitOffsets = blocks.map(_.getStartingPos).sorted
 
-      val columnSizes = collection.mutable.Map[Int, Long]()
-      val valueCounts = collection.mutable.Map[Int, Long]()
-      val nullCounts = collection.mutable.Map[Int, Long]()
-      val mins = collection.mutable.Map[Int, Any]()
-      val maxs = collection.mutable.Map[Int, Any]()
+    val columnSizes = collection.mutable.Map[Int, Long]()
+    val valueCounts = collection.mutable.Map[Int, Long]()
+    val nullCounts = collection.mutable.Map[Int, Long]()
+    val mins = collection.mutable.Map[Int, Any]()
+    val maxs = collection.mutable.Map[Int, Any]()
 
-      for (block <- blocks; chunk <- block.getColumns.asScala) {
-        val name = chunk.getPath.toDotString
-        // dotted chunk paths resolve into struct leaves, so nested
-        // primitive columns get stats too (ref keys stats by field ID
-        // at any depth, spec/manifest.go:120-148)
-        schema.fieldByPath(name).foreach { field =>
-          val fid = field.id
-          columnSizes(fid) =
-            columnSizes.getOrElse(fid, 0L) + chunk.getTotalSize
-          valueCounts(fid) =
-            valueCounts.getOrElse(fid, 0L) + chunk.getValueCount
-          val stats = chunk.getStatistics
-          if (stats != null && !stats.isEmpty) {
-            if (stats.isNumNullsSet)
-              nullCounts(fid) = nullCounts.getOrElse(fid, 0L) + stats.getNumNulls
-            if (stats.hasNonNullValue) {
-              statsValue(stats, field.fieldType, isMin = true).foreach { v =>
-                mins(fid) = mins.get(fid) match {
-                  case Some(cur) if Bounds.compare(cur, v, field.fieldType) <= 0 => cur
-                  case _ => v
-                }
+    for (block <- blocks; chunk <- block.getColumns.asScala) {
+      val name = chunk.getPath.toDotString
+      // dotted chunk paths resolve into struct leaves, so nested
+      // primitive columns get stats too (ref keys stats by field ID
+      // at any depth, spec/manifest.go:120-148)
+      schema.fieldByPath(name).foreach { field =>
+        val fid = field.id
+        columnSizes(fid) =
+          columnSizes.getOrElse(fid, 0L) + chunk.getTotalSize
+        valueCounts(fid) =
+          valueCounts.getOrElse(fid, 0L) + chunk.getValueCount
+        val stats = chunk.getStatistics
+        if (stats != null && !stats.isEmpty) {
+          if (stats.isNumNullsSet)
+            nullCounts(fid) = nullCounts.getOrElse(fid, 0L) + stats.getNumNulls
+          if (stats.hasNonNullValue) {
+            statsValue(stats, field.fieldType, isMin = true).foreach { v =>
+              mins(fid) = mins.get(fid) match {
+                case Some(cur) if Bounds.compare(cur, v, field.fieldType) <= 0 => cur
+                case _ => v
               }
-              statsValue(stats, field.fieldType, isMin = false).foreach { v =>
-                maxs(fid) = maxs.get(fid) match {
-                  case Some(cur) if Bounds.compare(cur, v, field.fieldType) >= 0 => cur
-                  case _ => v
-                }
+            }
+            statsValue(stats, field.fieldType, isMin = false).foreach { v =>
+              maxs(fid) = maxs.get(fid) match {
+                case Some(cur) if Bounds.compare(cur, v, field.fieldType) >= 0 => cur
+                case _ => v
               }
             }
           }
         }
       }
-
-      // String bounds truncate to 16 CODE POINTS (SURVEY §7 risk 3 —
-      // the reference truncates nothing, which would embed whole
-      // documents in every manifest entry): lower truncates to a
-      // prefix (still a valid lower bound); upper truncates then
-      // increments the last code point so it stays an upper bound;
-      // un-incrementable -> no bound. Code-point arithmetic, never
-      // char: a char-level truncate can split a surrogate pair and a
-      // char-level increment can step INTO the surrogate range — an
-      // unpaired surrogate UTF-8-serializes as '?', silently writing
-      // an upper bound BELOW the file's real data (unsound pruning).
-      // Incrementing U+D7FF skips the surrogate gap to U+E000.
-      val MaxBound = 16
-      def truncated(v: Any, isUpper: Boolean): Option[Any] = v match {
-        case s: String if s.codePointCount(0, s.length) > MaxBound =>
-          val prefix = s.substring(0, s.offsetByCodePoints(0, MaxBound))
-          if (!isUpper) Some(prefix)
-          else {
-            val cps = prefix.codePoints.toArray
-            val idx = cps.lastIndexWhere(_ != Character.MAX_CODE_POINT)
-            if (idx < 0) None
-            else {
-              val next = if (cps(idx) == 0xD7FF) 0xE000 else cps(idx) + 1
-              val sb = new java.lang.StringBuilder
-              var i = 0
-              while (i < idx) { sb.appendCodePoint(cps(i)); i += 1 }
-              sb.appendCodePoint(next)
-              Some(sb.toString)
-            }
-          }
-        case other => Some(other)
-      }
-      def boundsOf(m: collection.Map[Int, Any],
-          isUpper: Boolean): Map[Int, Array[Byte]] =
-        m.flatMap { case (fid, v) =>
-          for {
-            f <- schema.field(fid)
-            tv <- truncated(v, isUpper)
-          } yield fid -> Bounds.serialize(tv, f.fieldType)
-        }.toMap
-
-      val normalized = normalizePath(st.getPath.toString)
-      DataFile(
-        filePath = normalized,
-        recordCount = rowCount,
-        fileSizeInBytes = st.getLen,
-        partition = partition,
-        columnSizes = columnSizes.toMap,
-        valueCounts = valueCounts.toMap,
-        nullValueCounts = nullCounts.toMap,
-        nanValueCounts = nanCounts.getOrElse(normalized, Map.empty),
-        lowerBounds = boundsOf(mins, isUpper = false),
-        upperBounds = boundsOf(maxs, isUpper = true),
-        splitOffsets = splitOffsets,
-        sortOrderId = Some(0))
     }
+
+    // String bounds truncate to 16 CODE POINTS (SURVEY §7 risk 3 —
+    // the reference truncates nothing, which would embed whole
+    // documents in every manifest entry): lower truncates to a
+    // prefix (still a valid lower bound); upper truncates then
+    // increments the last code point so it stays an upper bound;
+    // un-incrementable -> no bound. Code-point arithmetic, never
+    // char: a char-level truncate can split a surrogate pair and a
+    // char-level increment can step INTO the surrogate range — an
+    // unpaired surrogate UTF-8-serializes as '?', silently writing
+    // an upper bound BELOW the file's real data (unsound pruning).
+    // Incrementing U+D7FF skips the surrogate gap to U+E000.
+    val MaxBound = 16
+    def truncated(v: Any, isUpper: Boolean): Option[Any] = v match {
+      case s: String if s.codePointCount(0, s.length) > MaxBound =>
+        val prefix = s.substring(0, s.offsetByCodePoints(0, MaxBound))
+        if (!isUpper) Some(prefix)
+        else {
+          val cps = prefix.codePoints.toArray
+          val idx = cps.lastIndexWhere(_ != Character.MAX_CODE_POINT)
+          if (idx < 0) None
+          else {
+            val next = if (cps(idx) == 0xD7FF) 0xE000 else cps(idx) + 1
+            val sb = new java.lang.StringBuilder
+            var i = 0
+            while (i < idx) { sb.appendCodePoint(cps(i)); i += 1 }
+            sb.appendCodePoint(next)
+            Some(sb.toString)
+          }
+        }
+      case other => Some(other)
+    }
+    def boundsOf(m: collection.Map[Int, Any],
+        isUpper: Boolean): Map[Int, Array[Byte]] =
+      m.flatMap { case (fid, v) =>
+        for {
+          f <- schema.field(fid)
+          tv <- truncated(v, isUpper)
+        } yield fid -> Bounds.serialize(tv, f.fieldType)
+      }.toMap
+
+    DataFile(
+      filePath = normalizePath(st.getPath.toString),
+      recordCount = rowCount,
+      fileSizeInBytes = st.getLen,
+      partition = partition,
+      columnSizes = columnSizes.toMap,
+      valueCounts = valueCounts.toMap,
+      nullValueCounts = nullCounts.toMap,
+      nanValueCounts = nanCounts,
+      lowerBounds = boundsOf(mins, isUpper = false),
+      upperBounds = boundsOf(maxs, isUpper = true),
+      splitOffsets = splitOffsets,
+      sortOrderId = Some(0))
   }
 
   /** Parquet chunk statistics → Iceberg-typed scalar. */
@@ -325,138 +218,6 @@ object DataWriter {
   }
 }
 
-/** Partition-aware write (SURVEY S8 — the reference lands everything in
-  * one "__default__" group, `table/writer.go:247-266`). Partition values
-  * are computed as derived Spark columns from the spec's transforms, the
-  * data is repartitioned so each partition tuple is written by one task
-  * (no small-file explosion), written with `partitionBy` (Hive-style
-  * dirs; original columns stay IN the files — only derived `__p_*`
-  * columns are folded into directory names), then each leaf directory is
-  * harvested with its parsed partition tuple.
-  */
-object PartitionedWriter {
-  import org.apache.spark.sql.functions.col
-
-  private val partPrefix = "__p_"
-
-  def writeDataFiles(meta: TableMetadata, df: DataFrame,
-      /** transient cluster keys (name → expr): sorted by AFTER the
-        * partition dirs but BEFORE the declared sort order, dropped
-        * before the bytes hit parquet — z-order rewrites ride here. */
-      extraSortCols: Seq[(String, org.apache.spark.sql.Column)] = Nil,
-      /** >0 splits each partition's output into files of at most this
-        * many rows (file-size control); 0 = one file per partition
-        * tuple per task. Sequential split of already-sorted data, so
-        * each chunk keeps a contiguous (tight) sort/z-key range. */
-      maxRecordsPerFile: Long = 0L,
-      /** float/double field ids the caller proves NaN-free in `df`:
-        * covering all of them skips the NaN pass
-        * ([[DataWriter.nanCountsFor]]). */
-      nanFreeFieldIds: Set[Int] = Set.empty)
-      : Seq[DataFile] = {
-    // Fail loud on frames that don't fit the table: an unknown column
-    // (typo) would land in the parquet bytes and silently null-fill
-    // the real column at read; a missing REQUIRED column would
-    // null-fill a NOT NULL field. Missing OPTIONAL columns are fine
-    // (Iceberg semantics: readers null-fill by field id).
-    locally {
-      val known = meta.currentSchema.fields.map(_.name.toLowerCase).toSet
-      val have = df.columns.map(_.toLowerCase).toSet
-      val unknown = df.columns.filterNot(c => known.contains(c.toLowerCase))
-      val missingReq = meta.currentSchema.fields
-        .filter(f => f.required && !have.contains(f.name.toLowerCase))
-      if (unknown.nonEmpty || missingReq.nonEmpty)
-        throw new IllegalArgumentException(
-          s"graft: DataFrame does not fit table schema — " +
-            (if (unknown.nonEmpty)
-              s"unknown columns: ${unknown.mkString(", ")}; " else "") +
-            (if (missingReq.nonEmpty)
-              s"missing required columns: ${missingReq.map(_.name)
-                .mkString(", ")}; " else "") +
-            s"table columns: ${meta.currentSchema.fields.map(_.name)
-              .mkString(", ")}")
-    }
-    val spec = meta.defaultPartitionSpec
-    if (spec.isUnpartitioned)
-      return DataWriter.writeDataFiles(meta, df, maxRecordsPerFile,
-        nanFreeFieldIds)
-    val spark = df.sparkSession
-    val schema = meta.currentSchema
-
-    val partCols = spec.fields.map { pf =>
-      val src = schema.field(pf.sourceId).getOrElse(
-        throw new IllegalArgumentException(
-          s"partition source ${pf.sourceId} missing"))
-      (partPrefix + pf.name,
-        Transforms.applyToColumn(pf.transform, col(src.name), src.fieldType,
-          df.schema.find(_.name == src.name).map(_.dataType)))
-    }
-    var df2 = df
-    partCols.foreach { case (n, c) => df2 = df2.withColumn(n, c) }
-    extraSortCols.foreach { case (n, c) => df2 = df2.withColumn(n, c) }
-    val names = partCols.map(_._1)
-    // co-locate each partition tuple in one task before the dir split
-    df2 = df2.repartition(names.map(col): _*)
-    val sortCols = meta.defaultSortOrder.fields.flatMap(sf =>
-      schema.field(sf.sourceId).map(f => sortColumn(sf, f.name)))
-    // partition columns FIRST: FileFormatWriter requires ordering by the
-    // partition columns and re-sorts (unstably) if it isn't satisfied,
-    // which would destroy the declared sort order within files
-    df2 = df2.sortWithinPartitions(names.map(col) ++
-      extraSortCols.map(p => col(p._1)) ++ sortCols: _*)
-    // drop AFTER the sort: a projection keeps intra-partition order and
-    // the partition-column ordering stays satisfied, so no re-sort
-    if (extraSortCols.nonEmpty) df2 = df2.drop(extraSortCols.map(_._1): _*)
-
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    val dir = meta.location.stripSuffix("/") + "/data/" +
-      java.util.UUID.randomUUID().toString
-    try {
-      var w = df2.write.option("compression", "snappy")
-      if (maxRecordsPerFile > 0)
-        w = w.option("maxRecordsPerFile", maxRecordsPerFile)
-      w.partitionBy(names: _*).parquet(dir)
-    }
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-
-    DataWriter.nanCountsFor(spark, meta, dir, nanFreeFieldIds)(nan =>
-      harvestPartitionDirs(spark.sessionState.newHadoopConf(), dir, meta,
-        spec, nan))
-  }
-
-  private def sortColumn(sf: SortField,
-      name: String): org.apache.spark.sql.Column = {
-    val c = col(name)
-    (sf.direction, sf.nullOrder) match {
-      case (SortDirection.Asc, NullOrder.NullsFirst) => c.asc_nulls_first
-      case (SortDirection.Asc, NullOrder.NullsLast) => c.asc_nulls_last
-      case (SortDirection.Desc, NullOrder.NullsFirst) => c.desc_nulls_first
-      case (SortDirection.Desc, NullOrder.NullsLast) => c.desc_nulls_last
-    }
-  }
-
-  /** Walk Hive-style partition dirs, decode each tuple with the spec's
-    * RESULT types, harvest per-file stats per leaf. */
-  private def harvestPartitionDirs(
-      conf: org.apache.hadoop.conf.Configuration,
-      root: String, meta: TableMetadata,
-      spec: PartitionSpec,
-      nanCounts: Map[String, Map[Int, Long]] = Map.empty): Seq[DataFile] = {
-    val schema = meta.currentSchema
-    val partitionType = spec.partitionType(schema)
-    PartitionDirs.leaves(conf, root, partitionType).flatMap {
-      case (leaf, values) =>
-        DataWriter.harvestDataFiles(conf, leaf.toString, schema, values,
-          nanCounts)
-    }
-  }
-}
-
 /** Shared Hive-style partition-directory walker: finds parquet leaf
   * dirs under `root` and decodes each `name=value` segment to the
   * partition type's RESULT types (strip the writer's `__p_` prefix). */
@@ -464,9 +225,8 @@ private[graft] object PartitionDirs {
   private val partPrefix = "__p_"
 
   /** Decode one RELATIVE `name=value/...` segment path (the executor
-    * row-level writers name files this way so the commit can recover
-    * each file's partition tuple through the exact same parse the
-    * Hive-dir walker uses). */
+    * writer names files this way so the commit can recover each file's
+    * partition tuple; the Hive-dir walker parses each level with it). */
   def decodeSegments(relDir: String,
       partitionType: StructType): Map[String, Any] =
     relDir.split('/').filter(s => s.nonEmpty && s.contains('=')).map { seg =>
@@ -494,20 +254,8 @@ private[graft] object PartitionDirs {
             e.isFile && e.getPath.getName.endsWith(".parquet")))
           Seq(dir -> values)
         else Nil
-      } else subdirs.flatMap { sd =>
-        val name = sd.getPath.getName
-        val idx = name.indexOf('=')
-        if (idx < 0) walk(sd.getPath, values)
-        else {
-          val colName = name.substring(0, idx).stripPrefix(partPrefix)
-          val raw = unescapePathName(name.substring(idx + 1))
-          val typed: Any =
-            if (raw == "__HIVE_DEFAULT_PARTITION__") null
-            else partitionType.fieldByName(colName).map(f =>
-              parseValue(raw, f.fieldType)).getOrElse(raw)
-          walk(sd.getPath, values + (colName -> typed))
-        }
-      }
+      } else subdirs.flatMap(sd => walk(sd.getPath,
+        values ++ decodeSegments(sd.getPath.getName, partitionType)))
     }
     walk(rootPath, Map.empty)
   }
@@ -611,8 +359,7 @@ object DeleteFileWriter {
     val partNames = partitionType.fields.map(f => "__p_" + f.name)
 
     // file_path → partition values, as STRINGS: the Hive-style dir
-    // encoding round-trips them and harvest re-types via partitionType
-    // (same discipline as PartitionedWriter).
+    // encoding round-trips them and harvest re-types via partitionType.
     import org.apache.spark.sql.types.{StringType => SStr, StructField => SF, StructType => ST}
     val mappingSchema = ST(SF("file_path", SStr) +: partNames.map(SF(_, SStr)))
     val mappingRows = pathToPartition.toSeq.map { case (p, tuple) =>
@@ -750,9 +497,12 @@ object DeleteFileWriter {
   }
 }
 
-/** Convenience write ops on a table (fluent facades in M7 widen this). */
+/** Convenience write ops on a table (fluent facades in M7 widen this).
+  * Every data write goes through [[graft.sources.TaskWrite]], so each
+  * committed file records its stats and NaN counts; [[addFiles]] is the
+  * one path that registers files it did not write. */
 object TableOps {
-  /** Append honoring the table's partition spec
+  /** Append honoring the table's partition spec and sort order
     * (`table/insert.go:49-170`). `props`, when given, are set in the
     * SAME commit as the data — the atomic data+bookkeeping shape the
     * streaming sinks' batch watermark needs. `summary` entries land in
@@ -763,7 +513,7 @@ object TableOps {
   def append(table: Table, df: DataFrame,
       props: Map[String, String] = Map.empty,
       summary: Map[String, String] = Map.empty): Table = {
-    val files = PartitionedWriter.writeDataFiles(table.metadata, df)
+    val files = TaskWrite(df.sparkSession, table, df)
     table.commitSnapshot(PendingSnapshot(Operation.Append,
       addedDataFiles = files, summaryExtra = summary),
       extraProps = props)
@@ -776,7 +526,7 @@ object TableOps {
     * would silently corrupt under concurrent writers. */
   def appendComputed(table: Table, df: DataFrame,
       propsFn: TableMetadata => Map[String, String]): Table = {
-    val files = PartitionedWriter.writeDataFiles(table.metadata, df)
+    val files = TaskWrite(df.sparkSession, table, df)
     table.commitSnapshotComputed(PendingSnapshot(Operation.Append,
       addedDataFiles = files), extraPropsFn = propsFn)
   }
@@ -817,7 +567,9 @@ object TableOps {
     * file would double-count its rows (Iceberg's
     * `check_duplicate_files`). Footer reads are driver-side and
     * bounded by the file count of ONE import call, the same planning
-    * budget `append` itself spends. */
+    * budget `append` itself spends; NaN counts, which footers lack,
+    * cost one Spark job per call when the schema has a float/double
+    * column. */
   def addFiles(table: Table, spark: SparkSession, paths: Seq[String],
       partition: Map[String, Any] = Map.empty,
       checkDuplicates: Boolean = true): Table =
@@ -843,8 +595,8 @@ object TableOps {
       s"addFiles: ${stray.mkString(", ")} not in the default partition " +
         s"spec (fields: ${specNames.mkString(", ")})")
     val schema = meta.currentSchema
-    val files = DataWriter.harvestFiles(
-      spark.sessionState.newHadoopConf(), paths, schema, partition)
+    val files = DataWriter.harvestFiles(spark.sessionState.newHadoopConf(),
+      paths.map(_ -> Map.empty[Int, Long]), schema, partition)
     // the caller STATES the partition tuple — cross-check it against
     // the harvested column bounds wherever the transform lets us
     // (identity: every row must equal the stated value, so min = max =
@@ -897,7 +649,43 @@ object TableOps {
         s"addFiles: already referenced by the current snapshot: " +
           s"${dup.mkString(", ")}")
     }
+    val counted = withNanCounts(spark, files, schema)
     (table.commitSnapshot(PendingSnapshot(Operation.Append,
-      addedDataFiles = files)), files)
+      addedDataFiles = counted)), counted)
+  }
+
+  /** Imported files with their float/double NaN counts, which no footer
+    * holds and no writer of ours counted: one Spark job reads just those
+    * columns (by name, as the footer stats resolve), one task per file.
+    * No job when the schema has no float/double field. Without the
+    * counts a `Gt`/`Gte` bound could never prune an imported file. */
+  private def withNanCounts(spark: SparkSession, files: Seq[DataFile],
+      schema: Schema): Seq[DataFile] = {
+    val fp = DataWriter.floatFields(schema)
+    if (fp.isEmpty) return files
+    val cols = org.apache.spark.sql.types.StructType(fp.map(f =>
+      org.apache.spark.sql.types.StructField(f.name,
+        SchemaConverters.toSparkType(f.fieldType))))
+    val isFloat = fp.map(_.fieldType == FloatType).toArray
+    val ids = fp.map(_.id).toArray
+    val read = org.apache.spark.sql.graftshim.ParquetShim
+      .buildReaderFunc(spark, cols, cols)
+    val counts = spark.sparkContext
+      .parallelize(files.map(f => (f.filePath, f.fileSizeInBytes)),
+        math.min(files.size, spark.sparkContext.defaultParallelism))
+      .map { case (path, len) =>
+        val n = new Array[Long](ids.length)
+        read(org.apache.spark.sql.graftshim.ParquetShim
+            .partitionedFile(path, len)).foreach { row =>
+          var i = 0
+          while (i < n.length) {
+            if (!row.isNullAt(i) && (if (isFloat(i)) row.getFloat(i).isNaN
+                else row.getDouble(i).isNaN)) n(i) += 1
+            i += 1
+          }
+        }
+        path -> ids.zip(n).toMap
+      }.collect().toMap
+    files.map(f => f.copy(nanValueCounts = counts(f.filePath)))
   }
 }

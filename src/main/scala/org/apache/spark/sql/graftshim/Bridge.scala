@@ -20,6 +20,13 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Run a command plan — a DSv2 write — now, as `DataFrameWriterV2`
+    * does: one SQL execution, visible to listeners like any query. */
+  def execute(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.executePlan(plan).assertCommandExecuted()
+
   /** V2 connector `Predicate` → v1 `sources.Filter` (the
     * `private[sql]` converter Spark itself uses) — lets runtime
     * (dynamic pruning) predicates reuse the engine's v1-filter

@@ -99,8 +99,9 @@ object ParquetShim {
   /** Driver-side: build the serializable parquet [[OutputWriterFactory]]
     * Spark's own FileFormatWriter would use, plus the job configuration
     * executors need to instantiate writers. Timestamps are forced to
-    * TIMESTAMP_MICROS (Iceberg physical semantics — same discipline as
-    * the driver-orchestrated DataWriter path). */
+    * TIMESTAMP_MICROS (Iceberg physical semantics; INT96 has no usable
+    * min/max for pruning) in this job's configuration only, so other
+    * writers in the session keep their setting. */
   def buildWriterFactory(spark: SparkSession, dataSchema: StructType)
       : (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
          org.apache.spark.util.SerializableConfiguration) = {

@@ -7,7 +7,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
   SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.WriteFilesExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec,
+  V2ExistingTableWriteExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   ShuffleExchangeExec}
 
@@ -453,9 +456,8 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   // ------------------------------------------ table-layer read executor
 
-  /** Scan leaves of every physical plan `f` executes, writes included
-    * (AQE stages are looked through). */
-  private def scanLeaves(f: => Unit): Seq[SparkPlan] = {
+  /** Every physical plan `f` executes, writes included. */
+  private def executedPlans(f: => Unit): Seq[SparkPlan] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
@@ -468,10 +470,15 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     spark.listenerManager.register(listener)
     try { f; org.apache.spark.TestListenerBus.drain(sc) }
     finally spark.listenerManager.unregister(listener)
-    plans.asScala.toSeq.flatMap(p => collectLeaves(p).collect {
+    plans.asScala.toSeq
+  }
+
+  /** Scan leaves of every physical plan `f` executes, writes included
+    * (AQE stages are looked through). */
+  private def scanLeaves(f: => Unit): Seq[SparkPlan] =
+    executedPlans(f).flatMap(p => collectLeaves(p).collect {
       case s @ (_: BatchScanExec | _: FileSourceScanExec) => s
     })
-  }
 
   /** Every scan `f` runs is the connector's task read: no parquet file
     * scan beside it (a second executor), at least one task read. */
@@ -550,5 +557,83 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
     assert(Scan(t, spark).toDF.select("id").collect().map(_.getLong(0)).toSet
       == ((1 to 20).toSet -- Set(3, 4, 15)).map(_.toLong))
+  }
+
+  // ----------------------------------------- table-layer write executor
+
+  /** `f` writes data files only through the engine's writer: it runs a
+    * graft write, and no plan it executes holds Spark's file-source
+    * writer (a second writer). */
+  private def assertEngineWritesOnly(what: String)(f: => Unit): Unit = {
+    val nodes = executedPlans(f).flatMap(p => collect(p) { case n => n })
+    val fileWrites = nodes.collect {
+      case n @ (_: DataWritingCommandExec | _: WriteFilesExec) => n
+    }
+    assert(fileWrites.isEmpty,
+      s"$what must not plan Spark's file writer:\n${fileWrites.mkString}")
+    assert(nodes.exists {
+      case w: V2ExistingTableWriteExec =>
+        w.write.description().startsWith("graft-write:")
+      case _ => false
+    }, s"$what ran no graft write")
+  }
+
+  test("table-layer and SQL writes plan only the engine's data writer: " +
+      "appends, CoW delete, update, upsert, compaction, z-order, a " +
+      "stream batch, SQL INSERT, UPDATE and MERGE") {
+    import graft.spec._
+    import graft.table._
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft-onewriter-")
+      .toString
+    val cat = new graft.catalog.LocalCatalog(wh)
+    cat.createNamespace(Seq("db"))
+    val schema = Schema(0, Seq(NestedField(1, "id", LongType, required = true),
+      NestedField(2, "p", IntType, required = false),
+      NestedField(3, "v", DoubleType, required = false)))
+    def create(name: String, spec: PartitionSpec) = Table.create(cat,
+      graft.catalog.TableIdentifier(Seq("db"), name), schema, spec,
+      io = new graft.io.HadoopFileIO())
+    def rows(ids: Range) =
+      ids.map(i => (i.toLong, i % 2, i * 0.5)).toDF("id", "p", "v")
+    var t = create("plain", PartitionSpec.unpartitioned)
+    assertEngineWritesOnly("append") { t = TableOps.append(t, rows(1 to 10)) }
+    var pt = create("parted", PartitionSpec.builder().identity(2, "p").build())
+    assertEngineWritesOnly("partitioned append") {
+      pt = TableOps.append(pt, rows(1 to 10))
+    }
+    assertEngineWritesOnly("CoW delete") {
+      pt = Mutations.deleteCoW(pt, spark, Col("id").eqTo(3L))
+    }
+    assertEngineWritesOnly("update") {
+      pt = Mutations.update(pt, spark, Col("id").eqTo(4L), Map("v" -> 0.0))
+    }
+    assertEngineWritesOnly("upsert") {
+      pt = Mutations.upsert(pt, spark, rows(8 to 12), Seq("id"))
+    }
+    pt = TableOps.append(pt, rows(13 to 14))
+    assertEngineWritesOnly("compaction") {
+      pt = Maintenance.compactDataFiles(pt, spark)
+    }
+    assertEngineWritesOnly("z-order rewrite") {
+      pt = Maintenance.zorderRewrite(pt, spark, Seq("id", "v"))
+    }
+    assertEngineWritesOnly("stream batch") {
+      graft.streaming.Streams.icebergSink(t).addBatch(rows(11 to 12), 0L)
+    }
+    spark.conf.set("spark.sql.catalog.planshape_w",
+      classOf[graft.sources.GraftSparkCatalog].getName)
+    spark.conf.set("spark.sql.catalog.planshape_w.warehouse", wh)
+    assertEngineWritesOnly("SQL INSERT")(
+      spark.sql("INSERT INTO planshape_w.db.parted VALUES (20, 0, 1.0), " +
+        "(21, 1, 2.0)"))
+    assertEngineWritesOnly("SQL UPDATE")(
+      spark.sql("UPDATE planshape_w.db.parted SET v = v + 1 " +
+        "WHERE id % 3 = 0"))
+    assertEngineWritesOnly("SQL MERGE")(spark.sql(
+      "MERGE INTO planshape_w.db.parted t USING (SELECT 21L AS id, 1 AS p, " +
+        "9.0 AS v) s ON t.id = s.id WHEN MATCHED THEN UPDATE SET *"))
+    assert(spark.sql("SELECT v FROM planshape_w.db.parted WHERE id = 21")
+      .collect().map(_.getDouble(0)).toSeq == Seq(9.0))
   }
 }

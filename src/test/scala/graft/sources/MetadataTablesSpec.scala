@@ -109,11 +109,17 @@ class MetadataTablesSpec extends AnyFunSuite {
   test("entries table shows every manifest entry with its status") {
     withCatalog("ent") { (c, dir) =>
       seed(c)
-      // a CoW delete rewrites one file and carries the other forward:
-      // the new manifests hold the rewrite as Added and the untouched
-      // file as Existing — `entries` surfaces BOTH statuses, `files`
-      // flattens them into the live view
-      spark.sql(s"DELETE FROM $c.db.t WHERE id = 1")
+      // one commit of two files (one per range partition) ...
+      spark.range(4, 6).repartitionByRange(2,
+          org.apache.spark.sql.functions.col("id"))
+        .selectExpr("id", "CAST(id AS DOUBLE) AS v")
+        .createOrReplaceTempView("ent_two_files")
+      spark.sql(s"INSERT INTO $c.db.t SELECT * FROM ent_two_files")
+      // ... then a CoW delete rewrites one file and carries the other
+      // forward: the new manifests hold the rewrite as Added and the
+      // untouched file as Existing — `entries` surfaces BOTH statuses,
+      // `files` flattens them into the live view
+      spark.sql(s"DELETE FROM $c.db.t WHERE id = 4")
       val byStatus = spark.sql(
         s"SELECT status, count(*) FROM $c.db.t.entries GROUP BY status")
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

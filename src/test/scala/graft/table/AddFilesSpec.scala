@@ -123,4 +123,35 @@ class AddFilesSpec extends AnyFunSuite {
     val tasks = Scan(t, spark).planFiles()
     assert(tasks.forall(_.file.partition.get("id_part").contains(7L)))
   }
+
+  test("imported float/double files record NaN counts: one job per " +
+      "import, none without such columns; NaN-free files prune on Gt") {
+    val dir = Files.createTempDirectory("graft-ext-nan-").toString
+    Seq((1L, 1.0f, 1.0), (2L, 2.0f, 2.0)).toDF("id", "f", "d").coalesce(1)
+      .write.parquet(s"$dir/clean")
+    Seq((3L, Float.NaN, 3.0), (4L, 4.0f, Double.NaN), (5L, 5.0f, Double.NaN),
+        (6L, Float.NaN, Double.NaN)).toDF("id", "f", "d").coalesce(1)
+      .write.parquet(s"$dir/nans")
+    def parts(sub: String) = new java.io.File(s"$dir/$sub").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
+    val nanSchema = Schema(0, Seq(
+      NestedField(1, "id", LongType, required = true),
+      NestedField(2, "f", FloatType, required = false),
+      NestedField(3, "d", DoubleType, required = false)))
+    val (t, jobs) = graft.SparkJobs.count(spark)(TableOps.addFiles(
+      freshTable("nan1", nanSchema), spark, parts("clean") ++ parts("nans")))
+    assert(jobs == 1, s"one counting job per import, got $jobs")
+    assert(Scan(t, spark).planFiles().map(_.file)
+      .map(f => f.recordCount -> f.nanValueCounts).toSet ==
+      Set(2L -> Map(2 -> 0L, 3 -> 0L), 4L -> Map(2 -> 2L, 3 -> 3L)))
+    // above every bound: only the NaN-bearing file can still match
+    val kept = Scan(t, spark).filter(Col("d").gt(100.0)).planFiles()
+    assert(kept.map(_.file.recordCount) == Seq(4L))
+    assert(Scan(t, spark).filter(Col("d").gt(100.0)).toDF.count() == 3)
+    // no float/double column: nothing to count, no job
+    val (_, parts0) = externalParquet(3)
+    val (_, jobs0) = graft.SparkJobs.count(spark)(
+      TableOps.addFiles(freshTable("nan2", schema), spark, parts0))
+    assert(jobs0 == 0, s"no job without float/double columns, got $jobs0")
+  }
 }

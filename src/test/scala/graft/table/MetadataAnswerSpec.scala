@@ -12,8 +12,8 @@ import graft.spec._
 /** Table-layer answers taken from metadata instead of recomputed: an
   * unfiltered `count()` read off the manifest list, copy-on-write
   * commits and rebase checks that decode only the manifests whose
-  * partition summaries can hold the files they touch, and filter-only
-  * rewrites that skip the NaN-count pass when their inputs prove it. */
+  * partition summaries can hold the files they touch, and NaN counts
+  * taken by the writer as rows pass, so no rewrite re-reads its output. */
 class MetadataAnswerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -230,7 +230,7 @@ class MetadataAnswerSpec extends AnyFunSuite {
       (11 to 20).map(_.toLong))
   }
 
-  // ------------------------------------------- NaN pass of CoW rewrites
+  // ------------------------------------------- NaN counts of CoW rewrites
 
   private def nanCounts(t: Table): Seq[Map[Int, Long]] =
     Scan(t, spark).planFiles().map(_.file.nanValueCounts)
@@ -256,25 +256,24 @@ class MetadataAnswerSpec extends AnyFunSuite {
     val (t0, _) = freshTable("nanzero", PartitionSpec.unpartitioned)
     val proven = TableOps.append(t0, rows(1 to 20, None))
     assert(nanCounts(proven) == Seq(Map(3 -> 0L)))
-    // the same file registered without NaN counts proves nothing
+    // the same file registered by addFiles, which counts at import
     val (u0, _) = freshTable("nanunknown", PartitionSpec.unpartitioned)
     val unproven = TableOps.addFiles(u0, spark,
       Scan(proven, spark).planFiles().map(_.file.filePath))
-    assert(nanCounts(unproven) == Seq(Map.empty))
+    assert(nanCounts(unproven) == Seq(Map(3 -> 0L)))
 
     val (afterProven, provenJobs) = cowJobs(proven)
     val (afterUnproven, unprovenJobs) = cowJobs(unproven)
-    // the write is the proven rewrite's only job; the NaN pass (a
-    // grouped aggregate: shuffle + result) comes on top when unproven
-    assert(provenJobs == 1 && unprovenJobs > provenJobs,
+    // the write is each rewrite's only job: it counts NaNs inline
+    assert(provenJobs == 1 && unprovenJobs == provenJobs,
       s"proven $provenJobs jobs, unproven $unprovenJobs")
     assert(nanCounts(afterProven) == Seq(Map(3 -> 0L)))
     assert(nanCounts(afterUnproven) == Seq(Map(3 -> 0L)))
     assert(ids(afterProven) == (1 to 20).map(_.toLong).toSet - 2L)
   }
 
-  test("a double column added after the candidate was written still " +
-      "runs the NaN pass") {
+  test("a double column added after the candidate was written is " +
+      "counted by the rewrite's write alone") {
     val (t0, _) = freshTable("nanadded", PartitionSpec.unpartitioned)
     val base = TableOps.append(t0, rows(1 to 20, None))
     val (b0, _) = freshTable("nanbase", PartitionSpec.unpartitioned)
@@ -282,7 +281,7 @@ class MetadataAnswerSpec extends AnyFunSuite {
     val evolved = base.updateSchema().addColumn("w", DoubleType).commit()
     val wId = evolved.schema.fieldByName("w").get.id
     val (after, jobs) = cowJobs(evolved)
-    assert(baseJobs == 1 && jobs > baseJobs,
+    assert(baseJobs == 1 && jobs == baseJobs,
       s"evolved $jobs jobs, base $baseJobs")
     assert(nanCounts(after) == Seq(Map(3 -> 0L, wId -> 0L)))
   }

@@ -344,27 +344,6 @@ class NaNStatsSpec extends AnyFunSuite {
       s"Lt prune keeps only the low file: $keptLt")
   }
 
-  test("graft.write.nan-stats=false skips the pass; pruning stays sound") {
-    val dir = Files.createTempDirectory("graft-nanoff-").toString
-    val cat = new LocalCatalog(dir)
-    cat.createNamespace(Seq("db"))
-    var t = Table.create(cat, TableIdentifier(Seq("db"), "nanoff"),
-      scoreSchema, io = new HadoopFileIO())
-    t = t.newTransaction()
-      .setProperties(Map("graft.write.nan-stats" -> "false")).commit()
-    import spark.implicits._
-    t = TableOps.append(t, Seq((1L, 1.0), (2L, Double.NaN))
-      .toDF("id", "score").coalesce(1))
-    t = TableOps.append(t, Seq((3L, 5.0)).toDF("id", "score").coalesce(1))
-    val files = Scan(t, spark).planFiles().map(_.file)
-    assert(files.forall(_.nanValueCounts.isEmpty), "pass skipped")
-    // without counts, Gt cannot prune float/double files — sound
-    assert(Scan(t, spark).filter(Col("score").gt(100.0))
-      .planFiles().size == 2)
-    assert(Scan(t, spark).filter(Col("score").gt(100.0)).toDF
-      .select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
-  }
-
   test("NaN literal predicates: Eq/Gte keep only NaN-bearing files") {
     var t = freshTable("nanlit")
     import spark.implicits._

@@ -28,20 +28,6 @@ class TableHardeningSpec extends AnyFunSuite {
       spec = spec, io = new HadoopFileIO())
   }
 
-  test("MetaPathDecode kernel: %XX decodes byte-level, '+' literal, " +
-      "malformed % kept") {
-    import org.apache.spark.unsafe.types.UTF8String
-    def d(s: String): String =
-      graft.functions.MetaPathDecode.decode(UTF8String.fromString(s))
-        .toString
-    assert(d("/x/__p_c=a%20b/f.parquet") == "/x/__p_c=a b/f.parquet")
-    assert(d("/x/a+b") == "/x/a+b", "'+' is literal in URI paths")
-    assert(d("/x/%E2%82%AC") == "/x/€", "multi-byte UTF-8 sequences")
-    assert(d("/x/100%") == "/x/100%", "trailing % kept literal")
-    assert(d("/x/%ZZy") == "/x/%ZZy", "malformed hex kept literal")
-    assert(d("/plain/path") == "/plain/path")
-  }
-
   test("a '+' in a string partition value round-trips (Hive unescape," +
       " not URLDecoder)") {
     val schema = Schema(0, Seq(
