@@ -1801,7 +1801,18 @@ private[sources] class GraftReaderFactory(
       s
     }
 
+  /** Spark starts a task's input-bytes count (Hadoop's per-thread
+    * FileSystem read statistics) only once `createReader` has returned,
+    * so the readers open their files on the first `next()`: reads made
+    * inside `createReader` would never reach the task's metrics. */
   override def createColumnarReader(p: InputPartition)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new GraftReaderFactory.OpenOnNext(() => openColumnar(p))
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new GraftReaderFactory.OpenOnNext(() => openRows(p))
+
+  private def openColumnar(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val gp = UnwrapPartition(p)
     require(columnarEligible(gp), s"non-columnar partition ${gp.path}")
@@ -1962,8 +1973,7 @@ private[sources] class GraftReaderFactory(
         (ords, keyTypes, set)
       }.toArray
 
-  override def createReader(
-      p: InputPartition): PartitionReader[InternalRow] = {
+  private def openRows(p: InputPartition): PartitionReader[InternalRow] = {
     val gp = UnwrapPartition(p)
 
     val posSet: java.util.HashSet[java.lang.Long] = buildPosSet(gp)
@@ -2061,6 +2071,18 @@ private[sources] class GraftReaderFactory(
 }
 
 private[sources] object GraftReaderFactory {
+  /** A reader that opens `open()` on its first `next()`. */
+  final class OpenOnNext[T](open: () => PartitionReader[T])
+      extends PartitionReader[T] {
+    private var r: PartitionReader[T] = _
+    override def next(): Boolean = {
+      if (r == null) r = open()
+      r.next()
+    }
+    override def get(): T = r.get()
+    override def close(): Unit = if (r != null) r.close()
+  }
+
   val PosDeleteSchema: StructType = StructType(Seq(
     org.apache.spark.sql.types.StructField("file_path",
       org.apache.spark.sql.types.StringType),

@@ -223,12 +223,16 @@ private[sources] class GraftCowWrite(
   private val spec = meta.defaultPartitionSpec
   private val gschema = meta.currentSchema
 
-  /** Cluster rewritten rows by the partition SOURCE columns so each
-    * task's fan-out writer touches few partition tuples (identity
-    * references only — no function catalog needed), then sort by the
-    * table's declared sort order within tasks. */
+  /** `UPDATE` and `MERGE` cluster rewritten rows by the partition
+    * SOURCE columns so each task's fan-out writer touches few partition
+    * tuples (identity references only — no function catalog needed).
+    * A `DELETE` needs no exchange: each scan task holds one replaced
+    * file's rows and no row changes partition, so its tasks write at
+    * most one file per replaced file and tuple. Rows are then sorted by
+    * the table's declared sort order within tasks. */
   override def requiredDistribution(): Distribution =
-    if (spec.isUnpartitioned) Distributions.unspecified()
+    if (spec.isUnpartitioned || op.command() == Command.DELETE)
+      Distributions.unspecified()
     else Distributions.clustered(
       sourceNames.map(n => Expressions.identity(n)
         : org.apache.spark.sql.connector.expressions.Expression).toArray)

@@ -185,27 +185,12 @@ private[sources] object MetadataTables {
 
   /** Per-partition record/file counts from manifest entries (Iceberg's
     * most-used inspection table after snapshots). Driver-aggregated —
-    * output is O(#partitions), input is the manifest set, fetched on a
-    * bounded thread pool so a thousand-manifest table reads them
-    * concurrently (each is one small Avro). The per-FILE fan-out path
+    * output is O(#partitions), input is the manifest set, decoded in
+    * parallel by [[Table.readManifests]]. The per-FILE fan-out path
     * for unbounded output remains the `files` table. */
   def partitionRows(t: Table): Seq[Row] = {
     val mfs = currentManifests(t)
-    val manifests: Seq[(Int, graft.spec.Manifest)] =
-      if (mfs.isEmpty) Nil
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, mfs.size))
-        try mfs.map { mf =>
-          pool.submit(new java.util.concurrent.Callable[
-            (Int, graft.spec.Manifest)] {
-            override def call(): (Int, graft.spec.Manifest) =
-              mf.partitionSpecId ->
-                ManifestAvro.readManifest(t.io.readAllBytes(mf.manifestPath))
-          })
-        }.map(_.get())
-        finally pool.shutdown()
-      }
+    val manifests = mfs.map(_.partitionSpecId).zip(t.readManifests(mfs))
     final class Agg {
       var records = 0L; var files = 0; var bytes = 0L
       var posDel = 0; var eqDel = 0

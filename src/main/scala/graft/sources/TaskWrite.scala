@@ -36,19 +36,30 @@ import graft.table.{DataWriter, PartitionDirs, Table, Transforms}
   * row-level rewrites use too, and comes back as the stats-complete
   * [[DataFile]]s it wrote. The caller commits them.
   *
-  * Partitioned tables: rows are clustered by their partition tuple (one
-  * task per tuple, so no small-file explosion) and sorted within tasks
-  * by tuple, then `extraSortCols` (transient keys such as z-order's,
-  * never written), then the table's declared sort order. Unpartitioned
-  * tables write `df` as it comes — callers that cluster (compaction,
-  * z-order) do so themselves. `maxRecordsPerFile > 0` rolls each
-  * task's output to a new file every that many rows. */
+  * Rows are sorted within tasks by partition tuple, then
+  * `extraSortCols` (transient keys such as z-order's, never written),
+  * then the table's declared sort order; an unpartitioned table with
+  * neither writes `df` as it comes. On a partitioned table the rows are
+  * first clustered by tuple through an exchange (one task per tuple, so
+  * no small-file explosion) — unless `inPlace`. `maxRecordsPerFile > 0`
+  * rolls each task's output to a new file every that many rows.
+  *
+  * `inPlace` is for copy-on-write rewrites whose `df` is a [[TaskRead]]
+  * of the replaced files (one input partition per file) with no row
+  * moving to another partition tuple: each task already holds one
+  * file's rows, so the exchange is skipped and the rewrite writes at
+  * most one file per replaced file — never more files than it replaces.
+  * The writer still routes every row by the current spec, so a file
+  * written under an older spec is re-partitioned correctly (one file
+  * per current tuple its rows fall in). Appends, upserts and other
+  * writes of new rows keep the exchange. */
 private[graft] object TaskWrite {
   private[sources] val PartPrefix = "__p_"
 
   def apply(spark: SparkSession, table: Table, df: DataFrame,
       extraSortCols: Seq[(String, Column)] = Nil,
-      maxRecordsPerFile: Long = 0L): Seq[DataFile] = {
+      maxRecordsPerFile: Long = 0L,
+      inPlace: Boolean = false): Seq[DataFile] = {
     val meta = table.metadata
     val schema = meta.currentSchema
     // Fail loud on frames that don't fit the table: an unknown column
@@ -75,26 +86,25 @@ private[graft] object TaskWrite {
     val data = schema.fields.flatMap(f => have.get(f.name.toLowerCase)
       .map(c => df.col(quoted(c)).as(f.name)))
     val spec = meta.defaultPartitionSpec
+    val parts = spec.fields.map { pf =>
+      val src = schema.field(pf.sourceId).getOrElse(
+        throw new IllegalArgumentException(
+          s"partition source ${pf.sourceId} missing"))
+      Transforms.applyToColumn(pf.transform, col(quoted(src.name)),
+        src.fieldType, df.schema.find(_.name == src.name)
+          .map(_.dataType)).as(PartPrefix + pf.name)
+    }
+    val extras = extraSortCols.map { case (n, c) => c.as(n) }
+    val sortCols = meta.defaultSortOrder.fields.flatMap(sf =>
+      schema.field(sf.sourceId).map(f => sortColumn(sf, f.name)))
+    val keys = spec.fields.map(pf => col(PartPrefix + pf.name))
+    val selected = df.select(data ++ parts ++ extras: _*)
+    val clustered =
+      if (keys.isEmpty || inPlace) selected else selected.repartition(keys: _*)
+    val order = keys ++ extraSortCols.map(p => col(p._1)) ++ sortCols
     val rows =
-      if (spec.isUnpartitioned) df.select(data: _*)
-      else {
-        val parts = spec.fields.map { pf =>
-          val src = schema.field(pf.sourceId).getOrElse(
-            throw new IllegalArgumentException(
-              s"partition source ${pf.sourceId} missing"))
-          Transforms.applyToColumn(pf.transform, col(quoted(src.name)),
-            src.fieldType, df.schema.find(_.name == src.name)
-              .map(_.dataType)).as(PartPrefix + pf.name)
-        }
-        val extras = extraSortCols.map { case (n, c) => c.as(n) }
-        val sortCols = meta.defaultSortOrder.fields.flatMap(sf =>
-          schema.field(sf.sourceId).map(f => sortColumn(sf, f.name)))
-        val keys = spec.fields.map(pf => col(PartPrefix + pf.name))
-        df.select(data ++ parts ++ extras: _*)
-          .repartition(keys: _*)
-          .sortWithinPartitions(keys ++
-            extraSortCols.map(p => col(p._1)) ++ sortCols: _*)
-      }
+      if (order.isEmpty) clustered
+      else clustered.sortWithinPartitions(order: _*)
 
     var written: Seq[DataFile] = Nil
     val target = new GraftTaskWriteTable(table, rows.schema,

@@ -307,21 +307,18 @@ object Maintenance extends org.apache.spark.internal.Logging {
       (totalBytes + targetFileSizeBytes - 1) / targetFileSizeBytes)
     val recordsPerFile =
       math.max(1L, tasks.map(_.file.recordCount).sum / nFiles)
-    val newFiles =
-      if (table.spec.isUnpartitioned) {
-        val clustered = df.withColumn("__z", z)
-          .repartitionByRange(nFiles.toInt, col("__z"))
-          .sortWithinPartitions("__z")
-          .drop("__z")
-        TaskWrite(spark, table, clustered,
-          maxRecordsPerFile = recordsPerFile)
-      } else
-        // maxRecordsPerFile keeps targetFileSizeBytes meaningful on
-        // partitioned tables: without it each partition tuple collapses
-        // to ONE (possibly huge) file and the intra-partition z-sort
-        // yields no file-level pruning — the feature's whole point.
-        TaskWrite(spark, table, df, extraSortCols = Seq("__z" -> z),
-          maxRecordsPerFile = recordsPerFile)
+    // The z-value is the within-task sort key ahead of any declared
+    // order. Unpartitioned tables first range-partition on it, so each
+    // file covers one stretch of the curve. maxRecordsPerFile keeps
+    // targetFileSizeBytes meaningful on partitioned tables: without it
+    // each partition tuple collapses to ONE (possibly huge) file and
+    // the intra-partition z-sort yields no file-level pruning — the
+    // feature's whole point.
+    val input =
+      if (table.spec.isUnpartitioned) df.repartitionByRange(nFiles.toInt, z)
+      else df
+    val newFiles = TaskWrite(spark, table, input,
+      extraSortCols = Seq("__z" -> z), maxRecordsPerFile = recordsPerFile)
     val deletePaths = tasks.map(_.file.filePath).toSet ++
       tasks.flatMap(_.deleteFiles.map(_.file.filePath))
     table.commitSnapshot(PendingSnapshot(Operation.Replace,

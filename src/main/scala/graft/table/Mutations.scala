@@ -8,8 +8,9 @@ import graft.spec._
 
 /** Full CRUD over Iceberg tables (SURVEY §2.7), Spark-first:
   * candidate files come from the pruned scan plan, rewrites are single
-  * Spark jobs over just those files, and the swap commits atomically
-  * through [[SnapshotWriter]].
+  * Spark jobs over just those files (a delete or update rewrite runs
+  * one task per candidate and no exchange, `TaskWrite`'s `inPlace`),
+  * and the swap commits atomically through [[SnapshotWriter]].
   *
   * Row-level semantics: DELETE removes rows where the predicate is TRUE
   * (survivors = `pred IS NOT TRUE`, i.e. FALSE or NULL — SQL MERGE/
@@ -75,7 +76,7 @@ object Mutations {
       else {
         val survivors = readCandidates(t, spark, candidates)
           .where(survivorFilter(pred))
-        val newFiles = TaskWrite(spark, t, survivors)
+        val newFiles = TaskWrite(spark, t, survivors, inPlace = true)
         t.commitSnapshot(replacing(Operation.Delete, newFiles, candidates))
       }
     }
@@ -180,7 +181,12 @@ object Mutations {
           df = df.withColumn(name,
             when(hit, lit(value).cast(target)).otherwise(col(name)))
         }
-        val newFiles = TaskWrite(spark, t, df)
+        // rows stay in their file's partition unless a partition
+        // source column is assigned
+        val sources = t.spec.fields.flatMap(pf => t.schema.field(pf.sourceId))
+          .map(_.name).toSet
+        val newFiles = TaskWrite(spark, t, df,
+          inPlace = !assignments.keys.exists(sources))
         t.commitSnapshot(replacing(Operation.Overwrite, newFiles, candidates))
       }
     }
@@ -278,7 +284,7 @@ object Mutations {
       val rewritten =
         if (candidates.isEmpty) Nil
         else TaskWrite(spark, t, readCandidates(t, spark, candidates)
-          .where(survivorFilter(pred)))
+          .where(survivorFilter(pred)), inPlace = true)
       val appended = TaskWrite(spark, t, df)
       t.commitSnapshot(replacing(Operation.Overwrite, rewritten ++ appended,
         candidates))

@@ -36,7 +36,9 @@ final case class FileScanTask(
   *
   * Planning = snapshot-resolve → manifest-list read → manifest prune
   * (partition summaries) → entry prune (column bounds) → tasks with MoR
-  * delete files attached (the step `table/scan.go:146-149` skips).
+  * delete files attached (the step `table/scan.go:146-149` skips). It
+  * runs on the driver, manifests read in parallel on its
+  * [[graft.util.WorkerPool]], and starts no Spark job.
   * Execution is not here: the planned tasks are read by
   * [[graft.sources.TaskRead]], the connector reader every SQL read also
   * uses, which applies each task's position and equality deletes and
@@ -89,9 +91,6 @@ class Scan private (
   /** Free-form scan options (`table/scan.go:73-77`). */
   def option(key: String, value: String): Scan =
     copy2(options = options + (key -> value))
-
-  private def intOption(key: String, default: Int): Int =
-    options.get(key).fold(default)(graft.util.Settings.parsed(key, _)(_.toInt))
 
   /** Snapshot resolution (`table/scan.go:80-98`), extended with named
     * refs: a branch/tag resolves through `metadata.refs` to its pinned
@@ -170,7 +169,7 @@ class Scan private (
     // streaming-skip-overwrite-snapshots option.
     val skipOverwrites =
       options.get("incremental-skip-overwrites").contains("true")
-    chain.result()
+    val added = chain.result()
       .filter { s =>
         s.summary.map(_.operation) match {
           case None | Some(Operation.Append) => true
@@ -186,52 +185,47 @@ class Scan private (
                 "snapshots (accepting that upserted rows are not delivered)")
         }
       }
-      .flatMap { s =>
-      table.manifestList(s)
-        .filter(mf => mf.content == ManifestContent.Data &&
-          mf.addedSnapshotId == s.snapshotId)
-        .flatMap { mf =>
-          val manifest = table.readManifest(mf)
-          val mfSpec = table.metadata.specById(mf.partitionSpecId)
-          manifest.entries
-            .filter(e => e.status == EntryStatus.Added &&
-              e.snapshotId.forall(_ == s.snapshotId))
-            .filter(e => pred.forall(p =>
-              Pruning.fileMightMatch(p, e.dataFile, schema) &&
-                mfSpec.forall(sp =>
-                  Pruning.partitionTupleMightMatch(p, e.dataFile, sp, schema))))
-            .map(e => FileScanTask(e.dataFile,
-              e.sequenceNumber.getOrElse(0L), mf.partitionSpecId, Nil,
-              manifest.schemaId))
-        }
+      .flatMap(s => table.manifestList(s).filter(mf =>
+        mf.content == ManifestContent.Data &&
+          mf.addedSnapshotId == s.snapshotId))
+    Table.readManifestsWith(table.io, added) { (mf, m) =>
+      val sid = mf.addedSnapshotId
+      Scan.pruneManifest(m.copy(entries = m.addedEntries
+          .filter(_.snapshotId.forall(_ == sid))),
+        mf.partitionSpecId, pred, schema,
+        table.metadata.specById(mf.partitionSpecId))
+    }.flatten.map { case (df, seq, specId, schemaId) =>
+      FileScanTask(df, seq, specId, Nil, schemaId)
     }
   }
 
   /** Plan files with real pruning (`table/scan.go:101-190` + the stubs
-    * of `table/insert.go:255-266` implemented). */
+    * of `table/insert.go:255-266` implemented). Every delete manifest
+    * and every data manifest that survives summary pruning is read and
+    * entry-pruned in one pass over the driver's
+    * [[graft.util.WorkerPool]] (Iceberg plans on its worker pool the
+    * same way); results keep manifest order, so tasks come out as a
+    * serial plan would list them. Planning never leaves the driver. */
   def planFiles(): Seq[FileScanTask] = {
     options.get("incremental-from").foreach(f =>
       return planIncremental(f.toLong))
     val snap = resolveSnapshot().getOrElse(return Nil)
     val schema = schemaForSnapshot(snap)
     val pred = resolvedFilter(schema)
-    val manifests = table.manifestList(snap)
-
-    def manifestSurvives(mf: ManifestFile): Boolean = pred.forall { e =>
-      table.metadata.specById(mf.partitionSpecId) match {
-        case Some(spec) => Pruning.manifestMightMatch(e, mf, spec, schema)
-        case None => true
-      }
-    }
 
     // delete manifests are routed separately, never skipped (fixes J2)
-    val (deleteManifests, dataManifests) =
-      manifests.partition(_.content == ManifestContent.Deletes)
-
-    val deleteEntries = deleteManifests
-      .flatMap { mf =>
-        val m = table.readManifest(mf)
-        m.liveEntries.map(e => (mf.partitionSpecId, m.schemaId, e))
+    val (deleteManifests, dataManifests) = table.manifestList(snap)
+      .partition(_.content == ManifestContent.Deletes)
+    val surviving = dataManifests.filter(mf => pred.forall(e =>
+      table.metadata.specById(mf.partitionSpecId)
+        .forall(Pruning.manifestMightMatch(e, mf, _, schema))))
+    val (deleteEntries, pruned) = Table.readManifestsWith(table.io,
+      deleteManifests ++ surviving) { (mf, m) =>
+        val entryPred = if (mf.content == ManifestContent.Data) pred else None
+        Scan.pruneManifest(m, mf.partitionSpecId, entryPred, schema,
+          table.metadata.specById(mf.partitionSpecId))
+      }.splitAt(deleteManifests.size) match {
+        case (d, p) => (d.flatten, p.flatten)
       }
 
     // Partition-scoped delete index (the shape of Iceberg's
@@ -244,9 +238,9 @@ class Scan private (
     // so planning is O(#files + #combos × #deletes-in-scope), not
     // O(#files × #deletes).
     val (scopedDeletes, globalDeletes) =
-      deleteEntries.partition(_._3.dataFile.partition.nonEmpty)
+      deleteEntries.partition(_._1.partition.nonEmpty)
     val scopedIndex = scopedDeletes.groupBy {
-      case (sid, _, e) => (sid, e.dataFile.partition)
+      case (d, _, sid, _) => (sid, d.partition)
     }
     val attachMemo = collection.mutable.Map
       .empty[(Int, Map[String, Any], Long), Seq[DeleteFileRef]]
@@ -257,60 +251,16 @@ class Scan private (
         // MoR applicability: position deletes with deleteSeq >= dataSeq,
         // equality deletes with deleteSeq > dataSeq (Iceberg spec rule)
         (globalDeletes ++ scopedIndex.getOrElse((specId, partition), Nil))
-          .filter { case (_, _, d) =>
-            val dSeq = d.sequenceNumber.getOrElse(0L)
-            d.dataFile.content match {
+          .filter { case (d, dSeq, _, _) =>
+            d.content match {
               case FileContent.PositionDeletes => dSeq >= seq
               case FileContent.EqualityDeletes => dSeq > seq
               case _ => false
             }
-          }.map { case (sid, schemaId, d) =>
-            DeleteFileRef(d.dataFile, d.sequenceNumber.getOrElse(0L), sid,
-              schemaId)
+          }.map { case (d, dSeq, sid, schemaId) =>
+            DeleteFileRef(d, dSeq, sid, schemaId)
           }
       })
-
-    // Entry-level planning: below the threshold, read+prune manifests
-    // on the driver; above it, fan the reads out to EXECUTORS (Iceberg's
-    // distributed planning). At 100 TB a table holds thousands of
-    // manifests — a serial driver loop over them is the planning
-    // bottleneck, while each executor task ships back only the pruned
-    // (DataFile, seq, specId, schemaId) survivors. Delete attachment
-    // stays driver-side: the delete index is already in hand and
-    // memoized per (specId, partition, seq).
-    val surviving = dataManifests.filter(manifestSurvives)
-    val planThreshold =
-      intOption("distributed-plan-threshold", Scan.DistributedPlanThreshold)
-
-    val pruned: Seq[(DataFile, Long, Int, Int)] =
-      if (surviving.size < planThreshold)
-        surviving.flatMap(mf => Scan.pruneManifest(table.readManifest(mf),
-          mf.partitionSpecId, pred, schema,
-          table.metadata.specById(mf.partitionSpecId)))
-      else {
-        val specById = table.metadata.partitionSpecs
-          .map(s => (s.specId, s)).toMap
-        val predL = pred; val schemaL = schema // don't capture `this`
-        val inputs = surviving.map(mf => (mf.manifestPath, mf.partitionSpecId))
-        val slices = math.max(1, math.min(inputs.size,
-          spark.sparkContext.defaultParallelism * 2))
-        // Executor-side manifest reads must see the session's
-        // spark.hadoop.* settings (credentials, endpoints) — a default
-        // Configuration() silently diverges from the driver path on any
-        // non-default filesystem, which is exactly where this branch
-        // activates (>=64 manifests). Ship the driver conf.
-        val confBc = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sparkContext.hadoopConfiguration))
-        spark.sparkContext.parallelize(inputs, slices)
-          .flatMap { case (path, specId) =>
-            val manifest = graft.avro.ManifestAvro.readManifest(
-              new graft.io.HadoopFileIO(confBc.value.value)
-                .readAllBytes(path))
-            Scan.pruneManifest(manifest, specId, predL, schemaL,
-              specById.get(specId))
-          }.collect().toSeq
-      }
 
     pruned.map { case (df, seq, specId, schemaId) =>
       FileScanTask(df, seq, specId,
@@ -407,17 +357,13 @@ object Scan {
   private[table] def normPath(p: String): String =
     p.replaceFirst("^file:/+", "/")
 
-  /** Surviving data manifests at/above which planFiles reads them on
-    * executors instead of serially on the driver (Iceberg's
-    * distributed planning). Overridable per scan via
-    * `option("distributed-plan-threshold", n)`. */
-  val DistributedPlanThreshold = 64
+  /** Planning never leaves the driver: no manifest count sends it to
+    * executors. */
+  val DistributedPlanThreshold: Int = Int.MaxValue
 
-  /** Read-side pruning of one manifest's live entries — a pure
-    * function of shipped values so it can run inside an executor task
-    * (no Table/SparkSession capture). Returns
+  /** Read-side pruning of one manifest's live entries. Returns
     * (dataFile, dataSequenceNumber, partitionSpecId, schemaId). */
-  private[table] def pruneManifest(manifest: graft.spec.Manifest,
+  private def pruneManifest(manifest: graft.spec.Manifest,
       specId: Int, pred: Option[Expr], schema: Schema,
       spec: Option[PartitionSpec]): Seq[(DataFile, Long, Int, Int)] =
     manifest.liveEntries.flatMap { e =>

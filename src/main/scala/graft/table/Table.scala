@@ -88,6 +88,12 @@ class Table(
   def readManifest(mf: ManifestFile): Manifest =
     ManifestAvro.readManifest(io.readAllBytes(mf.manifestPath))
 
+  /** Decodes `mfs` on the driver's [[graft.util.WorkerPool]]; the
+    * result keeps `mfs`' order. A failed read is rethrown as the FileIO
+    * threw it. */
+  def readManifests(mfs: Seq[ManifestFile]): Seq[Manifest] =
+    Table.readManifestsWith(io, mfs)((_, m) => m)
+
   // --------------------------------------------------------- mutations
 
   /** Metadata-only transaction (`table/table.go:153-254`). */
@@ -196,11 +202,8 @@ class Table(
     val mightHold = SnapshotWriter.scopeFilter(refreshed,
       pending.partitionScope)
     val live = refreshed.currentSnapshot.toSeq.flatMap { s =>
-      ManifestAvro.readManifestList(io.readAllBytes(s.manifestList))
-        .filter(mightHold)
-        .flatMap(mf => ManifestAvro.readManifest(
-          io.readAllBytes(mf.manifestPath)).liveEntries
-          .map(_.dataFile.filePath))
+      readManifests(manifestList(s).filter(mightHold))
+        .flatMap(_.liveEntries.map(_.dataFile.filePath))
     }.toSet
     val gone = depends.filterNot(live)
     if (gone.nonEmpty)
@@ -227,6 +230,14 @@ object Table {
       case Some(r) => m.copy(currentSnapshotId = Some(r.snapshotId))
       case None => m
     }
+
+  /** The bulk manifest reader behind [[Table.readManifests]]: decodes
+    * `mfs` through `io` on the driver's [[graft.util.WorkerPool]] and
+    * applies `f` on the thread that decoded each, in `mfs`' order. */
+  private[table] def readManifestsWith[A](io: FileIO,
+      mfs: Seq[ManifestFile])(f: (ManifestFile, Manifest) => A): Seq[A] =
+    graft.util.WorkerPool.map(mfs)(mf =>
+      f(mf, ManifestAvro.readManifest(io.readAllBytes(mf.manifestPath))))
 
   def load(catalog: Catalog, id: TableIdentifier, io: FileIO): Table =
     new Table(catalog, id, catalog.loadTable(id), io)
@@ -369,11 +380,17 @@ object SnapshotWriter {
       val parentList =
         if (p.manifestList.isEmpty) Nil
         else ManifestAvro.readManifestList(io.readAllBytes(p.manifestList))
+      // the manifests that may change, decoded up front in parallel
+      val mustInspect =
+        if (pending.deletedFilePaths.isEmpty) Nil
+        else parentList.filter(mightHold)
+      val inspected = Table.readManifestsWith(io, mustInspect)(
+        (mf, m) => mf.manifestPath -> m).toMap
       parentList.foreach { mf =>
-        val mustInspect = pending.deletedFilePaths.nonEmpty && mightHold(mf)
-        if (!mustInspect) carried += mf
+        val decoded = inspected.get(mf.manifestPath)
+        if (decoded.isEmpty) carried += mf
         else {
-          val manifest = ManifestAvro.readManifest(io.readAllBytes(mf.manifestPath))
+          val manifest = decoded.get
           val live = manifest.liveEntries
           val (removed, survivors) =
             live.partition(e => pending.deletedFilePaths.contains(e.dataFile.filePath))

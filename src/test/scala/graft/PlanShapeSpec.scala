@@ -559,6 +559,77 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       == ((1 to 20).toSet -- Set(3, 4, 15)).map(_.toLong))
   }
 
+  // -------------------------------------- copy-on-write without exchange
+
+  test("copy-on-write rewrites of a partitioned table plan no exchange " +
+      "and run one Spark job: deleteCoW, update of a non-partition " +
+      "column, overwriteWhere's rewrite") {
+    import graft.spec._
+    import graft.table._
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft-cownox-")
+      .toString
+    val cat = new graft.catalog.LocalCatalog(wh)
+    cat.createNamespace(Seq("db"))
+    val schema = Schema(0, Seq(NestedField(1, "id", LongType, required = true),
+      NestedField(2, "p", IntType, required = false),
+      NestedField(3, "v", DoubleType, required = false)))
+    def create(name: String) = Table.create(cat,
+      graft.catalog.TableIdentifier(Seq("db"), name), schema,
+      PartitionSpec.builder().identity(2, "p").build(),
+      io = new graft.io.HadoopFileIO())
+    def rows(ids: Range) =
+      ids.map(i => (i.toLong, i % 2, i * 0.5)).toDF("id", "p", "v")
+    var t = TableOps.append(create("cow"), rows(1 to 20))
+    /** `f`'s executed plans and Spark job count. */
+    def run(f: => Unit): (Seq[SparkPlan], Int) = {
+      var plans: Seq[SparkPlan] = Nil
+      val (_, jobs) = SparkJobs.count(spark) { plans = executedPlans(f) }
+      (plans, jobs)
+    }
+    // through AQE's stages, which a plain `collect` does not enter
+    def exchanges(p: SparkPlan) =
+      collect(p) { case e: ShuffleExchangeExec => e }.size
+    def assertNoExchange(what: String, plans: Seq[SparkPlan]): Unit =
+      assert(plans.nonEmpty && plans.forall(exchanges(_) == 0),
+        s"$what must not shuffle:\n${plans.mkString("\n")}")
+    def reads(p: SparkPlan) = collectLeaves(p).exists {
+      case b: BatchScanExec => b.scan.description().startsWith("graft-tasks:")
+      case _ => false
+    }
+
+    val (delPlans, delJobs) = run {
+      t = Mutations.deleteCoW(t, spark, Col("id").in(3L, 4L))
+    }
+    assertNoExchange("deleteCoW", delPlans)
+    assert(delJobs == 1, s"deleteCoW ran $delJobs jobs")
+    val (updPlans, updJobs) = run {
+      t = Mutations.update(t, spark, Col("id").eqTo(5L), Map("v" -> 9.0))
+    }
+    assertNoExchange("update", updPlans)
+    assert(updJobs == 1, s"update ran $updJobs jobs")
+    // the appended half keeps its exchange and its jobs: measured alone
+    // on a twin table, they are all overwriteWhere runs beyond one
+    val (_, appendJobs) =
+      run(TableOps.append(create("twin"), rows(100 to 101)))
+    val (owPlans, owJobs) = run {
+      t = Mutations.overwriteWhere(t, spark, Col("id").eqTo(6L),
+        rows(100 to 101))
+    }
+    val (rewrite, appended) = owPlans.partition(reads)
+    assert(rewrite.size == 1 && appended.size == 1, owPlans.mkString("\n"))
+    assertNoExchange("overwriteWhere's rewrite", rewrite)
+    assert(exchanges(appended.head) == 1, appended.head.toString)
+    assert(owJobs == 1 + appendJobs,
+      s"overwriteWhere ran $owJobs jobs, its append alone $appendJobs")
+
+    val got = Scan(t, spark).toDF.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
+    val want = ((1 to 20).filterNot(Set(3, 4, 6)) ++ (100 to 101))
+      .map(i => (i.toLong, i % 2, if (i == 5) 9.0 else i * 0.5)).toSet
+    assert(got == want)
+  }
+
   // ----------------------------------------- table-layer write executor
 
   /** `f` writes data files only through the engine's writer: it runs a

@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.catalog.{
   Identifier, Table => ConnectorTable}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.{CountingFileIO, SparkTestSession}
+import graft.{CountingFileIO, SparkJobs, SparkTestSession}
 import graft.catalog.{CommitConflictException, LocalCatalog, TableIdentifier,
   TableRequirement, TableUpdate}
 import graft.io.HadoopFileIO
@@ -179,6 +179,31 @@ class RowLevelSpec extends AnyFunSuite {
       assert(e.getMessage.toLowerCase.contains("time-travel") ||
         e.getMessage.toLowerCase.contains("version"),
         s"got: ${e.getMessage}")
+    }
+  }
+
+  test("SQL DELETE on a partitioned table rewrites without an exchange: " +
+      "one Spark job fewer than a same-shaped UPDATE, rows exact") {
+    withCatalog("delx") { (c, dir) =>
+      spark.sql(s"CREATE NAMESPACE $c.db")
+      spark.sql(s"CREATE TABLE $c.db.t (id BIGINT, part INT, v DOUBLE) " +
+        "PARTITIONED BY (part)")
+      for (p <- 0 until 3)
+        spark.sql(s"INSERT INTO $c.db.t VALUES " +
+          (1 to 10).map(i => s"(${p * 10 + i}, $p, 0.0)").mkString(", "))
+      // `id % 3` has no exact filter form: both take the row-level CoW
+      // path, and each rewrites all three files
+      val (_, updateJobs) = SparkJobs.count(spark)(
+        spark.sql(s"UPDATE $c.db.t SET v = v + 1 WHERE id % 3 = 0"))
+      val (_, deleteJobs) = SparkJobs.count(spark)(
+        spark.sql(s"DELETE FROM $c.db.t WHERE id % 3 = 1"))
+      assert(deleteJobs == updateJobs - 1,
+        s"DELETE ran $deleteJobs jobs, UPDATE $updateJobs")
+      val got = spark.sql(s"SELECT id, part, v FROM $c.db.t").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
+      assert(got == (1L to 30L).filter(_ % 3 != 1).map(id =>
+        (id, ((id - 1) / 10).toInt, if (id % 3 == 0) 1.0 else 0.0)).toSet)
+      assert(Scan(loadT(dir, "t"), spark).planFiles().size == 3)
     }
   }
 

@@ -47,6 +47,49 @@ class MutationSpec extends AnyFunSuite {
     assert(t.currentSnapshot.get.summary.get.operation == Operation.Delete)
   }
 
+  test("CoW delete rewrites each candidate in place: at most one file " +
+      "per candidate, an older-spec file moved into its current-spec " +
+      "partition") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-mut-inplace-").toString
+    val cat = new LocalCatalog(dir)
+    cat.createNamespace(Seq("db"))
+    var t = Table.create(cat, TableIdentifier(Seq("db"), "inplace"),
+      Schema(0, Seq(NestedField(1, "id", LongType, required = true),
+        NestedField(2, "cat", StringType, required = false),
+        NestedField(3, "v", LongType, required = false))),
+      io = new HadoopFileIO())
+    def rows(ids: Range, v: Int => Int) = ids
+      .map(i => (i.toLong, "a", v(i).toLong)).toDF("id", "cat", "v")
+      .coalesce(1)
+    // one file under the unpartitioned spec, then three in cat=a; the
+    // last holds only rows the delete removes
+    t = TableOps.append(t, rows(0 until 10, _ % 10))
+    t = t.newTransaction().addPartitionSpec(
+      PartitionSpec.builder(1).identity(2, "cat").build()).commit()
+    t = TableOps.append(t, rows(10 until 20, _ % 10))
+    t = TableOps.append(t, rows(20 until 30, _ % 10))
+    t = TableOps.append(t, rows(30 until 40, _ % 5))
+    val candidates = Scan(t, spark).filter(Col("v").lt(5L)).planFiles()
+    assert(candidates.size == 4 &&
+      candidates.map(_.specId).sorted == Seq(0, 1, 1, 1))
+
+    t = Mutations.deleteCoW(t, spark, Col("v").lt(5L))
+    assert(ids(t) == (0 until 30).filter(_ % 10 >= 5).map(_.toLong).toSet)
+    val added = t.currentSnapshot.get.summary.get
+      .counter(Summary.AddedDataFiles)
+    assert(added >= 1 && added <= 3,
+      s"$added files written for 4 candidates, one of them emptied")
+    val live = Scan(t, spark).planFiles()
+    assert(live.size == added)
+    live.foreach { task =>
+      assert(task.specId == 1 && task.file.partition == Map("cat" -> "a"),
+        s"${task.file.filePath}: spec ${task.specId} ${task.file.partition}")
+      assert(spark.read.parquet(task.file.filePath).select("cat").distinct()
+        .collect().map(_.getString(0)).toSeq == Seq("a"))
+    }
+  }
+
   test("CoW delete with NULL predicate keeps NULL rows (3VL)") {
     var t = freshTable("cow3vl")
     t = TableOps.append(t, usersDf(1 to 10))

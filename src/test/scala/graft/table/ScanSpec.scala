@@ -234,15 +234,6 @@ class ScanSpec extends AnyFunSuite {
       Scan(t, spark).useRef("nope").resolveSnapshot()
     }
   }
-
-  test("malformed distributed-plan-threshold names the option") {
-    val t = TableOps.append(freshTable("badthreshold"), usersDf(1 to 5))
-    val e = intercept[IllegalArgumentException] {
-      Scan(t, spark).option("distributed-plan-threshold", "many").planFiles()
-    }
-    assert(e.getMessage.contains("distributed-plan-threshold") &&
-      e.getMessage.contains("'many'"), e.getMessage)
-  }
 }
 
 /** Nested-column stats: struct leaves get footer-harvested bounds keyed
@@ -409,114 +400,113 @@ class NaNStatsSpec extends AnyFunSuite {
   }
 }
 
-class DistributedPlanSpec extends AnyFunSuite {
+/** `planFiles` reads and prunes manifests in parallel on the driver's
+  * worker pool and must plan exactly what a serial read would. */
+class ParallelPlanSpec extends AnyFunSuite {
+  import scala.jdk.CollectionConverters._
+
   private lazy val spark = SparkTestSession.spark
 
-  private def freshTable(name: String): Table = {
-    val dir = Files.createTempDirectory("graft-dp-").toString
+  private val schema = Schema(0, Seq(
+    NestedField(1, "id", LongType, required = true),
+    NestedField(2, "part", IntType, required = false)))
+  private val spec = PartitionSpec.builder().identity(2, "part").build()
+
+  /** File `k` of a table: part `part`, ids `[100k, 100k + 99]`. */
+  private def dataFile(dir: String, k: Int, part: Int) = DataFile(
+    filePath = s"$dir/data/d-$k.parquet", partition = Map("part" -> part),
+    recordCount = 100, fileSizeInBytes = 1000,
+    valueCounts = Map(1 -> 100L, 2 -> 100L),
+    nullValueCounts = Map(1 -> 0L, 2 -> 0L),
+    lowerBounds = Map(1 -> Bounds.serialize(k * 100L, LongType),
+      2 -> Bounds.serialize(part, IntType)),
+    upperBounds = Map(1 -> Bounds.serialize(k * 100L + 99, LongType),
+      2 -> Bounds.serialize(part, IntType)))
+
+  private def partOf(k: Int) = if (k == 70) 1 else k % 4
+
+  /** 70 one-file fast appends (one manifest each), a position delete
+    * scoped to part 1, then file 70 in part 1, newer than the delete.
+    * Only metadata is written: planning never opens a data file. */
+  private def table(name: String,
+      io: graft.io.FileIO = new HadoopFileIO()): Table = {
+    val dir = Files.createTempDirectory(s"graft-pp-$name-").toString
     val cat = new LocalCatalog(dir)
     cat.createNamespace(Seq("db"))
-    Table.create(cat, TableIdentifier(Seq("db"), name),
-      Fixtures4.usersSchema, io = new HadoopFileIO())
+    var t = Table.create(cat, TableIdentifier(Seq("db"), name), schema,
+      spec, io = io)
+    def append(k: Int) = t = t.commitSnapshot(PendingSnapshot(
+      Operation.Append, addedDataFiles = Seq(dataFile(dir, k, partOf(k)))))
+    (0 until 70).foreach(append)
+    t = t.commitSnapshot(PendingSnapshot(Operation.Delete,
+      addedDeleteFiles = Seq(DataFile(content = FileContent.PositionDeletes,
+        filePath = s"$dir/data/pos-del.parquet",
+        partition = Map("part" -> 1), recordCount = 1))))
+    append(70)
+    t
   }
 
-  private def usersDf(ids: Range): DataFrame = {
-    import spark.implicits._
-    ids.map(i => (i.toLong, s"user_$i",
-        if (i % 2 == 1) null else s"u$i@x.com",
-        new java.sql.Timestamp(1704067200000L + i * 1000L)))
-      .toDF("id", "name", "email", "created_at")
+  private def planned(tasks: Seq[FileScanTask]): Seq[(Int, Boolean)] =
+    tasks.map(ts => (ts.file.filePath.stripSuffix(".parquet")
+      .split('-').last.toInt, ts.deleteFiles.nonEmpty))
+
+  /** The plan a serial read lists: manifests newest first, one file
+    * each; the delete attaches to part-1 files older than it. */
+  private def expected(keep: Int => Boolean): Seq[(Int, Boolean)] =
+    (70 to 0 by -1).filter(keep).map(k => (k, partOf(k) == 1 && k < 70))
+
+  test("a plan over 72 manifests keeps manifest order, pruning and " +
+      "delete attachment") {
+    val t = table("order")
+    assert(t.manifestList(t.currentSnapshot.get).size == 72)
+    assert(planned(Scan(t, spark).planFiles()) == expected(_ => true))
+    assert(planned(Scan(t, spark).filter(Col("id").between(1000L, 2599L))
+      .planFiles()) == expected(k => k >= 10 && k <= 25))
+    assert(planned(Scan(t, spark).filter(Col("part").eqTo(1)
+      .and(Col("id").between(1000L, 2599L))).planFiles()) ==
+      expected(k => k >= 10 && k <= 25 && partOf(k) == 1))
   }
 
-  test("distributed manifest planning agrees with the driver path") {
-    var t = freshTable("distplan")
-    // 5 appends → 5 data manifests; plus a MoR delete for attachment
-    for (k <- 0 until 5)
-      t = TableOps.append(t, usersDf(k * 10 + 1 to k * 10 + 10).coalesce(1))
-    t = Mutations.deleteMoR(t, spark, Col("id").eqTo(7L))
-
-    def canon(tasks: Seq[FileScanTask]) = tasks
-      .map(ts => (ts.file.filePath, ts.sequenceNumber, ts.specId,
-        ts.schemaId, ts.deleteFiles.map(_.file.filePath).sorted))
-      .sortBy(_._1)
-
-    val driver = Scan(t, spark)
-      .option("distributed-plan-threshold", "1000").planFiles()
-    val dist = Scan(t, spark)
-      .option("distributed-plan-threshold", "1").planFiles()
-    assert(canon(dist) == canon(driver),
-      "executor-parallel planning must yield identical tasks")
-
-    // pruning happens inside the executor tasks too
-    val distPruned = Scan(t, spark)
-      .option("distributed-plan-threshold", "1")
-      .filter(Col("id").between(21L, 29L)).planFiles()
-    assert(distPruned.size == 1,
-      s"bounds pruning must survive fan-out, got ${distPruned.size} files")
-    // and the scan still reads correctly through the distributed plan
-    val got = Scan(t, spark).option("distributed-plan-threshold", "1")
-      .toDF.select("id").collect().map(_.getLong(0)).toSet
-    assert(got == (1 to 50).map(_.toLong).toSet - 7L)
+  test("every manifest read of a parallel plan goes through the table's " +
+      "FileIO") {
+    val io = new graft.CountingFileIO()
+    val t = table("counted", io)
+    val (all, lists, reads) = io.counting(Scan(t, spark).planFiles())
+    assert(all.size == 71 && lists == 1 && reads == 72,
+      s"$lists list and $reads manifest reads for ${all.size} files")
+    // part 1 prunes every other partition's manifest unread; the
+    // delete manifest is always read
+    val (part1, _, partReads) = io.counting(
+      Scan(t, spark).filter(Col("part").eqTo(1)).planFiles())
+    assert(part1.size == 19 && partReads == 19 + 1,
+      s"$partReads manifest reads for ${part1.size} files")
   }
 
-  test("executor-side planning sees the session's spark.hadoop.* configuration") {
-    var t = freshTable("distconf")
-    for (k <- 0 until 3)
-      t = TableOps.append(t, usersDf(k * 10 + 1 to k * 10 + 10).coalesce(1))
-
-    def canon(tasks: Seq[FileScanTask]) = tasks
-      .map(ts => (ts.file.filePath, ts.sequenceNumber, ts.specId,
-        ts.schemaId)).sortBy(_._1)
-    val expected = canon(Scan(t, spark)
-      .option("distributed-plan-threshold", "1000").planFiles())
-
-    // Rewrite the manifest list so every manifest path uses a scheme that
-    // resolves ONLY through keys set on sparkContext.hadoopConfiguration
-    // (what spark.hadoop.* settings land on). A `new Configuration()`
-    // built inside the executor closure has no fs.graftmkr.impl and no
-    // marker key, so planning would fail — this test passing proves the
-    // driver conf is actually shipped to the executor-side reads.
-    val io = new HadoopFileIO()
-    val mlPath = t.metadata.currentSnapshot.get.manifestList
-    val entries = graft.avro.ManifestAvro.readManifestList(
-      io.readAllBytes(mlPath))
-    val rewritten = entries.map(e => e.copy(
-      manifestPath = "graftmkr://" + e.manifestPath.stripPrefix("file:")))
-    io.writeAllBytes(mlPath,
-      graft.avro.ManifestAvro.writeManifestList(rewritten), overwrite = true)
-
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("fs.graftmkr.impl", classOf[MarkerFileSystem].getName)
-    // Keep marker-fs instances out of the JVM-wide FileSystem cache: a
-    // cached instance would let a conf-less executor closure piggyback on
-    // one created with the good conf, masking the regression under test.
-    hc.set("fs.graftmkr.impl.disable.cache", "true")
-    hc.set("graft.test.marker", "r8")
-    try {
-      val dist = Scan(t, spark)
-        .option("distributed-plan-threshold", "1").planFiles()
-      assert(canon(dist) == expected,
-        "distributed planning through the marker scheme must match the " +
-          "driver plan taken before the rewrite")
-    } finally {
-      hc.unset("fs.graftmkr.impl")
-      hc.unset("fs.graftmkr.impl.disable.cache")
-      hc.unset("graft.test.marker")
-    }
+  test("a manifest removed from storage fails the plan with the " +
+      "FileIO's FileNotFoundException") {
+    val t = table("missing")
+    val victim = t.manifestList(t.currentSnapshot.get)
+      .filter(_.content == ManifestContent.Data)(35).manifestPath
+    t.io.delete(victim)
+    val e = intercept[java.io.FileNotFoundException](
+      Scan(t, spark).planFiles())
+    assert(e.getMessage.contains(victim.substring(victim.lastIndexOf('/'))),
+      e.getMessage)
   }
-}
 
-/** Resolvable only when the session's Hadoop configuration reaches the
-  * file-system lookup; asserts the marker key rode along. */
-class MarkerFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getScheme: String = "graftmkr"
-  override def getUri: java.net.URI = java.net.URI.create("graftmkr:///")
-  override def initialize(uri: java.net.URI,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    if (conf.get("graft.test.marker") != "r8")
-      throw new java.io.IOException(
-        "session Hadoop conf (graft.test.marker) missing at FS init")
-    super.initialize(uri, conf)
+  test("back-to-back plans reuse the worker pool: the live thread count " +
+      "stays flat") {
+    val t = table("threads")
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .count(_.getName.startsWith("graft-worker-"))
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+    Scan(t, spark).planFiles()
+    val (pool0, live0) = (poolThreads, threads.getThreadCount)
+    (1 to 50).foreach(_ => assert(Scan(t, spark).planFiles().size == 71))
+    val (pool1, live1) = (poolThreads, threads.getThreadCount)
+    assert(pool0 > 0 && pool0 <= graft.util.WorkerPool.Size)
+    assert(pool1 == pool0, s"pool threads $pool0 -> $pool1")
+    assert(live1 <= live0 + 2, s"live threads $live0 -> $live1")
   }
 }
 

@@ -135,6 +135,23 @@ class PartitionedWriteSpec extends AnyFunSuite {
     assert(ids == (10 to 1 by -1).map(_.toLong))
   }
 
+  test("sort order applied within unpartitioned files") {
+    val order = SortOrder(1, Seq(
+      SortField(3, nullOrder = NullOrder.NullsLast),
+      SortField(1, direction = SortDirection.Desc)))
+    var t = freshTable("sortedflat", PartitionSpec.unpartitioned, order)
+    // two input partitions of interleaved ids: two files
+    t = TableOps.append(t, usersDf(1 to 40, _ => 19800).repartition(2))
+    val files = Scan(t, spark).planFiles().map(_.file.filePath)
+    assert(files.size == 2)
+    files.foreach { f =>
+      val rows = spark.read.parquet(f).select("email", "id").collect()
+        .map(r => (Option(r.getString(0)), r.getLong(1))).toSeq
+      val want = rows.sortBy { case (e, id) => (e.isEmpty, e, -id) }
+      assert(rows == want, s"$f is not in the declared order")
+    }
+  }
+
   test("append with extraProps: data + properties land in ONE commit") {
     val t0 = freshTable("propped", PartitionSpec.unpartitioned)
     val before = t0.metadata.metadataLog.size
