@@ -455,8 +455,7 @@ class ParallelPlanSpec extends AnyFunSuite {
   private def expected(keep: Int => Boolean): Seq[(Int, Boolean)] =
     (70 to 0 by -1).filter(keep).map(k => (k, partOf(k) == 1 && k < 70))
 
-  test("a plan over 72 manifests keeps manifest order, pruning and " +
-      "delete attachment") {
+  test("a 72-manifest plan keeps manifest order, pruning and deletes") {
     val t = table("order")
     assert(t.manifestList(t.currentSnapshot.get).size == 72)
     assert(planned(Scan(t, spark).planFiles()) == expected(_ => true))
