@@ -51,10 +51,22 @@ trait FileIO {
 /** Hadoop-FS implementation; parent directories are created on write
   * like the reference's local impl (`io/local.go:142-173`), and
   * `create(overwrite = false)` fails if the file exists (O_EXCL
-  * semantics, `io/local.go`). */
+  * semantics, `io/local.go`).
+  *
+  * Where Hadoop resolves a path to a local (`file:`) FileSystem, this
+  * FileIO uses its own [[GraftLocalFileSystem]] built from `conf`,
+  * unless `conf` names its own `fs.file.impl`: Hadoop's checksummed
+  * local FileSystem — bytes, `.crc` sidecars, checksum verification and
+  * modes from `conf`'s `fs.permissions.umask-mode` — with each mode set
+  * by a syscall rather than a forked `chmod`. */
 class HadoopFileIO(conf: Configuration = new Configuration()) extends FileIO {
 
-  private def fs(p: Path): FileSystem = p.getFileSystem(conf)
+  private lazy val local = GraftLocalFileSystem(conf)
+
+  private def fs(p: Path): FileSystem = p.getFileSystem(conf) match {
+    case f if f.getUri.getScheme == "file" => local.getOrElse(f)
+    case f => f
+  }
 
   override def open(path: String): InputStream = {
     val p = new Path(path)

@@ -36,7 +36,7 @@ object IcebergQueries {
     Files.createTempDirectory("graft-iceberg-wh-").toString
   private val cache = TrieMap[String, Table]()
 
-  private def io = new HadoopFileIO()
+  private val io = new HadoopFileIO()
 
   /** lineitem as a single-snapshot Iceberg table. */
   private def lineitemTable(spark: SparkSession, sfDir: String): Table =

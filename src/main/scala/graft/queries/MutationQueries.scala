@@ -22,7 +22,7 @@ object MutationQueries {
   private lazy val warehouse =
     Files.createTempDirectory("graft-mut-wh-").toString
   private val cache = TrieMap[String, Table]()
-  private def io = new HadoopFileIO()
+  private val io = new HadoopFileIO()
 
   private def build(key: String, sfDir: String, src: String,
       spark: SparkSession)(mutate: (Table, DataFrame) => Table): Table =

@@ -87,7 +87,8 @@ class GraftDataSource extends TableProvider with DataSourceRegister
         created = true
         Table.create(cat, id,
           graft.spec.SchemaConverters.fromSparkSchema(data.schema),
-          io = new HadoopFileIO())
+          io = new HadoopFileIO(
+            data.sparkSession.sessionState.newHadoopConf()))
     }
     pinOf(t, opts).foreach(sid => throw new UnsupportedOperationException(
       s"graft source: cannot write to a snapshot-pinned table (@$sid)"))
@@ -152,7 +153,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     val cat = new LocalCatalog(req("warehouse"))
     val t = Table.load(cat,
       TableIdentifier(req("namespace").split('.').toSeq, req("table")),
-      new HadoopFileIO())
+      new HadoopFileIO(SparkSession.active.sessionState.newHadoopConf()))
     // option("branch", name): reads resolve the branch head and writes
     // (batch or streaming sink) advance the branch ref only — the DSv2
     // face of the write-audit-publish path. The branch must already

@@ -48,11 +48,14 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
 
   private var catalogName: String = _
   private[sources] var catalog: Catalog = _
-  private val io = new HadoopFileIO()
+  private var io: HadoopFileIO = _
 
   override def initialize(name: String,
       options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
+    // the session's Hadoop conf (`spark.hadoop.*`, session-set keys), as
+    // its data files get from `ParquetShim.buildWriterFactory`
+    io = new HadoopFileIO(SparkSession.active.sessionState.newHadoopConf())
     catalog = Option(options.get("uri")) match {
       case Some(uri) =>
         val rest = new RestCatalog(uri, Option(options.get("token")),

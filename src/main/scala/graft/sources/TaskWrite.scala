@@ -278,7 +278,8 @@ private[sources] class GraftFileWriterFactory(stagingRoot: String,
   * counts its NaNs as rows pass — the one column metric a parquet footer
   * cannot hold — and rolls over after `maxRecordsPerFile` rows. The
   * commit message names every file this attempt wrote, so stray files
-  * of failed attempts are never committed. */
+  * of failed attempts are never committed; the task's output metrics
+  * report those files' bytes and rows, as Spark's own file writes do. */
 private[sources] class GraftFileWriter(
     partitionId: Int,
     taskId: Long,
@@ -292,6 +293,9 @@ private[sources] class GraftFileWriter(
     var rows = 0L
     def finish(): WrittenFile = {
       out.close()
+      val hp = new org.apache.hadoop.fs.Path(path)
+      bytesWritten += hp.getFileSystem(conf.value).getFileStatus(hp).getLen
+      rowsWritten += rows
       WrittenFile(path, layout.nanColumns.indices
         .map(k => layout.nanColumns(k)._2 -> nans(k)).toMap)
     }
@@ -304,6 +308,8 @@ private[sources] class GraftFileWriter(
   private val done = Seq.newBuilder[WrittenFile]
   private val started = Seq.newBuilder[String]
   private var fileSeq = 0
+  private var bytesWritten = 0L
+  private var rowsWritten = 0L
 
   /** Internal value → the JVM shape [[Transforms.applyToValue]] expects. */
   private def jvmValue(v: Any): Any = v match {
@@ -378,6 +384,7 @@ private[sources] class GraftFileWriter(
 
   override def commit(): WriterCommitMessage = {
     finishOpen()
+    Bridge.setOutputMetrics(bytesWritten, rowsWritten)
     GraftFilesMessage(done.result())
   }
 

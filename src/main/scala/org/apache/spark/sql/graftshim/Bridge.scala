@@ -27,6 +27,16 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.executePlan(plan).assertCommandExecuted()
 
+  /** Report `bytes` and `records` written as the running task's output
+    * metrics (their setters are `private[spark]`), as Spark's own file
+    * writers do; no-op outside a task. */
+  def setOutputMetrics(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { tc =>
+      val m = tc.taskMetrics().outputMetrics
+      m.setBytesWritten(bytes)
+      m.setRecordsWritten(records)
+    }
+
   /** V2 connector `Predicate` → v1 `sources.Filter` (the
     * `private[sql]` converter Spark itself uses) — lets runtime
     * (dynamic pruning) predicates reuse the engine's v1-filter

@@ -117,15 +117,22 @@ object ParquetShim {
         job.getConfiguration))
   }
 
-  /** Executor-side: open one parquet [[OutputWriter]] at `path`. */
+  /** Executor-side: open one parquet [[OutputWriter]] at `path`. The
+    * writer gets its own copy of `conf`, in which `file:` paths resolve
+    * to a new [[graft.io.GraftLocalFileSystem]] built from that copy:
+    * Hadoop's bytes, `.crc` sidecar and modes (from the job's
+    * `fs.permissions.umask-mode`), with each mode set by a syscall
+    * rather than a forked `chmod`. */
   def newOutputWriter(
       factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
       conf: Configuration, path: String, dataSchema: StructType,
       taskId: Int, attempt: Int)
       : org.apache.spark.sql.execution.datasources.OutputWriter = {
     import org.apache.hadoop.mapreduce.{TaskAttemptID, TaskID, JobID, TaskType}
+    val fileConf = new Configuration(conf)
+    graft.io.GraftLocalFileSystem.install(fileConf)
     val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      new Configuration(conf),
+      fileConf,
       new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP,
         taskId), attempt))
     factory.newInstance(path, dataSchema, ctx)
