@@ -115,16 +115,17 @@ class HadoopFileIO(conf: Configuration = new Configuration()) extends FileIO {
       throw new java.io.IOException(s"rename $src -> $dst failed")
   }
 
+  /** Files under `prefix`, recursively, by a `listStatus` walk: the
+    * checksummed FileSystem hides `.crc` sidecars, and no entry's
+    * owner or mode is read — Hadoop's recursive `listFiles` builds a
+    * `LocatedFileStatus` per entry, which without `libhadoop` forks an
+    * `ls -ld` for each. */
   override def listFiles(prefix: String): Seq[String] = {
     val p = new Path(prefix)
     val f = fs(p)
-    if (!f.exists(p)) Nil
-    else {
-      val it = f.listFiles(p, true)
-      val out = Seq.newBuilder[String]
-      while (it.hasNext) out += it.next().getPath.toString
-      out.result()
-    }
+    def walk(dir: Path): Seq[String] = f.listStatus(dir).toSeq.flatMap(s =>
+      if (s.isDirectory) walk(s.getPath) else Seq(s.getPath.toString))
+    if (!f.exists(p)) Nil else walk(p)
   }
 }
 

@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.{Catalog, TableIdentifier}
 import graft.io.FileIO
-import graft.table.{DataWriter, Maintenance, Table}
+import graft.table.{DataWriter, Derived, Maintenance, Table}
 
 /** `CALL graft.system.<proc>(...)` — SQL maintenance procedures, the
   * operational face of [[graft.table.Maintenance]] and the ref API
@@ -193,7 +193,7 @@ private[sources] class GraftBoundProcedure(
       pDefault("seed", LongType, "42"),
       // true → chain the EXISTING index: assign only rows appended
       // since its recorded snapshot with the STAMPED centroids (no
-      // refit, no base rescan), one append + a property bump
+      // refit, no base rescan), in one commit with the new anchor
       pDefault("incremental", BooleanType, "false"))
     case "build_text_index" => Array(
       p("ns", StringType), p("table", StringType),
@@ -779,11 +779,8 @@ private[sources] class GraftBoundProcedure(
           if (idxNameRaw.isEmpty) s"${tbl}_ann_idx" else idxNameRaw
         val snapRaw = input.getLong(6)
         val seed = input.getLong(7)
-        if (input.getBoolean(8))
-          appendToAnnIndex(t, spark, ns, tbl, vecCol, idCol, idxName,
-            snapRaw)
-        else buildAnnIndex(t, spark, ns, tbl, vecCol, idCol, nCentroids,
-          idxName, snapRaw, seed)
+        buildAnnIndex(t, spark, ns, tbl, vecCol, idCol, nCentroids,
+          idxName, snapRaw, seed, input.getBoolean(8))
       case "build_text_index" =>
         val textCol = input.getUTF8String(2).toString
         val idCol = input.getUTF8String(3).toString
@@ -792,11 +789,8 @@ private[sources] class GraftBoundProcedure(
         val idxName =
           if (idxNameRaw.isEmpty) s"${tbl}_text_idx" else idxNameRaw
         val snapRaw = input.getLong(6)
-        if (input.getBoolean(7))
-          appendToTextIndex(t, spark, ns, tbl, textCol, idCol, idxName,
-            snapRaw)
-        else buildTextIndex(t, spark, ns, tbl, textCol, idCol,
-          numBuckets, idxName, snapRaw)
+        buildTextIndex(t, spark, ns, tbl, textCol, idCol, numBuckets,
+          idxName, snapRaw, input.getBoolean(7))
       case "build_pq_index" =>
         val vecCol = input.getUTF8String(2).toString
         val idCol = input.getUTF8String(3).toString
@@ -807,11 +801,8 @@ private[sources] class GraftBoundProcedure(
           if (idxNameRaw.isEmpty) s"${tbl}_pq_idx" else idxNameRaw
         val snapRaw = input.getLong(7)
         val seed = input.getLong(8)
-        if (input.getBoolean(9))
-          appendToPqIndex(t, spark, ns, tbl, vecCol, idCol, idxName,
-            snapRaw)
-        else buildPqIndex(t, spark, ns, tbl, vecCol, idCol, m, ksub,
-          idxName, snapRaw, seed)
+        buildPqIndex(t, spark, ns, tbl, vecCol, idCol, m, ksub, idxName,
+          snapRaw, seed, input.getBoolean(9))
       case "corpus_diff" =>
         corpusDiff(t, spark, ns, tbl, input.getLong(2),
           input.getLong(3), input.getUTF8String(4).toString,
@@ -822,30 +813,23 @@ private[sources] class GraftBoundProcedure(
         val mdlRaw = input.getUTF8String(4).toString
         val mdlName = if (mdlRaw.isEmpty) s"${tbl}_tok_model" else mdlRaw
         val snapRaw = input.getLong(5)
-        if (input.getBoolean(6))
-          appendToTokenizer(t, spark, ns, tbl, textCol, maxPieceLen,
-            mdlName, snapRaw)
-        else trainTokenizer(t, spark, ns, tbl, textCol, maxPieceLen,
-          mdlName, snapRaw)
+        trainTokenizer(t, spark, ns, tbl, textCol, maxPieceLen, mdlName,
+          snapRaw, input.getBoolean(6))
       case "train_lm" =>
         val textCol = input.getUTF8String(2).toString
         val mdlRaw = input.getUTF8String(3).toString
         val mdlName = if (mdlRaw.isEmpty) s"${tbl}_lm_model" else mdlRaw
         val snapRaw = input.getLong(4)
-        if (input.getBoolean(5))
-          appendToLm(t, spark, ns, tbl, textCol, mdlName, snapRaw)
-        else trainLm(t, spark, ns, tbl, textCol, mdlName, snapRaw)
+        trainLm(t, spark, ns, tbl, textCol, mdlName, snapRaw,
+          input.getBoolean(5))
       case "train_classifier" =>
         val labelPred = input.getUTF8String(2).toString
         val textCol = input.getUTF8String(3).toString
         val mdlRaw = input.getUTF8String(4).toString
         val mdlName = if (mdlRaw.isEmpty) s"${tbl}_clf_model" else mdlRaw
         val snapRaw = input.getLong(5)
-        if (input.getBoolean(6))
-          appendToClassifier(t, spark, ns, tbl, labelPred, textCol,
-            mdlName, snapRaw)
-        else trainClassifier(t, spark, ns, tbl, labelPred, textCol,
-          mdlName, snapRaw)
+        trainClassifier(t, spark, ns, tbl, labelPred, textCol, mdlName,
+          snapRaw, input.getBoolean(6))
       case "corpus_stats" =>
         corpusStats(t, spark, ns, tbl,
           input.getUTF8String(2).toString, input.getLong(3))
@@ -862,15 +846,11 @@ private[sources] class GraftBoundProcedure(
           input.getUTF8String(5).toString,
           input.getUTF8String(6).toString, input.getLong(7))
       case "pack_corpus" =>
-        if (input.getBoolean(8))
-          appendToPacked(t, spark, ns, tbl, input.getLong(2),
-            input.getUTF8String(3).toString,
-            input.getUTF8String(4).toString, input.getLong(5),
-            input.getUTF8String(6).toString, input.getLong(7))
-        else packCorpus(t, spark, ns, tbl, input.getLong(2),
+        packCorpus(t, spark, ns, tbl, input.getLong(2),
           input.getUTF8String(3).toString,
           input.getUTF8String(4).toString, input.getLong(5),
-          input.getUTF8String(6).toString, input.getLong(7))
+          input.getUTF8String(6).toString, input.getLong(7),
+          input.getBoolean(8))
     }
     (schema, Seq(row))
   }
@@ -927,7 +907,115 @@ private[sources] class GraftBoundProcedure(
   import GraftBoundProcedure.{IdxPropSourceTable, IdxPropSourceSnapshot,
     IdxPropTextCol, IdxPropIdCol, IdxPropNumHashes, AnnPropPrefix,
     TextPropPrefix, PqPropPrefix, TokPropPrefix, LmPropPrefix,
-    ClfPropPrefix}
+    ClfPropPrefix, Verbs, Written}
+
+  /** `snapshot_id` resolved on `t`: -1 → the current snapshot. */
+  private def snapshotOf(proc: String, t: Table, ns: String, tbl: String,
+      snapRaw: Long): Long =
+    if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
+      throw new IllegalArgumentException(s"$proc: $ns.$tbl has no snapshots"))
+    else if (t.snapshotById(snapRaw).isEmpty)
+      throw new IllegalArgumentException(
+        s"$proc: snapshot_id $snapRaw not found")
+    else snapRaw
+
+  /** Records written by `t`'s last commit. */
+  private def added(t: Table): Long = t.currentSnapshot.flatMap(_.summary)
+    .flatMap(_.counters.get(graft.spec.Summary.AddedRecords)).getOrElse(0L)
+
+  /** A full build of `art` into `name` from `t` as of `snapRaw`: the
+    * `model` stamps (configuration and fitted model, short keys), the
+    * source table and anchor, and the totals of the delta over every
+    * source row all ride the build's one data commit
+    * ([[Derived.build]]). */
+  private def buildArtifact(art: Derived.Artifact, t: Table,
+      spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
+      name: String, snapRaw: Long, model: Map[String, String],
+      partitionBy: Option[String] = None): Written = {
+    val snapId = snapshotOf(art.proc, t, ns, tbl, snapRaw)
+    val stamps = model.map { case (k, v) => art.key(k) -> v } ++ Map(
+      art.key("source-table") -> s"$ns.$tbl",
+      art.anchor -> snapId.toString)
+    val d = art.delta(graft.table.Scan(t, spark).useSnapshot(snapId).toDF,
+      stamps)
+    val built = Derived.build(catalog,
+      TableIdentifier(ns.split('.').toSeq, name), io, d.payload,
+      stamps ++ d.stamps, partitionBy)
+    Written(built, snapId, added(built))
+  }
+
+  /** What an `incremental => true` call reads before its one commit:
+    * the derived table `name` (a `noun` of [[Verbs]]), which must exist
+    * and come from `ns.tbl`; its recorded anchor, which must still be a
+    * snapshot of `t`; and the head `snapshot_id` names. */
+  private final class Chain(proc: String, noun: String, name: String,
+      stampNs: String, t: Table, ns: String, tbl: String, snapRaw: Long) {
+    private val (verb, done) = Verbs(noun)
+    private val id = TableIdentifier(ns.split('.').toSeq, name)
+    if (!catalog.tableExists(id))
+      throw new IllegalArgumentException(s"$proc: $noun $name does not " +
+        s"exist — run a full $verb first (incremental => false)")
+    val target: Table = Table.load(catalog, id, io)
+    def props: Map[String, String] = target.metadata.properties
+    def prop(k: String): String = props.getOrElse(s"$stampNs.$k",
+      throw new IllegalArgumentException(s"$proc: $name has no " +
+        s"'$stampNs.$k' property — not a $proc table"))
+    val recorded: Long = prop("source-snapshot-id").toLong
+    if (prop("source-table") != s"$ns.$tbl")
+      throw new IllegalArgumentException(s"$proc: $noun $name was " +
+        s"$done from ${prop("source-table")}, not $ns.$tbl")
+    if (t.snapshotById(recorded).isEmpty)
+      throw new IllegalArgumentException(s"$proc: $noun $name records " +
+        s"source snapshot $recorded which no longer exists (expired?) " +
+        s"— run a full $verb (incremental => false)")
+    val head: Long = snapshotOf(proc, t, ns, tbl, snapRaw)
+
+    /** Fails unless each stamped column (short key → the call's
+      * column) is the call's. */
+    def requireSame(cols: (String, String)*): Unit = {
+      val stamped = cols.map(c => prop(c._1))
+      if (stamped != cols.map(_._2))
+        throw new IllegalArgumentException(s"$proc: $noun $name was " +
+          s"$done on (${stamped.mkString(", ")}), call uses " +
+          s"(${cols.map(_._2).mkString(", ")})")
+    }
+
+    /** The source rows appended since the anchor. `appendsBetween`
+      * skips replace snapshots, so source compaction never re-delivers
+      * rows; rows deleted from the source stay in the derived table
+      * until a full rebuild. */
+    def fresh(spark: org.apache.spark.sql.SparkSession)
+        : org.apache.spark.sql.DataFrame =
+      if (head == recorded) graft.table.Scan(t, spark).toDF.limit(0)
+      else graft.table.Scan(t, spark).appendsBetween(recorded, head).toDF
+
+    /** The chain's one commit ([[Derived.chain]]) of `d`, with `extra`
+      * stamps — or none when nothing was appended since the anchor. */
+    def run(d: => Derived.Delta,
+        extra: Map[String, String] = Map.empty): Written =
+      if (head == recorded) Written(target, head, 0L)
+      else {
+        val committed = Derived.chain(target, s"$stampNs.source-snapshot-id",
+          recorded, head, d, extra)
+        Written(committed, head, added(committed))
+      }
+  }
+
+  /** The dominant vector length at `snapId` (rows of another length are
+    * not indexed), those rows, and the source's row count. */
+  private def vectors(proc: String, t: Table,
+      spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
+      snapId: Long, vecCol: String)
+      : (Int, org.apache.spark.sql.DataFrame, Long) = {
+    import org.apache.spark.sql.functions.{col, max, size}
+    val scan = graft.table.Scan(t, spark).useSnapshot(snapId)
+    val df = scan.toDF
+    val dim = df.agg(max(size(col(vecCol))).as("d")).head(1)
+      .headOption.flatMap(r => Option(r.get(0)).map(_ => r.getInt(0)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$proc: $ns.$tbl has no vectors in $vecCol"))
+    (dim, df.where(size(col(vecCol)) === dim), scan.count())
+  }
 
   /** `build_ann_index`: fit IVF centroids (bounded deterministic
     * sample) and persist the inverted file AS AN ICEBERG TABLE —
@@ -940,73 +1028,48 @@ private[sources] class GraftBoundProcedure(
     * assignment pass, no full scan at query time. Rows whose vector
     * length differs from the dominant dimensionality are not indexed
     * (KMeans and the codegen'd distance kernels need one dim) and are
-    * reported as `rows_total - rows_indexed`. */
+    * reported as `rows_total - rows_indexed`. `incremental => true`
+    * chains the existing index WITHOUT a refit or a base rescan — the
+    * 100 TB operational shape: rows appended since the recorded
+    * snapshot are assigned with the STAMPED centroids and appended into
+    * their cells (searches can return rows since deleted from the
+    * source until a rebuild — the staleness contract every IVF system
+    * documents). */
   private def buildAnnIndex(t: Table,
       spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
       vecCol: String, idCol: String, nCentroids: Int, idxName: String,
-      snapRaw: Long, seed: Long): (StructType, Seq[Any]) = {
-    if (nCentroids <= 0)
-      throw new IllegalArgumentException(
-        s"build_ann_index: n_centroids must be positive, got $nCentroids")
-    val snapId =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"build_ann_index: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"build_ann_index: snapshot_id $snapRaw not found")
-      else snapRaw
-    import org.apache.spark.sql.functions.{col, max, size}
-    val scan = graft.table.Scan(t, spark).useSnapshot(snapId)
-    val df0 = scan.toDF
-    val dim = df0.agg(max(size(col(vecCol))).as("d")).head(1)
-      .headOption.flatMap(r => Option(r.get(0)).map(_ => r.getInt(0)))
-      .getOrElse(throw new IllegalArgumentException(
-        s"build_ann_index: $ns.$tbl has no vectors in $vecCol"))
-    val df = df0.where(size(col(vecCol)) === dim)
-    val total = scan.count()
-    val centroids = graft.ops.Similarity.ivfFitCentroids(df, nCentroids,
-      seed, vecCol, idCol, rowCountHint = Some(total))
-    val payload = df.select(col(idCol),
-      graft.ops.Similarity.nearestCell(col(vecCol), centroids)
-        .as("cell"),
-      graft.ops.Similarity.l2norm(col(vecCol)).as("norm"),
-      col(vecCol))
-    val gSchema = graft.spec.SchemaConverters
-      .fromSparkSchema(payload.schema)
-    val cellFieldId = gSchema.fieldByName("cell").getOrElse(
-      throw new IllegalStateException("cell column missing")).id
-    val spec = graft.spec.PartitionSpec.builder(0)
-      .identity(cellFieldId, "cell").build()
-    val props = Map(
-      s"${AnnPropPrefix}source-table" -> s"$ns.$tbl",
-      s"${AnnPropPrefix}source-snapshot-id" -> snapId.toString,
-      s"${AnnPropPrefix}vec-col" -> vecCol,
-      s"${AnnPropPrefix}id-col" -> idCol,
-      s"${AnnPropPrefix}n-centroids" -> nCentroids.toString,
-      s"${AnnPropPrefix}dim" -> dim.toString,
-      s"${AnnPropPrefix}centroids" ->
-        graft.ops.Similarity.centroidsToJson(centroids))
-    val idxId = TableIdentifier(ns.split('.').toSeq, idxName)
-    val committed =
-      if (catalog.tableExists(idxId)) {
-        val existing = Table.load(catalog, idxId, io)
-        val after = graft.table.Mutations.overwrite(existing, spark,
-          payload)
-        after.newTransaction().setProperties(props).commit()
+      snapRaw: Long, seed: Long,
+      incremental: Boolean): (StructType, Seq[Any]) = {
+    val art = Derived.AnnCells(vecCol, idCol)
+    val (w, cells, dim, total) =
+      if (incremental) {
+        val c = new Chain(art.proc, "index", idxName, art.ns, t, ns, tbl,
+          snapRaw)
+        c.requireSame("vec-col" -> vecCol, "id-col" -> idCol)
+        val fresh = c.fresh(spark)
+        (c.run(art.delta(fresh, c.props)), graft.ops.Similarity
+          .centroidsFromJson(c.prop("centroids")).size,
+          c.prop("dim").toInt, fresh.count())
       } else {
-        val created = Table.create(catalog, idxId, gSchema, spec = spec,
-          properties = props, io = io)
-        graft.table.TableOps.append(created, payload)
+        if (nCentroids <= 0)
+          throw new IllegalArgumentException("build_ann_index: " +
+            s"n_centroids must be positive, got $nCentroids")
+        val snapId = snapshotOf(art.proc, t, ns, tbl, snapRaw)
+        val (dim, sample, total) = vectors(art.proc, t, spark, ns, tbl,
+          snapId, vecCol)
+        val centroids = graft.ops.Similarity.ivfFitCentroids(sample,
+          nCentroids, seed, vecCol, idCol, rowCountHint = Some(total))
+        (buildArtifact(art, t, spark, ns, tbl, idxName, snapId, Map(
+          "vec-col" -> vecCol, "id-col" -> idCol,
+          "n-centroids" -> nCentroids.toString, "dim" -> dim.toString,
+          "centroids" -> graft.ops.Similarity.centroidsToJson(centroids)),
+          Some("cell")), nCentroids, dim, total)
       }
-    val indexed = committed.currentSnapshot.flatMap(_.summary)
-      .flatMap(_.counters.get(graft.spec.Summary.AddedRecords))
-      .getOrElse(graft.table.Scan(committed, spark).count())
     (new StructType().add("index_table", StringType)
       .add("cells", IntegerType).add("dim", IntegerType)
       .add("rows_indexed", LongType).add("rows_total", LongType)
       .add("source_snapshot_id", LongType),
-      Seq(idxName, nCentroids, dim, indexed, total, snapId))
+      Seq(idxName, cells, dim, w.appended, total, w.anchor))
   }
 
   /** Shared `text_search` / `hybrid_search` core: the bucket-pruned
@@ -1451,26 +1514,12 @@ private[sources] class GraftBoundProcedure(
     if (catalog.tableExists(tgtId))
       throw new IllegalArgumentException(s"sample_mixture: target " +
         s"$tgtName already exists — drop it or pass target_table")
-    val snapId =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"sample_mixture: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"sample_mixture: snapshot_id $snapRaw not found")
-      else snapRaw
+    val snapId = snapshotOf("sample_mixture", t, ns, tbl, snapRaw)
     val src = graft.table.Scan(t, spark).useSnapshot(snapId).toDF
     requireUniqueIds(src, stratumCol, idCol, "sample_mixture")
     val keys = graft.ops.Packing.mixtureSample(src, stratumCol, idCol,
       weights, totalN).select(stratumCol, idCol)
     val rows = src.join(keys, Seq(stratumCol, idCol), "left_semi")
-    val gSchema = graft.spec.SchemaConverters
-      .fromSparkSchema(rows.schema)
-    val stratumFieldId = gSchema.fieldByName(stratumCol).getOrElse(
-      throw new IllegalArgumentException(
-        s"sample_mixture: no column '$stratumCol' in $ns.$tbl")).id
-    val spec = graft.spec.PartitionSpec.builder(0)
-      .identity(stratumFieldId, stratumCol).build()
     val props = Map(
       "graft.sample.source-table" -> s"$ns.$tbl",
       "graft.sample.source-snapshot-id" -> snapId.toString,
@@ -1478,12 +1527,8 @@ private[sources] class GraftBoundProcedure(
       "graft.sample.id-col" -> idCol,
       "graft.sample.weights" -> weightsJson,
       "graft.sample.total-n" -> totalN.toString)
-    val created = Table.create(catalog, tgtId, gSchema, spec = spec,
-      properties = props, io = io)
-    val committed = graft.table.TableOps.append(created, rows)
-    val written = committed.currentSnapshot.flatMap(_.summary)
-      .flatMap(_.counters.get(graft.spec.Summary.AddedRecords))
-      .getOrElse(graft.table.Scan(committed, spark).count())
+    val written = added(Derived.build(catalog, tgtId, io, rows, props,
+      Some(stratumCol)))
     (new StructType().add("target_table", StringType)
       .add("rows_written", LongType).add("total_requested", LongType)
       .add("strata", IntegerType).add("source_snapshot_id", LongType),
@@ -1515,26 +1560,12 @@ private[sources] class GraftBoundProcedure(
     if (catalog.tableExists(tgtId))
       throw new IllegalArgumentException(s"sample_budget: target " +
         s"$tgtName already exists — drop it or pass target_table")
-    val snapId =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"sample_budget: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"sample_budget: snapshot_id $snapRaw not found")
-      else snapRaw
+    val snapId = snapshotOf("sample_budget", t, ns, tbl, snapRaw)
     val src = graft.table.Scan(t, spark).useSnapshot(snapId).toDF
     requireUniqueIds(src, stratumCol, idCol, "sample_budget")
     val keys = graft.ops.Packing.budgetSample(src, stratumCol, idCol,
       costCol, budget).select(stratumCol, idCol)
     val rows = src.join(keys, Seq(stratumCol, idCol), "left_semi")
-    val gSchema = graft.spec.SchemaConverters
-      .fromSparkSchema(rows.schema)
-    val stratumFieldId = gSchema.fieldByName(stratumCol).getOrElse(
-      throw new IllegalArgumentException(
-        s"sample_budget: no column '$stratumCol' in $ns.$tbl")).id
-    val spec = graft.spec.PartitionSpec.builder(0)
-      .identity(stratumFieldId, stratumCol).build()
     val props = Map(
       "graft.sample.source-table" -> s"$ns.$tbl",
       "graft.sample.source-snapshot-id" -> snapId.toString,
@@ -1542,12 +1573,8 @@ private[sources] class GraftBoundProcedure(
       "graft.sample.id-col" -> idCol,
       "graft.sample.cost-col" -> costCol,
       "graft.sample.budget" -> budget.toString)
-    val created = Table.create(catalog, tgtId, gSchema, spec = spec,
-      properties = props, io = io)
-    val committed = graft.table.TableOps.append(created, rows)
-    val written = committed.currentSnapshot.flatMap(_.summary)
-      .flatMap(_.counters.get(graft.spec.Summary.AddedRecords))
-      .getOrElse(graft.table.Scan(committed, spark).count())
+    val written = added(Derived.build(catalog, tgtId, io, rows, props,
+      Some(stratumCol)))
     (new StructType().add("target_table", StringType)
       .add("rows_written", LongType).add("budget", LongType)
       .add("source_snapshot_id", LongType),
@@ -1579,75 +1606,55 @@ private[sources] class GraftBoundProcedure(
   private def packCorpus(t: Table,
       spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
       window: Long, textCol: String, idCol: String, docsPerShard: Long,
-      tgtRaw: String, snapRaw: Long): (StructType, Seq[Any]) = {
+      tgtRaw: String, snapRaw: Long,
+      incremental: Boolean): (StructType, Seq[Any]) = {
     import org.apache.spark.sql.functions.{col, max, sum}
-    if (window <= 0) throw new IllegalArgumentException(
-      s"pack_corpus: window must be positive, got $window")
-    if (docsPerShard <= 0) throw new IllegalArgumentException(
-      s"pack_corpus: docs_per_shard must be positive, got $docsPerShard")
     val tgtName = if (tgtRaw.isEmpty) s"${tbl}_packed" else tgtRaw
-    val tgtId = TableIdentifier(ns.split('.').toSeq, tgtName)
-    if (catalog.tableExists(tgtId))
-      throw new IllegalArgumentException(s"pack_corpus: target " +
-        s"$tgtName already exists — drop it or pass target_table")
-    val snapId =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"pack_corpus: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"pack_corpus: snapshot_id $snapRaw not found")
-      else snapRaw
-    Seq(textCol, idCol).foreach { c =>
-      if (t.schema.fieldByName(c).isEmpty)
-        throw new IllegalArgumentException(
-          s"pack_corpus: no column '$c' in $ns.$tbl")
-    }
-    val src = graft.table.Scan(t, spark).useSnapshot(snapId).toDF
-    val sized = packSized(src, idCol, textCol, docsPerShard)
-    // the chain watermark: packs into shards <= this are frozen
-    // (max over the id column only — a pruned narrow scan)
-    val maxShard = Option(sized.agg(max(col("shard"))).head.get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val assignments = graft.ops.Packing.packGreedy(sized, idCol,
-      "tokens", "shard", capacity = window)
-    val rows = graft.ops.Packing.materializePacked(src, assignments,
-      idCol, textCol)
-    val gSchema = graft.spec.SchemaConverters
-      .fromSparkSchema(rows.schema)
-    val shardFieldId = gSchema.fieldByName("shard").get.id
-    val spec = graft.spec.PartitionSpec.builder(0)
-      .identity(shardFieldId, "shard").build()
-    val props = Map(
-      "graft.pack.source-table" -> s"$ns.$tbl",
-      "graft.pack.source-snapshot-id" -> snapId.toString,
-      "graft.pack.text-col" -> textCol,
-      "graft.pack.id-col" -> idCol,
-      "graft.pack.window" -> window.toString,
-      "graft.pack.docs-per-shard" -> docsPerShard.toString,
-      "graft.pack.max-shard" -> maxShard.toString)
-    // the pack stamps ride the BIN append, not the create: a crash
-    // between the two commits must leave a table that says "not a
-    // pack_corpus table yet", never an empty one stamped as packed-
-    // through-snapId (which a later chain would silently trust) — the
-    // same atomic data+bookkeeping shape the chain and the streaming
-    // sinks use
-    val created = Table.create(catalog, tgtId, gSchema, spec = spec,
-      io = io)
-    val committed = graft.table.TableOps.append(created, rows,
-      props = props)
-    val bins = committed.currentSnapshot.flatMap(_.summary)
-      .flatMap(_.counters.get(graft.spec.Summary.AddedRecords))
-      .getOrElse(graft.table.Scan(committed, spark).count())
-    // docs packed: summed from the WRITTEN table's n_docs column —
-    // a narrow column read, never a recompute of the packing
-    val docs = Option(graft.table.Scan(committed, spark).toDF
-        .agg(sum(col("n_docs"))).head.get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
+    val (bins, docs, anchor) =
+      if (incremental) chainPacked(t, spark, ns, tbl, window, textCol,
+        idCol, docsPerShard, tgtName, snapRaw)
+      else {
+        if (window <= 0) throw new IllegalArgumentException(
+          s"pack_corpus: window must be positive, got $window")
+        if (docsPerShard <= 0) throw new IllegalArgumentException(
+          s"pack_corpus: docs_per_shard must be positive, got $docsPerShard")
+        val tgtId = TableIdentifier(ns.split('.').toSeq, tgtName)
+        if (catalog.tableExists(tgtId))
+          throw new IllegalArgumentException(s"pack_corpus: target " +
+            s"$tgtName already exists — drop it or pass target_table")
+        val snapId = snapshotOf("pack_corpus", t, ns, tbl, snapRaw)
+        Seq(textCol, idCol).foreach { c =>
+          if (t.schema.fieldByName(c).isEmpty)
+            throw new IllegalArgumentException(
+              s"pack_corpus: no column '$c' in $ns.$tbl")
+        }
+        val src = graft.table.Scan(t, spark).useSnapshot(snapId).toDF
+        val sized = packSized(src, idCol, textCol, docsPerShard)
+        // the chain watermark: packs into shards <= this are frozen
+        // (max over the id column only — a pruned narrow scan)
+        val maxShard = Option(sized.agg(max(col("shard"))).head.get(0))
+          .map(_.asInstanceOf[Long]).getOrElse(-1L)
+        val rows = graft.ops.Packing.materializePacked(src,
+          graft.ops.Packing.packGreedy(sized, idCol, "tokens", "shard",
+            capacity = window), idCol, textCol)
+        val committed = Derived.build(catalog, tgtId, io, rows, Map(
+          "graft.pack.source-table" -> s"$ns.$tbl",
+          "graft.pack.source-snapshot-id" -> snapId.toString,
+          "graft.pack.text-col" -> textCol,
+          "graft.pack.id-col" -> idCol,
+          "graft.pack.window" -> window.toString,
+          "graft.pack.docs-per-shard" -> docsPerShard.toString,
+          "graft.pack.max-shard" -> maxShard.toString), Some("shard"))
+        // docs packed: summed from the WRITTEN table's n_docs column —
+        // a narrow column read, never a recompute of the packing
+        (added(committed), Option(graft.table.Scan(committed, spark).toDF
+          .agg(sum(col("n_docs"))).head.get(0))
+          .map(_.asInstanceOf[Long]).getOrElse(0L), snapId)
+      }
     (new StructType().add("target_table", StringType)
       .add("bins_written", LongType).add("docs_packed", LongType)
       .add("window", LongType).add("source_snapshot_id", LongType),
-      Seq(tgtName, bins, docs, window, snapId))
+      Seq(tgtName, bins, docs, window, anchor))
   }
 
   /** (id, shard, tokens) projection shared by the full build and the
@@ -1670,9 +1677,8 @@ private[sources] class GraftBoundProcedure(
 
   /** `pack_corpus(incremental => true)`: chain the packed table
     * forward — pack ONLY the rows appended to the source since the
-    * recorded snapshot, as new (shard, bin) rows in one append whose
-    * commit also advances the snapshot and max-shard stamps
-    * (atomic, the streaming-sink shape). Exactness contract: greedy
+    * recorded snapshot, as new (shard, bin) rows whose chain commit
+    * also advances the max-shard stamp. Exactness contract: greedy
     * packing is per-shard-independent, so the chain equals a full
     * repack IF every appended id opens a NEW shard (fresh shard >
     * stamped max-shard). An append into an already-packed shard
@@ -1680,112 +1686,59 @@ private[sources] class GraftBoundProcedure(
     * row — so it is REFUSED with instructions to run a full repack,
     * never silently approximated. Ids must not go backwards for the
     * same reason. Scale shape: per-chain cost is one pass over the
-    * APPENDED rows only; frozen shards are never re-read. */
-  private def appendToPacked(t: Table,
+    * APPENDED rows only; frozen shards are never re-read. Returns
+    * (bins written, docs packed, anchor). */
+  private def chainPacked(t: Table,
       spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
       window: Long, textCol: String, idCol: String, docsPerShard: Long,
-      tgtRaw: String, snapRaw: Long): (StructType, Seq[Any]) = {
+      tgtName: String, snapRaw: Long): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.{col, max, min}
-    val tgtName = if (tgtRaw.isEmpty) s"${tbl}_packed" else tgtRaw
-    val tgtId = TableIdentifier(ns.split('.').toSeq, tgtName)
-    if (!catalog.tableExists(tgtId))
-      throw new IllegalArgumentException(s"pack_corpus: target " +
-        s"$tgtName does not exist — run a full pack first " +
-        "(incremental => false)")
-    val packed = Table.load(catalog, tgtId, io)
-    def prop(k: String): String = packed.metadata.properties.getOrElse(
-      s"graft.pack.$k", throw new IllegalArgumentException(
-        s"pack_corpus: $tgtName has no 'graft.pack.$k' property — " +
-          "not a pack_corpus table"))
-    if (prop("source-table") != s"$ns.$tbl")
-      throw new IllegalArgumentException(s"pack_corpus: $tgtName was " +
-        s"packed from ${prop("source-table")}, not $ns.$tbl")
+    val c = new Chain("pack_corpus", "target", tgtName, "graft.pack", t,
+      ns, tbl, snapRaw)
     // a chain ALWAYS uses the stamped config (frozen shards were cut
     // with it); an explicitly different ask errors, like the
     // tokenizer's piece-length check. window is a required parameter,
     // so every mismatch is detectable; the defaulted knobs only on a
     // non-default ask.
-    if (window != prop("window").toLong)
+    if (window != c.prop("window").toLong)
       throw new IllegalArgumentException(s"pack_corpus: $tgtName was " +
-        s"packed with window ${prop("window")}, call asks for " +
+        s"packed with window ${c.prop("window")}, call asks for " +
         s"$window — chains cannot change the window; repack " +
         "(incremental => false)")
     Seq(("text_col", textCol, "text"), ("id_col", idCol, "doc_id"))
       .foreach { case (name, arg, dflt) =>
-        val stamped = prop(name.replace('_', '-'))
+        val stamped = c.prop(name.replace('_', '-'))
         if (arg != dflt && arg != stamped)
           throw new IllegalArgumentException(s"pack_corpus: $tgtName " +
             s"was packed with $name '$stamped', call asks for '$arg'")
       }
+    val dps = c.prop("docs-per-shard").toLong
     if (docsPerShard != GraftBoundProcedure.PackDefaultDocsPerShard &&
-        docsPerShard != prop("docs-per-shard").toLong)
+        docsPerShard != dps)
       throw new IllegalArgumentException(s"pack_corpus: $tgtName was " +
-        s"packed with docs_per_shard ${prop("docs-per-shard")}, call " +
-        s"asks for $docsPerShard")
-    val dps = prop("docs-per-shard").toLong
-    val sTextCol = prop("text-col")
-    val sIdCol = prop("id-col")
-    val recorded = prop("source-snapshot-id").toLong
-    val maxShard = prop("max-shard").toLong
-    if (t.snapshotById(recorded).isEmpty)
-      throw new IllegalArgumentException(s"pack_corpus: $tgtName " +
-        s"records source snapshot $recorded which no longer exists " +
-        "(expired?) — run a full repack (incremental => false) with " +
-        "a fresh target_table")
-    // chain UP TO snapshot_id when given (the sibling-chain contract:
-    // the ann/pq/text chains honor it the same way)
-    val head =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"pack_corpus: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"pack_corpus: snapshot_id $snapRaw not found")
-      else snapRaw
-    if (head == recorded)
-      return (new StructType().add("target_table", StringType)
-        .add("bins_written", LongType).add("docs_packed", LongType)
-        .add("window", LongType).add("source_snapshot_id", LongType),
-        Seq(tgtName, 0L, 0L, window, head))
-    val fresh = graft.table.Scan(t, spark)
-      .appendsBetween(recorded, head).toDF
+        s"packed with docs_per_shard $dps, call asks for $docsPerShard")
+    val (sTextCol, sIdCol) = (c.prop("text-col"), c.prop("id-col"))
+    val maxShard = c.prop("max-shard").toLong
+    val fresh = c.fresh(spark)
     val sized = packSized(fresh, sIdCol, sTextCol, dps)
       .localCheckpoint(true)
     val bounds = sized.agg(min(col("shard")), max(col("shard"))).head
-    if (bounds.isNullAt(0)) {
-      // appends happened but carried no rows (e.g. compaction-only
-      // history) — just advance the stamp so the chain stays anchored
-      val advanced = packed.newTransaction().setProperties(Map(
-        "graft.pack.source-snapshot-id" -> head.toString)).commit()
-      return (new StructType().add("target_table", StringType)
-        .add("bins_written", LongType).add("docs_packed", LongType)
-        .add("window", LongType).add("source_snapshot_id", LongType),
-        Seq(tgtName, 0L, 0L, window, head))
-    }
-    if (bounds.getLong(0) <= maxShard)
+    // appends that carried no rows (e.g. compaction-only history) only
+    // move the anchor
+    val packs = !bounds.isNullAt(0)
+    if (packs && bounds.getLong(0) <= maxShard)
       throw new IllegalArgumentException(s"pack_corpus: appended ids " +
         s"reach into already-packed shard ${bounds.getLong(0)} " +
         s"(packed through shard $maxShard) — packing them would " +
         "change existing bins; run a full repack " +
         "(incremental => false) with a fresh target_table")
-    val docsN = sized.count()
-    val assignments = graft.ops.Packing.packGreedy(sized, sIdCol,
-      "tokens", "shard", capacity = window)
-    val rows = graft.ops.Packing.materializePacked(fresh, assignments,
-      sIdCol, sTextCol)
-    // stamps ride the data append (atomic — the chain can never
-    // record a snapshot whose bins did not commit)
-    val committed = graft.table.TableOps.append(packed, rows,
-      props = Map(
-        "graft.pack.source-snapshot-id" -> head.toString,
-        "graft.pack.max-shard" -> bounds.getLong(1).toString))
-    val bins = committed.currentSnapshot.flatMap(_.summary)
-      .flatMap(_.counters.get(graft.spec.Summary.AddedRecords))
-      .getOrElse(0L)
-    (new StructType().add("target_table", StringType)
-      .add("bins_written", LongType).add("docs_packed", LongType)
-      .add("window", LongType).add("source_snapshot_id", LongType),
-      Seq(tgtName, bins, docsN, window, head))
+    val rows = graft.ops.Packing.materializePacked(fresh,
+      graft.ops.Packing.packGreedy(sized, sIdCol, "tokens", "shard",
+        capacity = window), sIdCol, sTextCol)
+    val w = c.run(new Derived.Delta(rows, Map.empty, packs),
+      if (packs) Map("graft.pack.max-shard" -> bounds.getLong(1).toString)
+      else Map.empty)
+    (w.appended, sized.count(), w.anchor)
   }
 
   /** `pq_search(ns, index_table, query, k)`: PQ-ADC top-k over a
@@ -1838,91 +1791,6 @@ private[sources] class GraftBoundProcedure(
     (out.schema, out.collect().map(_.toSeq).toSeq)
   }
 
-  /** `build_ann_index(incremental => true)`: chain the existing index
-    * to the source head WITHOUT a refit or a base rescan — the 100 TB
-    * operational shape, where re-fitting (cheap) is fine but
-    * re-assigning and re-writing the full inverted file (a corpus
-    * pass + full shuffle) is not. Rows appended since the index's
-    * recorded source snapshot are assigned with the STAMPED centroids
-    * and appended into their cells; the recorded snapshot advances.
-    * Non-append source changes are safe by construction:
-    * `appendsBetween` skips replace/delete snapshots, so compaction
-    * never re-delivers base rows — but rows DELETED from the source
-    * stay in the index until a full rebuild (searches can return
-    * ghosts; the same staleness contract every IVF system documents).
-    * Wrong-dim new rows are excluded and reported, like the full
-    * build. Two commits (append, then the property bump) — a crash
-    * between them leaves a visibly short stamp, never double rows. */
-  private def appendToAnnIndex(t: Table,
-      spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
-      vecCol: String, idCol: String, idxName: String,
-      snapRaw: Long): (StructType, Seq[Any]) = {
-    val idxId = TableIdentifier(ns.split('.').toSeq, idxName)
-    if (!catalog.tableExists(idxId))
-      throw new IllegalArgumentException(s"build_ann_index: index " +
-        s"$idxName does not exist — run a full build first " +
-        "(incremental => false)")
-    val idx = Table.load(catalog, idxId, io)
-    def prop(k: String): String = idx.metadata.properties.getOrElse(k,
-      throw new IllegalArgumentException(s"build_ann_index: $idxName " +
-        s"has no '$k' property — not a build_ann_index table"))
-    val srcTable = prop(s"${AnnPropPrefix}source-table")
-    if (srcTable != s"$ns.$tbl")
-      throw new IllegalArgumentException(s"build_ann_index: index " +
-        s"$idxName was built from $srcTable, not $ns.$tbl")
-    if (prop(s"${AnnPropPrefix}vec-col") != vecCol ||
-        prop(s"${AnnPropPrefix}id-col") != idCol)
-      throw new IllegalArgumentException(s"build_ann_index: index " +
-        s"$idxName was built on (${prop(s"${AnnPropPrefix}vec-col")}, " +
-        s"${prop(s"${AnnPropPrefix}id-col")}), call uses " +
-        s"($vecCol, $idCol)")
-    val recorded = prop(s"${AnnPropPrefix}source-snapshot-id").toLong
-    if (t.snapshotById(recorded).isEmpty)
-      throw new IllegalArgumentException(s"build_ann_index: index " +
-        s"$idxName records source snapshot $recorded which no longer " +
-        "exists (expired?) — rebuild the index")
-    val head =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"build_ann_index: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"build_ann_index: snapshot_id $snapRaw not found")
-      else snapRaw
-    val dim = prop(s"${AnnPropPrefix}dim").toInt
-    val centroids = graft.ops.Similarity.centroidsFromJson(
-      prop(s"${AnnPropPrefix}centroids"))
-    import org.apache.spark.sql.functions.{col, size}
-    val fresh =
-      if (head == recorded)
-        graft.table.Scan(t, spark).toDF.limit(0)
-      else graft.table.Scan(t, spark).appendsBetween(recorded, head).toDF
-    val freshTotal = fresh.count()
-    val payload = fresh.where(size(col(vecCol)) === dim)
-      .select(col(idCol),
-        graft.ops.Similarity.nearestCell(col(vecCol), centroids)
-          .as("cell"),
-        graft.ops.Similarity.l2norm(col(vecCol)).as("norm"),
-        col(vecCol))
-    val idx2 =
-      if (head == recorded) idx
-      else graft.table.TableOps.append(idx, payload)
-    val committed = idx2.newTransaction().setProperties(Map(
-      s"${AnnPropPrefix}source-snapshot-id" -> head.toString)).commit()
-    // the property bump is metadata-only, so the current snapshot is
-    // still the append — its AddedRecords is exactly this batch
-    val appended =
-      if (head == recorded) 0L
-      else committed.currentSnapshot.flatMap(_.summary)
-        .flatMap(_.counters.get(graft.spec.Summary.AddedRecords))
-        .getOrElse(0L)
-    (new StructType().add("index_table", StringType)
-      .add("cells", IntegerType).add("dim", IntegerType)
-      .add("rows_indexed", LongType).add("rows_total", LongType)
-      .add("source_snapshot_id", LongType),
-      Seq(idxName, centroids.size, dim, appended, freshTotal, head))
-  }
-
   /** `build_pq_index`: train per-subspace KMeans codebooks on a
     * bounded deterministic sample and persist the PRODUCT-QUANTIZED
     * corpus — `(id, codes)`, m small ints per vector — as an Iceberg
@@ -1931,139 +1799,47 @@ private[sources] class GraftBoundProcedure(
     * .pqTopKFromCodes]]) reads the codes table instead of the vectors:
     * ~dim·4/m× less I/O per scanned vector — the memory-bound ANN
     * shape at 100 TB (IVF prunes WHICH rows are read; PQ shrinks WHAT
-    * is read per row). Wrong-dim rows are excluded and reported. */
-  private def buildPqIndex(t: Table,
-      spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
-      vecCol: String, idCol: String, m: Int, ksub: Int, idxName: String,
-      snapRaw: Long, seed: Long): (StructType, Seq[Any]) = {
-    if (m <= 0 || ksub <= 0)
-      throw new IllegalArgumentException(
-        s"build_pq_index: m and ksub must be positive, got ($m, $ksub)")
-    val snapId =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"build_pq_index: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"build_pq_index: snapshot_id $snapRaw not found")
-      else snapRaw
-    import org.apache.spark.sql.functions.{col, max, size}
-    val scan = graft.table.Scan(t, spark).useSnapshot(snapId)
-    val df0 = scan.toDF
-    val dim = df0.agg(max(size(col(vecCol))).as("d")).head(1)
-      .headOption.flatMap(r => Option(r.get(0)).map(_ => r.getInt(0)))
-      .getOrElse(throw new IllegalArgumentException(
-        s"build_pq_index: $ns.$tbl has no vectors in $vecCol"))
-    val df = df0.where(size(col(vecCol)) === dim)
-    val total = scan.count()
-    val cbs = graft.ops.Similarity.pqTrainCodebooks(df, m, ksub, seed,
-      vecCol, rowCountHint = Some(total))
-    val payload = graft.ops.Similarity.pqEncode(df, cbs, vecCol, idCol)
-    val gSchema = graft.spec.SchemaConverters
-      .fromSparkSchema(payload.schema)
-    val props = Map(
-      s"${PqPropPrefix}source-table" -> s"$ns.$tbl",
-      s"${PqPropPrefix}source-snapshot-id" -> snapId.toString,
-      s"${PqPropPrefix}vec-col" -> vecCol,
-      s"${PqPropPrefix}id-col" -> idCol,
-      s"${PqPropPrefix}m" -> m.toString,
-      s"${PqPropPrefix}ksub" -> ksub.toString,
-      s"${PqPropPrefix}dim" -> dim.toString,
-      s"${PqPropPrefix}codebooks" ->
-        graft.ops.Similarity.pqCodebooksToJson(cbs))
-    val idxId = TableIdentifier(ns.split('.').toSeq, idxName)
-    val committed =
-      if (catalog.tableExists(idxId)) {
-        val existing = Table.load(catalog, idxId, io)
-        val after = graft.table.Mutations.overwrite(existing, spark,
-          payload)
-        after.newTransaction().setProperties(props).commit()
-      } else {
-        val created = Table.create(catalog, idxId, gSchema,
-          properties = props, io = io)
-        graft.table.TableOps.append(created, payload)
-      }
-    val indexed = committed.currentSnapshot.flatMap(_.summary)
-      .flatMap(_.counters.get(graft.spec.Summary.AddedRecords))
-      .getOrElse(graft.table.Scan(committed, spark).count())
-    (new StructType().add("index_table", StringType)
-      .add("m", IntegerType).add("ksub", IntegerType)
-      .add("dim", IntegerType).add("rows_indexed", LongType)
-      .add("rows_total", LongType).add("source_snapshot_id", LongType),
-      Seq(idxName, m, ksub, dim, indexed, total, snapId))
-  }
-
-  /** `build_pq_index(incremental => true)`: chain the codes table to
-    * the source head with the STAMPED codebooks — codes are per-row
+    * is read per row). Wrong-dim rows are excluded and reported.
+    * `incremental => true` encodes only the rows appended since the
+    * recorded snapshot with the STAMPED codebooks — codes are per-row
     * deterministic given the frozen model, so the chained table equals
     * a frozen-model re-encode of the full corpus exactly; only the
     * model itself goes stale as the distribution drifts (rebuild to
-    * refit — the standard PQ contract). Same appendsBetween semantics
-    * as the ANN/text chains: compaction-safe, deleted rows stale. */
-  private def appendToPqIndex(t: Table,
+    * refit — the standard PQ contract). */
+  private def buildPqIndex(t: Table,
       spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
-      vecCol: String, idCol: String, idxName: String,
-      snapRaw: Long): (StructType, Seq[Any]) = {
-    val idxId = TableIdentifier(ns.split('.').toSeq, idxName)
-    if (!catalog.tableExists(idxId))
-      throw new IllegalArgumentException(s"build_pq_index: index " +
-        s"$idxName does not exist — run a full build first " +
-        "(incremental => false)")
-    val idx = Table.load(catalog, idxId, io)
-    def prop(k: String): String = idx.metadata.properties.getOrElse(k,
-      throw new IllegalArgumentException(s"build_pq_index: $idxName " +
-        s"has no '$k' property — not a build_pq_index table"))
-    val srcTable = prop(s"${PqPropPrefix}source-table")
-    if (srcTable != s"$ns.$tbl")
-      throw new IllegalArgumentException(s"build_pq_index: index " +
-        s"$idxName was built from $srcTable, not $ns.$tbl")
-    if (prop(s"${PqPropPrefix}vec-col") != vecCol ||
-        prop(s"${PqPropPrefix}id-col") != idCol)
-      throw new IllegalArgumentException(s"build_pq_index: index " +
-        s"$idxName was built on (${prop(s"${PqPropPrefix}vec-col")}, " +
-        s"${prop(s"${PqPropPrefix}id-col")}), call uses " +
-        s"($vecCol, $idCol)")
-    val recorded = prop(s"${PqPropPrefix}source-snapshot-id").toLong
-    if (t.snapshotById(recorded).isEmpty)
-      throw new IllegalArgumentException(s"build_pq_index: index " +
-        s"$idxName records source snapshot $recorded which no longer " +
-        "exists (expired?) — rebuild the index")
-    val head =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"build_pq_index: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"build_pq_index: snapshot_id $snapRaw not found")
-      else snapRaw
-    val dim = prop(s"${PqPropPrefix}dim").toInt
-    val m = prop(s"${PqPropPrefix}m").toInt
-    val ksub = prop(s"${PqPropPrefix}ksub").toInt
-    val cbs = graft.ops.Similarity.pqCodebooksFromJson(
-      prop(s"${PqPropPrefix}codebooks"), ksub)
-    import org.apache.spark.sql.functions.{col, size}
-    val fresh =
-      if (head == recorded)
-        graft.table.Scan(t, spark).toDF.limit(0)
-      else graft.table.Scan(t, spark).appendsBetween(recorded, head).toDF
-    val freshTotal = fresh.count()
-    val payload = graft.ops.Similarity.pqEncode(
-      fresh.where(size(col(vecCol)) === dim), cbs, vecCol, idCol)
-    val idx2 =
-      if (head == recorded) idx
-      else graft.table.TableOps.append(idx, payload)
-    val committed = idx2.newTransaction().setProperties(Map(
-      s"${PqPropPrefix}source-snapshot-id" -> head.toString)).commit()
-    val appended =
-      if (head == recorded) 0L
-      else committed.currentSnapshot.flatMap(_.summary)
-        .flatMap(_.counters.get(graft.spec.Summary.AddedRecords))
-        .getOrElse(0L)
+      vecCol: String, idCol: String, m0: Int, ksub0: Int, idxName: String,
+      snapRaw: Long, seed: Long,
+      incremental: Boolean): (StructType, Seq[Any]) = {
+    val art = Derived.PqCodes(vecCol, idCol)
+    val (w, m, ksub, dim, total) =
+      if (incremental) {
+        val c = new Chain(art.proc, "index", idxName, art.ns, t, ns, tbl,
+          snapRaw)
+        c.requireSame("vec-col" -> vecCol, "id-col" -> idCol)
+        val fresh = c.fresh(spark)
+        (c.run(art.delta(fresh, c.props)), c.prop("m").toInt,
+          c.prop("ksub").toInt, c.prop("dim").toInt, fresh.count())
+      } else {
+        if (m0 <= 0 || ksub0 <= 0)
+          throw new IllegalArgumentException("build_pq_index: m and " +
+            s"ksub must be positive, got ($m0, $ksub0)")
+        val snapId = snapshotOf(art.proc, t, ns, tbl, snapRaw)
+        val (dim, sample, total) = vectors(art.proc, t, spark, ns, tbl,
+          snapId, vecCol)
+        val cbs = graft.ops.Similarity.pqTrainCodebooks(sample, m0, ksub0,
+          seed, vecCol, rowCountHint = Some(total))
+        (buildArtifact(art, t, spark, ns, tbl, idxName, snapId, Map(
+          "vec-col" -> vecCol, "id-col" -> idCol, "m" -> m0.toString,
+          "ksub" -> ksub0.toString, "dim" -> dim.toString,
+          "codebooks" -> graft.ops.Similarity.pqCodebooksToJson(cbs))),
+          m0, ksub0, dim, total)
+      }
     (new StructType().add("index_table", StringType)
       .add("m", IntegerType).add("ksub", IntegerType)
       .add("dim", IntegerType).add("rows_indexed", LongType)
       .add("rows_total", LongType).add("source_snapshot_id", LongType),
-      Seq(idxName, m, ksub, dim, appended, freshTotal, head))
+      Seq(idxName, m, ksub, dim, w.appended, total, w.anchor))
   }
 
   /** `build_text_index`: persist ONE corpus pass of
@@ -2079,139 +1855,37 @@ private[sources] class GraftBoundProcedure(
     * postings all live in its bucket), so indexed BM25 is
     * bit-identical to the unindexed path with zero corpus passes at
     * query time. NULL-text docs are corpus members (they count toward
-    * `n_docs`) that simply produce no postings. */
+    * `n_docs`) that simply produce no postings. Postings are
+    * per-document-independent and the stats are sums over disjoint doc
+    * sets, so `incremental => true` — new docs' postings appended into
+    * their term buckets, the stats advanced by exact long arithmetic —
+    * is EXACTLY a full rebuild. */
   private def buildTextIndex(t: Table,
       spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
       textCol: String, idCol: String, numBuckets: Int, idxName: String,
-      snapRaw: Long): (StructType, Seq[Any]) = {
-    if (numBuckets <= 0)
-      throw new IllegalArgumentException(
-        s"build_text_index: num_buckets must be positive, got $numBuckets")
-    val snapId =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"build_text_index: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"build_text_index: snapshot_id $snapRaw not found")
-      else snapRaw
-    import org.apache.spark.sql.functions.col
-    val df = graft.table.Scan(t, spark).useSnapshot(snapId).toDF
-    val (nDocs, totalDl) = graft.ops.Retrieval.corpusStats(df, textCol)
-    val payload = graft.ops.Retrieval.postings(df, textCol, idCol)
-      .withColumn("tbucket", graft.functions.IcebergFunctions
-        .icebergBucket(col("term"), numBuckets))
-    val gSchema = graft.spec.SchemaConverters
-      .fromSparkSchema(payload.schema)
-    val bucketFieldId = gSchema.fieldByName("tbucket").getOrElse(
-      throw new IllegalStateException("tbucket column missing")).id
-    val spec = graft.spec.PartitionSpec.builder(0)
-      .identity(bucketFieldId, "tbucket").build()
-    val props = Map(
-      s"${TextPropPrefix}source-table" -> s"$ns.$tbl",
-      s"${TextPropPrefix}source-snapshot-id" -> snapId.toString,
-      s"${TextPropPrefix}text-col" -> textCol,
-      s"${TextPropPrefix}id-col" -> idCol,
-      s"${TextPropPrefix}num-buckets" -> numBuckets.toString,
-      s"${TextPropPrefix}n-docs" -> nDocs.toString,
-      s"${TextPropPrefix}total-dl" -> totalDl.toString)
-    val idxId = TableIdentifier(ns.split('.').toSeq, idxName)
-    val committed =
-      if (catalog.tableExists(idxId)) {
-        val existing = Table.load(catalog, idxId, io)
-        val after = graft.table.Mutations.overwrite(existing, spark,
-          payload)
-        after.newTransaction().setProperties(props).commit()
+      snapRaw: Long, incremental: Boolean): (StructType, Seq[Any]) = {
+    val art = Derived.TextPostings(textCol, idCol)
+    val (w, buckets) =
+      if (incremental) {
+        val c = new Chain(art.proc, "index", idxName, art.ns, t, ns, tbl,
+          snapRaw)
+        c.requireSame("text-col" -> textCol, "id-col" -> idCol)
+        (c.run(art.delta(c.fresh(spark), c.props)),
+          c.prop("num-buckets").toInt)
       } else {
-        val created = Table.create(catalog, idxId, gSchema, spec = spec,
-          properties = props, io = io)
-        graft.table.TableOps.append(created, payload)
+        if (numBuckets <= 0)
+          throw new IllegalArgumentException("build_text_index: " +
+            s"num_buckets must be positive, got $numBuckets")
+        (buildArtifact(art, t, spark, ns, tbl, idxName, snapRaw, Map(
+          "text-col" -> textCol, "id-col" -> idCol,
+          "num-buckets" -> numBuckets.toString), Some("tbucket")),
+          numBuckets)
       }
-    val indexed = committed.currentSnapshot.flatMap(_.summary)
-      .flatMap(_.counters.get(graft.spec.Summary.AddedRecords))
-      .getOrElse(graft.table.Scan(committed, spark).count())
     (new StructType().add("index_table", StringType)
       .add("buckets", IntegerType).add("postings_indexed", LongType)
       .add("docs_total", LongType).add("source_snapshot_id", LongType),
-      Seq(idxName, numBuckets, indexed, nDocs, snapId))
-  }
-
-  /** `build_text_index(incremental => true)`: chain the postings index
-    * to the source head. Postings are per-document-independent and the
-    * stamped stats are sums over disjoint doc sets, so unlike the ANN
-    * chain (frozen centroids) this chain is EXACTLY a full rebuild:
-    * new docs' postings append into their term buckets, `n_docs` and
-    * `total_dl` advance by exact long arithmetic. `appendsBetween`
-    * skips replace snapshots, so source compaction never re-delivers;
-    * rows DELETED from the source keep their postings until a full
-    * rebuild (stale-ghost contract, same as the ANN index). Two
-    * commits (append, then the property bump) — a crash between them
-    * leaves a visibly short stamp, never double postings. */
-  private def appendToTextIndex(t: Table,
-      spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
-      textCol: String, idCol: String, idxName: String,
-      snapRaw: Long): (StructType, Seq[Any]) = {
-    val idxId = TableIdentifier(ns.split('.').toSeq, idxName)
-    if (!catalog.tableExists(idxId))
-      throw new IllegalArgumentException(s"build_text_index: index " +
-        s"$idxName does not exist — run a full build first " +
-        "(incremental => false)")
-    val idx = Table.load(catalog, idxId, io)
-    def prop(k: String): String = idx.metadata.properties.getOrElse(k,
-      throw new IllegalArgumentException(s"build_text_index: $idxName " +
-        s"has no '$k' property — not a build_text_index table"))
-    val srcTable = prop(s"${TextPropPrefix}source-table")
-    if (srcTable != s"$ns.$tbl")
-      throw new IllegalArgumentException(s"build_text_index: index " +
-        s"$idxName was built from $srcTable, not $ns.$tbl")
-    if (prop(s"${TextPropPrefix}text-col") != textCol ||
-        prop(s"${TextPropPrefix}id-col") != idCol)
-      throw new IllegalArgumentException(s"build_text_index: index " +
-        s"$idxName was built on (${prop(s"${TextPropPrefix}text-col")}, " +
-        s"${prop(s"${TextPropPrefix}id-col")}), call uses " +
-        s"($textCol, $idCol)")
-    val recorded = prop(s"${TextPropPrefix}source-snapshot-id").toLong
-    if (t.snapshotById(recorded).isEmpty)
-      throw new IllegalArgumentException(s"build_text_index: index " +
-        s"$idxName records source snapshot $recorded which no longer " +
-        "exists (expired?) — rebuild the index")
-    val head =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"build_text_index: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"build_text_index: snapshot_id $snapRaw not found")
-      else snapRaw
-    val numBuckets = prop(s"${TextPropPrefix}num-buckets").toInt
-    import org.apache.spark.sql.functions.col
-    val fresh =
-      if (head == recorded)
-        graft.table.Scan(t, spark).toDF.limit(0)
-      else graft.table.Scan(t, spark).appendsBetween(recorded, head).toDF
-    val (freshDocs, freshDl) =
-      graft.ops.Retrieval.corpusStats(fresh, textCol)
-    val payload = graft.ops.Retrieval.postings(fresh, textCol, idCol)
-      .withColumn("tbucket", graft.functions.IcebergFunctions
-        .icebergBucket(col("term"), numBuckets))
-    val nDocs = prop(s"${TextPropPrefix}n-docs").toLong + freshDocs
-    val totalDl = prop(s"${TextPropPrefix}total-dl").toLong + freshDl
-    val idx2 =
-      if (head == recorded) idx
-      else graft.table.TableOps.append(idx, payload)
-    val committed = idx2.newTransaction().setProperties(Map(
-      s"${TextPropPrefix}source-snapshot-id" -> head.toString,
-      s"${TextPropPrefix}n-docs" -> nDocs.toString,
-      s"${TextPropPrefix}total-dl" -> totalDl.toString)).commit()
-    val appended =
-      if (head == recorded) 0L
-      else committed.currentSnapshot.flatMap(_.summary)
-        .flatMap(_.counters.get(graft.spec.Summary.AddedRecords))
-        .getOrElse(0L)
-    (new StructType().add("index_table", StringType)
-      .add("buckets", IntegerType).add("postings_indexed", LongType)
-      .add("docs_total", LongType).add("source_snapshot_id", LongType),
-      Seq(idxName, numBuckets, appended, nDocs, head))
+      Seq(idxName, buckets, w.appended, w.total(art.key("n-docs")),
+        w.anchor))
   }
 
   /** `corpus_diff(ns, table, from_snapshot[, to_snapshot, text_col,
@@ -2278,14 +1952,7 @@ private[sources] class GraftBoundProcedure(
   private def corpusStats(t: Table,
       spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
       textCol: String, snapRaw: Long): (StructType, Seq[Any]) = {
-    val snapId =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"corpus_stats: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"corpus_stats: snapshot_id $snapRaw not found")
-      else snapRaw
+    val snapId = snapshotOf("corpus_stats", t, ns, tbl, snapRaw)
     val df = graft.table.Scan(t, spark).useSnapshot(snapId).toDF
     import org.apache.spark.sql.functions._
     val norm = graft.ops.TextAnalysis.normalized(col(textCol))
@@ -2352,135 +2019,47 @@ private[sources] class GraftBoundProcedure(
     * [[graft.ops.Unigram.vocabFromCounts]] (sum-merge -> coverage
     * singles + top-V -> exact qlog weights), so one trained model
     * serves every downstream vocab size. Rebuilding an existing model
-    * is one overwrite snapshot. */
+    * is one overwrite snapshot. `incremental => true` appends the
+    * piece counts of the rows added since the recorded snapshot, with
+    * the stamped piece length: counts are additive over disjoint
+    * document sets, so after the read path's sum-merge the chained
+    * ledger IS the full-rebuild model (the text index's "chain ==
+    * rebuild" contract, unlike the frozen-model ANN/PQ chains). */
   private def trainTokenizer(t: Table,
       spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
       textCol: String, maxPieceLen: Int, mdlName: String,
-      snapRaw: Long): (StructType, Seq[Any]) = {
-    if (maxPieceLen < 1)
-      throw new IllegalArgumentException("train_tokenizer: " +
-        s"max_piece_len must be >= 1, got $maxPieceLen")
-    val snapId =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"train_tokenizer: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"train_tokenizer: snapshot_id $snapRaw not found")
-      else snapRaw
-    val df = graft.table.Scan(t, spark).useSnapshot(snapId).toDF
-    // the ledger is model-sized: eager-materialize so the total, the
-    // row count, and the write don't each re-run the corpus pass
-    val pc = graft.ops.Unigram.pieceCounts(
-      graft.ops.Bpe.wordCounts(df, textCol), maxPieceLen)
-      .localCheckpoint(true)
-    val total = Option(pc.agg(
-        org.apache.spark.sql.functions.sum("cnt")).head.get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val gSchema = graft.spec.SchemaConverters.fromSparkSchema(pc.schema)
-    val props = Map(
-      s"${TokPropPrefix}source-table" -> s"$ns.$tbl",
-      s"${TokPropPrefix}source-snapshot-id" -> snapId.toString,
-      s"${TokPropPrefix}text-col" -> textCol,
-      s"${TokPropPrefix}max-piece-len" -> maxPieceLen.toString,
-      s"${TokPropPrefix}total-cnt" -> total.toString)
-    val mdlId = TableIdentifier(ns.split('.').toSeq, mdlName)
-    if (catalog.tableExists(mdlId)) {
-      val existing = Table.load(catalog, mdlId, io)
-      val after = graft.table.Mutations.overwrite(existing, spark, pc)
-      after.newTransaction().setProperties(props).commit()
-    } else {
-      val created = Table.create(catalog, mdlId, gSchema,
-        properties = props, io = io)
-      graft.table.TableOps.append(created, pc)
-    }
+      snapRaw: Long, incremental: Boolean): (StructType, Seq[Any]) = {
+    val art = Derived.TokLedger(textCol)
+    val w =
+      if (incremental) {
+        val c = new Chain(art.proc, "model", mdlName, art.ns, t, ns, tbl,
+          snapRaw)
+        c.requireSame("text-col" -> textCol)
+        // a chain ALWAYS uses the stamped piece length (the ledger's
+        // candidate universe is fixed at train time); a caller
+        // explicitly asking for a different one must get an error, not
+        // a silent override. The declared default is indistinguishable
+        // from "not passed", so only non-default mismatches can be
+        // detected.
+        val stamped = c.prop("max-piece-len").toInt
+        if (maxPieceLen != GraftBoundProcedure.TokDefaultMaxPieceLen &&
+            maxPieceLen != stamped)
+          throw new IllegalArgumentException(s"train_tokenizer: model " +
+            s"$mdlName was trained with max_piece_len $stamped, call " +
+            s"asks for $maxPieceLen — incremental chains cannot change " +
+            "the piece length; retrain (incremental => false)")
+        c.run(art.delta(c.fresh(spark), c.props))
+      } else {
+        if (maxPieceLen < 1)
+          throw new IllegalArgumentException("train_tokenizer: " +
+            s"max_piece_len must be >= 1, got $maxPieceLen")
+        buildArtifact(art, t, spark, ns, tbl, mdlName, snapRaw, Map(
+          "text-col" -> textCol, "max-piece-len" -> maxPieceLen.toString))
+      }
     (new StructType().add("model_table", StringType)
-      .add("pieces", LongType).add("total_cnt", LongType)
-      .add("source_snapshot_id", LongType),
-      Seq(mdlName, pc.count(), total, snapId))
-  }
-
-  /** `train_tokenizer(incremental => true)`: chain the ledger to the
-    * source head WITHOUT a rebuild. Piece counts are additive over
-    * disjoint document sets, so appending the DELTAS of rows added
-    * since the recorded snapshot and advancing the stamped total by
-    * exact long arithmetic yields EXACTLY the full-rebuild model after
-    * the read path's sum-merge — the same "chain == rebuild" contract
-    * as the text index (and unlike the frozen-model ANN/PQ chains).
-    * `appendsBetween` skips replace snapshots, so source compaction
-    * never re-delivers; rows DELETED from the source keep their counts
-    * until a full rebuild (the documented stale-ghost contract). Two
-    * commits (append, then the property bump) — a crash between them
-    * leaves a visibly short stamp, never double counts. */
-  private def appendToTokenizer(t: Table,
-      spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
-      textCol: String, maxPieceLenArg: Int, mdlName: String,
-      snapRaw: Long): (StructType, Seq[Any]) = {
-    val mdlId = TableIdentifier(ns.split('.').toSeq, mdlName)
-    if (!catalog.tableExists(mdlId))
-      throw new IllegalArgumentException(s"train_tokenizer: model " +
-        s"$mdlName does not exist - run a full train first " +
-        "(incremental => false)")
-    val mdl = Table.load(catalog, mdlId, io)
-    def prop(k: String): String = mdl.metadata.properties.getOrElse(k,
-      throw new IllegalArgumentException(s"train_tokenizer: $mdlName " +
-        s"has no '$k' property - not a train_tokenizer table"))
-    val srcTable = prop(s"${TokPropPrefix}source-table")
-    if (srcTable != s"$ns.$tbl")
-      throw new IllegalArgumentException(s"train_tokenizer: model " +
-        s"$mdlName was trained from $srcTable, not $ns.$tbl")
-    if (prop(s"${TokPropPrefix}text-col") != textCol)
-      throw new IllegalArgumentException(s"train_tokenizer: model " +
-        s"$mdlName was trained on " +
-        s"${prop(s"${TokPropPrefix}text-col")}, call uses $textCol")
-    val recorded = prop(s"${TokPropPrefix}source-snapshot-id").toLong
-    if (t.snapshotById(recorded).isEmpty)
-      throw new IllegalArgumentException(s"train_tokenizer: model " +
-        s"$mdlName records source snapshot $recorded which no longer " +
-        "exists (expired?) - retrain the model")
-    val head =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"train_tokenizer: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"train_tokenizer: snapshot_id $snapRaw not found")
-      else snapRaw
-    val maxPieceLen = prop(s"${TokPropPrefix}max-piece-len").toInt
-    // a chain ALWAYS uses the stamped piece length (the ledger's
-    // candidate universe is fixed at train time); a caller explicitly
-    // asking for a different one must get an error, not a silent
-    // override — mirror the text_col check. The declared default is
-    // indistinguishable from "not passed", so only non-default
-    // mismatches can be detected.
-    if (maxPieceLenArg != GraftBoundProcedure.TokDefaultMaxPieceLen &&
-        maxPieceLenArg != maxPieceLen)
-      throw new IllegalArgumentException(s"train_tokenizer: model " +
-        s"$mdlName was trained with max_piece_len $maxPieceLen, " +
-        s"call asks for $maxPieceLenArg — incremental chains cannot " +
-        "change the piece length; retrain (incremental => false)")
-    val fresh =
-      if (head == recorded)
-        graft.table.Scan(t, spark).toDF.limit(0)
-      else graft.table.Scan(t, spark).appendsBetween(recorded, head).toDF
-    val deltas = graft.ops.Unigram.pieceCounts(
-      graft.ops.Bpe.wordCounts(fresh, textCol), maxPieceLen)
-      .localCheckpoint(true)
-    val deltaTotal = Option(deltas.agg(
-        org.apache.spark.sql.functions.sum("cnt")).head.get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val appended = deltas.count()
-    val total = prop(s"${TokPropPrefix}total-cnt").toLong + deltaTotal
-    val mdl2 =
-      if (appended == 0L) mdl
-      else graft.table.TableOps.append(mdl, deltas)
-    mdl2.newTransaction().setProperties(Map(
-      s"${TokPropPrefix}source-snapshot-id" -> head.toString,
-      s"${TokPropPrefix}total-cnt" -> total.toString)).commit()
-    (new StructType().add("model_table", StringType)
-      .add("pieces_appended", LongType).add("total_cnt", LongType)
-      .add("source_snapshot_id", LongType),
-      Seq(mdlName, appended, total, head))
+      .add(if (incremental) "pieces_appended" else "pieces", LongType)
+      .add("total_cnt", LongType).add("source_snapshot_id", LongType),
+      Seq(mdlName, w.appended, w.total(art.key("total-cnt")), w.anchor))
   }
 
   /** `train_lm(ns, table)`: persist the trigram stupid-backoff LM's
@@ -2495,115 +2074,21 @@ private[sources] class GraftBoundProcedure(
     * is one overwrite snapshot. */
   private def trainLm(t: Table,
       spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
-      textCol: String, mdlName: String,
-      snapRaw: Long): (StructType, Seq[Any]) = {
-    val snapId =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"train_lm: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"train_lm: snapshot_id $snapRaw not found")
-      else snapRaw
-    val df = graft.table.Scan(t, spark).useSnapshot(snapId).toDF
-    // the ledger is vocabulary-sized: eager-materialize so the total,
-    // the row count, and the write don't each re-run the corpus pass
-    val lg = graft.ops.LangModel.gramCounts(df, textCol)
-      .localCheckpoint(true)
-    val total = unigramTotal(lg)
-    val gSchema = graft.spec.SchemaConverters.fromSparkSchema(lg.schema)
-    val props = Map(
-      s"${LmPropPrefix}source-table" -> s"$ns.$tbl",
-      s"${LmPropPrefix}source-snapshot-id" -> snapId.toString,
-      s"${LmPropPrefix}text-col" -> textCol,
-      s"${LmPropPrefix}total-tokens" -> total.toString)
-    val mdlId = TableIdentifier(ns.split('.').toSeq, mdlName)
-    if (catalog.tableExists(mdlId)) {
-      val existing = Table.load(catalog, mdlId, io)
-      val after = graft.table.Mutations.overwrite(existing, spark, lg)
-      after.newTransaction().setProperties(props).commit()
-    } else {
-      val created = Table.create(catalog, mdlId, gSchema,
-        properties = props, io = io)
-      graft.table.TableOps.append(created, lg)
-    }
+      textCol: String, mdlName: String, snapRaw: Long,
+      incremental: Boolean): (StructType, Seq[Any]) = {
+    val art = Derived.LmLedger(textCol)
+    val w =
+      if (incremental) {
+        val c = new Chain(art.proc, "model", mdlName, art.ns, t, ns, tbl,
+          snapRaw)
+        c.requireSame("text-col" -> textCol)
+        c.run(art.delta(c.fresh(spark), c.props))
+      } else buildArtifact(art, t, spark, ns, tbl, mdlName, snapRaw,
+        Map("text-col" -> textCol))
     (new StructType().add("model_table", StringType)
-      .add("grams", LongType).add("total_tokens", LongType)
-      .add("source_snapshot_id", LongType),
-      Seq(mdlName, lg.count(), total, snapId))
-  }
-
-  /** Exact token total of a gram ledger: Σ cnt over the n = 1 rows
-    * (the unigram slice) — the stupid-backoff floor's denominator. */
-  private def unigramTotal(ledger:
-      org.apache.spark.sql.DataFrame): Long = {
-    import org.apache.spark.sql.functions.{col, sum}
-    Option(ledger.where(col("n") === 1).agg(sum("cnt")).head.get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-  }
-
-  /** `train_lm(incremental => true)`: chain the gram ledger to the
-    * source head WITHOUT a rebuild — append the count DELTAS of rows
-    * added since the recorded snapshot and advance the stamped token
-    * total by exact long arithmetic. Same contract as
-    * `train_tokenizer`'s chain: `appendsBetween` skips replace
-    * snapshots (source compaction never re-delivers); rows DELETED
-    * from the source keep their counts until a full rebuild; two
-    * commits, so a crash between them leaves a visibly short stamp,
-    * never a double count. */
-  private def appendToLm(t: Table,
-      spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
-      textCol: String, mdlName: String,
-      snapRaw: Long): (StructType, Seq[Any]) = {
-    val mdlId = TableIdentifier(ns.split('.').toSeq, mdlName)
-    if (!catalog.tableExists(mdlId))
-      throw new IllegalArgumentException(s"train_lm: model " +
-        s"$mdlName does not exist - run a full train first " +
-        "(incremental => false)")
-    val mdl = Table.load(catalog, mdlId, io)
-    def prop(k: String): String = mdl.metadata.properties.getOrElse(k,
-      throw new IllegalArgumentException(s"train_lm: $mdlName " +
-        s"has no '$k' property - not a train_lm table"))
-    val srcTable = prop(s"${LmPropPrefix}source-table")
-    if (srcTable != s"$ns.$tbl")
-      throw new IllegalArgumentException(s"train_lm: model " +
-        s"$mdlName was trained from $srcTable, not $ns.$tbl")
-    if (prop(s"${LmPropPrefix}text-col") != textCol)
-      throw new IllegalArgumentException(s"train_lm: model " +
-        s"$mdlName was trained on " +
-        s"${prop(s"${LmPropPrefix}text-col")}, call uses $textCol")
-    val recorded = prop(s"${LmPropPrefix}source-snapshot-id").toLong
-    if (t.snapshotById(recorded).isEmpty)
-      throw new IllegalArgumentException(s"train_lm: model " +
-        s"$mdlName records source snapshot $recorded which no longer " +
-        "exists (expired?) - retrain the model")
-    val head =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"train_lm: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"train_lm: snapshot_id $snapRaw not found")
-      else snapRaw
-    val fresh =
-      if (head == recorded)
-        graft.table.Scan(t, spark).toDF.limit(0)
-      else graft.table.Scan(t, spark).appendsBetween(recorded, head).toDF
-    val deltas = graft.ops.LangModel.gramCounts(fresh, textCol)
-      .localCheckpoint(true)
-    val deltaTotal = unigramTotal(deltas)
-    val appended = deltas.count()
-    val total = prop(s"${LmPropPrefix}total-tokens").toLong + deltaTotal
-    val mdl2 =
-      if (appended == 0L) mdl
-      else graft.table.TableOps.append(mdl, deltas)
-    mdl2.newTransaction().setProperties(Map(
-      s"${LmPropPrefix}source-snapshot-id" -> head.toString,
-      s"${LmPropPrefix}total-tokens" -> total.toString)).commit()
-    (new StructType().add("model_table", StringType)
-      .add("grams_appended", LongType).add("total_tokens", LongType)
-      .add("source_snapshot_id", LongType),
-      Seq(mdlName, appended, total, head))
+      .add(if (incremental) "grams_appended" else "grams", LongType)
+      .add("total_tokens", LongType).add("source_snapshot_id", LongType),
+      Seq(mdlName, w.appended, w.total(art.key("total-tokens")), w.anchor))
   }
 
   /** `score_text(ns, model_table, 'free text')`: score a literal
@@ -2636,133 +2121,37 @@ private[sources] class GraftBoundProcedure(
     * table with the source snapshot, text column, and label predicate
     * stamped as properties. Counts — not the derived weights — are
     * what persists: they are ADDITIVE over disjoint document sets, so
-    * `incremental => true` chains new docs' count deltas and the read
-    * path's sum-merge ([[graft.ops.Classifier.weightsFromCounts]])
-    * equals a full refit bit-for-bit. The label predicate is any SQL
-    * boolean expression over the table's columns (true → positive,
-    * false → negative, NULL → neither). */
+    * `incremental => true` chains new docs' count deltas (labeled with
+    * the STAMPED predicate; a different one errors rather than
+    * silently corrupting the model) and the read path's sum-merge
+    * ([[graft.ops.Classifier.weightsFromCounts]]) equals a full refit
+    * bit-for-bit. The label predicate is any SQL boolean expression
+    * over the table's columns (true → positive, false → negative,
+    * NULL → neither). */
   private def trainClassifier(t: Table,
       spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
       labelPred: String, textCol: String, mdlName: String,
-      snapRaw: Long): (StructType, Seq[Any]) = {
-    val snapId =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"train_classifier: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"train_classifier: snapshot_id $snapRaw not found")
-      else snapRaw
-    val df = graft.table.Scan(t, spark).useSnapshot(snapId).toDF
-    val lg = graft.ops.Classifier.labelCounts(df,
-        org.apache.spark.sql.functions.expr(labelPred), textCol)
-      .localCheckpoint(true)
-    val (posTot, negTot) = ledgerTotals(lg)
-    val gSchema = graft.spec.SchemaConverters.fromSparkSchema(lg.schema)
-    val props = Map(
-      s"${ClfPropPrefix}source-table" -> s"$ns.$tbl",
-      s"${ClfPropPrefix}source-snapshot-id" -> snapId.toString,
-      s"${ClfPropPrefix}text-col" -> textCol,
-      s"${ClfPropPrefix}label-pred" -> labelPred,
-      s"${ClfPropPrefix}pos-tokens" -> posTot.toString,
-      s"${ClfPropPrefix}neg-tokens" -> negTot.toString)
-    val mdlId = TableIdentifier(ns.split('.').toSeq, mdlName)
-    if (catalog.tableExists(mdlId)) {
-      val existing = Table.load(catalog, mdlId, io)
-      val after = graft.table.Mutations.overwrite(existing, spark, lg)
-      after.newTransaction().setProperties(props).commit()
-    } else {
-      val created = Table.create(catalog, mdlId, gSchema,
-        properties = props, io = io)
-      graft.table.TableOps.append(created, lg)
-    }
+      snapRaw: Long, incremental: Boolean): (StructType, Seq[Any]) = {
+    val art = Derived.ClfLedger(textCol)
+    val w =
+      if (incremental) {
+        val c = new Chain(art.proc, "model", mdlName, art.ns, t, ns, tbl,
+          snapRaw)
+        c.requireSame("text-col" -> textCol)
+        if (c.prop("label-pred") != labelPred)
+          throw new IllegalArgumentException(s"train_classifier: model " +
+            s"$mdlName was labeled by '${c.prop("label-pred")}', call " +
+            s"uses '$labelPred' - chaining mixed labelings would " +
+            "corrupt the model")
+        c.run(art.delta(c.fresh(spark), c.props))
+      } else buildArtifact(art, t, spark, ns, tbl, mdlName, snapRaw,
+        Map("text-col" -> textCol, "label-pred" -> labelPred))
     (new StructType().add("model_table", StringType)
-      .add("buckets", LongType).add("pos_tokens", LongType)
-      .add("neg_tokens", LongType).add("source_snapshot_id", LongType),
-      Seq(mdlName, lg.count(), posTot, negTot, snapId))
-  }
-
-  /** Exact positive / negative token totals of a classifier ledger. */
-  private def ledgerTotals(ledger:
-      org.apache.spark.sql.DataFrame): (Long, Long) = {
-    import org.apache.spark.sql.functions.sum
-    val r = ledger.agg(sum("p_cnt"), sum("n_cnt")).head
-    (Option(r.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L),
-      Option(r.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L))
-  }
-
-  /** `train_classifier(incremental => true)`: chain the bucket-count
-    * ledger to the source head WITHOUT a refit — append the count
-    * DELTAS of rows added since the recorded snapshot (labeled with
-    * the STAMPED predicate; a different predicate errors rather than
-    * silently corrupting the model) and advance the stamped totals by
-    * exact long arithmetic. `appendsBetween` skips replace snapshots;
-    * rows DELETED from the source keep their counts until a full
-    * rebuild; two commits, so a crash between them leaves a visibly
-    * short stamp, never a double count. */
-  private def appendToClassifier(t: Table,
-      spark: org.apache.spark.sql.SparkSession, ns: String, tbl: String,
-      labelPred: String, textCol: String, mdlName: String,
-      snapRaw: Long): (StructType, Seq[Any]) = {
-    val mdlId = TableIdentifier(ns.split('.').toSeq, mdlName)
-    if (!catalog.tableExists(mdlId))
-      throw new IllegalArgumentException(s"train_classifier: model " +
-        s"$mdlName does not exist - run a full train first " +
-        "(incremental => false)")
-    val mdl = Table.load(catalog, mdlId, io)
-    def prop(k: String): String = mdl.metadata.properties.getOrElse(k,
-      throw new IllegalArgumentException(s"train_classifier: " +
-        s"$mdlName has no '$k' property - not a train_classifier " +
-        "table"))
-    val srcTable = prop(s"${ClfPropPrefix}source-table")
-    if (srcTable != s"$ns.$tbl")
-      throw new IllegalArgumentException(s"train_classifier: model " +
-        s"$mdlName was trained from $srcTable, not $ns.$tbl")
-    if (prop(s"${ClfPropPrefix}text-col") != textCol)
-      throw new IllegalArgumentException(s"train_classifier: model " +
-        s"$mdlName was trained on " +
-        s"${prop(s"${ClfPropPrefix}text-col")}, call uses $textCol")
-    if (prop(s"${ClfPropPrefix}label-pred") != labelPred)
-      throw new IllegalArgumentException(s"train_classifier: model " +
-        s"$mdlName was labeled by " +
-        s"'${prop(s"${ClfPropPrefix}label-pred")}', call uses " +
-        s"'$labelPred' - chaining mixed labelings would corrupt " +
-        "the model")
-    val recorded = prop(s"${ClfPropPrefix}source-snapshot-id").toLong
-    if (t.snapshotById(recorded).isEmpty)
-      throw new IllegalArgumentException(s"train_classifier: model " +
-        s"$mdlName records source snapshot $recorded which no longer " +
-        "exists (expired?) - retrain the model")
-    val head =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"train_classifier: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"train_classifier: snapshot_id $snapRaw not found")
-      else snapRaw
-    val fresh =
-      if (head == recorded)
-        graft.table.Scan(t, spark).toDF.limit(0)
-      else graft.table.Scan(t, spark).appendsBetween(recorded, head).toDF
-    val deltas = graft.ops.Classifier.labelCounts(fresh,
-        org.apache.spark.sql.functions.expr(labelPred), textCol)
-      .localCheckpoint(true)
-    val (dPos, dNeg) = ledgerTotals(deltas)
-    val appended = deltas.count()
-    val posTot = prop(s"${ClfPropPrefix}pos-tokens").toLong + dPos
-    val negTot = prop(s"${ClfPropPrefix}neg-tokens").toLong + dNeg
-    val mdl2 =
-      if (appended == 0L) mdl
-      else graft.table.TableOps.append(mdl, deltas)
-    mdl2.newTransaction().setProperties(Map(
-      s"${ClfPropPrefix}source-snapshot-id" -> head.toString,
-      s"${ClfPropPrefix}pos-tokens" -> posTot.toString,
-      s"${ClfPropPrefix}neg-tokens" -> negTot.toString)).commit()
-    (new StructType().add("model_table", StringType)
-      .add("buckets_appended", LongType).add("pos_tokens", LongType)
-      .add("neg_tokens", LongType).add("source_snapshot_id", LongType),
-      Seq(mdlName, appended, posTot, negTot, head))
+      .add(if (incremental) "buckets_appended" else "buckets", LongType)
+      .add("pos_tokens", LongType).add("neg_tokens", LongType)
+      .add("source_snapshot_id", LongType),
+      Seq(mdlName, w.appended, w.total(art.key("pos-tokens")),
+        w.total(art.key("neg-tokens")), w.anchor))
   }
 
   /** `classify_text(ns, model_table, 'free text')`: score a literal
@@ -2838,14 +2227,7 @@ private[sources] class GraftBoundProcedure(
     if (numHashes <= 0 || numHashes % 16 != 0)
       throw new IllegalArgumentException("build_dedup_index: " +
         s"num_hashes must be a positive multiple of 16, got $numHashes")
-    val snapId =
-      if (snapRaw == -1L) t.currentSnapshot.map(_.snapshotId).getOrElse(
-        throw new IllegalArgumentException(
-          s"build_dedup_index: $ns.$tbl has no snapshots"))
-      else if (t.snapshotById(snapRaw).isEmpty)
-        throw new IllegalArgumentException(
-          s"build_dedup_index: snapshot_id $snapRaw not found")
-      else snapRaw
+    val snapId = snapshotOf("build_dedup_index", t, ns, tbl, snapRaw)
     val df = graft.table.Scan(t, spark).useSnapshot(snapId).toDF
     val sig = graft.ops.Dedup.signatureFrame(df, textCol, idCol,
       numHashes)
@@ -2855,25 +2237,12 @@ private[sources] class GraftBoundProcedure(
       IdxPropTextCol -> textCol,
       IdxPropIdCol -> idCol,
       IdxPropNumHashes -> numHashes.toString)
-    val idxId = TableIdentifier(ns.split('.').toSeq, idxName)
-    val committed =
-      if (catalog.tableExists(idxId)) {
-        val existing = Table.load(catalog, idxId, io)
-        val after = graft.table.Mutations.overwrite(existing, spark, sig)
-        after.newTransaction().setProperties(props).commit()
-      } else {
-        val created = Table.create(catalog, idxId,
-          graft.spec.SchemaConverters.fromSparkSchema(sig.schema),
-          properties = props, io = io)
-        graft.table.TableOps.append(created, sig)
-      }
-    val indexed = committed.currentSnapshot.flatMap(_.summary)
-      .flatMap(_.counters.get(graft.spec.Summary.AddedRecords))
-      .getOrElse(graft.table.Scan(committed, spark).count())
+    val committed = Derived.build(catalog,
+      TableIdentifier(ns.split('.').toSeq, idxName), io, sig, props)
     (new StructType().add("index_table", StringType)
       .add("docs_indexed", LongType)
       .add("source_snapshot_id", LongType),
-      Seq(idxName, indexed, snapId))
+      Seq(idxName, added(committed), snapId))
   }
 
   /** Index-backed incremental `dedup_table`: same policy and report as
@@ -2944,20 +2313,16 @@ private[sources] class GraftBoundProcedure(
     val removed = removalsM.count()
     val after = if (removed > 0L)
       graft.table.Mutations.deleteByKeys(t, spark, removalsM) else t
-    // index maintenance: one batch-sized append + a property bump —
-    // the index chains to the new head without touching base rows
-    val newHead = after.currentSnapshot.map(_.snapshotId).getOrElse(head)
-    val idx2 =
-      if (head == since) idx
-      else {
-        val survivors = fresh.join(
-          removalsM.select(idCol), Seq(idCol), "left_anti")
-        graft.table.TableOps.append(idx, graft.ops.Dedup.signatureFrame(
-          survivors, textCol, idCol, numHashes))
-      }
-    idx2.newTransaction()
-      .setProperties(Map(IdxPropSourceSnapshot -> newHead.toString))
-      .commit()
+    // index maintenance, one chain commit: the surviving batch rows'
+    // signatures, with the anchor moved to the post-delete head
+    if (head != since) {
+      val survivors = fresh.join(
+        removalsM.select(idCol), Seq(idCol), "left_anti")
+      Derived.chain(idx, IdxPropSourceSnapshot, since,
+        after.currentSnapshot.map(_.snapshotId).getOrElse(head),
+        Derived.Delta(graft.ops.Dedup.signatureFrame(
+          survivors, textCol, idCol, numHashes)))
+    }
     (new StructType().add("docs_before", LongType)
       .add("docs_kept", LongType).add("docs_removed", LongType),
       Seq(before, before - removed, removed))
@@ -2984,4 +2349,14 @@ private[sources] object GraftBoundProcedure {
   private[sources] val PackDefaultDocsPerShard = 100L
   private val LmPropPrefix = "graft.lm-model."
   private val ClfPropPrefix = "graft.clf-model."
+  /** A derived table after its one commit (or none), for the report:
+    * the source snapshot it now covers and the records it appended. */
+  private final case class Written(table: Table, anchor: Long,
+      appended: Long) {
+    def total(k: String): Long = table.metadata.properties(k).toLong
+  }
+  /** An incremental call's derived-table noun → (its full-run verb,
+    * that verb's participle), for the chain's error messages. */
+  private val Verbs = Map("index" -> ("build", "built"),
+    "model" -> ("train", "trained"), "target" -> ("pack", "packed"))
 }

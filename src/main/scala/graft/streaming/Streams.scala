@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.sources.TaskWrite
-import graft.table.{PendingSnapshot, Table, TableOps}
+import graft.table.{Derived, PendingSnapshot, Table, TableOps}
 import graft.spec.{Operation, TableMetadata}
 
 /** Structured Streaming surface (engine capability beyond the
@@ -163,25 +163,6 @@ object Streams {
         catch { case t: Throwable => gate.abort(batchId); throw t }
       }
 
-    /** Index/model payload commit: the payload rides the SAME commit
-      * as the computed stamp (atomic — that batch can never
-      * double-deliver into the index), with the stamp map recomputed
-      * from refreshed metadata on every CAS attempt so concurrent
-      * writers' increments survive conflict retries. */
-    protected final def commitPayload(payload: DataFrame,
-        stamp: TableMetadata => Map[String, String]): Unit =
-      indexRef = TableOps.appendComputed(indexRef, payload, stamp)
-
-    /** No-payload batches stamp property-only — through
-      * [[TableOps.stampComputed]]'s empty-snapshot commit, whose
-      * branch-ref assertion serializes the stamp against EVERY
-      * concurrent commit (a bare property transaction would re-apply
-      * stale read-modify-write arithmetic on retry and silently lose
-      * a concurrent writer's increment, even at zero local delta). */
-    protected final def stampIndex(
-        stamp: TableMetadata => Map[String, String]): Unit =
-      indexRef = TableOps.stampComputed(indexRef, stamp)
-
     protected final def batchStamp(batchId: Long): (String, String) =
       batchIdProp(propNs, streamId) -> batchId.toString
 
@@ -221,27 +202,23 @@ object Streams {
   }
 
   /** [[MicroBatchSink]] body shared by the six index/model INGEST
-    * sinks: append the pinned batch to the corpus (sink) table, build
-    * the per-sink index payload plus its additive stamp arithmetic,
-    * and commit the index with the `source-snapshot-id` anchor and
-    * batch watermark riding the payload append. Additive properties
-    * (corpus stats, token totals) recompute from refreshed metadata on
-    * every CAS attempt, and the anchor resolves by sink commit order
-    * ([[Streams.resolveSourceAnchor]]) in that same loop. */
-  private[streaming] abstract class AnchoredIngestSink(propNs0: String,
-      what: String, initialSink: Table, initialIndex: Table,
-      streamId0: String)
-      extends MicroBatchSink(propNs0, streamId0, what, initialIndex) {
+    * sinks: append the pinned batch to the corpus (sink) table, take
+    * the artifact's delta of the batch ([[Derived.Artifact]] — the one
+    * definition the `incremental => true` procedures use too) and
+    * commit it with [[Derived.commit]], the `source-snapshot-id` anchor
+    * and batch watermark riding the same commit. Additive totals
+    * recompute from refreshed metadata on every CAS attempt, and the
+    * anchor resolves by sink commit order
+    * ([[Streams.resolveSourceAnchor]]) in that same loop. The index
+    * must carry every stamp the artifact reads. */
+  private[streaming] abstract class AnchoredIngestSink(
+      artifact: Derived.Artifact, what: String, initialSink: Table,
+      initialIndex: Table, streamId0: String)
+      extends MicroBatchSink(artifact.ns, streamId0, what, initialIndex) {
+    artifact.requireStamps(indexRef.metadata.properties, what)
     // refreshed for the same reason as indexRef: the pending-sink
     // check and the batch-snapshot anchor lookup read sink metadata
     @volatile protected var sinkRef: Table = initialSink.refresh()
-
-    /** Per-sink payload build from the pinned batch: returns the index
-      * payload, whether it is non-empty (the probe is per-sink — e.g.
-      * the tokenizer ledger keys on its delta total), and the additive
-      * property arithmetic to recompute per CAS attempt. */
-    protected def prepare(batch: DataFrame):
-        (DataFrame, Boolean, TableMetadata => Map[String, String])
 
     protected final def runBatch(batch: DataFrame,
         batchId: Long): Unit = {
@@ -263,19 +240,15 @@ object Streams {
             props = sinkStamp(batchId), summary = sinkStamp(batchId))
           sinkRef.currentSnapshot.map(_.snapshotId)
       }
-      val (payload, hasPayload, additive) = prepare(batch)
+      val d = artifact.delta(batch, indexRef.metadata.properties)
       // a no-payload batch (all-NULL texts, wrong-dim vectors, no
       // tokens) still stamps: the sink head moved and a later
       // procedure chain must not re-deliver those corpus rows
       hOpt.foreach { h =>
-        val anchorProp = s"$propNs.source-snapshot-id"
-        def stamp(m: TableMetadata): Map[String, String] =
-          additive(m) +
-            (anchorProp -> resolveSourceAnchor(m, anchorProp, h,
-              sinkRef.metadata).toString) +
-            batchStamp(batchId)
-        if (hasPayload) commitPayload(payload, stamp)
-        else stampIndex(stamp)
+        indexRef = Derived.commit(indexRef, d, m =>
+          d.over(m.properties) + (artifact.anchor -> resolveSourceAnchor(
+            m, artifact.anchor, h, sinkRef.metadata).toString) +
+            batchStamp(batchId))
       }
     }
 
@@ -421,18 +394,12 @@ object Streams {
       else graft.ops.Dedup.indexedExactRemovals(batch, idxDf, textCol,
         idCol)).localCheckpoint(true)
       val survivors = batch.join(removals, Seq(idCol), "left_anti")
-      // the batch watermark rides the signature append (atomic: a
-      // restarted handle can never double-deliver these signatures);
-      // an all-duplicate batch stamps property-only (see
-      // stampedBatchId)
-      if (!survivors.isEmpty) {
-        val pinned = survivors.localCheckpoint(true)
-        if (!heal)
-          sinkRef = TableOps.append(sinkRef, pinned,
-            props = sinkStamp(batchId), summary = sinkStamp(batchId))
-        commitPayload(graft.ops.Dedup.signatureFrame(pinned, textCol,
-          idCol, numHashes), _ => Map(batchStamp(batchId)))
-      } else if (heal)
+        .localCheckpoint(true)
+      val kept = !survivors.isEmpty
+      if (kept && !heal)
+        sinkRef = TableOps.append(sinkRef, survivors,
+          props = sinkStamp(batchId), summary = sinkStamp(batchId))
+      else if (!kept && heal)
         // the pending sink commit had survivors by construction; an
         // empty recompute means the re-delivered batch is NOT the
         // pending one — converging on it would corrupt the index
@@ -440,7 +407,12 @@ object Streams {
           s"batch $batchId recomputed no survivors, but its sink " +
           "commit appended rows — the re-delivered batch does not " +
           "match the one whose signature commit failed")
-      else stampIndex(_ => Map(batchStamp(batchId)))
+      // the batch watermark rides the signature append (atomic: a
+      // restarted handle can never double-deliver these signatures);
+      // an all-duplicate batch stamps with no rows (see stampedBatchId)
+      indexRef = Derived.commit(indexRef, new Derived.Delta(
+        graft.ops.Dedup.signatureFrame(survivors, textCol, idCol,
+          numHashes), Map.empty, kept), _ => Map(batchStamp(batchId)))
     }
 
     def sink: Table = sinkRef
@@ -457,9 +429,9 @@ object Streams {
   /** Streaming ANN-index ingestion for `writeStream.foreachBatch`,
     * backed by a persisted `build_ann_index` table: each micro-batch's
     * vectors are appended to the corpus (sink) table AND — assigned
-    * with the index's FROZEN stamped centroids, read once at handle
-    * construction — into their cells in the index, then the index's
-    * recorded source snapshot advances to the sink head. Searches
+    * with the index's FROZEN stamped centroids — into their cells in
+    * the index, then the index's recorded source snapshot advances to
+    * the sink head. Searches
     * ([[graft.ops.Similarity.ivfTopKFromIndex]]) therefore see new
     * vectors one micro-batch after arrival with no refit, no
     * assignment scan, and no state-store growth (the inverted file IS
@@ -473,30 +445,8 @@ object Streams {
   final class AnnIndexIngestSink(initialSink: Table, initialIndex: Table,
       vecCol: String = "embedding", idCol: String = "vec_id",
       streamId: String = "")
-      extends AnchoredIngestSink("graft.ann-index", "AnnIndexIngestSink",
-        initialSink, initialIndex, streamId) {
-    private val centroids = graft.ops.Similarity.centroidsFromJson(
-      initialIndex.metadata.properties.getOrElse(
-        "graft.ann-index.centroids",
-        throw new IllegalArgumentException("AnnIndexIngestSink: " +
-          "index has no centroids property — not a build_ann_index " +
-          "table")))
-    private val dim =
-      initialIndex.metadata.properties("graft.ann-index.dim").toInt
-
-    /** Frozen-centroid cell assignment; wrong-dim rows land in the
-      * corpus but not the index (the full-build contract). */
-    protected def prepare(batch: DataFrame): (DataFrame, Boolean,
-        TableMetadata => Map[String, String]) = {
-      val payload = batch.where(size(col(vecCol)) === dim)
-        .select(col(idCol),
-          graft.ops.Similarity.nearestCell(col(vecCol), centroids)
-            .as("cell"),
-          graft.ops.Similarity.l2norm(col(vecCol)).as("norm"),
-          col(vecCol))
-      (payload, !payload.isEmpty, _ => Map.empty)
-    }
-  }
+      extends AnchoredIngestSink(Derived.AnnCells(vecCol, idCol),
+        "AnnIndexIngestSink", initialSink, initialIndex, streamId)
 
   def annIndexIngestSink(sink: Table, index: Table,
       vecCol: String = "embedding", idCol: String = "vec_id",
@@ -522,34 +472,8 @@ object Streams {
   final class TextIndexIngestSink(initialSink: Table,
       initialIndex: Table, textCol: String = "text",
       idCol: String = "doc_id", streamId: String = "")
-      extends AnchoredIngestSink("graft.text-index",
-        "TextIndexIngestSink", initialSink, initialIndex, streamId) {
-    private val numBuckets = initialIndex.metadata.properties.getOrElse(
-      "graft.text-index.num-buckets",
-      throw new IllegalArgumentException("TextIndexIngestSink: index " +
-        "has no num-buckets property — not a build_text_index table"))
-      .toInt
-
-    /** Term-bucketed postings; the additive corpus stats (n-docs /
-      * total-dl, exact long arithmetic) recompute per CAS attempt so a
-      * concurrent stream's increment is never overwritten by this
-      * batch's stale arithmetic. NULL-text docs count toward n-docs
-      * and produce no postings (the build contract). */
-    protected def prepare(batch: DataFrame): (DataFrame, Boolean,
-        TableMetadata => Map[String, String]) = {
-      val payload = graft.ops.Retrieval.postings(batch, textCol, idCol)
-        .withColumn("tbucket", graft.functions.IcebergFunctions
-          .icebergBucket(col("term"), numBuckets))
-      val (bDocs, bDl) = graft.ops.Retrieval.corpusStats(batch, textCol)
-      (payload, !payload.isEmpty, m => Map(
-        "graft.text-index.n-docs" ->
-          (m.properties("graft.text-index.n-docs").toLong + bDocs)
-            .toString,
-        "graft.text-index.total-dl" ->
-          (m.properties("graft.text-index.total-dl").toLong + bDl)
-            .toString))
-    }
-  }
+      extends AnchoredIngestSink(Derived.TextPostings(textCol, idCol),
+        "TextIndexIngestSink", initialSink, initialIndex, streamId)
 
   def textIndexIngestSink(sink: Table, index: Table,
       textCol: String = "text", idCol: String = "doc_id",
@@ -571,32 +495,9 @@ object Streams {
   final class TokenizerLedgerIngestSink(initialSink: Table,
       initialModel: Table, textCol: String = "text",
       streamId: String = "")
-      extends AnchoredIngestSink("graft.tok-model",
+      extends AnchoredIngestSink(Derived.TokLedger(textCol),
         "TokenizerLedgerIngestSink", initialSink, initialModel,
         streamId) {
-    private val maxPieceLen = initialModel.metadata.properties
-      .getOrElse("graft.tok-model.max-piece-len",
-        throw new IllegalArgumentException("TokenizerLedgerIngestSink" +
-          ": table has no max-piece-len property — not a " +
-          "train_tokenizer model table")).toInt
-
-    /** Piece-count deltas; the additive total (exact long arithmetic)
-      * recomputes per CAS attempt. The payload probe keys on the delta
-      * total: a no-word batch stamps property-only. */
-    protected def prepare(batch: DataFrame): (DataFrame, Boolean,
-        TableMetadata => Map[String, String]) = {
-      val deltas = graft.ops.Unigram.pieceCounts(
-        graft.ops.Bpe.wordCounts(batch, textCol), maxPieceLen)
-        .localCheckpoint(true)
-      val dTotal = Option(deltas.agg(
-          org.apache.spark.sql.functions.sum("cnt")).head.get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      (deltas, dTotal > 0L, m => Map(
-        "graft.tok-model.total-cnt" ->
-          (m.properties("graft.tok-model.total-cnt").toLong + dTotal)
-            .toString))
-    }
-
     def model: Table = indexRef
   }
 
@@ -621,28 +522,8 @@ object Streams {
   final class LmLedgerIngestSink(initialSink: Table,
       initialModel: Table, textCol: String = "text",
       streamId: String = "")
-      extends AnchoredIngestSink("graft.lm-model", "LmLedgerIngestSink",
-        initialSink, initialModel, streamId) {
-    if (!initialModel.metadata.properties.contains(
-        "graft.lm-model.total-tokens"))
-      throw new IllegalArgumentException("LmLedgerIngestSink: table " +
-        "has no total-tokens property — not a train_lm model table")
-
-    /** Gram-count deltas; the additive token total (unigram rows only,
-      * exact long arithmetic) recomputes per CAS attempt. */
-    protected def prepare(batch: DataFrame): (DataFrame, Boolean,
-        TableMetadata => Map[String, String]) = {
-      val deltas = graft.ops.LangModel.gramCounts(batch, textCol)
-        .localCheckpoint(true)
-      val dTotal = Option(deltas.where(col("n") === 1)
-          .agg(org.apache.spark.sql.functions.sum("cnt")).head.get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      (deltas, !deltas.isEmpty, m => Map(
-        "graft.lm-model.total-tokens" ->
-          (m.properties("graft.lm-model.total-tokens").toLong + dTotal)
-            .toString))
-    }
-
+      extends AnchoredIngestSink(Derived.LmLedger(textCol),
+        "LmLedgerIngestSink", initialSink, initialModel, streamId) {
     def model: Table = indexRef
   }
 
@@ -668,38 +549,9 @@ object Streams {
   final class ClassifierLedgerIngestSink(initialSink: Table,
       initialModel: Table, textCol: String = "text",
       streamId: String = "")
-      extends AnchoredIngestSink("graft.clf-model",
+      extends AnchoredIngestSink(Derived.ClfLedger(textCol),
         "ClassifierLedgerIngestSink", initialSink, initialModel,
         streamId) {
-    private val labelPred = initialModel.metadata.properties
-      .getOrElse("graft.clf-model.label-pred",
-        throw new IllegalArgumentException("ClassifierLedgerIngestSink" +
-          ": table has no label-pred property — not a " +
-          "train_classifier model table"))
-
-    /** Bucket-count deltas labeled with the model's STAMPED predicate;
-      * the additive pos/neg token totals (exact long arithmetic)
-      * recompute per CAS attempt. */
-    protected def prepare(batch: DataFrame): (DataFrame, Boolean,
-        TableMetadata => Map[String, String]) = {
-      val deltas = graft.ops.Classifier.labelCounts(batch,
-          expr(labelPred), textCol)
-        .localCheckpoint(true)
-      val tots = deltas.agg(
-        org.apache.spark.sql.functions.sum("p_cnt"),
-        org.apache.spark.sql.functions.sum("n_cnt")).head
-      def tot(i: Int): Long = if (tots.isNullAt(i)) 0L
-        else tots.getLong(i)
-      val (dPos, dNeg) = (tot(0), tot(1))
-      (deltas, !deltas.isEmpty, m => Map(
-        "graft.clf-model.pos-tokens" ->
-          (m.properties("graft.clf-model.pos-tokens").toLong + dPos)
-            .toString,
-        "graft.clf-model.neg-tokens" ->
-          (m.properties("graft.clf-model.neg-tokens").toLong + dNeg)
-            .toString))
-    }
-
     def model: Table = indexRef
   }
 
@@ -712,8 +564,8 @@ object Streams {
     * the codes twin of [[AnnIndexIngestSink]], backed by a persisted
     * `build_pq_index` table: each micro-batch's vectors append to the
     * corpus table and their PQ codes (encoded with the index's FROZEN
-    * stamped codebooks, read once at handle construction) to the codes
-    * table, snapshot stamp advancing with the corpus head. Codes are
+    * stamped codebooks) to the codes table, snapshot stamp advancing
+    * with the corpus head. Codes are
     * per-row deterministic given the frozen model, so — like the batch
     * chain i44 gates — the streamed index equals a frozen-model
     * re-encode at every batch boundary, and `build_pq_index(
@@ -725,26 +577,8 @@ object Streams {
   final class PqIndexIngestSink(initialSink: Table, initialIndex: Table,
       vecCol: String = "embedding", idCol: String = "vec_id",
       streamId: String = "")
-      extends AnchoredIngestSink("graft.pq-index", "PqIndexIngestSink",
-        initialSink, initialIndex, streamId) {
-    private val codebooks = graft.ops.Similarity.pqCodebooksFromJson(
-      initialIndex.metadata.properties.getOrElse(
-        "graft.pq-index.codebooks",
-        throw new IllegalArgumentException("PqIndexIngestSink: index " +
-          "has no codebooks property — not a build_pq_index table")),
-      initialIndex.metadata.properties("graft.pq-index.ksub").toInt)
-    private val dim =
-      initialIndex.metadata.properties("graft.pq-index.dim").toInt
-
-    /** Frozen-codebook encoding; wrong-dim rows land in the corpus but
-      * not the index (the full-build contract). */
-    protected def prepare(batch: DataFrame): (DataFrame, Boolean,
-        TableMetadata => Map[String, String]) = {
-      val payload = graft.ops.Similarity.pqEncode(
-        batch.where(size(col(vecCol)) === dim), codebooks, vecCol, idCol)
-      (payload, !payload.isEmpty, _ => Map.empty)
-    }
-  }
+      extends AnchoredIngestSink(Derived.PqCodes(vecCol, idCol),
+        "PqIndexIngestSink", initialSink, initialIndex, streamId)
 
   def pqIndexIngestSink(sink: Table, index: Table,
       vecCol: String = "embedding", idCol: String = "vec_id",

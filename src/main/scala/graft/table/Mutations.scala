@@ -265,13 +265,15 @@ object Mutations {
   }
 
   /** Full overwrite (T2, `table/insert.go:173-182`): all live files
-    * deleted, new content appended, one `overwrite` snapshot. */
-  def overwrite(table: Table, spark: SparkSession, df: DataFrame): Table = {
+    * deleted, new content appended, one `overwrite` snapshot; `props`
+    * are set in that same commit. */
+  def overwrite(table: Table, spark: SparkSession, df: DataFrame,
+      props: Map[String, String] = Map.empty): Table = {
     val allFiles = Scan(table, spark).planFiles().map(_.file.filePath)
     val newFiles = TaskWrite(spark, table, df)
     table.commitSnapshot(PendingSnapshot(Operation.Overwrite,
       addedDataFiles = newFiles,
-      deletedFilePaths = allFiles.toSet))
+      deletedFilePaths = allFiles.toSet), extraProps = props)
   }
 
   /** Selective overwrite (T3, `table/insert.go:40-46,185-252`): delete

@@ -94,6 +94,11 @@ class LocalWriteSpec extends AnyFunSuite {
         q.processAllAvailable()
       } finally q.stop()
       assert(Scan(sink.table, spark).count() == 33L)
+      // orphan-file GC lists every file under data/ and metadata/
+      val listed = sink.table.refresh()
+      assert(Scan(listed, spark).planFiles().size >= 3)
+      assert(Maintenance.removeOrphanFiles(listed, dryRun = true)
+        .deleted.isEmpty)
     } finally rec.stop()
     val dump = Files.createTempFile("graft-lw-", ".jfr")
     rec.dump(dump)
