@@ -905,9 +905,9 @@ private[sources] class GraftBoundProcedure(
   }
 
   import GraftBoundProcedure.{IdxPropSourceTable, IdxPropSourceSnapshot,
-    IdxPropTextCol, IdxPropIdCol, IdxPropNumHashes, AnnPropPrefix,
-    TextPropPrefix, PqPropPrefix, TokPropPrefix, LmPropPrefix,
-    ClfPropPrefix, Verbs, Written}
+    IdxPropDeletedAt, IdxPropTextCol, IdxPropIdCol, IdxPropNumHashes,
+    AnnPropPrefix, TextPropPrefix, PqPropPrefix, TokPropPrefix,
+    LmPropPrefix, ClfPropPrefix, Verbs, Written}
 
   /** `snapshot_id` resolved on `t`: -1 → the current snapshot. */
   private def snapshotOf(proc: String, t: Table, ns: String, tbl: String,
@@ -2253,7 +2253,15 @@ private[sources] class GraftBoundProcedure(
     * surviving batch rows' signatures are APPENDED to the index and
     * its recorded source snapshot advances to the new head, so
     * tomorrow's batch passes `since_snapshot_id = <today's head>` and
-    * chains without ever rebuilding. */
+    * chains without ever rebuilding.
+    *
+    * The removal commit is stamped with the index anchor it was
+    * computed against. The index commit goes to another table, so a
+    * crash between the two leaves the removal committed and the anchor
+    * unmoved; a re-run that finds its stamp after `since` does not
+    * delete again (the batch rows it would read still include the
+    * removed ones), recomputes the same removals against the unchanged
+    * index for the index half, and reports from the stamped commit. */
   private def dedupTableIndexed(t: Table,
       spark: org.apache.spark.sql.SparkSession, ns: String, mode: String,
       textCol: String, idCol: String, threshold: Double,
@@ -2288,10 +2296,18 @@ private[sources] class GraftBoundProcedure(
         s"$idxName was built on (${prop(IdxPropTextCol)}, " +
         s"${prop(IdxPropIdCol)}), call uses ($textCol, $idCol)")
     val numHashes = prop(IdxPropNumHashes).toInt
+    val stamp = s"$idxName@$since"
+    val stamped = Iterator.iterate(t.currentSnapshot)(
+        _.flatMap(_.parentSnapshotId).flatMap(t.snapshotById))
+      .takeWhile(_.exists(_.snapshotId != since)).flatten
+      .find(_.summary.exists(_.extra.get(IdxPropDeletedAt).contains(stamp)))
+    // the head the removals are computed at: the stamped commit's parent
+    // when a crashed run already removed them
+    val at = stamped.flatMap(_.parentSnapshotId).getOrElse(head)
     val fresh =
-      if (head == since)
+      if (at == since)
         graft.table.Scan(t, spark).toDF.limit(0)
-      else graft.table.Scan(t, spark).appendsBetween(since, head).toDF
+      else graft.table.Scan(t, spark).appendsBetween(since, at).toDF
     val idxDf = graft.table.Scan(idx, spark).toDF
     val removals = mode match {
       case "exact" =>
@@ -2308,24 +2324,33 @@ private[sources] class GraftBoundProcedure(
       case other => throw new IllegalArgumentException(
         s"dedup_table: unknown mode '$other' (exact | minhash | best)")
     }
-    val before = graft.table.Scan(t, spark).count()
     val removalsM = removals.localCheckpoint(true)
-    val removed = removalsM.count()
-    val after = if (removed > 0L)
-      graft.table.Mutations.deleteByKeys(t, spark, removalsM) else t
+    val (before, kept, anchor) = stamped match {
+      case Some(s) =>
+        (graft.table.Scan(t, spark).useSnapshot(at).count(),
+          graft.table.Scan(t, spark).useSnapshot(s.snapshotId).count(),
+          s.snapshotId)
+      case None =>
+        val before = graft.table.Scan(t, spark).count()
+        val removed = removalsM.count()
+        val after = if (removed > 0L)
+          graft.table.Mutations.deleteByKeys(t, spark, removalsM,
+            summary = Map(IdxPropDeletedAt -> stamp)) else t
+        (before, before - removed,
+          after.currentSnapshot.map(_.snapshotId).getOrElse(head))
+    }
     // index maintenance, one chain commit: the surviving batch rows'
     // signatures, with the anchor moved to the post-delete head
-    if (head != since) {
+    if (at != since) {
       val survivors = fresh.join(
         removalsM.select(idCol), Seq(idCol), "left_anti")
-      Derived.chain(idx, IdxPropSourceSnapshot, since,
-        after.currentSnapshot.map(_.snapshotId).getOrElse(head),
+      Derived.chain(idx, IdxPropSourceSnapshot, since, anchor,
         Derived.Delta(graft.ops.Dedup.signatureFrame(
           survivors, textCol, idCol, numHashes)))
     }
     (new StructType().add("docs_before", LongType)
       .add("docs_kept", LongType).add("docs_removed", LongType),
-      Seq(before, before - removed, removed))
+      Seq(before, kept, before - kept))
   }
 }
 
@@ -2333,6 +2358,8 @@ private[sources] object GraftBoundProcedure {
   private val IdxPropSourceTable = "graft.dedup-index.source-table"
   private val IdxPropSourceSnapshot =
     "graft.dedup-index.source-snapshot-id"
+  /** Snapshot-summary stamp of a removal commit: `<index>@<anchor>`. */
+  private val IdxPropDeletedAt = "graft.dedup-index.deleted-at"
   private val IdxPropTextCol = "graft.dedup-index.text-col"
   private val IdxPropIdCol = "graft.dedup-index.id-col"
   private val IdxPropNumHashes = "graft.dedup-index.num-hashes"

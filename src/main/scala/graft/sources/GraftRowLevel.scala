@@ -66,7 +66,7 @@ private[sources] object GraftMetaColumns {
   *    set to [[GraftCowScan.filter]] — only files that actually contain
   *    matches are rewritten (`SupportsRuntimeV2Filtering`). An UPDATE
   *    touching 3 files of a million-file table rewrites 3 files;
-  *  - rewritten rows flow through the engine's one data-file writer
+  *  - rewritten rows flow through the engine's one file writer
   *    ([[GraftFileWriter]]), which fans out by partition tuple (Spark
   *    clusters input on the partition source columns first — see
   *    `requiredDistribution`) and counts NaNs as it writes, and the
@@ -264,7 +264,7 @@ private[sources] class GraftCowWrite(
   override def description(): String =
     s"graft-write:${(table.id.namespace :+ table.id.name).mkString(".")}"
 
-  /** The rewritten rows go through the engine's one data-file writer
+  /** The rewritten rows go through the engine's one file writer
     * ([[GraftFileBatchWrite]]), fanning out: rows are sorted by partition
     * SOURCE values, and a bucket tuple's rows need not be contiguous in
     * that order. Its commit replaces exactly the scanned files with the

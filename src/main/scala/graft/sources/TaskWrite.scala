@@ -27,16 +27,18 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.spec.{
-  DataFile, IcebergType, NullOrder, SortDirection,
-  SortField, TableMetadata, Transform => GTransform}
+  DataFile, FileContent, IcebergType, ManifestContent, NullOrder,
+  SortDirection, SortField, TableMetadata, Transform => GTransform}
 import graft.table.{DataWriter, PartitionDirs, Table, Transforms}
 
-/** The table layer's write executor, the mirror of [[TaskRead]]: `df`
-  * goes through [[GraftFileWriter]], the executor-side writer SQL
-  * row-level rewrites use too, and comes back as the stats-complete
-  * [[DataFile]]s it wrote. The caller commits them.
+/** The table layer's write executor, the mirror of [[TaskRead]]: rows
+  * go through [[GraftFileWriter]], the executor-side writer SQL
+  * row-level rewrites use too, and come back as the [[DataFile]]s it
+  * wrote — data files with their column stats ([[apply]]), or position-
+  * or equality-delete files ([[positionDeletes]], [[equalityDeletes]]).
+  * The caller commits them.
   *
-  * Rows are sorted within tasks by partition tuple, then
+  * Data rows are sorted within tasks by partition tuple, then
   * `extraSortCols` (transient keys such as z-order's, never written),
   * then the table's declared sort order; an unpartitioned table with
   * neither writes `df` as it comes. On a partitioned table the rows are
@@ -86,14 +88,7 @@ private[graft] object TaskWrite {
     val data = schema.fields.flatMap(f => have.get(f.name.toLowerCase)
       .map(c => df.col(quoted(c)).as(f.name)))
     val spec = meta.defaultPartitionSpec
-    val parts = spec.fields.map { pf =>
-      val src = schema.field(pf.sourceId).getOrElse(
-        throw new IllegalArgumentException(
-          s"partition source ${pf.sourceId} missing"))
-      Transforms.applyToColumn(pf.transform, col(quoted(src.name)),
-        src.fieldType, df.schema.find(_.name == src.name)
-          .map(_.dataType)).as(PartPrefix + pf.name)
-    }
+    val parts = partColumns(meta, df)
     val extras = extraSortCols.map { case (n, c) => c.as(n) }
     val sortCols = meta.defaultSortOrder.fields.flatMap(sf =>
       schema.field(sf.sourceId).map(f => sortColumn(sf, f.name)))
@@ -105,10 +100,101 @@ private[graft] object TaskWrite {
     val rows =
       if (order.isEmpty) clustered
       else clustered.sortWithinPartitions(order: _*)
+    write(spark, table, rows, FileKind.Data, !spec.isUnpartitioned,
+      maxRecordsPerFile)
+  }
 
+  /** Position-delete files (SURVEY S9): `(file_path string, pos long)`
+    * rows, ranged by `(file_path, pos)` over `numFiles` tasks (0: as
+    * adaptive execution sizes them) and sorted so within each file, as
+    * the spec requires. `dataFiles` are the data files the rows may
+    * name, each with its spec id: each row goes to the delete file of
+    * its data file's partition tuple, and a row naming any other path
+    * fails the write, so a drifted path cannot drop a delete. The files
+    * are global (no tuple; they attach everywhere) when the spec is
+    * unpartitioned, `dataFiles` is empty, or any of them has an empty
+    * tuple (written before partitioning) or another spec than the
+    * default — its tuple's fields would not line up with the default
+    * spec's, the planner would never match the scoped delete, and the
+    * rows would come back. */
+  def positionDeletes(spark: SparkSession, table: Table, deletes: DataFrame,
+      dataFiles: Seq[(Int, DataFile)] = Nil,
+      numFiles: Int = 0): Seq[DataFile] = {
+    val spec = table.metadata.defaultPartitionSpec
+    val dirs =
+      if (spec.isUnpartitioned || dataFiles.exists { case (specId, f) =>
+          specId != spec.specId || f.partition.isEmpty })
+        Map.empty[String, String]
+      else dataFiles.map { case (_, f) =>
+        f.filePath -> GraftFileWriter.partitionDir(spec.fields.map(_.name),
+          spec.fields.map(pf => f.partition.get(pf.name).orNull))
+      }.toMap
+    val keys = Seq(col("file_path"), col("pos"))
+    val base = deletes.select(col("file_path").cast("string"),
+      col("pos").cast("long"))
+    val ranged =
+      if (numFiles > 0) base.repartitionByRange(numFiles, keys: _*)
+      else base.repartitionByRange(keys: _*)
+    // fan-out: a task's paths are sorted, not clustered by tuple
+    write(spark, table, ranged.sortWithinPartitions(keys: _*),
+      FileKind.PositionDeletes(dirs), clustered = false)
+  }
+
+  /** Equality-delete files (SURVEY S10): the distinct rows of `keys`,
+    * whose columns name the table's key fields. When the keys cover
+    * every partition source and every live data file was written under
+    * the default spec, the rows are clustered by the tuple their keys
+    * derive and written per partition, so scans of other partitions
+    * never read them; otherwise they are ranged by key into global
+    * files — an older spec's tuples would not match a scoped file, and
+    * the deleted rows would come back. */
+  def equalityDeletes(spark: SparkSession, table: Table,
+      keys: DataFrame): Seq[DataFile] = {
+    val meta = table.metadata
+    val spec = meta.defaultPartitionSpec
+    val ids = keys.columns.toSeq.map(c =>
+      meta.currentSchema.fieldByName(c).getOrElse(
+        throw new IllegalArgumentException(s"key column $c not in schema")).id)
+    val scoped = !spec.isUnpartitioned &&
+      spec.fields.forall(pf => meta.currentSchema.field(pf.sourceId)
+        .exists(f => keys.columns.contains(f.name))) &&
+      table.currentSnapshot.toSeq.flatMap(table.manifestList)
+        .filter(_.content == ManifestContent.Data)
+        .forall(_.partitionSpecId == spec.specId)
+    val keyCols = keys.columns.toSeq.map(c => col(quoted(c)))
+    val distinct = keys.distinct()
+    val rows =
+      if (scoped) {
+        val parts = spec.fields.map(pf => col(PartPrefix + pf.name))
+        distinct.select(keyCols ++ partColumns(meta, distinct): _*)
+          .repartition(parts: _*).sortWithinPartitions(parts ++ keyCols: _*)
+      } else distinct.repartitionByRange(keyCols: _*)
+        .sortWithinPartitions(keyCols: _*)
+    write(spark, table, rows, FileKind.EqualityDeletes(ids, scoped),
+      clustered = scoped)
+  }
+
+  /** Each default-spec partition field of `df`'s rows, derived through
+    * its transform, as `__p_<field>`: the clustering key a writer's
+    * routing agrees with. */
+  private def partColumns(meta: TableMetadata, df: DataFrame): Seq[Column] = {
+    val schema = meta.currentSchema
+    meta.defaultPartitionSpec.fields.map { pf =>
+      val src = schema.field(pf.sourceId).getOrElse(
+        throw new IllegalArgumentException(
+          s"partition source ${pf.sourceId} missing"))
+      Transforms.applyToColumn(pf.transform, col(quoted(src.name)),
+        src.fieldType, df.schema.find(_.name == src.name)
+          .map(_.dataType)).as(PartPrefix + pf.name)
+    }
+  }
+
+  private def write(spark: SparkSession, table: Table, rows: DataFrame,
+      kind: FileKind, clustered: Boolean,
+      maxRecordsPerFile: Long = 0L): Seq[DataFile] = {
     var written: Seq[DataFile] = Nil
     val target = new GraftTaskWriteTable(table, rows.schema,
-      maxRecordsPerFile, !spec.isUnpartitioned, files => written = files)
+      maxRecordsPerFile, clustered, kind, files => written = files)
     Bridge.execute(spark, AppendData.byName(
       DataSourceV2Relation.create(target, None, None),
       rows.queryExecution.analyzed))
@@ -130,10 +216,10 @@ private[graft] object TaskWrite {
 }
 
 /** A write-only connector table over one [[TaskWrite]]: it accepts the
-  * prepared frame as it is (the writer picks the table's columns out by
+  * prepared frame as it is (the writer picks the written columns out by
   * name) and hands the written files to `written` at commit. */
 private[sources] class GraftTaskWriteTable(t: Table, input: StructType,
-    maxRecordsPerFile: Long, clustered: Boolean,
+    maxRecordsPerFile: Long, clustered: Boolean, kind: FileKind,
     written: Seq[DataFile] => Unit)
     extends ConnectorTable with SupportsWrite {
   override def name(): String = (t.id.namespace :+ t.id.name).mkString(".")
@@ -146,9 +232,29 @@ private[sources] class GraftTaskWriteTable(t: Table, input: StructType,
       override def build(): Write = new Write {
         override def description(): String = s"graft-write:${name()}"
         override def toBatch: BatchWrite = new GraftFileBatchWrite(
-          t.metadata, info.schema(), maxRecordsPerFile, clustered)(written)
+          t.metadata, info.schema(), maxRecordsPerFile, clustered, kind)(
+          written)
       }
     }
+}
+
+/** What one write's files hold, fixed for the whole write; each kind
+  * has its written columns and its rule for a row's partition tuple. */
+private[sources] sealed abstract class FileKind(val content: FileContent,
+    val equalityIds: Seq[Int] = Nil) extends Serializable
+
+private[sources] object FileKind {
+  /** The table's columns, routed through the spec's transforms. */
+  case object Data extends FileKind(FileContent.Data)
+  /** `(file_path, pos)`, routed by `file_path`'s entry in `dirs` (data
+    * file → partition directory); an empty `dirs` writes global files. */
+  final case class PositionDeletes(dirs: Map[String, String])
+      extends FileKind(FileContent.PositionDeletes)
+  /** Every input column but the `__p_` keys, recorded as the fields
+    * `ids`; routed through the spec's transforms when `scoped`, else
+    * global. */
+  final case class EqualityDeletes(ids: Seq[Int], scoped: Boolean)
+      extends FileKind(FileContent.EqualityDeletes, ids)
 }
 
 /** Per-partition-field routing spec for executor writers; `ordinal` is
@@ -159,19 +265,23 @@ private[sources] final case class PartFieldRoute(
     ordinal: Int,
     sourceType: IcebergType)
 
-/** One file a writer task produced, with its NaN counts by field id. */
+/** One file a writer task produced: its rows, bytes and NaN counts by
+  * field id. */
 private[sources] final case class WrittenFile(path: String,
-    nanCounts: Map[Int, Long])
+    nanCounts: Map[Int, Long], records: Long, bytes: Long)
 
 private[sources] final case class GraftFilesMessage(
     files: Seq[WrittenFile]) extends WriterCommitMessage
 
-/** How a task turns input rows into data files: which input columns
-  * are the file's (`dataOrdinals`, written as `dataSchema`), which of
-  * those count NaNs (`nanColumns`: ordinal, field id, float-typed),
-  * where each row's partition tuple comes from, and whether rows arrive
-  * `clustered` by that tuple (each tuple's rows contiguous in a task). */
+/** How a task turns input rows into files of `kind`: which input
+  * columns are the file's (`dataOrdinals`, written as `dataSchema`),
+  * which of those count NaNs (`nanColumns`: ordinal, field id,
+  * float-typed; data files only), which transforms derive a row's
+  * partition tuple (`routes`; position deletes look theirs up instead),
+  * and whether rows arrive `clustered` by that tuple (each tuple's rows
+  * contiguous in a task). */
 private[sources] final case class FileLayout(
+    kind: FileKind,
     inputTypes: Array[DataType],
     dataOrdinals: Array[Int],
     dataSchema: StructType,
@@ -180,15 +290,18 @@ private[sources] final case class FileLayout(
     maxRecordsPerFile: Long,
     clustered: Boolean)
 
-/** Driver side of one executor-side data-file write. Data columns are
-  * the table's columns present in `inputSchema` by name (anything else —
-  * `_file`, partition keys, transient sort keys — rides along unwritten);
-  * a file's NaN count for a float/double field it does not carry is 0.
-  * At commit the footers of exactly the files the commit messages name
-  * are harvested ([[DataWriter.harvestFiles]]) and passed to
-  * `onCommit`; abort deletes them. `clustered`: see [[FileLayout]]. */
+/** Driver side of one executor-side file write. A data write's columns
+  * are the table's columns present in `inputSchema` by name (anything
+  * else — `_file`, partition keys, transient sort keys — rides along
+  * unwritten); a file's NaN count for a float/double field it does not
+  * carry is 0. At commit exactly the files the commit messages name are
+  * passed to `onCommit`: data files with the stats harvested from their
+  * footers ([[DataWriter.harvestFiles]]), delete files with the rows
+  * and bytes their tasks counted. Abort deletes them. `clustered`: see
+  * [[FileLayout]]. */
 private[sources] class GraftFileBatchWrite(meta: TableMetadata,
-    inputSchema: StructType, maxRecordsPerFile: Long, clustered: Boolean)(
+    inputSchema: StructType, maxRecordsPerFile: Long, clustered: Boolean,
+    kind: FileKind = FileKind.Data)(
     onCommit: Seq[DataFile] => Unit) extends BatchWrite {
 
   private val spark = SparkSession.active
@@ -199,25 +312,33 @@ private[sources] class GraftFileBatchWrite(meta: TableMetadata,
   private val layout: FileLayout = {
     val names = inputSchema.fieldNames
     val data = schema.fields.filter(f => names.contains(f.name))
-    val ordinals = data.map(f => names.indexOf(f.name)).toArray
-    val nan = data.zip(ordinals).flatMap { case (f, o) =>
-      inputSchema(o).dataType match {
-        case SFloat => Some((o, f.id, true))
-        case SDouble => Some((o, f.id, false))
-        case _ => None
-      }
-    }.toArray
-    val routes = meta.defaultPartitionSpec.fields.map { pf =>
-      val src = schema.field(pf.sourceId).getOrElse(
-        throw new IllegalStateException(
-          s"partition source field ${pf.sourceId} missing from schema"))
-      val o = names.indexOf(src.name)
-      if (o < 0) throw new IllegalStateException(
-        s"graft write: partition source '${src.name}' missing from " +
-          s"write input ${names.mkString(",")}")
-      PartFieldRoute(pf.name, pf.transform, o, src.fieldType)
-    }.toArray
-    FileLayout(inputSchema.fields.map(_.dataType), ordinals,
+    val (ordinals, routed) = kind match {
+      case FileKind.Data => (data.map(f => names.indexOf(f.name)).toArray, true)
+      case _: FileKind.PositionDeletes =>
+        (Array(names.indexOf("file_path"), names.indexOf("pos")), false)
+      case FileKind.EqualityDeletes(_, scoped) => (names.indices
+        .filterNot(names(_).startsWith(TaskWrite.PartPrefix)).toArray, scoped)
+    }
+    val nan = if (kind != FileKind.Data) Array.empty[(Int, Int, Boolean)]
+      else data.zip(ordinals).flatMap { case (f, o) =>
+        inputSchema(o).dataType match {
+          case SFloat => Some((o, f.id, true))
+          case SDouble => Some((o, f.id, false))
+          case _ => None
+        }
+      }.toArray
+    val routes = if (!routed) Array.empty[PartFieldRoute]
+      else meta.defaultPartitionSpec.fields.map { pf =>
+        val src = schema.field(pf.sourceId).getOrElse(
+          throw new IllegalStateException(
+            s"partition source field ${pf.sourceId} missing from schema"))
+        val o = names.indexOf(src.name)
+        if (o < 0) throw new IllegalStateException(
+          s"graft write: partition source '${src.name}' missing from " +
+            s"write input ${names.mkString(",")}")
+        PartFieldRoute(pf.name, pf.transform, o, src.fieldType)
+      }.toArray
+    FileLayout(kind, inputSchema.fields.map(_.dataType), ordinals,
       StructType(ordinals.map(inputSchema(_))), nan, routes,
       maxRecordsPerFile, clustered)
   }
@@ -237,10 +358,20 @@ private[sources] class GraftFileBatchWrite(meta: TableMetadata,
       .groupBy(w => w.path.stripPrefix(stagingRoot).split('/').dropRight(1)
         .mkString("/"))
       .toSeq.sortBy(_._1).flatMap { case (relDir, ws) =>
-        DataWriter.harvestFiles(hconf,
-          ws.map(w => w.path ->
-            floatIds.map(id => id -> w.nanCounts.getOrElse(id, 0L)).toMap),
-          schema, PartitionDirs.decodeSegments(relDir, partType))
+        val partition = PartitionDirs.decodeSegments(relDir, partType)
+        kind match {
+          case FileKind.Data => DataWriter.harvestFiles(hconf,
+            ws.map(w => w.path ->
+              floatIds.map(id => id -> w.nanCounts.getOrElse(id, 0L)).toMap),
+            schema, partition)
+          case _ => ws.sortBy(_.path).map(w => DataFile(
+            content = kind.content,
+            filePath = DataWriter.normalizePath(w.path),
+            recordCount = w.records,
+            fileSizeInBytes = w.bytes,
+            partition = partition,
+            equalityIds = kind.equalityIds))
+        }
       }
     onCommit(files)
   }
@@ -268,15 +399,18 @@ private[sources] class GraftFileWriterFactory(stagingRoot: String,
       layout)
 }
 
-/** The engine's one data-file writer, run inside each write task. It
-  * evaluates the partition transforms row-side
+/** The engine's one file writer, run inside each write task, for data
+  * and delete files alike ([[FileKind]]). It finds each row's partition
+  * tuple — through the partition transforms evaluated row-side
   * ([[Transforms.applyToValue]], the kernel the pruner projects literals
-  * with) and writes one parquet file per partition tuple under
-  * `__p_<field>=<value>` directories that [[PartitionDirs.decodeSegments]]
-  * parses back at commit: one file open at a time when rows arrive
-  * clustered by tuple, else one open per tuple seen (fan-out). Each file
-  * counts its NaNs as rows pass — the one column metric a parquet footer
-  * cannot hold — and rolls over after `maxRecordsPerFile` rows. The
+  * with), or for a position delete from the data file it names — and
+  * writes one parquet file per tuple under `__p_<field>=<value>`
+  * directories that [[PartitionDirs.decodeSegments]] parses back at
+  * commit: one file open at a time when rows arrive clustered by tuple,
+  * else one open per tuple seen (fan-out). A file is opened only when a
+  * row arrives for it. Each data file counts its NaNs as rows pass — the
+  * one column metric a parquet footer cannot hold — and a file rolls
+  * over after `maxRecordsPerFile` rows. The
   * commit message names every file this attempt wrote, so stray files
   * of failed attempts are never committed; the task's output metrics
   * report those files' bytes and rows, as Spark's own file writes do. */
@@ -294,10 +428,11 @@ private[sources] class GraftFileWriter(
     def finish(): WrittenFile = {
       out.close()
       val hp = new org.apache.hadoop.fs.Path(path)
-      bytesWritten += hp.getFileSystem(conf.value).getFileStatus(hp).getLen
+      val bytes = hp.getFileSystem(conf.value).getFileStatus(hp).getLen
+      bytesWritten += bytes
       rowsWritten += rows
       WrittenFile(path, layout.nanColumns.indices
-        .map(k => layout.nanColumns(k)._2 -> nans(k)).toMap)
+        .map(k => layout.nanColumns(k)._2 -> nans(k)).toMap, rows, bytes)
     }
   }
 
@@ -319,12 +454,36 @@ private[sources] class GraftFileWriter(
   }
 
   private val tuple = new Array[Any](layout.routes.size)
+  private val routeNames = layout.routes.map(_.name).toSeq
   private var tupleDir: String = null
+  private var lastPath: UTF8String = null
+  private var lastDir: String = null
 
-  /** The row's partition directory, rebuilt only when its tuple differs
+  /** The row's partition directory, by the rule of the write's kind. */
+  private val relDirFor: InternalRow => String = layout.kind match {
+    case FileKind.PositionDeletes(dirs) if dirs.nonEmpty => dirOfPath(dirs)
+    case _ if layout.routes.isEmpty => _ => ""
+    case _ => dirOfTuple
+  }
+
+  /** A position delete's directory: the one of the data file it names,
+    * looked up once per run of rows naming one file (rows arrive sorted
+    * by path). */
+  private def dirOfPath(dirs: Map[String, String])(row: InternalRow): String = {
+    val p = row.getUTF8String(layout.dataOrdinals(0))
+    if (lastPath == null || p != lastPath) {
+      val path = String.valueOf(p)
+      lastDir = dirs.getOrElse(path, throw new IllegalArgumentException(
+        "position-delete path matched no candidate data file " +
+          s"(path normalization drift?): $path"))
+      lastPath = p.clone()
+    }
+    lastDir
+  }
+
+  /** The row's tuple directory, rebuilt only when its tuple differs
     * from the previous row's (input arrives clustered by tuple). */
-  private def relDirFor(row: InternalRow): String = {
-    if (layout.routes.isEmpty) return ""
+  private def dirOfTuple(row: InternalRow): String = {
     var same = tupleDir != null
     var i = 0
     while (i < tuple.length) {
@@ -337,12 +496,7 @@ private[sources] class GraftFileWriter(
       if (v != tuple(i)) { same = false; tuple(i) = v }
       i += 1
     }
-    if (!same) tupleDir = layout.routes.indices.map { i =>
-      val raw =
-        if (tuple(i) == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else ExternalCatalogUtils.escapePathName(tuple(i).toString)
-      s"${TaskWrite.PartPrefix}${layout.routes(i).name}=$raw"
-    }.mkString("/")
+    if (!same) tupleDir = GraftFileWriter.partitionDir(routeNames, tuple)
     tupleDir
   }
 
@@ -403,6 +557,16 @@ private[sources] class GraftFileWriter(
 }
 
 private[sources] object GraftFileWriter {
+  /** The `__p_<field>=<value>` directory of one partition tuple, as
+    * [[PartitionDirs.decodeSegments]] parses it back at commit. */
+  def partitionDir(names: Seq[String], values: Seq[Any]): String =
+    names.zip(values).map { case (name, v) =>
+      val raw =
+        if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+        else ExternalCatalogUtils.escapePathName(v.toString)
+      s"${TaskWrite.PartPrefix}$name=$raw"
+    }.mkString("/")
+
   def deleteQuietly(conf: org.apache.hadoop.conf.Configuration,
       path: String): Unit = {
     val hp = new org.apache.hadoop.fs.Path(path)

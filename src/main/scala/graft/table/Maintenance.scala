@@ -1,6 +1,6 @@
 package graft.table
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.avro.ManifestAvro
@@ -115,14 +115,62 @@ object Maintenance extends org.apache.spark.internal.Logging {
       deletedFilePaths = candidateSet ++ retiredDeletes))
   }
 
+  /** The live entries of the current snapshot's `content` manifests,
+    * each with its manifest's spec id, decoded on the driver pool. */
+  private def liveEntries(t: Table,
+      content: ManifestContent): Seq[(Int, DataFile)] = {
+    val mfs = t.currentSnapshot.toSeq.flatMap(t.manifestList)
+      .filter(_.content == content)
+    mfs.zip(t.readManifests(mfs)).flatMap { case (mf, m) =>
+      m.liveEntries.map(e => mf.partitionSpecId -> e.dataFile)
+    }
+  }
+
+  /** The `content` files among delete-manifest `entries`, deduped by
+    * path. */
+  private def deleteFiles(entries: Seq[(Int, DataFile)],
+      content: FileContent): Seq[DataFile] =
+    entries.map(_._2).filter(_.content == content)
+      .groupBy(_.filePath).map(_._2.head).toSeq
+
   /** The table's live POSITION-delete files, deduped by path. */
   def positionDeleteFiles(table: Table): Seq[DataFile] =
-    table.currentSnapshot.toSeq
-      .flatMap(table.manifestList)
-      .filter(_.content == ManifestContent.Deletes)
-      .flatMap(mf => table.readManifest(mf).liveEntries.map(_.dataFile))
-      .filter(_.content == FileContent.PositionDeletes)
-      .groupBy(_.filePath).map(_._2.head).toSeq
+    deleteFiles(liveEntries(table, ManifestContent.Deletes),
+      FileContent.PositionDeletes)
+
+  /** The table's live EQUALITY-delete files, deduped by path. */
+  def equalityDeleteFiles(table: Table): Seq[DataFile] =
+    deleteFiles(liveEntries(table, ManifestContent.Deletes),
+      FileContent.EqualityDeletes)
+
+  /** The `(file_path, pos)` rows of position-delete `files`. */
+  private def positionsIn(spark: SparkSession,
+      files: Seq[DataFile]): DataFrame =
+    spark.read.parquet(files.map(_.filePath): _*)
+      .select(col("file_path").cast("string"), col("pos").cast("long"))
+
+  /** Writes `positions` as position-delete files and commits them in ONE
+    * `replace` snapshot that retires `replaced`. Rows are deduped, and
+    * rows whose data file is no longer live (dangling after compaction
+    * or CoW) are dropped; the rest are routed to their data file's
+    * partition. The output is about one file per
+    * `targetFileSizeBytes` of `replaced`: the writer's default range
+    * partitioning would otherwise fan a small delete set across
+    * `spark.sql.shuffle.partitions` files, the opposite of
+    * consolidation. */
+  private def commitPositions(t: Table, spark: SparkSession,
+      positions: DataFrame, replaced: Seq[DataFile],
+      targetFileSizeBytes: Long): Table = {
+    val data = liveEntries(t, ManifestContent.Data)
+    val kept = positions.distinct()
+      .where(col("file_path").isin(data.map(_._2.filePath): _*))
+    val nOut = math.max(1L, (replaced.map(_.fileSizeInBytes).sum
+      + targetFileSizeBytes - 1) / targetFileSizeBytes).toInt
+    t.commitSnapshot(PendingSnapshot(Operation.Replace,
+      addedDeleteFiles = TaskWrite.positionDeletes(spark, t, kept, data,
+        numFiles = nOut),
+      deletedFilePaths = replaced.map(_.filePath).toSet))
+  }
 
   /** Consolidate the table's live POSITION-delete files (Iceberg's
     * `rewrite_position_delete_files`): read them all, drop rows whose
@@ -140,8 +188,8 @@ object Maintenance extends org.apache.spark.internal.Logging {
     * and re-sequence safely.
     *
     * Scale: cost ∝ delete-file volume, never data volume. The live-
-    * path prune joins against the file LIST (metadata-bounded,
-    * broadcast); concurrent compaction that retires one of the same
+    * path prune filters against the live file list (metadata-bounded);
+    * concurrent compaction that retires one of the same
     * delete files fails the rebase via the deletedFilePaths overlap
     * and retries on fresh state. */
   def rewritePositionDeletes(table: Table, spark: SparkSession,
@@ -151,55 +199,13 @@ object Maintenance extends org.apache.spark.internal.Logging {
 
   private def rewritePositionDeletesOnce(t: Table,
       spark: SparkSession, targetFileSizeBytes: Long): Table = {
-    import org.apache.spark.sql.functions.broadcast
     val posFiles = positionDeleteFiles(t)
     // one delete file is already consolidated — rewriting it forever
     // on every maintenance pass would churn metadata for nothing
-    if (posFiles.size <= 1) return t
-    val snap = t.currentSnapshot.get // posFiles nonEmpty => snapshot
-    val dataEntries = t.manifestList(snap)
-      .filter(_.content == ManifestContent.Data)
-      .flatMap(mf => t.readManifest(mf).liveEntries
-        .map(e => (mf.partitionSpecId, e.dataFile)))
-    val liveDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        dataEntries.map(e => org.apache.spark.sql.Row(e._2.filePath)), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file_path",
-          org.apache.spark.sql.types.StringType))))
-    val kept = spark.read.parquet(posFiles.map(_.filePath): _*)
-      .select(col("file_path").cast("string"),
-        org.apache.spark.sql.functions.col("pos").cast("long"))
-      .distinct()
-      .join(broadcast(liveDf), Seq("file_path"), "left_semi")
-    // same partition routing discipline as Mutations.deleteMoR: scope
-    // per-partition only when every live data file is on the default
-    // spec (older-spec tuples would mis-scope and resurrect rows)
-    val defaultSpecId = t.metadata.defaultSpecId
-    val pathToPartition =
-      if (dataEntries.forall(_._1 == defaultSpecId))
-        dataEntries.map { case (_, f) => f.filePath -> f.partition }.toMap
-      else Map.empty[String, Map[String, Any]]
-    // explicit output count — the writer's default range partitioning
-    // would otherwise fan a small delete set across
-    // spark.sql.shuffle.partitions files, the opposite of consolidation
-    val nOut = math.max(1L, (posFiles.map(_.fileSizeInBytes).sum
-      + targetFileSizeBytes - 1) / targetFileSizeBytes).toInt
-    val newFiles = DeleteFileWriter.writePositionDeletesPartitioned(
-      t.metadata, kept, pathToPartition, numFiles = nOut)
-    t.commitSnapshot(PendingSnapshot(Operation.Replace,
-      addedDeleteFiles = newFiles,
-      deletedFilePaths = posFiles.map(_.filePath).toSet))
+    if (posFiles.size <= 1) t
+    else commitPositions(t, spark, positionsIn(spark, posFiles), posFiles,
+      targetFileSizeBytes)
   }
-
-  /** The table's live EQUALITY-delete files, deduped by path. */
-  def equalityDeleteFiles(table: Table): Seq[DataFile] =
-    table.currentSnapshot.toSeq
-      .flatMap(table.manifestList)
-      .filter(_.content == ManifestContent.Deletes)
-      .flatMap(mf => table.readManifest(mf).liveEntries.map(_.dataFile))
-      .filter(_.content == FileContent.EqualityDeletes)
-      .groupBy(_.filePath).map(_._2.head).toSeq
 
   /** Retire the table's EQUALITY-delete files by converting them to
     * position deletes, consolidated with the existing position-delete
@@ -232,49 +238,20 @@ object Maintenance extends org.apache.spark.internal.Logging {
 
   private def rewriteEqualityDeletesOnce(t: Table,
       spark: SparkSession, targetFileSizeBytes: Long): Table = {
-    import org.apache.spark.sql.functions.broadcast
-    val eqFiles = equalityDeleteFiles(t)
+    val deletes = liveEntries(t, ManifestContent.Deletes)
+    val eqFiles = deleteFiles(deletes, FileContent.EqualityDeletes)
     if (eqFiles.isEmpty) return t
-    val snap = t.currentSnapshot.get // eqFiles nonEmpty => snapshot
     // the rows the equality deletes kill TODAY, as (file_path, pos) —
-    // per-file sequence gating inherited from the scan planner
+    // per-file sequence gating inherited from the scan planner; they
+    // are live by construction, the existing position rows are pruned
+    // to live files in the same pass
     val converted = Scan(t, spark).equalityMatchedPositions()
-    val posFiles = positionDeleteFiles(t)
-    val existing =
-      if (posFiles.isEmpty) converted.limit(0)
-      else spark.read.parquet(posFiles.map(_.filePath): _*)
-        .select(col("file_path").cast("string"), col("pos").cast("long"))
-    val dataEntries = t.manifestList(snap)
-      .filter(_.content == ManifestContent.Data)
-      .flatMap(mf => t.readManifest(mf).liveEntries
-        .map(e => (mf.partitionSpecId, e.dataFile)))
-    // live-path prune retires dangling POSITION rows in the same pass
-    // (converted rows are live by construction — they were read from
-    // live data files)
-    val liveDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        dataEntries.map(e => org.apache.spark.sql.Row(e._2.filePath)), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file_path",
-          org.apache.spark.sql.types.StringType))))
-    val kept = converted.unionAll(existing).distinct()
-      .join(broadcast(liveDf), Seq("file_path"), "left_semi")
-    val defaultSpecId = t.metadata.defaultSpecId
-    val pathToPartition =
-      if (dataEntries.forall(_._1 == defaultSpecId))
-        dataEntries.map { case (_, f) => f.filePath -> f.partition }.toMap
-      else Map.empty[String, Map[String, Any]]
-    val nOut = math.max(1L,
-      ((posFiles ++ eqFiles).map(_.fileSizeInBytes).sum
-        + targetFileSizeBytes - 1) / targetFileSizeBytes).toInt
-    // zero-record outputs (every key dangling, no position rows) are
-    // dropped from the commit — orphan GC reclaims the empty files
-    val newFiles = DeleteFileWriter.writePositionDeletesPartitioned(
-      t.metadata, kept, pathToPartition, numFiles = nOut)
-      .filter(_.recordCount > 0)
-    t.commitSnapshot(PendingSnapshot(Operation.Replace,
-      addedDeleteFiles = newFiles,
-      deletedFilePaths = (eqFiles ++ posFiles).map(_.filePath).toSet))
+    val posFiles = deleteFiles(deletes, FileContent.PositionDeletes)
+    val positions =
+      if (posFiles.isEmpty) converted
+      else converted.unionAll(positionsIn(spark, posFiles))
+    commitPositions(t, spark, positions, eqFiles ++ posFiles,
+      targetFileSizeBytes)
   }
 
   /** Z-order rewrite (Iceberg's `rewrite_data_files(strategy =>

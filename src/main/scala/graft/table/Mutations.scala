@@ -98,25 +98,12 @@ object Mutations {
             rows.metadataColumn("_pos").as("pos"))
         // partition-scoped delete files: the plan knows each candidate's
         // partition tuple, so deletes route into per-partition files and
-        // later scans of other partitions never touch them. Candidates
-        // written under an OLDER spec have tuples whose field names don't
-        // line up with the default spec — routing them through it would
-        // scope the delete to a partition the planner never matches and
-        // the rows would silently resurface; those go through the global
-        // (empty-tuple) writer instead, which attaches everywhere.
-        val defaultSpecId = t.metadata.defaultSpecId
-        val pathToPartition =
-          if (candidates.forall(_.specId == defaultSpecId))
-            candidates.map(c => c.file.filePath -> c.file.partition).toMap
-          else Map.empty[String, Map[String, Any]]
-        // ONE pass: no isEmpty probe (it would run the same
-        // predicate-matching scan twice) — write, then drop zero-row
-        // delete files from the commit; an all-empty write commits
-        // nothing (the stray empty parquet is orphan-GC food, the
-        // same as any abort path)
-        val delFiles = DeleteFileWriter.writePositionDeletesPartitioned(
-          t.metadata, deletes, pathToPartition)
-          .filter(_.recordCount > 0)
+        // later scans of other partitions never touch them. ONE pass: no
+        // isEmpty probe (it would run the same predicate-matching scan
+        // twice) — the writer opens a file only for a row, so a
+        // predicate matching nothing writes no file and commits nothing
+        val delFiles = TaskWrite.positionDeletes(spark, t, deletes,
+          candidates.map(c => c.specId -> c.file))
         if (delFiles.isEmpty) t
         else t.commitSnapshot(PendingSnapshot(Operation.Delete,
           addedDeleteFiles = delFiles,
@@ -129,39 +116,17 @@ object Mutations {
 
   /** Merge-on-read equality delete (T6 — the reference returns "not yet
     * fully implemented", `table/delete.go:494-501`): write the key
-    * values; reads drop matching rows from OLDER sequence numbers.
-    *
-    * Partition scoping: when every partition source column is among the
-    * key columns AND every live data manifest was written under the
-    * default spec, each key row's partition tuple is derivable and the
-    * delete files are written per-partition — scans of other partitions
-    * never touch them. Otherwise global (empty-tuple) files, which
-    * attach everywhere. */
-  def deleteByKeys(table: Table, spark: SparkSession, keys: DataFrame):
-      Table = {
-    val fieldIds = keys.columns.toSeq.map(c =>
-      table.schema.fieldByName(c).getOrElse(throw new IllegalArgumentException(
-        s"key column $c not in schema")).id)
-    val spec = table.spec
-    val canScope = !spec.isUnpartitioned &&
-      spec.fields.forall(pf => table.schema.field(pf.sourceId)
-        .exists(f => keys.columns.contains(f.name))) && {
-        // older-spec data files have tuples the scoped index can't
-        // match — scoping would silently skip them
-        val liveSpecs = table.currentSnapshot.toSeq
-          .flatMap(table.manifestList)
-          .filter(_.content == ManifestContent.Data)
-          .map(_.partitionSpecId).toSet
-        liveSpecs.subsetOf(Set(spec.specId))
-      }
-    val delFiles =
-      if (canScope)
-        DeleteFileWriter.writeEqualityDeletesPartitioned(table.metadata,
-          keys, fieldIds)
-      else
-        DeleteFileWriter.writeEqualityDeletes(table.metadata, keys, fieldIds)
-    table.commitSnapshot(PendingSnapshot(Operation.Delete,
-      addedDeleteFiles = delFiles))
+    * values; reads drop matching rows from OLDER sequence numbers. The
+    * delete files are partition-scoped when the keys allow it (see
+    * [[TaskWrite.equalityDeletes]]). `summary` entries land in the
+    * delete snapshot's summary, as [[TableOps.append]]'s do. Empty
+    * `keys` write no file and commit nothing. */
+  def deleteByKeys(table: Table, spark: SparkSession, keys: DataFrame,
+      summary: Map[String, String] = Map.empty): Table = {
+    val delFiles = TaskWrite.equalityDeletes(spark, table, keys)
+    if (delFiles.isEmpty) table
+    else table.commitSnapshot(PendingSnapshot(Operation.Delete,
+      addedDeleteFiles = delFiles, summaryExtra = summary))
   }
 
   /** CoW update (T7, `table/update.go:29-238`): rewrite candidates with

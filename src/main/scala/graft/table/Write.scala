@@ -218,15 +218,15 @@ object DataWriter {
   }
 }
 
-/** Shared Hive-style partition-directory walker: finds parquet leaf
-  * dirs under `root` and decodes each `name=value` segment to the
-  * partition type's RESULT types (strip the writer's `__p_` prefix). */
+/** Hive-style partition directories: each `name=value` segment decoded
+  * to the partition type's RESULT types (strip the writer's `__p_`
+  * prefix). */
 private[graft] object PartitionDirs {
   private val partPrefix = "__p_"
 
   /** Decode one RELATIVE `name=value/...` segment path (the executor
     * writer names files this way so the commit can recover each file's
-    * partition tuple; the Hive-dir walker parses each level with it). */
+    * partition tuple). */
   def decodeSegments(relDir: String,
       partitionType: StructType): Map[String, Any] =
     relDir.split('/').filter(s => s.nonEmpty && s.contains('=')).map { seg =>
@@ -239,26 +239,6 @@ private[graft] object PartitionDirs {
           parseValue(raw, f.fieldType)).getOrElse(raw)
       colName -> typed
     }.toMap
-
-  def leaves(conf: org.apache.hadoop.conf.Configuration, root: String,
-      partitionType: StructType): Seq[(Path, Map[String, Any])] = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(conf)
-
-    def walk(dir: Path,
-        values: Map[String, Any]): Seq[(Path, Map[String, Any])] = {
-      val entries = fs.listStatus(dir).toSeq
-      val subdirs = entries.filter(_.isDirectory)
-      if (subdirs.isEmpty) {
-        if (entries.exists(e =>
-            e.isFile && e.getPath.getName.endsWith(".parquet")))
-          Seq(dir -> values)
-        else Nil
-      } else subdirs.flatMap(sd => walk(sd.getPath,
-        values ++ decodeSegments(sd.getPath.getName, partitionType)))
-    }
-    walk(rootPath, Map.empty)
-  }
 
   def parseValue(raw: String, t: IcebergType): Any = t match {
     case IntType => raw.toInt
@@ -308,192 +288,6 @@ private[graft] object PartitionDirs {
       } else { sb.append(c); i += 1 }
     }
     sb.toString
-  }
-}
-
-/** MoR delete-file writers (SURVEY S9/S10; `table/writer.go:268-419`).
-  *
-  * Scale design: the pairs are range-partitioned (so one data file's
-  * deletes cluster into one task) and each task emits its own delete
-  * file — the Iceberg spec allows many delete files per snapshot, so
-  * there is no single-task funnel. Without an explicit `numFiles`, the
-  * range shuffle is left to AQE, which coalesces small deletes into few
-  * files and fans large ones out across the cluster.
-  */
-object DeleteFileWriter {
-  import org.apache.spark.sql.functions.{broadcast, col}
-
-  /** Position-delete files: `(file_path string, pos long)`, each file
-    * sorted by (file_path, pos) as the Iceberg spec requires
-    * (`table/writer.go:290-293`). */
-  def writePositionDeletes(meta: TableMetadata, deletes: DataFrame,
-      numFiles: Int = 0): Seq[DataFile] = {
-    val base = deletes
-      .select(col("file_path").cast("string"), col("pos").cast("long"))
-    val ranged =
-      if (numFiles > 0)
-        base.repartitionByRange(numFiles, col("file_path"), col("pos"))
-      else base.repartitionByRange(col("file_path"), col("pos"))
-    writeDeleteParquet(meta, ranged.sortWithinPartitions("file_path", "pos"),
-      FileContent.PositionDeletes, Nil)
-  }
-
-  /** Partition-scoped position deletes: `pathToPartition` maps each
-    * candidate data file to its partition tuple (known to the scan plan,
-    * driver-side). Deletes are routed into per-partition delete files so
-    * [[Scan.planFiles]] attaches them partition-locally — a read of one
-    * partition no longer drags in every delete file in the table.
-    * Falls back to global files when the spec is unpartitioned or any
-    * candidate predates partitioning (empty tuple = applies-everywhere
-    * in our planner's index). */
-  def writePositionDeletesPartitioned(meta: TableMetadata,
-      deletes: DataFrame,
-      pathToPartition: Map[String, Map[String, Any]],
-      numFiles: Int = 0): Seq[DataFile] = {
-    val spec = meta.defaultPartitionSpec
-    if (spec.isUnpartitioned || pathToPartition.isEmpty ||
-        pathToPartition.values.exists(_.isEmpty))
-      return writePositionDeletes(meta, deletes, numFiles)
-    val spark = deletes.sparkSession
-    val partitionType = spec.partitionType(meta.currentSchema)
-    val partNames = partitionType.fields.map(f => "__p_" + f.name)
-
-    // file_path → partition values, as STRINGS: the Hive-style dir
-    // encoding round-trips them and harvest re-types via partitionType.
-    import org.apache.spark.sql.types.{StringType => SStr, StructField => SF, StructType => ST}
-    val mappingSchema = ST(SF("file_path", SStr) +: partNames.map(SF(_, SStr)))
-    val mappingRows = pathToPartition.toSeq.map { case (p, tuple) =>
-      org.apache.spark.sql.Row.fromSeq(p +: partitionType.fields.map { f =>
-        tuple.get(f.name).flatMap(Option(_)).map {
-          case d: java.math.BigDecimal => d.toPlainString
-          case other => other.toString
-        }.orNull
-      })
-    }
-    val mapping = spark.createDataFrame(
-      spark.sparkContext.parallelize(mappingRows, 1), mappingSchema)
-
-    // LEFT join + fail-on-unmatched: an inner join would silently drop
-    // any delete row whose path doesn't exactly match the stored
-    // normalized path (scheme/authority drift) — rows that should be
-    // deleted would quietly survive. Coalesce short-circuits, so the
-    // raise_error only fires for unmatched rows.
-    import org.apache.spark.sql.functions.{coalesce, lit, raise_error, concat}
-    val base = deletes
-      .select(col("file_path").cast("string"), col("pos").cast("long"))
-      .join(broadcast(mapping.withColumn("__matched", lit(true))),
-        Seq("file_path"), "left")
-      .where(coalesce(col("__matched"), raise_error(concat(
-        lit("position-delete path matched no candidate data file " +
-          "(path normalization drift?): "), col("file_path")))
-        .cast("boolean")))
-      .drop("__matched")
-    val ranged =
-      if (numFiles > 0) base.repartitionByRange(numFiles, col("file_path"), col("pos"))
-      else base.repartitionByRange(col("file_path"), col("pos"))
-    // partition cols lead the sort so FileFormatWriter doesn't re-sort
-    // (unstably) and (file_path, pos) order inside each file survives
-    val sorted = ranged.sortWithinPartitions(
-      partNames.map(col) ++ Seq(col("file_path"), col("pos")): _*)
-
-    val dir = meta.location.stripSuffix("/") + "/data/deletes-" +
-      java.util.UUID.randomUUID().toString
-    sorted.write.option("compression", "snappy")
-      .partitionBy(partNames: _*).parquet(dir)
-
-    val conf = spark.sessionState.newHadoopConf()
-    PartitionDirs.leaves(conf, dir, partitionType).flatMap {
-      case (leaf, tuple) => harvestDeleteDir(conf, leaf.toString,
-        FileContent.PositionDeletes, Nil, tuple)
-    }
-  }
-
-  /** Partition-scoped equality deletes: when every partition source
-    * column is among the key columns, each key row's partition tuple is
-    * computed through the spec's transforms and the delete files land
-    * per-partition — [[Scan.planFiles]]' (specId, partition) index then
-    * attaches them partition-locally instead of to every older file in
-    * the table. Caller must ensure all candidate data files were
-    * written under the default spec (see [[graft.table.Mutations]]). */
-  def writeEqualityDeletesPartitioned(meta: TableMetadata,
-      keys: DataFrame, equalityFieldIds: Seq[Int]): Seq[DataFile] = {
-    val spec = meta.defaultPartitionSpec
-    val schema = meta.currentSchema
-    val spark = keys.sparkSession
-    val partitionType = spec.partitionType(schema)
-    val partCols = spec.fields.map { pf =>
-      val src = schema.field(pf.sourceId).getOrElse(
-        throw new IllegalArgumentException(
-          s"partition source ${pf.sourceId} missing"))
-      ("__p_" + pf.name,
-        Transforms.applyToColumn(pf.transform, col(src.name), src.fieldType,
-          keys.schema.find(_.name == src.name).map(_.dataType)))
-    }
-    val partNames = partCols.map(_._1)
-    var dk = keys.distinct()
-    partCols.foreach { case (n, c) => dk = dk.withColumn(n, c) }
-    val keyCols = keys.columns.toSeq.map(col)
-    dk = dk.repartition(partNames.map(col): _*)
-      .sortWithinPartitions(partNames.map(col) ++ keyCols: _*)
-
-    val dir = meta.location.stripSuffix("/") + "/data/deletes-" +
-      java.util.UUID.randomUUID().toString
-    dk.write.option("compression", "snappy")
-      .partitionBy(partNames: _*).parquet(dir)
-    val conf = spark.sessionState.newHadoopConf()
-    PartitionDirs.leaves(conf, dir, partitionType).flatMap {
-      case (leaf, tuple) => harvestDeleteDir(conf, leaf.toString,
-        FileContent.EqualityDeletes, equalityFieldIds, tuple)
-    }
-  }
-
-  /** Equality-delete files: key-column values identify deleted rows
-    * (`table/writer.go:360-419`); range-clustered by key, one file per
-    * task. */
-  def writeEqualityDeletes(meta: TableMetadata, keys: DataFrame,
-      equalityFieldIds: Seq[Int], numFiles: Int = 0): Seq[DataFile] = {
-    val keyCols = keys.columns.toSeq.map(col)
-    val dk = keys.distinct()
-    val ranged =
-      if (numFiles > 0) dk.repartitionByRange(numFiles, keyCols: _*)
-      else dk.repartitionByRange(keyCols: _*)
-    writeDeleteParquet(meta, ranged.sortWithinPartitions(keyCols: _*),
-      FileContent.EqualityDeletes, equalityFieldIds)
-  }
-
-  private def writeDeleteParquet(meta: TableMetadata, df: DataFrame,
-      content: FileContent, eqIds: Seq[Int]): Seq[DataFile] = {
-    val spark = df.sparkSession
-    val dir = meta.location.stripSuffix("/") + "/data/deletes-" +
-      java.util.UUID.randomUUID().toString
-    df.write.option("compression", "snappy").parquet(dir)
-    harvestDeleteDir(spark.sessionState.newHadoopConf(), dir, content,
-      eqIds, Map.empty)
-  }
-
-  /** Delete files carry their own schema; only row counts are harvested. */
-  private def harvestDeleteDir(conf: Configuration, dir: String,
-      content: FileContent, eqIds: Seq[Int],
-      partition: Map[String, Any]): Seq[DataFile] = {
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    fs.listStatus(dirPath).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-      .map { st =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromStatus(st, conf))
-        val rows = try {
-          reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        } finally reader.close()
-        DataFile(
-          content = content,
-          filePath = DataWriter.normalizePath(st.getPath.toString),
-          recordCount = rows,
-          fileSizeInBytes = st.getLen,
-          partition = partition,
-          equalityIds = eqIds)
-      }
   }
 }
 

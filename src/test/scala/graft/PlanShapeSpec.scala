@@ -632,9 +632,9 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   // ----------------------------------------- table-layer write executor
 
-  /** `f` writes data files only through the engine's writer: it runs a
-    * graft write, and no plan it executes holds Spark's file-source
-    * writer (a second writer). */
+  /** `f` writes data and delete files only through the engine's writer:
+    * it runs a graft write, and no plan it executes holds Spark's
+    * file-source writer (a second writer). */
   private def assertEngineWritesOnly(what: String)(f: => Unit): Unit = {
     val nodes = executedPlans(f).flatMap(p => collect(p) { case n => n })
     val fileWrites = nodes.collect {
@@ -706,5 +706,48 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         "9.0 AS v) s ON t.id = s.id WHEN MATCHED THEN UPDATE SET *"))
     assert(spark.sql("SELECT v FROM planshape_w.db.parted WHERE id = 21")
       .collect().map(_.getDouble(0)).toSeq == Seq(9.0))
+  }
+
+  test("delete-file writes plan only the engine's writer: MoR deletes, " +
+      "key deletes and both delete rewrites") {
+    import graft.spec._
+    import graft.table._
+    import spark.implicits._
+    val cat = new graft.catalog.LocalCatalog(
+      java.nio.file.Files.createTempDirectory("graft-onewriter-del-")
+        .toString)
+    cat.createNamespace(Seq("db"))
+    val schema = Schema(0, Seq(NestedField(1, "id", LongType, required = true),
+      NestedField(2, "p", IntType, required = false)))
+    def create(name: String, spec: PartitionSpec) = {
+      val t = Table.create(cat, graft.catalog.TableIdentifier(Seq("db"), name),
+        schema, spec, io = new graft.io.HadoopFileIO())
+      TableOps.append(t, (1 to 20).map(i => (i.toLong, i % 2)).toDF("id", "p"))
+    }
+    var t = create("plain", PartitionSpec.unpartitioned)
+    var pt = create("parted", PartitionSpec.builder().identity(2, "p").build())
+    assertEngineWritesOnly("unpartitioned MoR delete") {
+      t = Mutations.deleteMoR(t, spark, Col("id").eqTo(1L))
+    }
+    assertEngineWritesOnly("partitioned MoR delete") {
+      pt = Mutations.deleteMoR(pt, spark, Col("id").in(2L, 3L))
+    }
+    pt = Mutations.deleteMoR(pt, spark, Col("id").eqTo(4L))
+    assertEngineWritesOnly("global key delete") {
+      t = Mutations.deleteByKeys(t, spark, Seq(5L).toDF("id"))
+    }
+    assertEngineWritesOnly("scoped key delete") {
+      pt = Mutations.deleteByKeys(pt, spark, Seq((6L, 0)).toDF("id", "p"))
+    }
+    assertEngineWritesOnly("position-delete rewrite") {
+      pt = Maintenance.rewritePositionDeletes(pt, spark)
+    }
+    assertEngineWritesOnly("equality-delete rewrite") {
+      pt = Maintenance.rewriteEqualityDeletes(pt, spark)
+    }
+    assert(Maintenance.equalityDeleteFiles(pt).isEmpty)
+    assert(Scan(pt, spark).toDF.select("id").as[Long].collect().toSet ==
+      (1L to 20L).toSet -- Set(2L, 3L, 4L, 6L))
+    assert(Scan(t, spark).count() == 18L)
   }
 }

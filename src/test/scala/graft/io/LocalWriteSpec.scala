@@ -73,16 +73,27 @@ class LocalWriteSpec extends AnyFunSuite {
   test("table writes fork no process: append, CoW delete, SQL INSERT " +
       "and a stream batch") {
     val t0 = catalogTable("lwfork")
+    var deletesFrom, deletesTo = java.time.Instant.MAX
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
     rec.start()
     try {
       // one fork from this spec's own code: the recording must see it
       new ProcessBuilder("true").start().waitFor()
+      import spark.implicits._
       var t = TableOps.append(t0, rows(1 to 30))
       t = Mutations.deleteCoW(t, spark, Col("id").eqTo(3L))
+      // delete files: partitioned MoR deletes, a key delete and the
+      // position-delete rewrite
+      deletesFrom = java.time.Instant.now()
+      t = Mutations.deleteMoR(t, spark, Col("id").in(4L, 5L))
+      t = Mutations.deleteMoR(t, spark, Col("id").eqTo(7L))
+      t = Mutations.deleteByKeys(t, spark, Seq(8L).toDF("id"))
+      assert(Maintenance.positionDeleteFiles(t).size > 1)
+      t = Maintenance.rewritePositionDeletes(t, spark)
+      deletesTo = java.time.Instant.now()
+      assert(Maintenance.positionDeleteFiles(t).size < 3)
       spark.sql("INSERT INTO lwfork.db.t VALUES (100, 1), (101, 2)")
-      import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
       val sink = Streams.icebergSink(t.refresh())
       val input = MemoryStream[(Long, Int)]
@@ -93,7 +104,7 @@ class LocalWriteSpec extends AnyFunSuite {
         input.addData((200L, 0), (201L, 1))
         q.processAllAvailable()
       } finally q.stop()
-      assert(Scan(sink.table, spark).count() == 33L)
+      assert(Scan(sink.table, spark).count() == 29L)
       // orphan-file GC lists every file under data/ and metadata/
       val listed = sink.table.refresh()
       assert(Scan(listed, spark).planFiles().size >= 3)
@@ -105,7 +116,8 @@ class LocalWriteSpec extends AnyFunSuite {
     rec.close()
     // a fork with a frame of graft's own code (this spec's frames aside)
     val spec = getClass.getName
-    val forks = RecordingFile.readAllEvents(dump).asScala.toSeq.map { e =>
+    val events = RecordingFile.readAllEvents(dump).asScala.toSeq
+    val forks = events.map { e =>
       (e.getString("command"), Option(e.getStackTrace).toSeq
         .flatMap(_.getFrames.asScala).map(_.getMethod.getType.getName))
     }
@@ -117,6 +129,12 @@ class LocalWriteSpec extends AnyFunSuite {
         .map(_ -> cmd)
     }
     assert(engine.isEmpty, s"graft code forked processes: $engine")
+    // only table operations run between these instants, so every process
+    // started there is theirs — Spark's own file writer would fork a
+    // chmod per file and directory on threads with no graft frame
+    val inDeletes = events.filter(e => !e.getStartTime.isBefore(deletesFrom)
+      && !e.getStartTime.isAfter(deletesTo)).map(_.getString("command"))
+    assert(inDeletes.isEmpty, s"delete-file writes forked: $inDeletes")
   }
 
   test("manifests and data files keep .crc sidecars, and a corrupted " +

@@ -215,8 +215,21 @@ class ChainCommitSpec extends AnyFunSuite {
       val e = intercept[Exception](spark.sql(chain).collect())
       assert(causes(e).exists(_.getMessage == "injected crash at commit"),
         e.toString)
-      spark.sql(chain).collect()
+      val sourceSnapshots = loadT(dir, "docs").metadata.snapshots.size
+      val rerun = spark.sql(chain).collect()
       checkRebuilt(art, c, dir)
+      if (art == dedup) {
+        // the crashed run already committed its removal on the source:
+        // the re-run must not delete again, and reports that commit
+        val docs = loadT(dir, "docs")
+        assert(docs.metadata.snapshots.size == sourceSnapshots,
+          "the re-run added a source snapshot")
+        val report = rerun.head
+        val Seq(before, kept, removed) = (0 until 3).map(report.getLong)
+        assert(kept == Scan(docs, spark).count(),
+          s"docs_kept $kept is not the live count: $report")
+        assert(before - removed == kept, report.toString)
+      }
     }
 
   for (art <- Seq(ann, pq, text, tok, lm, clf, pack, dedup))

@@ -105,5 +105,24 @@ class InputMetricsSpec extends AnyFunSuite {
     assert(sqlRecords == 2L)
     assert(sqlBytes >= sqlFileBytes && sqlBytes <= 2 * sqlFileBytes,
       s"SQL INSERT reported $sqlBytes bytes of $sqlFileBytes")
+
+    // a partitioned MoR delete reports its delete files
+    val pt = TableOps.append(Table.create(new LocalCatalog(dir),
+      TableIdentifier(Seq("db"), "pt"),
+      Schema(0, Seq(NestedField(1, "id", LongType, required = true),
+        NestedField(2, "p", IntType, required = false))),
+      PartitionSpec.builder().identity(2, "p").build(),
+      io = new HadoopFileIO()),
+      (1 to 100).map(i => (i.toLong, i % 4)).toDF("id", "p"))
+    var deleted: Table = null
+    val (delBytes, delRecords) = outputOf {
+      deleted = Mutations.deleteMoR(pt, spark, Col("id").lte(10L))
+    }
+    val delFiles = Maintenance.positionDeleteFiles(deleted)
+    val delFileBytes = delFiles.map(f => io.length(f.filePath)).sum
+    assert(delFiles.map(_.partition).distinct.size == 4 &&
+      delRecords == 10L)
+    assert(delBytes >= delFileBytes && delBytes <= 2 * delFileBytes,
+      s"MoR delete reported $delBytes bytes of $delFileBytes")
   }
 }

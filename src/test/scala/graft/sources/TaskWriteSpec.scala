@@ -13,7 +13,7 @@ import graft.spec._
 import graft.streaming.Streams
 import graft.table._
 
-/** The engine's one data-file writer: every write path records, for
+/** The engine's one file writer: every data write path records, for
   * each file it commits, NaN counts equal to what the file holds. */
 class TaskWriteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark

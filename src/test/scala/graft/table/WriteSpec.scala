@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.catalog._
 import graft.io.HadoopFileIO
+import graft.sources.TaskWrite
 import graft.spec._
 
 class PartitionedWriteSpec extends AnyFunSuite {
@@ -222,6 +223,8 @@ class PartitionedWriteSpec extends AnyFunSuite {
   }
 }
 
+/** Position- and equality-delete files, written by the engine's one
+  * file writer through [[graft.sources.TaskWrite]]. */
 class DeleteFileWriterSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -240,7 +243,7 @@ class DeleteFileWriterSpec extends AnyFunSuite {
     val dataPath = Scan(t, spark).planFiles().head.file.filePath
     // delete positions 0 and 1 (ids 1, 2 in write order)
     val deletes = Seq((dataPath, 0L), (dataPath, 1L)).toDF("file_path", "pos")
-    val delFiles = DeleteFileWriter.writePositionDeletes(t.metadata, deletes)
+    val delFiles = TaskWrite.positionDeletes(spark, t, deletes)
     assert(delFiles.size == 1)
     assert(delFiles.head.content == FileContent.PositionDeletes)
     assert(delFiles.head.recordCount == 2)
@@ -267,8 +270,9 @@ class DeleteFileWriterSpec extends AnyFunSuite {
       "id", "name", "email", "created_at")
     t = TableOps.append(t, rows(1 to 5))
     // equality-delete ids 2 and 4 (seq 2 > data seq 1)
-    val delFiles = DeleteFileWriter.writeEqualityDeletes(t.metadata,
-      Seq(2L, 4L).toDF("id"), equalityFieldIds = Seq(1))
+    val delFiles = TaskWrite.equalityDeletes(spark, t, Seq(2L, 4L).toDF("id"))
+    assert(delFiles.nonEmpty && delFiles.forall(f =>
+      f.content == FileContent.EqualityDeletes && f.equalityIds == Seq(1)))
     t = t.commitSnapshot(PendingSnapshot(Operation.Delete,
       addedDeleteFiles = delFiles))
     assert(Scan(t, spark).toDF.select("id").collect().map(_.getLong(0)).toSet ==
@@ -298,8 +302,7 @@ class DeleteFileWriterSpec extends AnyFunSuite {
       .where(col("id") % 2 === 0)
       .select("file_path", "pos")
     // explicit fan-out: one delete file per range partition
-    val delFiles = DeleteFileWriter.writePositionDeletes(t.metadata,
-      deletes, numFiles = 4)
+    val delFiles = TaskWrite.positionDeletes(spark, t, deletes, numFiles = 4)
     assert(delFiles.size > 1,
       s"expected multiple delete files, got ${delFiles.size}")
     assert(delFiles.map(_.recordCount).sum == 2500)
@@ -418,6 +421,61 @@ class DeleteFileWriterSpec extends AnyFunSuite {
       "MoR-deleted rows must not resurface after spec evolution")
   }
 
+  test("a MoR delete matching no row of its candidates commits nothing " +
+      "and writes no file") {
+    val dir = Files.createTempDirectory("graft-mornone-").toString
+    val cat = new LocalCatalog(dir)
+    cat.createNamespace(Seq("db"))
+    var t = Table.create(cat, TableIdentifier(Seq("db"), "mornone"),
+      Fixtures4.usersSchema, io = new HadoopFileIO())
+    import spark.implicits._
+    t = TableOps.append(t, (1 to 10).map(i => (2L * i, s"u$i", s"e$i",
+      new java.sql.Timestamp(1704067200000L + i))).toDF(
+      "id", "name", "email", "created_at").coalesce(1))
+    def dataDirFiles(): Set[String] = {
+      val root = java.nio.file.Paths.get(
+        t.metadata.location.stripPrefix("file:"), "data")
+      val walk = Files.walk(root)
+      try walk.filter(p => Files.isRegularFile(p)).toArray.map(_.toString).toSet
+      finally walk.close()
+    }
+    val before = dataDirFiles()
+    // id 3 lies inside the file's [2, 20] bounds, so the file is a
+    // candidate, but no row has it
+    assert(Scan(t, spark).filter(Col("id").eqTo(3L)).planFiles().nonEmpty)
+    val after = Mutations.deleteMoR(t, spark, Col("id").eqTo(3L))
+    assert(after.currentSnapshot.map(_.snapshotId) ==
+      t.currentSnapshot.map(_.snapshotId), "nothing may be committed")
+    assert(dataDirFiles() == before, "no file may be written under data/")
+  }
+
+  test("a partitioned MoR delete runs 3 Spark jobs, a position-delete " +
+      "rewrite 4") {
+    val dir = Files.createTempDirectory("graft-morjobs-").toString
+    val cat = new LocalCatalog(dir)
+    cat.createNamespace(Seq("db"))
+    val schema = Schema(0, Seq(NestedField(1, "id", LongType, required = true),
+      NestedField(2, "p", IntType, required = false)))
+    import spark.implicits._
+    var t = TableOps.append(Table.create(cat, TableIdentifier(Seq("db"), "j"),
+      schema, PartitionSpec.builder().identity(2, "p").build(),
+      io = new HadoopFileIO()),
+      (1 to 1000).map(i => (i.toLong, i % 4)).toDF("id", "p"))
+    // read the candidates, range the (file_path, pos) rows, write; the
+    // rewrite also reads the old delete files. No broadcast of a
+    // path → partition frame.
+    for (round <- 1 to 2) {
+      val (deleted, morJobs) = graft.SparkJobs.count(spark)(
+        Mutations.deleteMoR(t, spark, Col("id").in(
+          (1 to 20).map(k => (k * 7 + round).toLong): _*)))
+      val (rewritten, rewriteJobs) = graft.SparkJobs.count(spark)(
+        Maintenance.rewritePositionDeletes(deleted, spark))
+      assert(morJobs <= 3 && rewriteJobs <= 4, s"$morJobs, $rewriteJobs")
+      t = rewritten
+    }
+    assert(Scan(t, spark).count() == 960L)
+  }
+
   test("partitioned delete write fails loudly on unmatched file_path") {
     val spec = PartitionSpec.builder(0).day(4, "created_day").build()
     val dir = Files.createTempDirectory("graft-mordrift-").toString
@@ -432,20 +490,18 @@ class DeleteFileWriterSpec extends AnyFunSuite {
     }.toDF("id", "name", "email", "created_at")
     t = TableOps.append(t, df)
     val tasks = Scan(t, spark).planFiles()
-    val pathToPartition =
-      tasks.map(x => x.file.filePath -> x.file.partition).toMap
     // one real path, one drifted path that matches no candidate
     val deletes = Seq(
       (tasks.head.file.filePath, 0L),
       ("file:/drifted/nonexistent.parquet", 1L)).toDF("file_path", "pos")
     val ex = intercept[Exception] {
-      DeleteFileWriter.writePositionDeletesPartitioned(
-        t.metadata, deletes, pathToPartition)
+      TaskWrite.positionDeletes(spark, t, deletes,
+        tasks.map(x => x.specId -> x.file))
     }
     def messages(e: Throwable): Seq[String] =
       if (e == null) Nil
       else Option(e.getMessage).toSeq ++ messages(e.getCause)
     assert(messages(ex).exists(_.contains("matched no candidate")),
-      s"expected the path-drift raise_error, got: $ex")
+      s"expected the path-drift error, got: $ex")
   }
 }
