@@ -19,7 +19,7 @@ import org.apache.spark.sql.connector.write.{
 import org.apache.spark.sql.execution.datasources.{
   OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.graftshim.{Bridge, ParquetShim}
 import org.apache.spark.sql.types.{
   DataType, DoubleType => SDouble, FloatType => SFloat, StructType}
@@ -54,9 +54,15 @@ import graft.table.{DataWriter, PartitionDirs, Table, Transforms}
   * The writer still routes every row by the current spec, so a file
   * written under an older spec is re-partitioned correctly (one file
   * per current tuple its rows fall in). Appends, upserts and other
-  * writes of new rows keep the exchange. */
+  * writes of new rows keep the exchange.
+  *
+  * Every entry point sorts each task's rows by their partition
+  * directory first, so the writer keeps one file open at a time. */
 private[graft] object TaskWrite {
   private[sources] val PartPrefix = "__p_"
+  /** A position delete's partition directory, looked up from its
+    * `file_path` ahead of the writer. */
+  private[sources] val DirCol = "__dir"
 
   def apply(spark: SparkSession, table: Table, df: DataFrame,
       extraSortCols: Seq[(String, Column)] = Nil,
@@ -100,8 +106,7 @@ private[graft] object TaskWrite {
     val rows =
       if (order.isEmpty) clustered
       else clustered.sortWithinPartitions(order: _*)
-    write(spark, table, rows, FileKind.Data, !spec.isUnpartitioned,
-      maxRecordsPerFile)
+    write(spark, table, rows, FileKind.Data, maxRecordsPerFile)
   }
 
   /** Position-delete files (SURVEY S9): `(file_path string, pos long)`
@@ -109,14 +114,15 @@ private[graft] object TaskWrite {
     * adaptive execution sizes them) and sorted so within each file, as
     * the spec requires. `dataFiles` are the data files the rows may
     * name, each with its spec id: each row goes to the delete file of
-    * its data file's partition tuple, and a row naming any other path
-    * fails the write, so a drifted path cannot drop a delete. The files
-    * are global (no tuple; they attach everywhere) when the spec is
-    * unpartitioned, `dataFiles` is empty, or any of them has an empty
-    * tuple (written before partitioning) or another spec than the
-    * default — its tuple's fields would not line up with the default
-    * spec's, the planner would never match the scoped delete, and the
-    * rows would come back. */
+    * its data file's partition tuple — a task's rows sorted by that
+    * directory first, then `(file_path, pos)` — and a row naming any
+    * other path fails the write, so a drifted path cannot drop a
+    * delete. The files are global (no tuple; they attach everywhere)
+    * when the spec is unpartitioned, `dataFiles` is empty, or any of
+    * them has an empty tuple (written before partitioning) or another
+    * spec than the default — its tuple's fields would not line up with
+    * the default spec's, the planner would never match the scoped
+    * delete, and the rows would come back. */
   def positionDeletes(spark: SparkSession, table: Table, deletes: DataFrame,
       dataFiles: Seq[(Int, DataFile)] = Nil,
       numFiles: Int = 0): Seq[DataFile] = {
@@ -135,9 +141,18 @@ private[graft] object TaskWrite {
     val ranged =
       if (numFiles > 0) base.repartitionByRange(numFiles, keys: _*)
       else base.repartitionByRange(keys: _*)
-    // fan-out: a task's paths are sorted, not clustered by tuple
-    write(spark, table, ranged.sortWithinPartitions(keys: _*),
-      FileKind.PositionDeletes(dirs), clustered = false)
+    // paths group by write, not by partition: without the directory
+    // key a task would hold a file open for every directory it reaches.
+    // A path outside `dirs` gets a null directory, which the writer
+    // fails on.
+    val rows =
+      if (dirs.isEmpty) ranged.sortWithinPartitions(keys: _*)
+      else {
+        val dirOf = udf((p: String) => dirs.getOrElse(p, null))
+        ranged.withColumn(DirCol, dirOf(col("file_path")))
+          .sortWithinPartitions(col(DirCol) +: keys: _*)
+      }
+    write(spark, table, rows, FileKind.PositionDeletes)
   }
 
   /** Equality-delete files (SURVEY S10): the distinct rows of `keys`,
@@ -170,8 +185,7 @@ private[graft] object TaskWrite {
           .repartition(parts: _*).sortWithinPartitions(parts ++ keyCols: _*)
       } else distinct.repartitionByRange(keyCols: _*)
         .sortWithinPartitions(keyCols: _*)
-    write(spark, table, rows, FileKind.EqualityDeletes(ids, scoped),
-      clustered = scoped)
+    write(spark, table, rows, FileKind.EqualityDeletes(ids, scoped))
   }
 
   /** Each default-spec partition field of `df`'s rows, derived through
@@ -190,11 +204,10 @@ private[graft] object TaskWrite {
   }
 
   private def write(spark: SparkSession, table: Table, rows: DataFrame,
-      kind: FileKind, clustered: Boolean,
-      maxRecordsPerFile: Long = 0L): Seq[DataFile] = {
+      kind: FileKind, maxRecordsPerFile: Long = 0L): Seq[DataFile] = {
     var written: Seq[DataFile] = Nil
     val target = new GraftTaskWriteTable(table, rows.schema,
-      maxRecordsPerFile, clustered, kind, files => written = files)
+      maxRecordsPerFile, kind, files => written = files)
     Bridge.execute(spark, AppendData.byName(
       DataSourceV2Relation.create(target, None, None),
       rows.queryExecution.analyzed))
@@ -217,9 +230,10 @@ private[graft] object TaskWrite {
 
 /** A write-only connector table over one [[TaskWrite]]: it accepts the
   * prepared frame as it is (the writer picks the written columns out by
-  * name) and hands the written files to `written` at commit. */
+  * name; its rows arrive clustered by directory) and hands the written
+  * files to `written` at commit. */
 private[sources] class GraftTaskWriteTable(t: Table, input: StructType,
-    maxRecordsPerFile: Long, clustered: Boolean, kind: FileKind,
+    maxRecordsPerFile: Long, kind: FileKind,
     written: Seq[DataFile] => Unit)
     extends ConnectorTable with SupportsWrite {
   override def name(): String = (t.id.namespace :+ t.id.name).mkString(".")
@@ -232,29 +246,30 @@ private[sources] class GraftTaskWriteTable(t: Table, input: StructType,
       override def build(): Write = new Write {
         override def description(): String = s"graft-write:${name()}"
         override def toBatch: BatchWrite = new GraftFileBatchWrite(
-          t.metadata, info.schema(), maxRecordsPerFile, clustered, kind)(
-          written)
+          t.metadata, info.schema(), maxRecordsPerFile, clustered = true,
+          kind)(written)
       }
     }
 }
 
 /** What one write's files hold, fixed for the whole write; each kind
   * has its written columns and its rule for a row's partition tuple. */
-private[sources] sealed abstract class FileKind(val content: FileContent,
-    val equalityIds: Seq[Int] = Nil) extends Serializable
+private[sources] sealed abstract class FileKind(val content: FileContent)
+    extends Serializable {
+  def equalityIds: Seq[Int] = Nil
+}
 
 private[sources] object FileKind {
   /** The table's columns, routed through the spec's transforms. */
   case object Data extends FileKind(FileContent.Data)
-  /** `(file_path, pos)`, routed by `file_path`'s entry in `dirs` (data
-    * file → partition directory); an empty `dirs` writes global files. */
-  final case class PositionDeletes(dirs: Map[String, String])
-      extends FileKind(FileContent.PositionDeletes)
+  /** `(file_path, pos)`, routed by the input's [[TaskWrite.DirCol]]
+    * column; input without one writes global files. */
+  case object PositionDeletes extends FileKind(FileContent.PositionDeletes)
   /** Every input column but the `__p_` keys, recorded as the fields
-    * `ids`; routed through the spec's transforms when `scoped`, else
-    * global. */
-  final case class EqualityDeletes(ids: Seq[Int], scoped: Boolean)
-      extends FileKind(FileContent.EqualityDeletes, ids)
+    * `equalityIds`; routed through the spec's transforms when `scoped`,
+    * else global. */
+  final case class EqualityDeletes(override val equalityIds: Seq[Int],
+      scoped: Boolean) extends FileKind(FileContent.EqualityDeletes)
 }
 
 /** Per-partition-field routing spec for executor writers; `ordinal` is
@@ -273,20 +288,21 @@ private[sources] final case class WrittenFile(path: String,
 private[sources] final case class GraftFilesMessage(
     files: Seq[WrittenFile]) extends WriterCommitMessage
 
-/** How a task turns input rows into files of `kind`: which input
+/** How a task turns input rows into files of one [[FileKind]]: which input
   * columns are the file's (`dataOrdinals`, written as `dataSchema`),
   * which of those count NaNs (`nanColumns`: ordinal, field id,
   * float-typed; data files only), which transforms derive a row's
-  * partition tuple (`routes`; position deletes look theirs up instead),
-  * and whether rows arrive `clustered` by that tuple (each tuple's rows
-  * contiguous in a task). */
+  * partition tuple (`routes`), which column names a position delete's
+  * directory instead (`dirOrdinal`, -1 if none), and whether rows
+  * arrive `clustered` by that tuple (each tuple's rows contiguous in a
+  * task). */
 private[sources] final case class FileLayout(
-    kind: FileKind,
     inputTypes: Array[DataType],
     dataOrdinals: Array[Int],
     dataSchema: StructType,
     nanColumns: Array[(Int, Int, Boolean)],
     routes: Array[PartFieldRoute],
+    dirOrdinal: Int,
     maxRecordsPerFile: Long,
     clustered: Boolean)
 
@@ -314,7 +330,7 @@ private[sources] class GraftFileBatchWrite(meta: TableMetadata,
     val data = schema.fields.filter(f => names.contains(f.name))
     val (ordinals, routed) = kind match {
       case FileKind.Data => (data.map(f => names.indexOf(f.name)).toArray, true)
-      case _: FileKind.PositionDeletes =>
+      case FileKind.PositionDeletes =>
         (Array(names.indexOf("file_path"), names.indexOf("pos")), false)
       case FileKind.EqualityDeletes(_, scoped) => (names.indices
         .filterNot(names(_).startsWith(TaskWrite.PartPrefix)).toArray, scoped)
@@ -338,8 +354,11 @@ private[sources] class GraftFileBatchWrite(meta: TableMetadata,
             s"write input ${names.mkString(",")}")
         PartFieldRoute(pf.name, pf.transform, o, src.fieldType)
       }.toArray
-    FileLayout(kind, inputSchema.fields.map(_.dataType), ordinals,
-      StructType(ordinals.map(inputSchema(_))), nan, routes,
+    val dirOrdinal =
+      if (kind == FileKind.PositionDeletes) names.indexOf(TaskWrite.DirCol)
+      else -1
+    FileLayout(inputSchema.fields.map(_.dataType), ordinals,
+      StructType(ordinals.map(inputSchema(_))), nan, routes, dirOrdinal,
       maxRecordsPerFile, clustered)
   }
 
@@ -403,7 +422,7 @@ private[sources] class GraftFileWriterFactory(stagingRoot: String,
   * and delete files alike ([[FileKind]]). It finds each row's partition
   * tuple — through the partition transforms evaluated row-side
   * ([[Transforms.applyToValue]], the kernel the pruner projects literals
-  * with), or for a position delete from the data file it names — and
+  * with), or for a position delete from its directory column — and
   * writes one parquet file per tuple under `__p_<field>=<value>`
   * directories that [[PartitionDirs.decodeSegments]] parses back at
   * commit: one file open at a time when rows arrive clustered by tuple,
@@ -456,34 +475,14 @@ private[sources] class GraftFileWriter(
   private val tuple = new Array[Any](layout.routes.size)
   private val routeNames = layout.routes.map(_.name).toSeq
   private var tupleDir: String = null
-  private var lastPath: UTF8String = null
-  private var lastDir: String = null
+  private var lastDir: UTF8String = null
 
-  /** The row's partition directory, by the rule of the write's kind. */
-  private val relDirFor: InternalRow => String = layout.kind match {
-    case FileKind.PositionDeletes(dirs) if dirs.nonEmpty => dirOfPath(dirs)
-    case _ if layout.routes.isEmpty => _ => ""
-    case _ => dirOfTuple
-  }
-
-  /** A position delete's directory: the one of the data file it names,
-    * looked up once per run of rows naming one file (rows arrive sorted
-    * by path). */
-  private def dirOfPath(dirs: Map[String, String])(row: InternalRow): String = {
-    val p = row.getUTF8String(layout.dataOrdinals(0))
-    if (lastPath == null || p != lastPath) {
-      val path = String.valueOf(p)
-      lastDir = dirs.getOrElse(path, throw new IllegalArgumentException(
-        "position-delete path matched no candidate data file " +
-          s"(path normalization drift?): $path"))
-      lastPath = p.clone()
-    }
-    lastDir
-  }
-
-  /** The row's tuple directory, rebuilt only when its tuple differs
-    * from the previous row's (input arrives clustered by tuple). */
-  private def dirOfTuple(row: InternalRow): String = {
+  /** The row's partition directory: a position delete's from its
+    * directory column, else its tuple's, rebuilt only when the tuple
+    * differs from the previous row's (input arrives clustered by tuple). */
+  private def relDirFor(row: InternalRow): String = {
+    if (layout.routes.isEmpty)
+      return if (layout.dirOrdinal < 0) "" else dirColumn(row)
     var same = tupleDir != null
     var i = 0
     while (i < tuple.length) {
@@ -497,6 +496,19 @@ private[sources] class GraftFileWriter(
       i += 1
     }
     if (!same) tupleDir = GraftFileWriter.partitionDir(routeNames, tuple)
+    tupleDir
+  }
+
+  /** A position delete's directory, its data file's, as the row's
+    * directory column names it; null when the path matched none. */
+  private def dirColumn(row: InternalRow): String = {
+    if (row.isNullAt(layout.dirOrdinal))
+      throw new IllegalArgumentException(
+        "position-delete path matched no candidate data file " +
+          "(path normalization drift?): " +
+          row.getUTF8String(layout.dataOrdinals(0)))
+    val d = row.getUTF8String(layout.dirOrdinal)
+    if (d != lastDir) { lastDir = d.clone(); tupleDir = d.toString }
     tupleDir
   }
 

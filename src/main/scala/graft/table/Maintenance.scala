@@ -1,7 +1,7 @@
 package graft.table
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, udf}
 
 import graft.avro.ManifestAvro
 import graft.sources.{TaskRead, TaskWrite}
@@ -152,18 +152,20 @@ object Maintenance extends org.apache.spark.internal.Logging {
   /** Writes `positions` as position-delete files and commits them in ONE
     * `replace` snapshot that retires `replaced`. Rows are deduped, and
     * rows whose data file is no longer live (dangling after compaction
-    * or CoW) are dropped; the rest are routed to their data file's
-    * partition. The output is about one file per
-    * `targetFileSizeBytes` of `replaced`: the writer's default range
-    * partitioning would otherwise fan a small delete set across
-    * `spark.sql.shuffle.partitions` files, the opposite of
-    * consolidation. */
+    * or CoW) are dropped by a lookup in the set of live paths, shipped
+    * with the tasks rather than planned as one literal per file; the
+    * rest are routed to their data file's partition. The output is
+    * about one file per `targetFileSizeBytes` of `replaced`: the
+    * writer's default range partitioning would otherwise fan a small
+    * delete set across `spark.sql.shuffle.partitions` files, the
+    * opposite of consolidation. */
   private def commitPositions(t: Table, spark: SparkSession,
       positions: DataFrame, replaced: Seq[DataFile],
       targetFileSizeBytes: Long): Table = {
     val data = liveEntries(t, ManifestContent.Data)
-    val kept = positions.distinct()
-      .where(col("file_path").isin(data.map(_._2.filePath): _*))
+    val live = data.map(_._2.filePath).toSet
+    val isLive = udf((p: String) => live.contains(p))
+    val kept = positions.distinct().where(isLive(col("file_path")))
     val nOut = math.max(1L, (replaced.map(_.fileSizeInBytes).sum
       + targetFileSizeBytes - 1) / targetFileSizeBytes).toInt
     t.commitSnapshot(PendingSnapshot(Operation.Replace,
@@ -188,7 +190,7 @@ object Maintenance extends org.apache.spark.internal.Logging {
     * and re-sequence safely.
     *
     * Scale: cost ∝ delete-file volume, never data volume. The live-
-    * path prune filters against the live file list (metadata-bounded);
+    * path prune is a set lookup over the live file list;
     * concurrent compaction that retires one of the same
     * delete files fails the rebase via the deletedFilePaths overlap
     * and retries on fresh state. */

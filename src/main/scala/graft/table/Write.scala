@@ -240,26 +240,11 @@ private[graft] object PartitionDirs {
       colName -> typed
     }.toMap
 
+  /** The writer renders dates and timestamps as their days/micros
+    * integers, as manifests store them. */
   def parseValue(raw: String, t: IcebergType): Any = t match {
-    case IntType => raw.toInt
-    // identity-partitioned dates/timestamps come back in Spark's
-    // calendar rendering ("2020-01-01", "2020-01-01 00:00:00[.f]");
-    // transform-derived partition values stay integral. Manifests
-    // store days/micros ints either way.
-    case DateType =>
-      try raw.toInt
-      catch { case _: NumberFormatException =>
-        java.time.LocalDate.parse(raw).toEpochDay.toInt }
-    case TimestampType | TimestampTzType =>
-      try raw.toLong
-      catch { case _: NumberFormatException =>
-        // sessions pin UTC (SURVEY §7), so the rendered wall clock IS
-        // the UTC instant for tz-aware values and the literal fields
-        // for NTZ — both serialize to the same epoch-micros long
-        val ldt = java.time.LocalDateTime.parse(raw.replace(' ', 'T'))
-        ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-          ldt.getNano / 1000L }
-    case LongType | TimeType => raw.toLong
+    case IntType | DateType => raw.toInt
+    case LongType | TimeType | TimestampType | TimestampTzType => raw.toLong
     case FloatType => raw.toFloat
     case DoubleType => raw.toDouble
     case BooleanType => raw.toBoolean

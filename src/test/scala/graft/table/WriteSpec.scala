@@ -476,6 +476,43 @@ class DeleteFileWriterSpec extends AnyFunSuite {
     assert(Scan(t, spark).count() == 960L)
   }
 
+  test("a position-delete rewrite into one file writes its partitions " +
+      "one after another") {
+    val dir = Files.createTempDirectory("graft-morwide-").toString
+    val cat = new LocalCatalog(dir)
+    cat.createNamespace(Seq("db"))
+    val schema = Schema(0, Seq(NestedField(1, "id", LongType, required = true),
+      NestedField(2, "p", IntType, required = false)))
+    import spark.implicits._
+    def rows(ps: Seq[Int]) = (0 until 20).flatMap(k =>
+      ps.map(p => (k * 1000L + p, p))).toDF("id", "p")
+    // even partitions in one write, odd ones in another: data-file
+    // paths group by write, so in path order the partitions interleave
+    var t = Table.create(cat, TableIdentifier(Seq("db"), "wide"),
+      schema, PartitionSpec.builder().identity(2, "p").build(),
+      io = new HadoopFileIO())
+    t = TableOps.append(t, rows(0 until 60 by 2))
+    t = TableOps.append(t, rows(1 until 60 by 2))
+    t = Mutations.deleteMoR(t, spark, Col("id").in((0 until 60).map(_.toLong): _*))
+    t = Mutations.deleteMoR(t, spark,
+      Col("id").in((0 until 60).map(_ + 1000L): _*))
+    assert(Maintenance.positionDeleteFiles(t).size == 120)
+
+    t = Maintenance.rewritePositionDeletes(t, spark)
+    val files = Maintenance.positionDeleteFiles(t)
+    assert(files.size == 60 &&
+      files.map(_.partition("p")).toSet == (0 until 60).toSet)
+    // one task (the files are far below the target size) whose rows
+    // arrive sorted by directory: it opens each directory's file only
+    // after the previous one closed, so the file sequence numbers in
+    // the names follow the directories' order
+    val seqOf = "-(\\d+)\\.parquet$".r
+    val byDir = files.sortBy(f => f.filePath.split('/').init.last)
+    assert(byDir.map(f => seqOf.findFirstMatchIn(f.filePath).get.group(1)
+      .toInt) == (0 until 60), byDir.map(_.filePath))
+    assert(Scan(t, spark).count() == 1200L - 120L)
+  }
+
   test("partitioned delete write fails loudly on unmatched file_path") {
     val spec = PartitionSpec.builder(0).day(4, "created_day").build()
     val dir = Files.createTempDirectory("graft-mordrift-").toString
